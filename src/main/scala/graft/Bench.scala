@@ -51,19 +51,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet carries TIMESTAMP(NANOS) — read as long, converted
-      // to micros in graft.Tables.events.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    // ERROR, not WARN: the driver captures only a ~2KB output tail, and
-    // r2's stray WARN lines pushed the result JSON past it ("parsed": null).
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session(Session.envCores(4))
     // Structured warnings instead of raw traces in the artifact (VERDICT
     // r6 #2: BENCH_r06.json's tail opened mid-stack-trace from a benign
     // DAGScheduler accumulator race). ERROR-level log events are routed

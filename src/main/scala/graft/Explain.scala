@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan auditor: prints the formatted physical plan for the named queries
   * (or a default set) so pushdown, broadcast choice and codegen coverage
   * can be reviewed. Usage: runMain graft.Explain [sfDir] [query ...]
@@ -30,14 +28,7 @@ object Explain {
         // prefilter + double window (q187)
         "q171_semantic_dedup", "q180_rolling_actives", "q182_winsorize",
         "q184_robust_zscore", "q187_touch_attribution")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session(4)
     names.foreach { n =>
       println(s"\n======== $n ========")
       SparkEntry.queries(n)(spark, sfDir).explain("formatted")
@@ -48,17 +39,10 @@ object Explain {
   private def writePlans(args: Array[String]): Unit = {
     val outFile = args(1)
     val sfDir = if (args.length > 2) args(2) else "/root/testdata/sf0.01"
-    // Same session shape as PlanDiffSpec's (SparkSpecBase): the static
-    // planner's broadcast decisions depend on stats, so artifact and
-    // diff must plan under identical configs.
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // Session(4), as in SparkSpecBase: the static planner's broadcast
+    // decisions depend on stats, so PlanDiffSpec's live recompute and
+    // this artifact must plan under identical configs.
+    val spark = Session(4)
     val sb = new StringBuilder
     sb.append(s"# Heavy-query plan artifact — generated by `runMain graft.Explain --plans` at $sfDir\n")
     sb.append("# PLAN_SUMMARY lines are diffed by PlanDiffSpec; full formatted plans follow for review.\n")

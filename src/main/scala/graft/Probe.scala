@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev-only overhead probe (optimization round): quantifies the fixed
@@ -15,15 +14,7 @@ object Probe {
     * reported), same JVM so JIT state is shared.
     */
   private def confSweep(sfDir: String): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session(Session.envCores(32))
     val queries = Seq("q398_analyze_policy", "q405_skipping_chooser",
       "q184_robust_zscore", "q214_khop_reach", "q321_shared_runs",
       "q361_countmin_joinsize", "q381_quantile_shootout", "q244_weighted_median",
@@ -51,20 +42,27 @@ object Probe {
         confs.foreach { case (k, v) => spark.conf.set(k, v) }
         try {
           var tot = 0.0
+          var failed = false
           for (q <- queries) {
-            var best = Double.MaxValue
-            for (_ <- 1 to 2) {
+            // only completed runs are timed: a query that fails fast must
+            // not rank its conf as the fastest
+            val secs = (1 to 2).flatMap { _ =>
               val t0 = System.nanoTime()
-              try SparkEntry.queries(q)(spark, sfDir).count()
-              catch { case e: Throwable =>
-                println(s"PROBE conf=$vn $q FAILED ${e.getMessage}") }
-              best = math.min(best, (System.nanoTime() - t0) / 1e9)
-              Bench.cleanupTransients(spark)
+              try {
+                SparkEntry.queries(q)(spark, sfDir).count()
+                Some((System.nanoTime() - t0) / 1e9)
+              } catch { case e: Throwable =>
+                println(s"PROBE conf=$vn $q FAILED ${e.getMessage}"); None
+              } finally Bench.cleanupTransients(spark)
             }
-            tot += best
-            println(f"PROBE conf=$vn%-15s $q%-28s $best%6.2f s")
+            if (secs.size < 2) failed = true
+            if (secs.nonEmpty) {
+              tot += secs.min
+              println(f"PROBE conf=$vn%-15s $q%-28s ${secs.min}%6.2f s")
+            }
           }
-          println(f"PROBE conf=$vn%-15s TOTAL $tot%6.2f s")
+          if (failed) println(f"PROBE conf=$vn%-15s TOTAL invalid (a query failed)")
+          else println(f"PROBE conf=$vn%-15s TOTAL $tot%6.2f s")
         } finally confs.keys.foreach(spark.conf.unset)
       }
     } finally spark.stop()
@@ -75,15 +73,7 @@ object Probe {
       confSweep(if (args.length > 1) args(1) else "/root/testdata/sf0.1"); return
     }
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session(Session.envCores(32))
     import spark.implicits._
 
     def time(tag: String, reps: Int)(f: => Unit): Unit = {

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev profiler: times one named query N times in a fresh session
   * (`runMain graft.QTime <name> [sfDir] [n]`), printing per-run wall
   * seconds so cache/JIT effects are visible.
@@ -11,15 +9,7 @@ object QTime {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val n = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session(Session.envCores(32))
     for (i <- 1 to n) {
       val t0 = System.nanoTime()
       val c = SparkEntry.queries(name)(spark, sfDir).count()

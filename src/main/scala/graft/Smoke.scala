@@ -7,17 +7,9 @@ import org.apache.spark.sql.SparkSession
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    // extension-injected native function resolves in SQL with no
-    // register() call
+    val spark = Session.builder(4)
+      .withExtensions(new graft.functions.GraftExtensions).getOrCreate()
+    // the native function's SQL name comes from the extension alone
     val cos = spark.sql(
       """SELECT cosine_sim(CAST(array(1.0, 0.0) AS array<float>),
                            CAST(array(1.0, 0.0) AS array<float>)) AS c""")

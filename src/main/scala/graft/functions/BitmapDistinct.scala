@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -66,13 +65,4 @@ case class BitmapDistinct(
     copy(inputAggBufferOffset = o)
   override protected def withNewChildInternal(c: Expression): BitmapDistinct =
     copy(child = c)
-}
-
-object BitmapDistinct {
-  /** Register `bitmap_distinct(key)` for `expr(...)`/SQL use. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bitmap_distinct",
-      exprs => BitmapDistinct(exprs.head),
-      "built-in")
 }

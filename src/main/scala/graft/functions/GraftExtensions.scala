@@ -7,23 +7,26 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 /** Session-extension entry point: makes the engine's native expressions
   * first-class SQL functions in any session built with
   *
-  *   SparkSession.builder().withExtensions(new GraftExtensions)
+  *   graft.Session.builder(n).withExtensions(new GraftExtensions)
   *
-  * or `spark.sql.extensions=graft.functions.GraftExtensions` — the
-  * library-grade alternative to per-session `register(...)` calls
-  * (which remain for ad-hoc sessions; both are idempotent).
+  * or `spark.sql.extensions=graft.functions.GraftExtensions`. This is the
+  * only place the SQL names `cosine_sim`, `jaro_winkler` and
+  * `bitmap_distinct` are defined; queries build the same expressions as
+  * Columns (graft.functions.cosineSim etc.) and need no extension.
   *
   * Injects all three extension layers of the build brief: the expression
-  * registry (b — cosine_sim), an optimizer rule (CosineSymmetryRule), and
-  * a planner strategy (c — the TopKPerGroup whole-operator plan node;
-  * `TopKOps.ensureStrategy` is the equivalent for ad-hoc sessions).
+  * registry (b), optimizer rules (CosineSymmetryRule and the data-proof
+  * rewrites), and a planner strategy (c — the TopKPerGroup whole-operator
+  * plan node; `TopKOps.ensureStrategy` installs it on sessions built
+  * without this extension).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_sim"),
-      (exprs: Seq[Expression]) => CosineSimilarity(exprs(0), exprs(1))))
+    def fn(name: String, cls: Class[_], build: Seq[Expression] => Expression): Unit =
+      ext.injectFunction((FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build))
+    fn("cosine_sim", classOf[CosineSimilarity], e => CosineSimilarity(e(0), e(1)))
+    fn("jaro_winkler", classOf[JaroWinklerSimilarity], e => JaroWinklerSimilarity(e(0), e(1)))
+    fn("bitmap_distinct", classOf[BitmapDistinct], e => BitmapDistinct(e.head))
     ext.injectOptimizerRule(_ => graft.plans.CosineSymmetryRule)
     ext.injectOptimizerRule(_ => graft.plans.FkJoinEliminationRule)
     ext.injectOptimizerRule(_ => graft.plans.MvRewriteRule)

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -101,11 +100,4 @@ object JaroWinkler {
     }
     jaro
   }
-
-  /** Register `jaro_winkler(a, b)` in the session's function registry so
-    * it is usable from `expr(...)` / SQL. Idempotent.
-    */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "jaro_winkler", exprs => JaroWinklerSimilarity(exprs(0), exprs(1)), "built-in")
 }

@@ -4,6 +4,7 @@ import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.functions.cosineSim
 
 /** IVF-style approximate nearest neighbor: a KMeans coarse quantizer
   * assigns every vector to a centroid cell; queries probe only their own
@@ -99,12 +100,11 @@ object AnnOps {
     * @param cents (cent_id, ce) centroid table — broadcast-sized
     */
   def assignToCells(vectors: DataFrame, cents: DataFrame): DataFrame = {
-    graft.functions.CosineSimilarity.register(vectors.sparkSession)
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("vec_id").orderBy(col("cos_c").desc, col("cent_id").asc)
     vectors.crossJoin(broadcast(cents))
       .select(col("vec_id"), col("embedding"), col("cent_id"),
-        round(expr("cosine_sim(embedding, ce)"), 6).as("cos_c"))
+        round(cosineSim(col("embedding"), col("ce")), 6).as("cos_c"))
       .withColumn("rn", row_number().over(w))
       .where(col("rn") === 1)
       .select(col("vec_id"), col("embedding"), col("cent_id").as("cell"))
@@ -193,7 +193,6 @@ object AnnOps {
     * cosine_sim expression (rounded, id-tiebroken → deterministic).
     */
   def ivfTop1(assigned: DataFrame, queryPred: org.apache.spark.sql.Column): DataFrame = {
-    graft.functions.CosineSimilarity.register(assigned.sparkSession)
     val q = assigned.where(queryPred)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"), col("cell"))
     val w = org.apache.spark.sql.expressions.Window
@@ -201,7 +200,7 @@ object AnnOps {
     q.join(assigned, Seq("cell"))
       .where(col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id").as("cid"), col("cell"),
-        round(expr("cosine_sim(qe, embedding)"), 6).as("cos_r"))
+        round(cosineSim(col("qe"), col("embedding")), 6).as("cos_r"))
       .withColumn("rn", row_number().over(w).cast("long"))
       .where(col("rn") === 1)
       .select("qid", "cid", "cell", "cos_r")

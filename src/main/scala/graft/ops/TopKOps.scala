@@ -12,10 +12,11 @@ import graft.plans.{TopKPerGroup, TopKPerGroupStrategy}
   */
 object TopKOps {
 
-  /** Register the planner strategy on a session (idempotent). Sessions
-    * built `withExtensions(new GraftExtensions)` get it injected instead;
-    * this is the ad-hoc-session path, mirroring `register(...)` for the
-    * expression surface.
+  /** Install the planner strategy on a session: idempotent and add-only,
+    * the one session-wide write a query may make. Native expressions and
+    * optimizer rules apply to a single Column or plan, but a planner
+    * strategy can only be installed on the session. Sessions built
+    * `withExtensions(new GraftExtensions)` already carry it.
     */
   def ensureStrategy(spark: SparkSession): Unit = synchronized {
     if (!spark.experimental.extraStrategies.contains(TopKPerGroupStrategy))

@@ -4,6 +4,7 @@ import graft.{QuerySpec, Tables}
 import graft.ops.{JoinOps, SkewOps}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.cosineSim
 
 /** Second-wave coverage: multiset set-ops, cube, collection aggregates,
   * percentiles, extended scalar functions, and two scale-pattern
@@ -197,7 +198,6 @@ object ExtraQueries {
     QuerySpec(
       "q61_embed_neardup",
       (s, d) => {
-        graft.functions.CosineSimilarity.register(s)
         val b = t(s, d, "embeddings")
           .select(col("vec_id"), col("embedding"),
             graft.ops.VectorOps.srpBucket(col("embedding"), 8).as("bucket"))
@@ -206,7 +206,7 @@ object ExtraQueries {
         x.join(y, Seq("bucket"))
           .where(col("a") < col("b"))
           .select(col("a"), col("b"),
-            round(expr("cosine_sim(ea, eb)"), 6).as("cos_r"))
+            round(cosineSim(col("ea"), col("eb")), 6).as("cos_r"))
           .where(col("cos_r") >= 0.35)
           .orderBy("a", "b")
       },

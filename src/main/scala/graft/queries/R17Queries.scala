@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.QuerySpec
 import graft.Tables
 import graft.ops.VectorOps
+import graft.functions.cosineSim
 
 /** Round-6 widening, fourth batch: the measurement layer a pipeline
   * team puts AROUND an engine — time-series diagnostics of the
@@ -138,7 +139,6 @@ object R17Queries {
     QuerySpec(
       "q272_ndcg_eval",
       (s, d) => {
-        graft.functions.CosineSimilarity.register(s)
         val e = t(s, d, "embeddings")
         val q = e.where(col("vec_id") < 10)
           .select(col("vec_id").as("qid"), col("embedding").as("qe"),
@@ -147,7 +147,7 @@ object R17Queries {
           .where(col("vec_id") =!= col("qid"))
           .select(col("qid"),
             col("vec_id").as("cid"),
-            round(expr("cosine_sim(qe, embedding)"), 6).as("cos_r"),
+            round(cosineSim(col("qe"), col("embedding")), 6).as("cos_r"),
             greatest(lit(0), lit(3) - abs(col("ql") - col("label")))
               .cast("long").as("rel"))
           .withColumn("gain",
@@ -185,7 +185,6 @@ object R17Queries {
     QuerySpec(
       "q273_lsh_eval",
       (s, d) => {
-        graft.functions.CosineSimilarity.register(s)
         val e = t(s, d, "embeddings")
         val q = e.where(col("vec_id") < 10)
           .select(col("vec_id").as("qid"), col("embedding").as("qe"))
@@ -193,7 +192,7 @@ object R17Queries {
         val truth = broadcast(q).crossJoin(e)
           .where(col("vec_id") =!= col("qid"))
           .select(col("qid"), col("vec_id").as("cid"),
-            round(expr("cosine_sim(qe, embedding)"), 6).as("cos_r"))
+            round(cosineSim(col("qe"), col("embedding")), 6).as("cos_r"))
           .withColumn("rn", row_number().over(wS).cast("long"))
           .where(col("rn") <= 10)
           .select(col("qid").as("tqid"), col("cid").as("tcid"))
@@ -204,7 +203,7 @@ object R17Queries {
         val sys = qb.join(b, Seq("bucket"))
           .where(col("vec_id") =!= col("qid"))
           .select(col("qid"), col("vec_id").as("cid"),
-            round(expr("cosine_sim(qe, embedding)"), 6).as("cos_r"))
+            round(cosineSim(col("qe"), col("embedding")), 6).as("cos_r"))
           .withColumn("rn", row_number().over(wS).cast("long"))
         val hits = sys.where(col("rn") <= 10)
           .join(truth, col("qid") === col("tqid") && col("cid") === col("tcid"))

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.QuerySpec
 import graft.Tables
+import graft.functions.cosineSim
 
 /** Round-6 widening, closing batch: CUPED variance reduction (the
   * modern experimentation-platform companion to q294's χ² readout —
@@ -102,7 +103,6 @@ object R25Queries {
     QuerySpec(
       "q300_hybrid_eval",
       (s, d) => {
-        graft.functions.CosineSimilarity.register(s)
         val e = t(s, d, "embeddings")
         val q = e.where(col("vec_id") < 10)
           .select(col("vec_id").as("qid"), col("embedding").as("qe"),
@@ -112,7 +112,7 @@ object R25Queries {
         val vec = broadcast(q.select("qid", "qe")).crossJoin(e)
           .where(col("vec_id") =!= col("qid"))
           .select(col("qid"), col("vec_id").as("cid"),
-            round(expr("cosine_sim(qe, embedding)"), 6).as("cos_r"))
+            round(cosineSim(col("qe"), col("embedding")), 6).as("cos_r"))
           .withColumn("rn_v", row_number().over(wV).cast("long"))
           .select("qid", "cid", "rn_v")
         val sh = ScaleQueries.shingleRows(s, d).select("doc_id", "s")

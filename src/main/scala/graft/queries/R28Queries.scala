@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.QuerySpec
 import graft.Tables
 import graft.ops.TextOps
+import graft.functions.cosineSim
 
 /** Round-7 widening: the training-data operators between curation and
   * model training that the existing families stop just short of —
@@ -45,7 +46,6 @@ object R28Queries {
     QuerySpec(
       "q304_contrastive_mining",
       (s, d) => {
-        graft.functions.CosineSimilarity.register(s)
         val edges = ScaleQueries.neardupEdges(s, d)
         val partners = edges.select(col("a").as("x"), col("b").as("y"))
           .unionByName(edges.select(col("b").as("x"), col("a").as("y")))
@@ -53,7 +53,7 @@ object R28Queries {
         val pc = partners
           .join(emb.select(col("vec_id").as("x"), col("embedding").as("xe")), "x")
           .join(emb.select(col("vec_id").as("y"), col("embedding").as("ye")), "y")
-          .select(col("x"), round(expr("cosine_sim(xe, ye)"), 6).as("cp"))
+          .select(col("x"), round(cosineSim(col("xe"), col("ye")), 6).as("cp"))
         val pos = pc.groupBy("x")
           .agg(count(lit(1)).as("n_pos"), max("cp").as("best_pos"))
         val al = ScaleQueries.ivfFlat(s, d)
@@ -65,7 +65,7 @@ object R28Queries {
             col("cell")), Seq("cell"))
           .where(col("n") =!= col("x"))
           .join(partners.select(col("x"), col("y").as("n")), Seq("x", "n"), "left_anti")
-          .select(col("x"), round(expr("cosine_sim(xe, ne)"), 6).as("cn"))
+          .select(col("x"), round(cosineSim(col("xe"), col("ne")), 6).as("cn"))
           .where(col("cn") >= 0.2)
         val neg = nc.groupBy("x")
           .agg(count(lit(1)).as("n_hard"), max("cn").as("hardest"))

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.QuerySpec
@@ -16,13 +16,6 @@ import graft.ops.TextOps
 object R29Queries {
 
   private def t(s: SparkSession, d: String, n: String): DataFrame = Tables.load(s, d, n)
-
-  /** Portable 40-bit integer hash of a string — md5 hex → conv → long
-    * (the q252 rowHash convention): replayable bit-for-bit in DuckDB,
-    * unlike xxhash64.
-    */
-  private def md5Bucket(c: Column, buckets: Int): Column =
-    pmod(conv(substring(md5(c), 1, 10), 16, 10).cast("long"), lit(buckets.toLong))
 
   val specs: Seq[QuerySpec] = Seq(
 
@@ -82,7 +75,7 @@ object R29Queries {
         val a = t(s, d, "documents")
           .select(col("doc_id"), col("lang"), size(toks).cast("long").as("n_tok"))
           .withColumn("batch",
-            md5Bucket(concat(lit("epoch1:"), col("doc_id").cast("string")), 8))
+            R39Queries.md5Bucket(concat(lit("epoch1:"), col("doc_id").cast("string")), 8))
         val perLang = a.groupBy("batch", "lang").agg(sum("n_tok").as("lt"))
         val dom = perLang.groupBy("batch")
           .agg(max("lt").as("dom_mass"), countDistinct("lang").as("n_langs"))

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.QuerySpec
 import graft.Tables
 import graft.ops.TextOps
+import graft.functions.cosineSim
 
 /** Round-8 widening — the four depth gaps VERDICT r7 ranked: the BPE
   * loop CLOSED (q319 applies the learned merges and reads out per-lang
@@ -201,7 +202,6 @@ object R33Queries {
     QuerySpec(
       "q320_incr_ivf_recall",
       (s, d) => {
-        graft.functions.CosineSimilarity.register(s)
         val e = t(s, d, "embeddings")
         val cents0 = e.where(col("vec_id") < 8)
           .select(col("vec_id").as("cent_id"), col("embedding").as("ce"))
@@ -247,7 +247,7 @@ object R33Queries {
         val truth0 = broadcast(q).crossJoin(e)
           .where(col("vec_id") =!= col("qid"))
           .select(col("qid"), col("vec_id").as("cid"),
-            round(expr("cosine_sim(qe, embedding)"), 6).as("cos_r"))
+            round(cosineSim(col("qe"), col("embedding")), 6).as("cos_r"))
           .withColumn("rn", row_number().over(wT)).where(col("rn") <= 3)
           .select("qid", "cid")
         val (incr, reb, truth) = graft.Par.par3(incrLeg(), rebLeg(), truth0.localCheckpoint(false))
@@ -259,7 +259,7 @@ object R33Queries {
           qc.join(ce, "cell")
             .where(col("cid") =!= col("qid"))
             .select(col("qid"), col("cid"),
-              round(expr("cosine_sim(qe, cemb)"), 6).as("cos_r"))
+              round(cosineSim(col("qe"), col("cemb")), 6).as("cos_r"))
             .withColumn("rn", row_number().over(wT)).where(col("rn") <= 3)
             .select("qid", "cid")
             .join(truth, Seq("qid", "cid"))

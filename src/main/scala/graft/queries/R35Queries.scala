@@ -7,6 +7,7 @@ import org.apache.spark.sql.expressions.Window
 
 import graft.QuerySpec
 import graft.Tables
+import graft.functions.cosineSim
 
 /** Round-8 third widening — closing the operational loops the q324–q326
   * layer opened: q327 APPLIES the dedup policy the q325 sweep priced and
@@ -104,7 +105,6 @@ object R35Queries {
     QuerySpec(
       "q328_dim_truncation_recall",
       (s, d) => {
-        graft.functions.CosineSimilarity.register(s)
         val e = t(s, d, "embeddings")
         val q = e.where(col("vec_id") < 10)
           .select(col("vec_id").as("qid"), col("embedding").as("qe"))
@@ -113,7 +113,7 @@ object R35Queries {
           broadcast(q).crossJoin(e)
             .where(col("vec_id") =!= col("qid"))
             .select(lit(k.toLong).as("dims"), col("qid"), col("vec_id").as("cid"),
-              round(expr(s"cosine_sim(slice(qe, 1, $k), slice(embedding, 1, $k))"), 6).as("cos_k"))
+              round(cosineSim(slice(col("qe"), 1, k), slice(col("embedding"), 1, k)), 6).as("cos_k"))
         }.reduce(_ unionByName _)
           .withColumn("rn", row_number().over(w).cast("long"))
         val truth = ScaleQueries.truthTop3(s, d)
@@ -159,7 +159,6 @@ object R35Queries {
     QuerySpec(
       "q329_nprobe_sweep",
       (s, d) => {
-        graft.functions.CosineSimilarity.register(s)
         val al = ScaleQueries.ivfFlat(s, d)
         val e = t(s, d, "embeddings")
         val cents = e.where(col("vec_id") < ScaleQueries.ivfCells)
@@ -169,14 +168,14 @@ object R35Queries {
         val wc = Window.partitionBy("qid").orderBy(col("cos_c").desc, col("cent_id").asc)
         val cellRank = broadcast(q).crossJoin(broadcast(cents))
           .select(col("qid"), col("qe"), col("cent_id"),
-            round(expr("cosine_sim(qe, ce)"), 6).as("cos_c"))
+            round(cosineSim(col("qe"), col("ce")), 6).as("cos_c"))
           .withColumn("crn", row_number().over(wc).cast("long"))
         val cand = cellRank
           .join(al.select(col("vec_id").as("cid"), col("embedding").as("cemb"), col("cell")),
             col("cent_id") === col("cell"))
           .where(col("cid") =!= col("qid"))
           .select(col("qid"), col("cid"), col("crn"),
-            round(expr("cosine_sim(qe, cemb)"), 6).as("cos_r"))
+            round(cosineSim(col("qe"), col("cemb")), 6).as("cos_r"))
         val grid = s.range(0, 1, 1, 1).select(explode(array(
           Seq(1L, 2L, 4L, 8L).map(lit): _*)).as("np"))
         val w = Window.partitionBy("np", "qid").orderBy(col("cos_r").desc, col("cid").asc)

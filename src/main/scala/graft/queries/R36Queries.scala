@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.QuerySpec
 import graft.Tables
+import graft.functions.cosineSim
 
 /** Round-8 fourth widening — the measurement-and-governance layer a
   * data-curation team runs ON TOP of the pipeline the earlier rounds
@@ -283,7 +284,6 @@ object R36Queries {
     QuerySpec(
       "q335_bitext_margin",
       (s, d) => {
-        graft.functions.CosineSimilarity.register(s)
         val emb = t(s, d, "embeddings")
           .join(t(s, d, "documents").select(col("doc_id"), col("lang")),
             col("vec_id") === col("doc_id"))
@@ -299,7 +299,7 @@ object R36Queries {
           .select(col("vec_id").as("qid"), col("embedding").as("qe"))
         val q = planted.unionByName(natural)
         val p = broadcast(q).crossJoin(en)
-          .select(col("qid"), col("cid"), round(expr("cosine_sim(qe, ce)"), 6).as("cs"))
+          .select(col("qid"), col("cid"), round(cosineSim(col("qe"), col("ce")), 6).as("cs"))
         val wf = Window.partitionBy("qid").orderBy(col("cs").desc, col("cid").asc)
         val wb = Window.partitionBy("cid").orderBy(col("cs").desc, col("qid").asc)
         val r = p.withColumn("rnf", row_number().over(wf).cast("long"))

@@ -184,9 +184,9 @@ object R37Queries {
             sum(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("npu"))
         val reps = s.range(50).select(col("id").as("rep"))
         val wide = perUser.crossJoin(broadcast(reps))
-          .withColumn("arm", pmod(conv(substring(md5(
+          .withColumn("arm", R39Queries.md5Bucket(
             concat(lit("aa:"), col("rep").cast("string"), lit(":"),
-              col("user_id").cast("string"))), 1, 10), 16, 10).cast("long"), lit(2L)))
+              col("user_id").cast("string")), 2))
           .groupBy("rep")
           .agg(
             sum(when(col("arm") === 1L, col("ne")).otherwise(0L)).as("n1"),

@@ -60,13 +60,10 @@ object R38Queries {
     * three independent hashes via the salt prefix).
     */
   private def bloomPos(i: Int, k: Column): Column =
-    pmod(
-      conv(substring(md5(concat(lit(s"bf$i:"), k.cast("string"))), 1, 10), 16, 10)
-        .cast("long"),
-      lit(8192L))
+    R39Queries.md5Bucket(concat(lit(s"bf$i:"), k.cast("string")), 8192)
 
   private def bloomPosSql(i: Int, k: String): String =
-    s"CAST(concat('0x', substr(md5('bf$i:' || CAST($k AS VARCHAR)), 1, 10)) AS BIGINT) % 8192"
+    R39Queries.md5BucketSql(s"'bf$i:' || CAST($k AS VARCHAR)", 8192)
 
   /** One q341 battery entry: does `det` functionally determine `dep`? */
   private def fdLeg(

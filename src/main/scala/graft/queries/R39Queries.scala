@@ -31,6 +31,10 @@ object R39Queries {
 
   private def t(s: SparkSession, d: String, n: String): DataFrame = Tables.load(s, d, n)
 
+  /** Portable 40-bit integer hash of a string, mod `buckets` — md5 hex →
+    * conv → long (the q252 rowHash convention): replayable bit-for-bit in
+    * DuckDB through [[md5BucketSql]], unlike xxhash64.
+    */
   private[graft] def md5Bucket(c: Column, buckets: Int): Column =
     pmod(conv(substring(md5(c), 1, 10), 16, 10).cast("long"), lit(buckets.toLong))
 

@@ -125,7 +125,11 @@ object R43Queries {
         // is exploded once per determinant with the determinant's value
         // as a string group key (cast is injective per column type —
         // long/int/double toString, identity on strings — so the groups
-        // are exactly the per-column groups), and every dependent's
+        // are exactly the per-column groups, with one caveat: native
+        // grouping merges -0.0 with 0.0, but they cast to different
+        // strings; every NaN casts to "NaN". p_retailprice is always
+        // positive; a float determinant that may hold -0.0 needs
+        // `col(c) + 0.0` before the cast), and every dependent's
         // distinct-count is computed in the same aggregate. 12 corpus
         // aggregates (~24 exchanges) become 2 (guide §2.4); the det==dep
         // diagonal is computed idly (nd ≡ 1) and dropped at the explode.

@@ -127,8 +127,8 @@ object R44Queries {
         // re-aggregation.
         val fine = perKey.select(col("f"), explode(array((1 to 3).map(i =>
             struct(lit(i.toLong).as("hr"),
-              pmod(conv(substring(md5(concat(lit(s"cm$i:"), col("k").cast("string"))), 1, 10), 16, 10)
-                .cast("long"), lit(524288L)).as("cell"))): _*)).as("z"))
+              R39Queries.md5Bucket(concat(lit(s"cm$i:"), col("k").cast("string")), 524288)
+                .as("cell"))): _*)).as("z"))
           .select(col("z.hr").as("hr"), col("z.cell").as("cell"), col("f"))
           .groupBy("hr", "cell").agg(sum("f").as("c"))
           .localCheckpoint(false)

@@ -34,8 +34,8 @@ object R45Queries {
   private[graft] def cmCoords(keys: DataFrame): DataFrame =
     keys.select(explode(array((1 to 3).map(i =>
         struct(lit(i.toLong).as("hr"),
-          pmod(conv(substring(md5(concat(lit(s"hh$i:"), col("k").cast("string"))), 1, 10), 16, 10)
-            .cast("long"), lit(1024L)).as("cell"))): _*)).as("z"))
+          R39Queries.md5Bucket(concat(lit(s"hh$i:"), col("k").cast("string")), 1024)
+            .as("cell"))): _*)).as("z"))
       .select(col("z.hr").as("hr"), col("z.cell").as("cell"))
 
   private def hhCellSql(i: Int, k: String): String =
@@ -85,8 +85,8 @@ object R45Queries {
         val dict = keys.groupBy("k").agg(count(lit(1)).as("f"))
         val probed = dict.select(col("k"), col("f"), explode(array((1 to 3).map(i =>
             struct(lit(i.toLong).as("hr"),
-              pmod(conv(substring(md5(concat(lit(s"hh$i:"), col("k").cast("string"))), 1, 10), 16, 10)
-                .cast("long"), lit(1024L)).as("cell"))): _*)).as("z"))
+              R39Queries.md5Bucket(concat(lit(s"hh$i:"), col("k").cast("string")), 1024)
+                .as("cell"))): _*)).as("z"))
           .select(col("k"), col("f"), col("z.hr").as("hr"), col("z.cell").as("cell"))
           .join(cm, Seq("hr", "cell"))
           .groupBy("k", "f").agg(min("c").as("est"))

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.QuerySpec
 import graft.Tables
 import graft.ops.DedupOps
+import graft.functions.cosineSim
 
 /** Round-3 widening, part 2 — corpus-curation and observability closers:
   * vocabulary heavy hitters (q141), per-source document caps (q142), the
@@ -229,7 +230,6 @@ object R4Queries {
     QuerySpec(
       "q147_knn_label",
       (s, d) => {
-        graft.functions.CosineSimilarity.register(s)
         val e = t(s, d, "embeddings")
         val q = e.where(col("vec_id") < 10)
           .select(col("vec_id").as("qid"), col("embedding").as("qe"),
@@ -240,7 +240,7 @@ object R4Queries {
         broadcast(q).crossJoin(base)
           .select(col("qid"), col("true_label"), col("vec_id").as("cid"),
             col("label").as("pred_label"),
-            round(expr("cosine_sim(qe, embedding)"), 6).as("cos_r"))
+            round(cosineSim(col("qe"), col("embedding")), 6).as("cos_r"))
           .withColumn("rn", row_number().over(wn))
           .where(col("rn") <= 5)
           .groupBy("qid", "true_label", "pred_label")
@@ -539,7 +539,6 @@ object R4Queries {
     QuerySpec(
       "q158_rrf_fusion",
       (s, d) => {
-        graft.functions.CosineSimilarity.register(s)
         val e = t(s, d, "embeddings")
         val q = e.where(col("vec_id") < 10)
           .select(col("vec_id").as("qid"), col("embedding").as("qe"))
@@ -548,7 +547,7 @@ object R4Queries {
         val wRrf = Window.partitionBy("qid").orderBy(col("rrf").desc, col("cid").asc)
         broadcast(q).crossJoin(e.where(col("vec_id") >= 10))
           .select(col("qid"), col("vec_id").as("cid"),
-            round(expr("cosine_sim(qe, embedding)"), 6).as("cos_r"))
+            round(cosineSim(col("qe"), col("embedding")), 6).as("cos_r"))
           .withColumn("r_cos", row_number().over(wCos))
           .withColumn("r_rec", row_number().over(wRec))
           .withColumn("rrf",

@@ -209,8 +209,8 @@ object R50Queries {
         // count-min at w=8192, d=3 (the q361 md5 convention)
         val cm = keys.select(explode(array((1 to 3).map(i =>
             struct(lit(i.toLong).as("hr"),
-              pmod(conv(substring(md5(concat(lit(s"cm$i:"), col("k").cast("string"))), 1, 10), 16, 10)
-                .cast("long"), lit(8192L)).as("cell"))): _*)).as("z"))
+              R39Queries.md5Bucket(concat(lit(s"cm$i:"), col("k").cast("string")), 8192)
+                .as("cell"))): _*)).as("z"))
           .select(col("z.hr").as("hr"), col("z.cell").as("cell"))
           .groupBy("hr", "cell").agg(count(lit(1)).as("c"))
           .groupBy("hr").agg(sum(expr("c * c")).as("row_est"))

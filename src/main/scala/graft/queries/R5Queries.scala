@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.QuerySpec
 import graft.Tables
+import graft.functions.cosineSim
 
 /** Round-4 widening — the quality/serving closers a retrieval or dedup
   * user reaches for next: the recall@1 metric as a first-class query
@@ -40,7 +41,6 @@ object R5Queries {
     QuerySpec(
       "q163_ann_recall",
       (s, d) => {
-        graft.functions.CosineSimilarity.register(s)
         val truth = ScaleQueries.truthTop3(s, d)
           .where(col("rn") === 1)
           .select(col("qid"), col("cid").as("true_cid"))
@@ -64,7 +64,6 @@ object R5Queries {
     QuerySpec(
       "q164_ivf_nprobe2",
       (s, d) => {
-        graft.functions.CosineSimilarity.register(s)
         val e = t(s, d, "embeddings")
         val cents = e.where(col("vec_id") < 8)
           .select(col("vec_id").as("cent_id"), col("embedding").as("ce"))
@@ -73,7 +72,7 @@ object R5Queries {
           .select(col("vec_id").as("qid"), col("embedding").as("qe"))
           .crossJoin(broadcast(cents))
           .select(col("qid"), col("qe"), col("cent_id"),
-            round(expr("cosine_sim(qe, ce)"), 6).as("cos_c"))
+            round(cosineSim(col("qe"), col("ce")), 6).as("cos_c"))
           .withColumn("pn", row_number().over(wq))
           .where(col("pn") <= 2)
           .select(col("qid"), col("qe"), col("cent_id").as("cell"))
@@ -81,7 +80,7 @@ object R5Queries {
         probes.join(ScaleQueries.ivfFlat(s, d), Seq("cell"))
           .where(col("vec_id") =!= col("qid"))
           .select(col("qid"), col("vec_id").as("cid"),
-            round(expr("cosine_sim(qe, embedding)"), 6).as("cos_r"))
+            round(cosineSim(col("qe"), col("embedding")), 6).as("cos_r"))
           .withColumn("rn", row_number().over(w))
           .where(col("rn") === 1)
           .select("qid", "cid", "cos_r")
@@ -100,7 +99,6 @@ object R5Queries {
     QuerySpec(
       "q165_filtered_ann",
       (s, d) => {
-        graft.functions.CosineSimilarity.register(s)
         val lab = t(s, d, "embeddings").select(col("vec_id"), col("label"))
         val al = ScaleQueries.ivfFlat(s, d).join(lab, "vec_id")
         val q = al.where(col("vec_id") < 10)
@@ -111,7 +109,7 @@ object R5Queries {
           .where(col("vec_id") =!= col("qid") && col("label") === col("qlab"))
           .select(col("qid"), col("vec_id").as("cid"),
             col("label").cast("long").as("label"),
-            round(expr("cosine_sim(qe, embedding)"), 6).as("cos_r"))
+            round(cosineSim(col("qe"), col("embedding")), 6).as("cos_r"))
           .withColumn("rn", row_number().over(w))
           .where(col("rn") === 1)
           .select("qid", "cid", "label", "cos_r")

@@ -10,7 +10,7 @@ import graft.Tables
   * SCHEMA dimension:
   *
   *  - q433 serves a four-scenario aggregate workload END-TO-END through
-  *    the injected [[graft.plans.MvRewriteRule]] — full-grain group-by
+  *    [[graft.plans.MvRewriteRule]] — full-grain group-by
   *    with AVG (rewritten from SUM/COUNT partials under the null-free
   *    data proof), the empty-match global COUNT (the coalesce-to-0
   *    soundness case), filter subsumption through a PARTIAL view, and
@@ -44,12 +44,12 @@ object R65Queries {
   val specs: Seq[QuerySpec] = Seq(
 
     // q433 — THE MV REWRITE, SERVED: MvRewriteSpec pins the rule's laws
-    // on fixtures; this runs the registered-catalog → injected-rule →
+    // on fixtures; this runs the registered-catalog → rule →
     // re-rooted-Aggregate pipeline as a QUERY, with the DuckDB oracle
     // certifying the answers AND the serving decision. Three catalogs
     // register (full grain, cents>$1k partial grain, and a grain over a
-    // null-carrying measure), the rule is injected for the scope, and
-    // four scenarios execute:
+    // null-carrying measure), the rule is applied to each scenario's
+    // optimized plan, and four scenarios execute:
     //   1:grain_group      — per-flag COUNT/SUM/AVG; AVG is only legal
     //                        because registration PROVED cents null-free
     //                        (SUM(sum)/SUM(cnt) needs COUNT(m)=COUNT(*));
@@ -79,6 +79,7 @@ object R65Queries {
       (s, d) => {
         import graft.plans.{MvCatalog, MvRewriteRule}
         import org.apache.spark.sql.catalyst.plans.logical.LeafNode
+        import org.apache.spark.sql.graft.ColumnBridge
         // the two bases, and then the three registered grains, are
         // independent checkpointed legs — overlap their materializations
         // (graft.Par, guide §2.6)
@@ -120,9 +121,6 @@ object R65Queries {
         require(regs(0), "full-grain registration failed")
         require(regs(1), "partial-grain registration failed")
         require(regs(2), "null-measure registration failed")
-        val hadRule = s.experimental.extraOptimizations.contains(MvRewriteRule)
-        if (!hadRule) s.experimental.extraOptimizations =
-          s.experimental.extraOptimizations :+ MvRewriteRule
         try {
           def viewOnly(q: DataFrame, vdf: DataFrame): Long = {
             val ls = q.queryExecution.optimizedPlan.collect { case l: LeafNode => l }
@@ -131,16 +129,16 @@ object R65Queries {
               ls.head.schema.fieldNames.sameElements(vl.schema.fieldNames)) 1L
             else 0L
           }
-          // materialize each scenario INSIDE the injected scope — the
-          // returned frame is a LogicalRDD, so the driver's later write
-          // does not depend on the (removed) rule
-          def scen(id: String, q: DataFrame, vdf: DataFrame): DataFrame = {
+          // the rule rewrites this scenario's optimized plan (no session
+          // state), materialized while the catalog still holds the views
+          def scen(id: String, q0: DataFrame, vdf: DataFrame): DataFrame = {
+            val q = ColumnBridge.ofRows(s, MvRewriteRule(q0.queryExecution.optimizedPlan))
             val vo = viewOnly(q, vdf)
             q.withColumn("scenario", lit(id)).withColumn("view_only", lit(vo))
               .localCheckpoint(true)
           }
-          // the four scenarios each eager-checkpoint inside the injected
-          // scope and share no lineage — materialize them concurrently
+          // the four scenarios each eager-checkpoint and share no
+          // lineage — materialize them concurrently
           val scens = graft.Par(
             () => scen("1:grain_group",
               base.groupBy("f")
@@ -172,14 +170,10 @@ object R65Queries {
             .select(col("scenario"), col("g"), col("n"), col("tc"),
               col("avg_r"), col("view_only"))
             .orderBy("scenario", "g")
-        } finally {
-          if (!hadRule) s.experimental.extraOptimizations =
-            s.experimental.extraOptimizations.filterNot(_ == MvRewriteRule)
-          MvCatalog.clear()
-        }
+        } finally MvCatalog.clear()
       },
       Some("""WITH li AS (SELECT l_returnflag AS f, l_linestatus AS s, CAST(year(l_shipdate) AS BIGINT) AS y, CAST(month(l_shipdate) AS BIGINT) AS m, CAST(floor(l_extendedprice * 100.0 + 0.5) AS BIGINT) AS cents FROM lineitem), nli AS (SELECT f, s, y, m, CASE WHEN cents % 7 = 0 THEN NULL ELSE cents END AS cents FROM li), s1 AS (SELECT '1:grain_group' AS scenario, f AS g, count(*) AS n, sum(cents) AS tc, round(avg(cents), 6) AS avg_r, 1 AS view_only FROM li GROUP BY f), s2 AS (SELECT '2:empty_global' AS scenario, '*' AS g, count(*) AS n, 0 AS tc, 0.0 AS avg_r, 1 AS view_only FROM li WHERE y = 1871), s3 AS (SELECT '3:partial_subsume' AS scenario, f AS g, count(*) AS n, sum(cents) AS tc, 0.0 AS avg_r, 1 AS view_only FROM li WHERE cents > 100000 AND s = 'F' GROUP BY f), s4 AS (SELECT '4:null_avg_refusal' AS scenario, f AS g, count(*) AS n, sum(cents) AS tc, round(avg(cents), 6) AS avg_r, 0 AS view_only FROM nli GROUP BY f) SELECT scenario, g, CAST(n AS BIGINT) AS n, CAST(tc AS BIGINT) AS tc, CAST(avg_r AS DOUBLE) AS avg_r, CAST(view_only AS BIGINT) AS view_only FROM (SELECT * FROM s1 UNION ALL SELECT * FROM s2 UNION ALL SELECT * FROM s3 UNION ALL SELECT * FROM s4) z ORDER BY scenario, g"""),
-      "A/S ext: the MV rewrite SERVED — registered grains + the injected optimizer rule answer a four-scenario workload (AVG from partials under the null-free proof, the coalesced empty-match global COUNT, filter subsumption through a partial view, the null-AVG refusal), with the optimized plan's view-only verdict emitted and oracle-pinned as data"),
+      "A/S ext: the MV rewrite SERVED — registered grains + the optimizer rule applied to each scenario plan answer a four-scenario workload (AVG from partials under the null-free proof, the coalesced empty-match global COUNT, filter subsumption through a partial view, the null-AVG refusal), with the optimized plan's view-only verdict emitted and oracle-pinned as data"),
 
     // q434 — SCHEMA EVOLUTION ACROSS SNAPSHOTS: the q421–q424 arc held
     // the schema fixed; here it MOVES while the data files do not.

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.QuerySpec
 import graft.Tables
+import graft.functions.{cosineSim, jaroWinkler}
 
 /** Round-4 continuation — the curation/analytics operators a pipeline
   * team reaches for after the retrieval/dedup quality gates of R5Queries:
@@ -109,7 +110,6 @@ object R6Queries {
     QuerySpec(
       "q171_semantic_dedup",
       (s, d) => {
-        graft.functions.CosineSimilarity.register(s)
         // pair budget enforced at index access (ScaleQueries.ivfFlat)
         val al = ScaleQueries.ivfFlat(s, d)
         val a = al.select(col("vec_id").as("aid"), col("embedding").as("ae"), col("cell"))
@@ -117,7 +117,7 @@ object R6Queries {
         a.join(b, Seq("cell"))
           .where(col("aid") < col("bid"))
           .select(col("bid"), col("cell"), col("aid"),
-            round(expr("cosine_sim(ae, be)"), 6).as("cos_r"))
+            round(cosineSim(col("ae"), col("be")), 6).as("cos_r"))
           .where(col("cos_r") >= 0.4)
           .groupBy(col("bid").as("vec_id"))
           .agg(first(col("cell")).as("cell"),
@@ -309,9 +309,8 @@ object R6Queries {
     QuerySpec(
       "q177_fuzzy_block",
       (s, d) => {
-        graft.functions.JaroWinkler.register(s)
         R6Queries.nameBlockPairs(s, d)
-          .select(col("blk"), round(expr("jaro_winkler(na, nb)"), 6).as("m"))
+          .select(col("blk"), round(jaroWinkler(col("na"), col("nb")), 6).as("m"))
           .groupBy("blk")
           .agg(count(lit(1)).as("n_pairs"),
             sum(when(col("m") >= 0.95, 1L).otherwise(0L)).as("n_match"),
@@ -743,7 +742,6 @@ object R6Queries {
     QuerySpec(
       "q191_matryoshka_audit",
       (s, d) => {
-        graft.functions.CosineSimilarity.register(s)
         val e = t(s, d, "embeddings")
           .withColumn("emb16", slice(col("embedding"), 1, 16))
         val q = e.where(col("vec_id") < 10)
@@ -758,8 +756,8 @@ object R6Queries {
             .where(col("rn") <= 5)
             .select(col("qid"), col("cid"))
         }
-        val full = top5(expr("cosine_sim(qe, embedding)"))
-        val pref = top5(expr("cosine_sim(qe16, emb16)"))
+        val full = top5(cosineSim(col("qe"), col("embedding")))
+        val pref = top5(cosineSim(col("qe16"), col("emb16")))
         val overlap = full.join(pref, Seq("qid", "cid"))
           .groupBy("qid").agg(count(lit(1)).as("overlap5"))
         val energy = q.select(col("qid"),

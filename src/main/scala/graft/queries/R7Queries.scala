@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.QuerySpec
 import graft.Tables
+import graft.functions.cosineSim
 
 /** Round-5 additions — the two index-family members the round-4 review
   * named as the remaining standard shapes: IVF-PQ (product quantization,
@@ -123,14 +124,13 @@ object R7Queries {
     * the (query × ≤20 candidate) rows only, top-1 per query.
     */
   private def exactRerankTop1(s: SparkSession, d: String, short: DataFrame): DataFrame = {
-    graft.functions.CosineSimilarity.register(s)
     val e = t(s, d, "embeddings")
     val wr = Window.partitionBy("qid").orderBy(col("cos_r").desc, col("cid").asc)
     short
       .join(e.select(col("vec_id").as("qid"), col("embedding").as("qe")), "qid")
       .join(e.select(col("vec_id").as("cid"), col("embedding").as("ce")), "cid")
       .select(col("qid"), col("cid"),
-        round(expr("cosine_sim(qe, ce)"), 6).as("cos_r"))
+        round(cosineSim(col("qe"), col("ce")), 6).as("cos_r"))
       .withColumn("rn", row_number().over(wr))
       .where(col("rn") === 1)
       .select("qid", "cid")
@@ -142,7 +142,6 @@ object R7Queries {
     * pn ≤ 2, q210 sweeps pn ≤ 4 — one copy of the probe construction.
     */
   private def coarseProbes(s: SparkSession, d: String): DataFrame = {
-    graft.functions.CosineSimilarity.register(s)
     val e = t(s, d, "embeddings")
     val cents = e.where(col("vec_id") < 8)
       .select(col("vec_id").as("cent_id"), col("embedding").as("ce"))
@@ -151,7 +150,7 @@ object R7Queries {
       .select(col("vec_id").as("qid"), col("embedding").as("qe"))
       .crossJoin(broadcast(cents))
       .select(col("qid"), col("qe"), col("cent_id"),
-        round(expr("cosine_sim(qe, ce)"), 6).as("cos_c"))
+        round(cosineSim(col("qe"), col("ce")), 6).as("cos_c"))
       .withColumn("pn", row_number().over(wq))
       .select(col("qid"), col("qe"), col("cent_id").as("cell"), col("pn"))
   }
@@ -187,7 +186,6 @@ object R7Queries {
     QuerySpec(
       "q198_ivf_pq",
       (s, d) => {
-        graft.functions.CosineSimilarity.register(s)
         val ex = pqElems(s, d)
         val c1 = pqCodebook(s, d)
         val a2 = pqCodes(s, d)
@@ -649,7 +647,7 @@ object R7Queries {
         val sc = probes.join(ScaleQueries.ivfFlat(s, d), Seq("cell"))
           .where(col("vec_id") =!= col("qid"))
           .select(col("qid"), col("vec_id").as("cid"), col("pn"),
-            round(expr("cosine_sim(qe, embedding)"), 6).as("cos_r"))
+            round(cosineSim(col("qe"), col("embedding")), 6).as("cos_r"))
         val wn = Window.partitionBy("nprobe", "qid")
           .orderBy(col("cos_r").desc, col("cid").asc)
         val truth = ScaleQueries.truthTop3(s, d)

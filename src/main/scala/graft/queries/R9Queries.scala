@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.QuerySpec
 import graft.Tables
+import graft.functions.cosineSim
 
 /** Round-5 widening, second batch: Bloom-filter membership (completing
   * the KMV/CMS/Bloom mergeable-sketch trio), an SCD type-2 dimension
@@ -176,7 +177,6 @@ object R9Queries {
     QuerySpec(
       "q220_rrf_hybrid",
       (s, d) => {
-        graft.functions.CosineSimilarity.register(s)
         val lex = R6Queries.bm25TermCols(s, d)
           .select(col("doc_id"),
             round(coalesce(col("w1"), lit(0.0)) + coalesce(col("w2"), lit(0.0)) +
@@ -188,7 +188,7 @@ object R9Queries {
         val qv = e.where(col("vec_id") === 0).select(col("embedding").as("qe"))
         val sem = e.where(col("vec_id") =!= 0).crossJoin(broadcast(qv))
           .select(col("vec_id").as("doc_id"),
-            round(expr("cosine_sim(qe, embedding)"), 6).as("sem_score"))
+            round(cosineSim(col("qe"), col("embedding")), 6).as("sem_score"))
           .orderBy(col("sem_score").desc, col("doc_id")).limit(50)
           .withColumn("r_sem", row_number().over(
             Window.orderBy(col("sem_score").desc, col("doc_id"))).cast("long"))

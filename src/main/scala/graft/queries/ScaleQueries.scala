@@ -5,6 +5,7 @@ import graft.ops.{DedupOps, TextOps, VectorOps}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.cosineSim
 
 /** LLM-training-data pipeline operators (SURVEY.md §2.14 / BASELINE.json
   * north star): dedup (exact, MinHash, SimHash, n-gram Jaccard), similarity
@@ -171,7 +172,6 @@ object ScaleQueries {
     */
   private[queries] def truthTop3(s: SparkSession, d: String): DataFrame =
     memo(s, d, "truthTop3") {
-      graft.functions.CosineSimilarity.register(s)
       val e = t(s, d, "embeddings")
       val q = e.where(col("vec_id") < 10)
         .select(col("vec_id").as("qid"), col("embedding").as("qe"))
@@ -179,7 +179,7 @@ object ScaleQueries {
       broadcast(q).crossJoin(e)
         .where(col("vec_id") =!= col("qid"))
         .select(col("qid"), col("vec_id").as("cid"),
-          round(expr("cosine_sim(qe, embedding)"), 6).as("cos_r"))
+          round(cosineSim(col("qe"), col("embedding")), 6).as("cos_r"))
         .withColumn("rn", row_number().over(w).cast("long"))
         .where(col("rn") <= 3)
     }
@@ -343,7 +343,6 @@ object ScaleQueries {
     QuerySpec(
       "q38_lsh_ann",
       (s, d) => {
-        graft.functions.CosineSimilarity.register(s)
         val b = t(s, d, "embeddings")
           .select(col("vec_id"), col("embedding"),
             VectorOps.srpBucket(col("embedding"), 8).as("bucket"))
@@ -353,7 +352,7 @@ object ScaleQueries {
         q.join(b, Seq("bucket"))
           .where(col("vec_id") =!= col("qid"))
           .select(col("qid"), col("vec_id").as("cid"), col("bucket"),
-            round(expr("cosine_sim(qe, embedding)"), 6).as("cos_r"))
+            round(cosineSim(col("qe"), col("embedding")), 6).as("cos_r"))
           .withColumn("rn", row_number().over(w).cast("long"))
           .where(col("rn") === 1)
           .select("qid", "cid", "bucket", "cos_r")

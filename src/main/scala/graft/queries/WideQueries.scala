@@ -4,6 +4,7 @@ import graft.{QuerySpec, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.bitmapDistinct
 
 /** Third-wave coverage (round 2): reshaping (unpivot, grouping sets),
   * map-typed columns, window navigation functions, higher statistical
@@ -784,12 +785,11 @@ object WideQueries {
     QuerySpec(
       "q121_bitmap_distinct",
       (s, d) => {
-        graft.functions.BitmapDistinct.register(s)
         t(s, d, "lineitem")
           .groupBy("l_returnflag")
           .agg(
-            expr("bitmap_distinct(l_partkey)").as("n_parts"),
-            expr("bitmap_distinct(l_suppkey)").as("n_supps"),
+            bitmapDistinct(col("l_partkey")).as("n_parts"),
+            bitmapDistinct(col("l_suppkey")).as("n_supps"),
             count(lit(1)).as("cnt"))
           .orderBy("l_returnflag")
       },

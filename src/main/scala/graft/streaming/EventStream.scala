@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import java.sql.Timestamp
+import graft.functions.cosineSim
 
 /** Structured-Streaming layer (SURVEY.md §2.12): the event-time operators
   * from q22-q24 expressed over streaming DataFrames, plus a custom
@@ -171,9 +172,7 @@ object EventStream {
       (sink: (Long, DataFrame) => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery =
     events
-      .groupBy(pmod(
-        conv(substring(md5(col("user_id").cast("string")), 1, 10), 16, 10).cast("long"),
-        lit(32L)).as("p"))
+      .groupBy(graft.queries.R39Queries.md5Bucket(col("user_id").cast("string"), 32).as("p"))
       .agg(count(lit(1)).as("c"))
       .writeStream
       .outputMode("complete")
@@ -506,13 +505,12 @@ object EventStream {
     * equivalence on the real sf0.001 delta).
     */
   def ivfAssignStream(vectors: DataFrame, cents: Seq[(Long, Seq[Float])]): DataFrame = {
-    graft.functions.CosineSimilarity.register(vectors.sparkSession)
     val centArr = array(cents.map { case (id, ce) =>
       struct(lit(id).as("cent_id"), array(ce.map(lit): _*).as("ce"))
     }: _*)
     val scored = transform(centArr, c =>
       struct(
-        round(call_function("cosine_sim", col("embedding"), c.getField("ce")), 6)
+        round(cosineSim(col("embedding"), c.getField("ce")), 6)
           .as("cos_c"),
         (c.getField("cent_id") * -1L).as("neg_id")))
     val best = array_max(scored)

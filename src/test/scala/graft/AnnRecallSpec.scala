@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.functions.cosineSim
 
 /** Approximation-QUALITY floors for the ANN paths (VERDICT r3 #3/#8).
   * The oracle proves each path deterministic and self-consistent; nothing
@@ -56,7 +57,6 @@ class AnnRecallSpec extends SparkSpecBase {
     // a kept vector has NO earlier same-cell neighbor >= tau (kept or
     // dropped), so any two KEPT vectors in a cell are < tau apart — the
     // property a SemDeDup consumer actually relies on
-    graft.functions.CosineSimilarity.register(spark)
     val dropped = SparkEntry.queries("q171_semantic_dedup")(spark, sf001)
       .select(col("vec_id")).as[Long](org.apache.spark.sql.Encoders.scalaLong)
       .collect().toSet
@@ -66,7 +66,7 @@ class AnnRecallSpec extends SparkSpecBase {
     val a = kept.select(col("vec_id").as("aid"), col("embedding").as("ae"), col("cell"))
     val b = kept.select(col("vec_id").as("bid"), col("embedding").as("be"), col("cell"))
     val dirty = a.join(b, Seq("cell")).where(col("aid") < col("bid"))
-      .where(round(expr("cosine_sim(ae, be)"), 6) >= 0.4).count()
+      .where(round(cosineSim(col("ae"), col("be")), 6) >= 0.4).count()
     assert(dirty == 0L, s"$dirty kept pairs >= tau survive dedup")
     assert(dropped.nonEmpty, "degenerate corpus: dedup dropped nothing")
   }
@@ -142,7 +142,6 @@ class AnnRecallSpec extends SparkSpecBase {
     // BOTH indexes, the kept set is pairwise-clean within the new
     // index's cells, and the occupancy report's Σc(c−1)/2 IS the number
     // the budget guard enforces.
-    graft.functions.CosineSimilarity.register(spark)
     val sf01 = "/root/testdata/sf0.01"
     val e = Tables.load(spark, sf01, "embeddings").select("vec_id", "embedding")
     val n = e.count()
@@ -163,7 +162,7 @@ class AnnRecallSpec extends SparkSpecBase {
       val a = al.select(col("vec_id").as("aid"), col("embedding").as("ae"), col("cell"))
       val b = al.select(col("vec_id").as("bid"), col("embedding").as("be"), col("cell"))
       a.join(b, Seq("cell")).where(col("aid") < col("bid"))
-        .where(round(expr("cosine_sim(ae, be)"), 6) >= 0.4)
+        .where(round(cosineSim(col("ae"), col("be")), 6) >= 0.4)
         .select(col("bid")).distinct()
         .as[Long](org.apache.spark.sql.Encoders.scalaLong).collect().toSet
     }
@@ -198,7 +197,7 @@ class AnnRecallSpec extends SparkSpecBase {
       val a = kept.select(col("vec_id").as("aid"), col("embedding").as("ae"), col("cell"))
       val b = kept.select(col("vec_id").as("bid"), col("embedding").as("be"), col("cell"))
       val dirty = a.join(b, Seq("cell")).where(col("aid") < col("bid"))
-        .where(round(expr("cosine_sim(ae, be)"), 6) >= 0.4).count()
+        .where(round(cosineSim(col("ae"), col("be")), 6) >= 0.4).count()
       assert(dirty == 0L, s"$dirty kept pairs >= tau under the k=$k index")
 
       // q165's filtered-ANN logic against the sqrt-rule index: every
@@ -213,7 +212,7 @@ class AnnRecallSpec extends SparkSpecBase {
       val scored = q.join(alb, Seq("cell"))
         .where(col("vec_id") =!= col("qid") && col("label") === col("qlab"))
         .select(col("qid"), col("vec_id").as("cid"),
-          round(expr("cosine_sim(qe, embedding)"), 6).as("cos_r"))
+          round(cosineSim(col("qe"), col("embedding")), 6).as("cos_r"))
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("qid").orderBy(col("cos_r").desc, col("cid").asc)
       val top = scored.withColumn("rn", row_number().over(w)).where(col("rn") === 1)
@@ -274,12 +273,11 @@ class AnnRecallSpec extends SparkSpecBase {
     assert(r.getDouble(0) >= 0.08,
       s"LSH bucketing no longer groups aligned vectors: mean cos ${r.getDouble(0)}")
     // the baseline the margin is measured against: random pairs ~0
-    graft.functions.CosineSimilarity.register(spark)
     val e = Tables.load(spark, sf001, "embeddings")
     val rand = e.where(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"))
       .crossJoin(e.where(col("vec_id") >= 10))
-      .agg(avg(expr("cosine_sim(qe, embedding)"))).head().getDouble(0)
+      .agg(avg(cosineSim(col("qe"), col("embedding")))).head().getDouble(0)
     assert(math.abs(rand) < 0.05, s"random-pair baseline moved: $rand")
   }
 

@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.JaroWinkler
+import graft.functions.{JaroWinkler, jaroWinkler}
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -55,17 +55,15 @@ class JaroWinklerSpec extends SparkSpecBase {
   }
 
   test("codegen path agrees with the static helper and handles nulls") {
-    JaroWinkler.register(spark)
     val df = pinned.map { case (a, b, _) => (a, b) }.toDF("a", "b")
-    val got = df.select(expr("jaro_winkler(a, b)")).as[Double].collect()
+    val got = df.select(jaroWinkler(col("a"), col("b"))).as[Double].collect()
     assert(got.toSeq == pinned.map(_._3), "codegen diverged from helper")
     val withNull = Seq((Some("abc"), None: Option[String])).toDF("a", "b")
-      .select(expr("jaro_winkler(a, b)")).collect()
+      .select(jaroWinkler(col("a"), col("b"))).collect()
     assert(withNull.head.isNullAt(0), "null input must yield null")
   }
 
   test("similarity is symmetric and bounded on random-ish name pairs") {
-    JaroWinkler.register(spark)
     val names = (1 to 40).map(i => s"Customer#${"%09d".format(i * 37 % 500)}")
     val pairs = names.zip(names.reverse)
     for ((a, b) <- pairs) {
@@ -78,9 +76,8 @@ class JaroWinklerSpec extends SparkSpecBase {
   }
 
   test("type check rejects non-string inputs") {
-    JaroWinkler.register(spark)
     val err = intercept[Exception] {
-      Seq((1, 2)).toDF("a", "b").select(expr("jaro_winkler(a, b)")).collect()
+      Seq((1, 2)).toDF("a", "b").select(jaroWinkler(col("a"), col("b"))).collect()
     }
     assert(err.getMessage.toLowerCase.contains("string") ||
       err.getMessage.contains("jaro_winkler"))

@@ -22,14 +22,6 @@ import graft.plans.{MvCatalog, MvRewriteRule}
   */
 class MvRewriteSpec extends SparkSpecBase {
 
-  private def withRule[T](f: => T): T = {
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ MvRewriteRule
-    try f
-    finally spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations.filterNot(_ == MvRewriteRule)
-  }
-
   private def leaves(df: DataFrame): Seq[LeafNode] =
     df.queryExecution.optimizedPlan.collect { case l: LeafNode => l }
 
@@ -69,7 +61,7 @@ class MvRewriteSpec extends SparkSpecBase {
     */
   private def sameResult(q: => DataFrame): DataFrame = {
     val off = q.collect().toSeq.sortBy(_.toString)
-    withRule {
+    withRule(MvRewriteRule) {
       val rewritten = q
       val on = rewritten.collect().toSeq.sortBy(_.toString)
       assert(on == off, "rewrite changed results")
@@ -82,7 +74,7 @@ class MvRewriteSpec extends SparkSpecBase {
     def q = base.groupBy("f", "s")
       .agg(count(lit(1)).as("n"), sum("cents").as("tc"))
     val rewritten = sameResult(q)
-    withRule {
+    withRule(MvRewriteRule) {
       assert(viewLeafOnly(rewritten),
         s"expected only the view leaf:\n${rewritten.queryExecution.optimizedPlan}")
     }
@@ -93,7 +85,7 @@ class MvRewriteSpec extends SparkSpecBase {
     def q = base.where(col("y") >= 1996L && col("s") === "F")
       .groupBy("f").agg(sum("cents").as("tc"), count(lit(1)).as("n"))
     val rewritten = sameResult(q)
-    withRule { assert(viewLeafOnly(rewritten)) }
+    withRule(MvRewriteRule) { assert(viewLeafOnly(rewritten)) }
   }
 
   test("min/max over DIM columns rewrite; grouping attr passthrough keeps names") {
@@ -101,7 +93,7 @@ class MvRewriteSpec extends SparkSpecBase {
     def q = base.groupBy("f").agg(min("y").as("y0"), max("m").as("m1"),
       count(lit(1)).as("n"))
     val rewritten = sameResult(q)
-    withRule { assert(viewLeafOnly(rewritten)) }
+    withRule(MvRewriteRule) { assert(viewLeafOnly(rewritten)) }
   }
 
   test("two rewrites in one query splice distinct fresh instances") {
@@ -110,7 +102,7 @@ class MvRewriteSpec extends SparkSpecBase {
     def agg2 = base.groupBy("f").agg(count(lit(1)).as("b_n"))
     def q = agg1.join(agg2, "f")
     val rewritten = sameResult(q)
-    withRule {
+    withRule(MvRewriteRule) {
       val ls = leaves(rewritten)
       assert(ls.size == 2, s"expected two view leaves:\n${rewritten.queryExecution.optimizedPlan}")
       assert(ls.map(_.output.map(_.exprId).toSet).reduce(_ intersect _).isEmpty,
@@ -120,7 +112,7 @@ class MvRewriteSpec extends SparkSpecBase {
 
   test("refusals: every unsound shape keeps the base scan") {
     registerOnce()
-    def baseLeafStays(q: DataFrame): Unit = withRule {
+    def baseLeafStays(q: DataFrame): Unit = withRule(MvRewriteRule) {
       val ls = leaves(q)
       val bl = base.queryExecution.analyzed.asInstanceOf[LeafNode]
       assert(ls.exists(_.canonicalized == bl.canonicalized),
@@ -142,7 +134,7 @@ class MvRewriteSpec extends SparkSpecBase {
       month(col("l_shipdate")).cast("long").as("m"),
       expr("CAST(floor(l_extendedprice * 100.0 + 0.5) AS BIGINT)").as("cents"))
       .localCheckpoint(false)
-    withRule {
+    withRule(MvRewriteRule) {
       val q = twin.groupBy("f").agg(count(lit(1)).as("n"))
       val bl = twin.queryExecution.analyzed.asInstanceOf[LeafNode]
       assert(leaves(q).exists(_.canonicalized == bl.canonicalized),
@@ -154,7 +146,7 @@ class MvRewriteSpec extends SparkSpecBase {
     registerOnce()
     def q = base.groupBy("f", "s").agg(avg("cents").as("a"), count(lit(1)).as("n"))
     val rewritten = sameResult(q)
-    withRule { assert(viewLeafOnly(rewritten)) }
+    withRule(MvRewriteRule) { assert(viewLeafOnly(rewritten)) }
   }
 
   test("AVG over a null-carrying measure refuses — the avgSafe data proof is absent") {
@@ -170,7 +162,7 @@ class MvRewriteSpec extends SparkSpecBase {
     // SUM still rewrites (SUM ignores nulls symmetrically on both sides) …
     def sumQ = nb.groupBy("f").agg(sum("cents").as("tc"))
     val off = sumQ.collect().toSeq.sortBy(_.toString)
-    withRule {
+    withRule(MvRewriteRule) {
       assert(sumQ.collect().toSeq.sortBy(_.toString) == off,
         "SUM rewrite changed results on the null-carrying measure")
       // … but AVG must keep the base scan: SUM(cnt) counts null rows
@@ -186,12 +178,12 @@ class MvRewriteSpec extends SparkSpecBase {
     registerOnce()
     def q = base.where(col("y") === 1871L).agg(count(lit(1)).as("n"))
     val rewritten = sameResult(q) // rule-off = 0; rewrite must coalesce SUM(cnt)
-    withRule {
+    withRule(MvRewriteRule) {
       assert(viewLeafOnly(rewritten))
       assert(rewritten.collect().head.getLong(0) == 0L)
     }
     // COUNT(NULL) is constant-0, never the row count — with or without a rule
-    withRule {
+    withRule(MvRewriteRule) {
       assert(base.agg(count(lit(null)).as("n")).collect().head.getLong(0) == 0L)
       assert(base.groupBy("f").agg(count(lit(null)).as("n"))
         .collect().forall(_.getLong(1) == 0L))
@@ -211,7 +203,7 @@ class MvRewriteSpec extends SparkSpecBase {
     def q = base.where(col("cents") > 100000L && col("s") === "F")
       .groupBy("f").agg(sum("cents").as("tc"), count(lit(1)).as("n"))
     val rewritten = sameResult(q)
-    withRule {
+    withRule(MvRewriteRule) {
       val ls = leaves(rewritten)
       val vl = pview.queryExecution.analyzed.asInstanceOf[LeafNode]
       assert(ls.size == 1 && ls.head.getClass == vl.getClass &&
@@ -220,7 +212,7 @@ class MvRewriteSpec extends SparkSpecBase {
     }
     // a query NOT carrying the view predicate must refuse — the view
     // is missing rows the query needs
-    withRule {
+    withRule(MvRewriteRule) {
       val q2 = base.groupBy("f").agg(sum("cents").as("tc"))
       val bl = base.queryExecution.analyzed.asInstanceOf[LeafNode]
       assert(leaves(q2).exists(_.canonicalized == bl.canonicalized),
@@ -243,13 +235,13 @@ class MvRewriteSpec extends SparkSpecBase {
       "cnt", Map("cents" -> "sum_cents")))
     assert(MvCatalog.register(base, coarse, Seq("f", "s"),
       "cnt", Map("cents" -> "sum_cents")))
-    def leafSchema(df: DataFrame): Set[String] = withRule {
+    def leafSchema(df: DataFrame): Set[String] = withRule(MvRewriteRule) {
       leaves(df).head.schema.fieldNames.toSet
     }
     // answerable by BOTH → the coarse (cheaper) view must serve it
     def qf = base.groupBy("f").agg(sum("cents").as("tc"))
     val got = sameResult(qf)
-    withRule {
+    withRule(MvRewriteRule) {
       assert(leaves(got).size == 1 &&
         leafSchema(got) == coarse.columns.toSet,
         s"cheapest covering view not chosen:\n${got.queryExecution.optimizedPlan}")
@@ -257,7 +249,7 @@ class MvRewriteSpec extends SparkSpecBase {
     // groupings the coarse view cannot cover fall through to the fine one
     def qy = base.groupBy("f", "y").agg(count(lit(1)).as("n"))
     val got2 = sameResult(qy)
-    withRule {
+    withRule(MvRewriteRule) {
       assert(leaves(got2).size == 1 &&
         leafSchema(got2) == view.columns.toSet,
         s"coverage fall-through failed:\n${got2.queryExecution.optimizedPlan}")

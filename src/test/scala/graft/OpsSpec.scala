@@ -2,6 +2,7 @@ package graft
 
 import graft.ops.{DedupOps, TextOps, VectorOps}
 import org.apache.spark.sql.functions._
+import graft.functions.{bitmapDistinct, cosineSim}
 
 /** Unit semantics for the ops layer, pinning the reference behaviors
   * SURVEY.md §5.2 calls out (tokenizer lowercases, stopword removal keeps
@@ -120,42 +121,42 @@ class OpsSpec extends SparkSpecBase {
   }
 
   test("cosine_sim codegen expression matches the composed fold bit-for-bit") {
-    graft.functions.CosineSimilarity.register(spark)
     val emb = spark.read.parquet(s"$sf001/embeddings.parquet").limit(50)
     val pairs = emb.select(col("vec_id"), col("embedding"))
       .crossJoin(emb.select(col("vec_id").as("v2"), col("embedding").as("e2")))
       .where(col("vec_id") < col("v2"))
     val diff = pairs.select(
-      expr("cosine_sim(embedding, e2)").as("fused"),
+      cosineSim(col("embedding"), col("e2")).as("fused"),
       (VectorOps.dot(col("embedding"), col("e2")) /
         (VectorOps.l2norm(col("embedding")) * VectorOps.l2norm(col("e2")))).as("composed"))
       .where(col("fused") =!= col("composed"))
     assert(diff.count() == 0) // exact double equality, not approximate
     // type check rejects non-float arrays
-    intercept[Exception] {
-      spark.range(1).select(expr("cosine_sim(array(1.0, 2.0), array(1.0, 2.0))")).collect()
+    val typeErr = intercept[org.apache.spark.sql.AnalysisException] {
+      spark.range(1).select(
+        cosineSim(expr("array(1.0, 2.0)"), expr("array(1.0, 2.0)"))).collect()
     }
+    assert(typeErr.getMessage.contains("cosine_sim expects two array<float> arguments"))
     // ragged inputs raise instead of silently truncating (contract —
     // keeps the expression from ever diverging from a full-vector oracle)
     intercept[Exception] {
-      spark.range(1).select(expr(
-        """cosine_sim(CAST(array(1.0, 2.0) AS array<float>),
-                      CAST(array(1.0) AS array<float>))""")).collect()
+      spark.range(1).select(cosineSim(
+        expr("CAST(array(1.0, 2.0) AS array<float>)"),
+        expr("CAST(array(1.0) AS array<float>)"))).collect()
     }
   }
 
   test("bitmap_distinct merges partial BitSets across partitions correctly") {
-    graft.functions.BitmapDistinct.register(spark)
     // 8 partitions force serialize/merge of partial buffers
     val df = spark.range(0, 1000).select((col("id") % 97).as("k"))
       .repartition(8)
-    val got = df.agg(expr("bitmap_distinct(k)")).head().getLong(0)
+    val got = df.agg(bitmapDistinct(col("k"))).head().getLong(0)
     assert(got == 97L)
     // nulls ignored; out-of-domain raises
     val withNull = Seq(Some(1L), None, Some(5L), Some(1L)).toDF("k")
-    assert(withNull.agg(expr("bitmap_distinct(k)")).head().getLong(0) == 2L)
+    assert(withNull.agg(bitmapDistinct(col("k"))).head().getLong(0) == 2L)
     intercept[Exception] {
-      Seq(-1L).toDF("k").agg(expr("bitmap_distinct(k)")).collect()
+      Seq(-1L).toDF("k").agg(bitmapDistinct(col("k"))).collect()
     }
   }
 

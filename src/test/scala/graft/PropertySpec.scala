@@ -4,6 +4,7 @@ import graft.ops.{DedupOps, TextOps, VectorOps}
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
+import graft.functions.cosineSim
 
 /** Property tests (SURVEY.md §5.2-3) using raw ScalaCheck generators with
   * fixed seeds (no scalatest bridge in the offline cache). Each case
@@ -33,13 +34,12 @@ class PropertySpec extends SparkSpecBase {
   }
 
   test("cosine similarity is bounded in [-1, 1] and symmetric") {
-    graft.functions.CosineSimilarity.register(spark)
     val pairs = samples(vecGen, 8).zip(samples(vecGen, 8).reverse)
     for ((a0, b0) <- pairs) {
       val n = math.min(a0.size, b0.size)
       val (a, b) = (a0.take(n), b0.take(n))
       val Seq(ab, ba) = Seq((a, b), (b, a)).map { case (x, y) =>
-        Seq((x, y)).toDF("x", "y").select(expr("cosine_sim(x, y)")).head().getDouble(0)
+        Seq((x, y)).toDF("x", "y").select(cosineSim(col("x"), col("y"))).head().getDouble(0)
       }
       assert(ab >= -1.0 - 1e-9 && ab <= 1.0 + 1e-9, s"cos=$ab")
       assert(ab == ba)

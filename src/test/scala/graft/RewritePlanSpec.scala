@@ -22,14 +22,6 @@ class RewritePlanSpec extends SparkSpecBase {
   private def joinsIn(df: org.apache.spark.sql.DataFrame): Int =
     df.queryExecution.optimizedPlan.collect { case j: LJoin => j }.size
 
-  private def withRule[T](f: => T): T = {
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ FkJoinEliminationRule
-    try f
-    finally spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations.filterNot(_ == FkJoinEliminationRule)
-  }
-
   private def orders = Tables.load(spark, sf001, "orders")
   private def cust = Tables.load(spark, sf001, "customer")
   private def dimKeys = cust.select(col("c_custkey")).distinct()
@@ -56,7 +48,7 @@ class RewritePlanSpec extends SparkSpecBase {
       .select(col("o_orderkey"), col("o_totalprice"))
     val (baseRows, baseSum) = (q.count(),
       q.agg(sum(expr("CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)"))).as[Long].head())
-    withRule {
+    withRule(FkJoinEliminationRule) {
       // not yet validated: the rule must refuse
       assert(joinsIn(q) == 1, "rule fired without a validated constraint")
       // the q407 audit validates and registers the RELY constraint
@@ -78,7 +70,7 @@ class RewritePlanSpec extends SparkSpecBase {
     assert(!RiConstraints.validate(orders,
       cust.where(col("c_mktsegment") === "BUILDING"), "o_custkey", "c_custkey"),
       "validation passed against a dim subset with orphaned FKs")
-    withRule {
+    withRule(FkJoinEliminationRule) {
       assert(joinsIn(orders
         .join(dimKeys, col("o_custkey") === col("c_custkey"))
         .select(col("o_orderkey"))) == 1,
@@ -130,7 +122,7 @@ class RewritePlanSpec extends SparkSpecBase {
     def q = left.join(dimKeys, col("o_custkey") === col("c_custkey"))
       .select(col("n_nationkey"), col("o_orderkey"))
     val baseRows = q.count()
-    withRule {
+    withRule(FkJoinEliminationRule) {
       val r = q
       assert(joinsIn(r) == 1,
         "the customer join must be eliminated (one upstream join remains)")

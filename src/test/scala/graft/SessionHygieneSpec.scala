@@ -1,0 +1,67 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
+
+/** Guards the session contract: `graft.Session` is the only code that
+  * builds a session, and the code queries run (queries, ops, streaming,
+  * ml) writes no session-wide state. Native expressions are Column
+  * constructors, not registry entries; optimizer rules are applied to a
+  * plan, not installed. The one allowed write is the idempotent add in
+  * `TopKOps.ensureStrategy`: a planner strategy cannot be applied locally.
+  */
+class SessionHygieneSpec extends SparkSpecBase {
+
+  /** (file, source without comment lines and trailing `// ` comments). */
+  private def sources(root: String): Seq[(Path, String)] = {
+    val s = Files.walk(Paths.get(root))
+    try s.iterator.asScala.filter(_.toString.endsWith(".scala")).toList.map { p =>
+      p -> Files.readAllLines(p).asScala
+        .filterNot(l => Seq("//", "/*", "*").exists(l.trim.startsWith))
+        .map(_.replaceAll("\\s// .*$", "")).mkString("\n")
+    } finally s.close()
+  }
+
+  private def hits(files: Seq[(Path, String)], re: String): Seq[String] =
+    for ((p, text) <- files; l <- text.linesIterator.toSeq if re.r.findFirstIn(l).nonEmpty)
+      yield s"$p: ${l.trim}"
+
+  test("graft.Session holds the only SparkSession builder under src/") {
+    val files = sources("src").filterNot(_._1.endsWith("SessionHygieneSpec.scala"))
+    val builders = hits(files, "SparkSession\\s*\\.\\s*builder\\b")
+    assert(builders.size == 1 && builders.head.startsWith("src/main/scala/graft/Session.scala:"),
+      builders.mkString("\n"))
+  }
+
+  test("queries, ops, streaming and ml code write no session-wide state") {
+    // TopKOps with ensureStrategy's body cut out
+    def exempt(text: String): String = {
+      val start = text.indexOf("def ensureStrategy")
+      assert(start >= 0, "TopKOps.ensureStrategy moved — update the exemption")
+      val end = text.indexOf("\n  def ", start)
+      text.take(start) + (if (end < 0) "" else text.drop(end))
+    }
+    val files = Seq("queries", "ops", "streaming", "ml").flatMap(d => sources(s"src/main/scala/graft/$d"))
+      .map { case (p, t) => p -> (if (p.endsWith("TopKOps.scala")) exempt(t) else t) }
+    val violations = Seq(
+      "experimental write" -> "experimental\\s*\\.\\s*\\w+\\s*(\\+\\+|:\\+)?=(?!=)",
+      "function registry write" -> "functionRegistry\\s*\\.\\s*(register|createOrReplace|drop|clear)",
+      "native expression registration" ->
+        "(CosineSimilarity|JaroWinkler|JaroWinklerSimilarity|BitmapDistinct)\\s*\\.\\s*register\\b",
+      "SQL name of a native expression" -> "\\b(cosine_sim|jaro_winkler|bitmap_distinct)\\s*(\\(|\")"
+    ).flatMap { case (what, re) => hits(files, re).map(h => s"$what — $h") }
+    assert(violations.isEmpty, violations.mkString("\n"))
+    val registers = hits(sources("src/main/scala/graft/functions"), "def register\\b")
+    assert(registers.isEmpty, registers.mkString("\n"))
+  }
+
+  test("running native-expression and rule queries leaves the session as it was") {
+    def state = (spark.sessionState.functionRegistry.listFunction().toSet,
+      spark.experimental.extraOptimizations)
+    val before = state
+    for (q <- Seq("q37_cosine_topk", "q177_fuzzy_block", "q121_bitmap_distinct",
+        "q433_mv_rule_applied"))
+      assert(SparkEntry.queries(q)(spark, sf001).collect().nonEmpty, q)
+    assert(state == before)
+  }
+}

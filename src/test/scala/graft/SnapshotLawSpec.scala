@@ -159,9 +159,7 @@ class SnapshotLawSpec extends SparkSpecBase {
       df.queryExecution.optimizedPlan.collect {
         case l: org.apache.spark.sql.catalyst.plans.logical.LeafNode => l
       }
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ MvRewriteRule
-    try {
+    try withRule(MvRewriteRule) {
       val q2 = v2.groupBy("f").agg(sum("v").as("tv"))
       assert(leaves(q2).exists(_.schema.fieldNames.contains("sum_v")),
         "the registered relation must rewrite onto the view")
@@ -173,10 +171,6 @@ class SnapshotLawSpec extends SparkSpecBase {
       val q3b = v3.groupBy("f").agg(sum("v").as("tv"))
       assert(leaves(q3b).exists(_.schema.fieldNames.contains("sum_v")),
         "re-registration must arm the rewrite for the new relation")
-    } finally {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_ == MvRewriteRule)
-      MvCatalog.clear()
-    }
+    } finally MvCatalog.clear()
   }
 }
