@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.ops.HashOps.md5Long
 
 /** Dev-only overhead probe (optimization round): quantifies the fixed
   * costs the sf0.1 bench is made of — job submit latency, per-tiny-stage
@@ -114,7 +115,7 @@ object Probe {
     }
     // 8. md5-hash pass over lineitem (the house hash)
     time("lineitem_md5_pass", 5) {
-      li.select(expr("conv(substring(md5(concat('x:', CAST(l_partkey AS STRING))), 1, 10), 16, 10)"))
+      li.select(md5Long(concat(lit("x:"), col("l_partkey").cast("string")), 10))
         .agg(count(lit(1))).count()
     }
     // 9. planning-only time of heavy queries (no execution): run 1 is

@@ -23,7 +23,8 @@ object Tables {
 
   /** events.ts has shipped as TIMESTAMP(NANOS) (earlier testdata drops) and
     * as plain TIMESTAMP micros (current drop). Adapt on the read schema:
-    * nanos arrive as long under `nanosAsLong` and need exact integer
+    * nanos arrive as long under `nanosAsLong` (set by graft.Session, not
+    * here: a table read writes no session state) and need exact integer
     * division (`div`, not `/` — the nano count overflows double precision);
     * micros arrive as TIMESTAMP_NTZ and only need the NTZ→LTZ cast, which
     * is wall-clock-identity under the UTC session timezone every entry
@@ -32,7 +33,6 @@ object Tables {
   def events(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr}
     import org.apache.spark.sql.types.{LongType, TimestampNTZType}
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = spark.read.parquet(s"$sfDir/events.parquet")
     raw.schema("ts").dataType match {
       case LongType         => raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))

@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.{QuerySpec, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Event-time operators over the `events` stream table (SURVEY.md §2.12):
@@ -13,8 +12,6 @@ import org.apache.spark.sql.functions._
   * timestamps, for exact cross-engine comparison.
   */
 object EventQueries {
-
-  private def t(s: SparkSession, d: String, n: String): DataFrame = Tables.load(s, d, n)
 
   val specs: Seq[QuerySpec] = Seq(
 

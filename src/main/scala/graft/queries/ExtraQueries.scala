@@ -2,7 +2,6 @@ package graft.queries
 
 import graft.{QuerySpec, Tables}
 import graft.ops.{JoinOps, SkewOps}
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.cosineSim
 
@@ -11,8 +10,6 @@ import graft.functions.cosineSim
   * operators — as-of join (union-merge) and salted aggregation.
   */
 object ExtraQueries {
-
-  private def t(s: SparkSession, d: String, n: String): DataFrame = Tables.load(s, d, n)
 
   val specs: Seq[QuerySpec] = Seq(
 

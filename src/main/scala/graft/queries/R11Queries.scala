@@ -1,11 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.QuerySpec
 import graft.Tables
+import graft.ops.HashOps.{md5Long, md5LongSql}
 import graft.ops.TextOps
 
 /** Round-6 widening: the classic correlated-subquery decision-support
@@ -27,8 +27,6 @@ import graft.ops.TextOps
   * both sides, so even its unrounded value is bit-identical.
   */
 object R11Queries {
-
-  private def t(s: SparkSession, d: String, n: String): DataFrame = Tables.load(s, d, n)
 
   /** floor-to-cents quantizer: identical per-row double math in both
     * engines, and BIGINT cent sums are exact under any aggregation order
@@ -286,8 +284,8 @@ object R11Queries {
     // entirely from 20 sketches of 32 rows, while the exact Jaccard
     // (audited alongside) needs the term-level self-join. THE reason
     // sketches win at 100 TB: the estimate's input is KB per source and
-    // re-mergeable; the exact path rescans the corpus per pair. Uses the
-    // house md5-hex-to-BIGINT 60-bit hash (R8Queries.h60 convention).
+    // re-mergeable; the exact path rescans the corpus per pair. Hashes
+    // with the 15-digit (60-bit) HashOps.md5Long.
     QuerySpec(
       "q235_kmv_jaccard",
       (s, d) => {
@@ -295,7 +293,7 @@ object R11Queries {
           .select(col("source"), explode(TextOps.tokens(col("text"))).as("term"))
           .distinct()
         val h = st.select(col("source"), col("term"),
-          conv(substring(md5(col("term")), 1, 15), 16, 10).cast("long").as("hv"))
+          md5Long(col("term"), 15).as("hv"))
         val wk = Window.partitionBy("source").orderBy(col("hv").asc, col("term").asc)
         val sk = h.withColumn("rn", row_number().over(wk)).where(col("rn") <= 32)
           .select("source", "hv")
@@ -334,7 +332,7 @@ object R11Queries {
           .withColumn("exact_bp", expr("n_inter * 10000 div n_union"))
           .orderBy("sa", "sb")
       },
-      Some("""WITH st AS (SELECT DISTINCT source, unnest(string_split(lower(text), ' ')) AS term FROM documents), h AS (SELECT source, term, CAST(concat('0x', substr(md5(term), 1, 15)) AS BIGINT) AS hv FROM st), sk AS (SELECT source, hv FROM (SELECT source, hv, row_number() OVER (PARTITION BY source ORDER BY hv, term) AS rn FROM h) z WHERE rn <= 32), srcs AS (SELECT DISTINCT source FROM documents), pr AS (SELECT a.source AS sa, b.source AS sb FROM srcs a JOIN srcs b ON a.source < b.source), u AS (SELECT sa, sb, hv, max(ia) AS ina, max(ib) AS inb FROM (SELECT pr.sa, pr.sb, sk.hv, 1 AS ia, 0 AS ib FROM pr JOIN sk ON sk.source = pr.sa UNION ALL SELECT pr.sa, pr.sb, sk.hv, 0, 1 FROM pr JOIN sk ON sk.source = pr.sb) q GROUP BY 1, 2, 3), ku AS (SELECT sa, sb, ina, inb, row_number() OVER (PARTITION BY sa, sb ORDER BY hv) AS rn FROM u), est AS (SELECT sa, sb, CAST(sum(CASE WHEN ina = 1 AND inb = 1 THEN 1 ELSE 0 END) AS BIGINT) AS k_int, count(*) AS k_used FROM ku WHERE rn <= 32 GROUP BY 1, 2), cnt AS (SELECT source, count(*) AS n FROM st GROUP BY 1), intr AS (SELECT x.source AS sa, y.source AS sb, count(*) AS n_inter FROM st x JOIN st y ON x.term = y.term AND x.source < y.source GROUP BY 1, 2) SELECT est.sa, est.sb, est.k_int, est.k_used, est.k_int * 10000 // est.k_used AS est_bp, coalesce(intr.n_inter, 0) AS n_inter, na.n + nb.n - coalesce(intr.n_inter, 0) AS n_union, coalesce(intr.n_inter, 0) * 10000 // (na.n + nb.n - coalesce(intr.n_inter, 0)) AS exact_bp FROM est LEFT JOIN intr ON est.sa = intr.sa AND est.sb = intr.sb JOIN cnt na ON est.sa = na.source JOIN cnt nb ON est.sb = nb.source ORDER BY est.sa, est.sb"""),
+      Some(s"""WITH st AS (SELECT DISTINCT source, unnest(string_split(lower(text), ' ')) AS term FROM documents), h AS (SELECT source, term, ${md5LongSql("term", 15)} AS hv FROM st), sk AS (SELECT source, hv FROM (SELECT source, hv, row_number() OVER (PARTITION BY source ORDER BY hv, term) AS rn FROM h) z WHERE rn <= 32), srcs AS (SELECT DISTINCT source FROM documents), pr AS (SELECT a.source AS sa, b.source AS sb FROM srcs a JOIN srcs b ON a.source < b.source), u AS (SELECT sa, sb, hv, max(ia) AS ina, max(ib) AS inb FROM (SELECT pr.sa, pr.sb, sk.hv, 1 AS ia, 0 AS ib FROM pr JOIN sk ON sk.source = pr.sa UNION ALL SELECT pr.sa, pr.sb, sk.hv, 0, 1 FROM pr JOIN sk ON sk.source = pr.sb) q GROUP BY 1, 2, 3), ku AS (SELECT sa, sb, ina, inb, row_number() OVER (PARTITION BY sa, sb ORDER BY hv) AS rn FROM u), est AS (SELECT sa, sb, CAST(sum(CASE WHEN ina = 1 AND inb = 1 THEN 1 ELSE 0 END) AS BIGINT) AS k_int, count(*) AS k_used FROM ku WHERE rn <= 32 GROUP BY 1, 2), cnt AS (SELECT source, count(*) AS n FROM st GROUP BY 1), intr AS (SELECT x.source AS sa, y.source AS sb, count(*) AS n_inter FROM st x JOIN st y ON x.term = y.term AND x.source < y.source GROUP BY 1, 2) SELECT est.sa, est.sb, est.k_int, est.k_used, est.k_int * 10000 // est.k_used AS est_bp, coalesce(intr.n_inter, 0) AS n_inter, na.n + nb.n - coalesce(intr.n_inter, 0) AS n_union, coalesce(intr.n_inter, 0) * 10000 // (na.n + nb.n - coalesce(intr.n_inter, 0)) AS exact_bp FROM est LEFT JOIN intr ON est.sa = intr.sa AND est.sb = intr.sb JOIN cnt na ON est.sa = na.source JOIN cnt nb ON est.sb = nb.source ORDER BY est.sa, est.sb"""),
       "§2.4-note/E2 ext: KMV bottom-32 sketches — pairwise source Jaccard without a corpus join"),
 
     // q236 — lexical-diversity audit: per source, token count, type

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -20,8 +19,6 @@ import graft.ops.QuantileOps
   * slope) follows the q206 closed-form-OLS precedent.
   */
 object R12Queries {
-
-  private def t(s: SparkSession, d: String, n: String): DataFrame = Tables.load(s, d, n)
 
   private def cents(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     floor(c * 100.0 + 0.5).cast("long")

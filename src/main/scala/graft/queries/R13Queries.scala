@@ -1,11 +1,12 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.QuerySpec
 import graft.Tables
+import graft.ops.HashOps.{md5Long, md5LongSql}
 import graft.ops.QuantileOps
 
 /** Round-6 widening, third batch: the WEIGHTED exact-element quantile
@@ -19,8 +20,6 @@ import graft.ops.QuantileOps
   * exact powers of two).
   */
 object R13Queries {
-
-  private def t(s: SparkSession, d: String, n: String): DataFrame = Tables.load(s, d, n)
 
   val specs: Seq[QuerySpec] = Seq(
 
@@ -64,9 +63,7 @@ object R13Queries {
     QuerySpec(
       "q245_merkle_diff",
       (s, d) => {
-        def rowHash(h: org.apache.spark.sql.Column) =
-          conv(substring(md5(concat(col("doc_id").cast("string"), lit(":"), h)), 1, 10),
-            16, 10).cast("long")
+        val rowMd5 = md5Long(concat(col("doc_id").cast("string"), lit(":"), col("h")), 10)
         val docs = t(s, d, "documents")
         val a = docs.select(col("doc_id"), md5(col("text")).as("h"),
           expr("doc_id div 64").as("bkt"))
@@ -75,8 +72,8 @@ object R13Queries {
             md5(when(col("doc_id") % 101 === 0, concat(col("text"), lit(" corrupted")))
               .otherwise(col("text"))).as("h"),
             expr("doc_id div 64").as("bkt"))
-        val da = a.groupBy("bkt").agg(count(lit(1)).as("n_a"), sum(rowHash(col("h"))).as("dig_a"))
-        val db = b.groupBy("bkt").agg(count(lit(1)).as("n_b"), sum(rowHash(col("h"))).as("dig_b"))
+        val da = a.groupBy("bkt").agg(count(lit(1)).as("n_a"), sum(rowMd5).as("dig_a"))
+        val db = b.groupBy("bkt").agg(count(lit(1)).as("n_b"), sum(rowMd5).as("dig_b"))
         val cmp = da.join(db, Seq("bkt"), "left")
           .select(col("bkt"),
             when(col("dig_b").isNotNull && col("dig_a") === col("dig_b"), 1L)
@@ -94,7 +91,7 @@ object R13Queries {
             sum(lit(1L) - col("ok")).as("n_diff_buckets"))
           .crossJoin(drill)
       },
-      Some("""WITH a AS (SELECT doc_id, md5(text) AS h, doc_id // 64 AS bkt FROM documents), b AS (SELECT doc_id, md5(CASE WHEN doc_id % 101 = 0 THEN concat(text, ' corrupted') ELSE text END) AS h, doc_id // 64 AS bkt FROM documents WHERE doc_id % 97 <> 0), da AS (SELECT bkt, count(*) AS n_a, CAST(sum(CAST(concat('0x', substr(md5(concat(CAST(doc_id AS VARCHAR), ':', h)), 1, 10)) AS BIGINT)) AS BIGINT) AS dig_a FROM a GROUP BY 1), db AS (SELECT bkt, count(*) AS n_b, CAST(sum(CAST(concat('0x', substr(md5(concat(CAST(doc_id AS VARCHAR), ':', h)), 1, 10)) AS BIGINT)) AS BIGINT) AS dig_b FROM b GROUP BY 1), cmp AS (SELECT da.bkt, CASE WHEN db.bkt IS NOT NULL AND da.dig_a = db.dig_b THEN 1 ELSE 0 END AS ok FROM da LEFT JOIN db USING (bkt)), bad AS (SELECT bkt FROM cmp WHERE ok = 0), drill AS (SELECT CAST(coalesce(sum(CASE WHEN b2.doc_id IS NULL THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_missing, CAST(coalesce(sum(CASE WHEN b2.doc_id IS NOT NULL AND a2.h <> b2.h THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_corrupt FROM a a2 JOIN bad ON a2.bkt = bad.bkt LEFT JOIN b b2 ON a2.doc_id = b2.doc_id) SELECT CAST((SELECT count(*) FROM cmp) AS BIGINT) AS n_buckets, CAST((SELECT sum(1 - ok) FROM cmp) AS BIGINT) AS n_diff_buckets, drill.n_missing, drill.n_corrupt FROM drill"""),
+      Some(s"""WITH a AS (SELECT doc_id, md5(text) AS h, doc_id // 64 AS bkt FROM documents), b AS (SELECT doc_id, md5(CASE WHEN doc_id % 101 = 0 THEN concat(text, ' corrupted') ELSE text END) AS h, doc_id // 64 AS bkt FROM documents WHERE doc_id % 97 <> 0), da AS (SELECT bkt, count(*) AS n_a, CAST(sum(${md5LongSql("concat(CAST(doc_id AS VARCHAR), ':', h)", 10)}) AS BIGINT) AS dig_a FROM a GROUP BY 1), db AS (SELECT bkt, count(*) AS n_b, CAST(sum(${md5LongSql("concat(CAST(doc_id AS VARCHAR), ':', h)", 10)}) AS BIGINT) AS dig_b FROM b GROUP BY 1), cmp AS (SELECT da.bkt, CASE WHEN db.bkt IS NOT NULL AND da.dig_a = db.dig_b THEN 1 ELSE 0 END AS ok FROM da LEFT JOIN db USING (bkt)), bad AS (SELECT bkt FROM cmp WHERE ok = 0), drill AS (SELECT CAST(coalesce(sum(CASE WHEN b2.doc_id IS NULL THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_missing, CAST(coalesce(sum(CASE WHEN b2.doc_id IS NOT NULL AND a2.h <> b2.h THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_corrupt FROM a a2 JOIN bad ON a2.bkt = bad.bkt LEFT JOIN b b2 ON a2.doc_id = b2.doc_id) SELECT CAST((SELECT count(*) FROM cmp) AS BIGINT) AS n_buckets, CAST((SELECT sum(1 - ok) FROM cmp) AS BIGINT) AS n_diff_buckets, drill.n_missing, drill.n_corrupt FROM drill"""),
       "E1/§2.8 ext: Merkle-style replica diff — bucket digests, drill only into mismatches"),
 
     // q246 — log2-banded inter-event latency histogram: per event type,

@@ -5,8 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.QuerySpec
-import graft.Tables
 import graft.ops.DedupOps
+import graft.ops.HashOps.{md5Long, md5LongSql}
 
 /** Round-6 continuation (driver round counter; builder files run one
   * ahead — BASELINE.md "Round-numbering offset"): the two compositions
@@ -17,8 +17,6 @@ import graft.ops.DedupOps
   * the per-bucket repair batch a replica-sync job would ship.
   */
 object R14Queries {
-
-  private def t(s: SparkSession, d: String, n: String): DataFrame = Tables.load(s, d, n)
 
   /** q251's stage survivor tables in funnel order, exposed so the
     * invariant spec can assert SET-level guarantees (no surviving delta
@@ -266,9 +264,7 @@ object R14Queries {
     QuerySpec(
       "q252_merkle_repair",
       (s, d) => {
-        def rowHash(h: Column) =
-          conv(substring(md5(concat(col("doc_id").cast("string"), lit(":"), h)), 1, 10),
-            16, 10).cast("long")
+        val rowMd5 = md5Long(concat(col("doc_id").cast("string"), lit(":"), col("h")), 10)
         val docs = t(s, d, "documents")
         val a = docs.select(col("doc_id"), md5(col("text")).as("h"),
           col("n_chars"), expr("doc_id div 64").as("bkt"))
@@ -277,8 +273,8 @@ object R14Queries {
             md5(when(col("doc_id") % 101 === 0, concat(col("text"), lit(" corrupted")))
               .otherwise(col("text"))).as("h"),
             expr("doc_id div 64").as("bkt"))
-        val da = a.groupBy("bkt").agg(sum(rowHash(col("h"))).as("dig_a"))
-        val db = b.groupBy("bkt").agg(sum(rowHash(col("h"))).as("dig_b"))
+        val da = a.groupBy("bkt").agg(sum(rowMd5).as("dig_a"))
+        val db = b.groupBy("bkt").agg(sum(rowMd5).as("dig_b"))
         val bad = da.join(db, Seq("bkt"), "left")
           .where(col("dig_b").isNull || col("dig_a") =!= col("dig_b"))
           .select("bkt")
@@ -294,7 +290,7 @@ object R14Queries {
             sum("n_chars").as("repair_bytes"))
           .orderBy("bkt")
       },
-      Some("""WITH a AS (SELECT doc_id, md5(text) AS h, n_chars, doc_id // 64 AS bkt FROM documents), b AS (SELECT doc_id, md5(CASE WHEN doc_id % 101 = 0 THEN concat(text, ' corrupted') ELSE text END) AS h, doc_id // 64 AS bkt FROM documents WHERE doc_id % 97 <> 0), da AS (SELECT bkt, CAST(sum(CAST(concat('0x', substr(md5(concat(CAST(doc_id AS VARCHAR), ':', h)), 1, 10)) AS BIGINT)) AS BIGINT) AS dig_a FROM a GROUP BY 1), db AS (SELECT bkt, CAST(sum(CAST(concat('0x', substr(md5(concat(CAST(doc_id AS VARCHAR), ':', h)), 1, 10)) AS BIGINT)) AS BIGINT) AS dig_b FROM b GROUP BY 1), bad AS (SELECT da.bkt FROM da LEFT JOIN db USING (bkt) WHERE db.bkt IS NULL OR da.dig_a <> db.dig_b), r AS (SELECT a.bkt, a.doc_id, a.n_chars, CASE WHEN b2.doc_id IS NULL THEN 'insert' WHEN a.h <> b2.h THEN 'overwrite' END AS op FROM a JOIN bad ON a.bkt = bad.bkt LEFT JOIN b b2 ON a.doc_id = b2.doc_id) SELECT bkt, count(*) AS n_upserts, CAST(sum(CASE WHEN op = 'insert' THEN 1 ELSE 0 END) AS BIGINT) AS n_insert, CAST(sum(CASE WHEN op = 'overwrite' THEN 1 ELSE 0 END) AS BIGINT) AS n_overwrite, CAST(sum(n_chars) AS BIGINT) AS repair_bytes FROM r WHERE op IS NOT NULL GROUP BY 1 ORDER BY bkt"""),
+      Some(s"""WITH a AS (SELECT doc_id, md5(text) AS h, n_chars, doc_id // 64 AS bkt FROM documents), b AS (SELECT doc_id, md5(CASE WHEN doc_id % 101 = 0 THEN concat(text, ' corrupted') ELSE text END) AS h, doc_id // 64 AS bkt FROM documents WHERE doc_id % 97 <> 0), da AS (SELECT bkt, CAST(sum(${md5LongSql("concat(CAST(doc_id AS VARCHAR), ':', h)", 10)}) AS BIGINT) AS dig_a FROM a GROUP BY 1), db AS (SELECT bkt, CAST(sum(${md5LongSql("concat(CAST(doc_id AS VARCHAR), ':', h)", 10)}) AS BIGINT) AS dig_b FROM b GROUP BY 1), bad AS (SELECT da.bkt FROM da LEFT JOIN db USING (bkt) WHERE db.bkt IS NULL OR da.dig_a <> db.dig_b), r AS (SELECT a.bkt, a.doc_id, a.n_chars, CASE WHEN b2.doc_id IS NULL THEN 'insert' WHEN a.h <> b2.h THEN 'overwrite' END AS op FROM a JOIN bad ON a.bkt = bad.bkt LEFT JOIN b b2 ON a.doc_id = b2.doc_id) SELECT bkt, count(*) AS n_upserts, CAST(sum(CASE WHEN op = 'insert' THEN 1 ELSE 0 END) AS BIGINT) AS n_insert, CAST(sum(CASE WHEN op = 'overwrite' THEN 1 ELSE 0 END) AS BIGINT) AS n_overwrite, CAST(sum(n_chars) AS BIGINT) AS repair_bytes FROM r WHERE op IS NOT NULL GROUP BY 1 ORDER BY bkt"""),
       "E1/§2.8 ext: Merkle repair plan — per-damaged-bucket upsert manifest (insert/overwrite + bytes)"),
 
     // q303 — COMPLETE daily-ingest near-dup semantics (VERDICT r6 ask

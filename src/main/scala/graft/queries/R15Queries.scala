@@ -1,11 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.QuerySpec
-import graft.Tables
 import graft.ops.TextOps
 
 /** Round-6 widening, second batch: the two remaining classic
@@ -30,8 +29,6 @@ import graft.ops.TextOps
   * JVM and DuckDB sits ~10 orders of magnitude below the grid spacing.
   */
 object R15Queries {
-
-  private def t(s: SparkSession, d: String, n: String): DataFrame = Tables.load(s, d, n)
 
   /** floor-to-cents quantizer (R11Queries convention). */
   private def cents(c: Column): Column = floor(c * 100.0 + 0.5).cast("long")

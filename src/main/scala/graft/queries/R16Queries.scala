@@ -1,10 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.QuerySpec
-import graft.Tables
 
 /** Round-6 widening, third batch: the remaining classic TPC-H decision-
   * support shapes not yet in the registry (Q3, Q5, Q6, Q9, Q10, Q12,
@@ -24,8 +23,6 @@ import graft.Tables
   * engines.
   */
 object R16Queries {
-
-  private def t(s: SparkSession, d: String, n: String): DataFrame = Tables.load(s, d, n)
 
   /** floor-to-cents quantizer (R11Queries convention). */
   private def cents(c: Column): Column = floor(c * 100.0 + 0.5).cast("long")

@@ -1,11 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.QuerySpec
-import graft.Tables
+import graft.ops.HashOps.{md5Long, md5LongSql}
 
 /** Round-6 widening, fifth batch: incremental/statistical machinery on
   * the event stream — an incremental sessionization MERGE proven
@@ -27,8 +27,6 @@ import graft.Tables
   * aggregated.
   */
 object R18Queries {
-
-  private def t(s: SparkSession, d: String, n: String): DataFrame = Tables.load(s, d, n)
 
   /** floor-to-cents quantizer (R11Queries convention). */
   private def cents(c: Column): Column = floor(c * 100.0 + 0.5).cast("long")
@@ -128,9 +126,8 @@ object R18Queries {
           .select(col("o_orderkey"), col("xc"),
             explode(sequence(lit(1), lit(32))).as("j"))
           .withColumn("bkt",
-            conv(substring(md5(concat(col("o_orderkey").cast("string"),
-              lit(":"), col("j").cast("string"))), 1, 15), 16, 10)
-              .cast("long") % 1000000000L)
+            md5Long(concat(col("o_orderkey").cast("string"), lit(":"), col("j").cast("string")), 15)
+              % 1000000000L)
           .withColumn("w",
             when(col("bkt") < 367879441L, 0L)
               .when(col("bkt") < 735758882L, 1L)
@@ -148,7 +145,7 @@ object R18Queries {
             element_at(col("means"), 31).as("boot_hi_c4"))
         point.crossJoin(broadcast(res))
       },
-      Some("""WITH x AS (SELECT o_orderkey, CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT) AS xc FROM orders), pt AS (SELECT CAST(count(*) AS BIGINT) AS n_orders, CAST(sum(xc) * 10000 // count(*) AS BIGINT) AS mean_c4 FROM x), r AS (SELECT j, xc, CAST(('0x' || substr(md5(o_orderkey || ':' || j), 1, 15)) AS BIGINT) % 1000000000 AS bkt FROM x CROSS JOIN (SELECT unnest(generate_series(1, 32)) AS j)), w AS (SELECT j, xc, CASE WHEN bkt < 367879441 THEN 0 WHEN bkt < 735758882 THEN 1 WHEN bkt < 919698602 THEN 2 WHEN bkt < 981011843 THEN 3 WHEN bkt < 996340153 THEN 4 WHEN bkt < 999405815 THEN 5 WHEN bkt < 999916758 THEN 6 ELSE 7 END AS w FROM r), m AS (SELECT j, CAST(sum(w * xc) * 10000 // greatest(sum(w), 1) AS BIGINT) AS mean_j FROM w GROUP BY 1), arr AS (SELECT list_sort(list(mean_j)) AS means FROM m) SELECT pt.n_orders, pt.mean_c4, CAST(means[2] AS BIGINT) AS boot_lo_c4, CAST(means[31] AS BIGINT) AS boot_hi_c4 FROM pt, arr"""),
+      Some(s"""WITH x AS (SELECT o_orderkey, CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT) AS xc FROM orders), pt AS (SELECT CAST(count(*) AS BIGINT) AS n_orders, CAST(sum(xc) * 10000 // count(*) AS BIGINT) AS mean_c4 FROM x), r AS (SELECT j, xc, ${md5LongSql("o_orderkey || ':' || j", 15)} % 1000000000 AS bkt FROM x CROSS JOIN (SELECT unnest(generate_series(1, 32)) AS j)), w AS (SELECT j, xc, CASE WHEN bkt < 367879441 THEN 0 WHEN bkt < 735758882 THEN 1 WHEN bkt < 919698602 THEN 2 WHEN bkt < 981011843 THEN 3 WHEN bkt < 996340153 THEN 4 WHEN bkt < 999405815 THEN 5 WHEN bkt < 999916758 THEN 6 ELSE 7 END AS w FROM r), m AS (SELECT j, CAST(sum(w * xc) * 10000 // greatest(sum(w), 1) AS BIGINT) AS mean_j FROM w GROUP BY 1), arr AS (SELECT list_sort(list(mean_j)) AS means FROM m) SELECT pt.n_orders, pt.mean_c4, CAST(means[2] AS BIGINT) AS boot_lo_c4, CAST(means[31] AS BIGINT) AS boot_hi_c4 FROM pt, arr"""),
       "A ext: Poisson-bootstrap CI for mean order value — one-pass deterministic resampling, 32 combinable groups"),
 
     // q279 — TWO-SAMPLE KOLMOGOROV–SMIRNOV distance between the

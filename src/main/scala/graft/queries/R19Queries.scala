@@ -1,11 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.QuerySpec
-import graft.Tables
 
 /** Round-6 widening, sixth batch: data-quality audit and customer-
   * analytics operators — a calendar-gap completeness audit (the "did
@@ -23,8 +22,6 @@ import graft.Tables
   * ever exceeds |nations|, 9 digits, or |parts| rows.
   */
 object R19Queries {
-
-  private def t(s: SparkSession, d: String, n: String): DataFrame = Tables.load(s, d, n)
 
   /** floor-to-cents quantizer (R11Queries convention). */
   private def cents(c: Column): Column = floor(c * 100.0 + 0.5).cast("long")

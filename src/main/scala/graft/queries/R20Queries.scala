@@ -1,11 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.QuerySpec
-import graft.Tables
+import graft.ops.HashOps.{md5Long, md5LongSql}
 
 /** Round-6 widening, seventh batch: the remaining sampling/sketch/
   * graph-statistics corners — TTL (burst) deduplication of an event
@@ -26,13 +26,6 @@ import graft.Tables
   * rounded division.
   */
 object R20Queries {
-
-  private def t(s: SparkSession, d: String, n: String): DataFrame = Tables.load(s, d, n)
-
-  /** md5-derived 60-bit uniform bucket (R8Queries convention:
-    * conv(hex,16,10) == DuckDB CAST('0x…' AS BIGINT)). */
-  private def hv(c: Column): Column =
-    conv(substring(md5(c), 1, 15), 16, 10).cast("long")
 
   val specs: Seq[QuerySpec] = Seq(
 
@@ -82,7 +75,7 @@ object R20Queries {
       (s, d) => {
         val docs = t(s, d, "documents")
           .select(col("doc_id"), col("source"), col("n_chars"),
-            (hv(col("doc_id").cast("string")) % 1073741824L).as("b"))
+            (md5Long(col("doc_id").cast("string"), 15) % 1073741824L).as("b"))
           // u = (b+1)/2^30 ∈ (0,1]; lnu_nano = floor(ln(u)·1e9) exact int
           .withColumn("lnu_nano",
             floor(log((col("b") + 1L).cast("double") / 1073741824.0) * 1e9)
@@ -95,7 +88,7 @@ object R20Queries {
           .select("source", "rank", "doc_id", "n_chars")
           .orderBy("source", "rank")
       },
-      Some("""WITH docs AS (SELECT doc_id, source, n_chars, CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 1073741824 AS b FROM documents), k AS (SELECT doc_id, source, n_chars, CAST(floor(ln(CAST(b + 1 AS DOUBLE) / 1073741824.0) * 1e9) AS BIGINT) AS lnu_nano FROM docs), r AS (SELECT source, doc_id, n_chars, CAST(row_number() OVER (PARTITION BY source ORDER BY CAST(lnu_nano AS DOUBLE) / CAST(n_chars AS DOUBLE) DESC, doc_id) AS BIGINT) AS rank FROM k) SELECT source, rank, doc_id, CAST(n_chars AS BIGINT) AS n_chars FROM r WHERE rank <= 5 ORDER BY source, rank"""),
+      Some(s"""WITH docs AS (SELECT doc_id, source, n_chars, ${md5LongSql("CAST(doc_id AS VARCHAR)", 15)} % 1073741824 AS b FROM documents), k AS (SELECT doc_id, source, n_chars, CAST(floor(ln(CAST(b + 1 AS DOUBLE) / 1073741824.0) * 1e9) AS BIGINT) AS lnu_nano FROM docs), r AS (SELECT source, doc_id, n_chars, CAST(row_number() OVER (PARTITION BY source ORDER BY CAST(lnu_nano AS DOUBLE) / CAST(n_chars AS DOUBLE) DESC, doc_id) AS BIGINT) AS rank FROM k) SELECT source, rank, doc_id, CAST(n_chars AS BIGINT) AS n_chars FROM r WHERE rank <= 5 ORDER BY source, rank"""),
       "R1/E4 ext: A-ES weighted top-k sampling without replacement — one ln per doc, keyed top-k"),
 
     // q287 — KMV/θ-SKETCH SET INTERSECTION with exact-error audit:
@@ -115,7 +108,7 @@ object R20Queries {
         val ev = t(s, d, "events")
         def ids(tp: String) = ev.where(col("event_type") === tp)
           .select(col("user_id")).distinct()
-          .select(col("user_id"), hv(col("user_id").cast("string")).as("h"))
+          .select(col("user_id"), md5Long(col("user_id").cast("string"), 15).as("h"))
         def kmv(df: DataFrame) = df.orderBy("h").limit(64)
         val va = kmv(ids("view")).select(col("h").as("ha"))
         val vb = kmv(ids("purchase")).select(col("h").as("hb"))
@@ -145,7 +138,7 @@ object R20Queries {
             expr("abs(est - n_exact) * 10000 div greatest(n_exact, 1)"))
           .select("c", "n_exact", "est", "err_bp")
       },
-      Some("""WITH va AS (SELECT CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15)) AS BIGINT) AS h FROM (SELECT DISTINCT user_id FROM events WHERE event_type = 'view') ORDER BY 1 LIMIT 64), vb AS (SELECT CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15)) AS BIGINT) AS h FROM (SELECT DISTINCT user_id FROM events WHERE event_type = 'purchase') ORDER BY 1 LIMIT 64), th AS (SELECT max(h) AS theta FROM (SELECT DISTINCT h FROM (SELECT h FROM va UNION ALL SELECT h FROM vb) ORDER BY h LIMIT 64)), c AS (SELECT count(*) AS c FROM va JOIN vb USING (h), th WHERE h <= theta), ex AS (SELECT count(*) AS n_exact FROM (SELECT DISTINCT user_id FROM events WHERE event_type = 'view') a JOIN (SELECT DISTINCT user_id FROM events WHERE event_type = 'purchase') b USING (user_id)), est AS (SELECT CAST(floor(CAST(c AS DOUBLE) * 1152921504606846976.0 / CAST(greatest(theta, 1) AS DOUBLE)) AS BIGINT) AS est, c FROM c, th) SELECT CAST(c AS BIGINT) AS c, CAST(n_exact AS BIGINT) AS n_exact, est, CAST(abs(est - n_exact) * 10000 // greatest(n_exact, 1) AS BIGINT) AS err_bp FROM est, ex"""),
+      Some(s"""WITH va AS (SELECT ${md5LongSql("CAST(user_id AS VARCHAR)", 15)} AS h FROM (SELECT DISTINCT user_id FROM events WHERE event_type = 'view') ORDER BY 1 LIMIT 64), vb AS (SELECT ${md5LongSql("CAST(user_id AS VARCHAR)", 15)} AS h FROM (SELECT DISTINCT user_id FROM events WHERE event_type = 'purchase') ORDER BY 1 LIMIT 64), th AS (SELECT max(h) AS theta FROM (SELECT DISTINCT h FROM (SELECT h FROM va UNION ALL SELECT h FROM vb) ORDER BY h LIMIT 64)), c AS (SELECT count(*) AS c FROM va JOIN vb USING (h), th WHERE h <= theta), ex AS (SELECT count(*) AS n_exact FROM (SELECT DISTINCT user_id FROM events WHERE event_type = 'view') a JOIN (SELECT DISTINCT user_id FROM events WHERE event_type = 'purchase') b USING (user_id)), est AS (SELECT CAST(floor(CAST(c AS DOUBLE) * 1152921504606846976.0 / CAST(greatest(theta, 1) AS DOUBLE)) AS BIGINT) AS est, c FROM c, th) SELECT CAST(c AS BIGINT) AS c, CAST(n_exact AS BIGINT) AS n_exact, est, CAST(abs(est - n_exact) * 10000 // greatest(n_exact, 1) AS BIGINT) AS err_bp FROM est, ex"""),
       "§2.4-note ext: θ-sketch KMV intersection estimate + exact-error audit — 64-row sketch arithmetic"),
 
     // q288 — DEGREE ASSORTATIVITY of the customer–part purchase graph:

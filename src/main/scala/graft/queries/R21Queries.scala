@@ -1,11 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.QuerySpec
-import graft.Tables
 
 /** Round-6 widening, eighth batch: the rest of the offline model-eval
   * harness around q258's AUC — a reliability diagram with per-bin ECE
@@ -22,8 +21,6 @@ import graft.Tables
   * the three reports and the AUC are directly comparable).
   */
 object R21Queries {
-
-  private def t(s: SparkSession, d: String, n: String): DataFrame = Tables.load(s, d, n)
 
   /** (score_micro ∈ [0,1e6], y) per embedding row — shared base of the
     * eval trio: p = (sv+1)/2 clamped to [0,1], floor-quantized per row

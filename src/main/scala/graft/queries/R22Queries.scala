@@ -1,10 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.QuerySpec
-import graft.Tables
 
 /** Round-6 widening, ninth batch: two tokenizer/dedup-infra operators
   * the LLM-pipeline surface still lacked — a BPE MERGE-LEARNING step
@@ -18,8 +17,6 @@ import graft.Tables
   * blocking move).
   */
 object R22Queries {
-
-  private def t(s: SparkSession, d: String, n: String): DataFrame = Tables.load(s, d, n)
 
   /** q293's candidate generator, shared with ScaleSlopeSpec so the
     * measured candidate-count slope is measured on EXACTLY the

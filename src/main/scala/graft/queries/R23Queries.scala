@@ -1,11 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.QuerySpec
-import graft.Tables
 
 /** Round-6 widening, final batch: two composite "platform" reports —
   * the end-to-end A/B experimentation readout (deterministic hash
@@ -18,8 +16,6 @@ import graft.Tables
   * END-TO-END against DuckDB, the same stance as q250/q251.
   */
 object R23Queries {
-
-  private def t(s: SparkSession, d: String, n: String): DataFrame = Tables.load(s, d, n)
 
   val specs: Seq[QuerySpec] = Seq(
 

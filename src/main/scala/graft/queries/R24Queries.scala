@@ -1,10 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.QuerySpec
-import graft.Tables
+import graft.ops.HashOps.{md5Long, md5LongSql}
 
 /** Round-6 widening, tenth batch: feature-engineering / classical-ML
   * infra, fully oracle-checked END-TO-END — a complete multinomial
@@ -22,8 +21,6 @@ import graft.Tables
   * class name; LOO encodes are integer cent divisions.
   */
 object R24Queries {
-
-  private def t(s: SparkSession, d: String, n: String): DataFrame = Tables.load(s, d, n)
 
   val specs: Seq[QuerySpec] = Seq(
 
@@ -119,7 +116,7 @@ object R24Queries {
           .select(explode(graft.ops.TextOps.tokens(col("text"))).as("tk"))
           .groupBy("tk").agg(count(lit(1)).as("tf"))
           .withColumn("bucket",
-            conv(substring(md5(col("tk")), 1, 15), 16, 10).cast("long") % 1024L)
+            md5Long(col("tk"), 15) % 1024L)
         val b = tok.groupBy("bucket")
           .agg(count(lit(1)).as("n_tokens"), sum("tf").as("mass"))
         b.agg(count(lit(1)).as("n_buckets_used"),
@@ -133,7 +130,7 @@ object R24Queries {
           .select("vocab_size", "n_buckets_used", "n_collided",
             "max_tokens_in_bucket", "collided_mass_bp")
       },
-      Some("""WITH tok AS (SELECT tk, count(*) AS tf FROM (SELECT unnest(string_split(lower(text), ' ')) AS tk FROM documents) GROUP BY 1), h AS (SELECT tk, tf, CAST(('0x' || substr(md5(tk), 1, 15)) AS BIGINT) % 1024 AS bucket FROM tok), b AS (SELECT bucket, count(*) AS n_tokens, sum(tf) AS mass FROM h GROUP BY 1) SELECT CAST(sum(n_tokens) AS BIGINT) AS vocab_size, CAST(count(*) AS BIGINT) AS n_buckets_used, CAST(sum(CASE WHEN n_tokens >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_collided, CAST(max(n_tokens) AS BIGINT) AS max_tokens_in_bucket, CAST(sum(CASE WHEN n_tokens >= 2 THEN mass ELSE 0 END) * 10000 // sum(mass) AS BIGINT) AS collided_mass_bp FROM b"""),
+      Some(s"""WITH tok AS (SELECT tk, count(*) AS tf FROM (SELECT unnest(string_split(lower(text), ' ')) AS tk FROM documents) GROUP BY 1), h AS (SELECT tk, tf, ${md5LongSql("tk", 15)} % 1024 AS bucket FROM tok), b AS (SELECT bucket, count(*) AS n_tokens, sum(tf) AS mass FROM h GROUP BY 1) SELECT CAST(sum(n_tokens) AS BIGINT) AS vocab_size, CAST(count(*) AS BIGINT) AS n_buckets_used, CAST(sum(CASE WHEN n_tokens >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_collided, CAST(max(n_tokens) AS BIGINT) AS max_tokens_in_bucket, CAST(sum(CASE WHEN n_tokens >= 2 THEN mass ELSE 0 END) * 10000 // sum(mass) AS BIGINT) AS collided_mass_bp FROM b"""),
       "T3/E4 ext: feature-hash collision audit — bucket occupancy + collided token-mass share"),
 
     // q298 — LEAVE-ONE-OUT TARGET ENCODING of customer market segment

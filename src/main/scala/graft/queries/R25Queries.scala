@@ -1,11 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.QuerySpec
-import graft.Tables
 import graft.functions.cosineSim
 
 /** Round-6 widening, closing batch: CUPED variance reduction (the
@@ -19,8 +18,6 @@ import graft.functions.cosineSim
   * (the q250/q251 capstone stance, applied to retrieval).
   */
 object R25Queries {
-
-  private def t(s: SparkSession, d: String, n: String): DataFrame = Tables.load(s, d, n)
 
   val specs: Seq[QuerySpec] = Seq(
 

@@ -1,11 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.QuerySpec
-import graft.Tables
 
 /** Round-6 widening, epilogue: discrete-time SURVIVAL ANALYSIS — the
   * one classical-statistics family the library still lacked. q301
@@ -16,8 +14,6 @@ import graft.Tables
   * users are still alive (naive churn rates ignore censoring).
   */
 object R26Queries {
-
-  private def t(s: SparkSession, d: String, n: String): DataFrame = Tables.load(s, d, n)
 
   val specs: Seq[QuerySpec] = Seq(
 

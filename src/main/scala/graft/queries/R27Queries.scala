@@ -1,11 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.QuerySpec
-import graft.Tables
 
 /** Round-6 widening, coda: DATA-DRIVEN (MARKOV) ATTRIBUTION — the
   * principled alternative to q275's positional heuristic. User
@@ -20,8 +19,6 @@ import graft.Tables
   * the transition counts.
   */
 object R27Queries {
-
-  private def t(s: SparkSession, d: String, n: String): DataFrame = Tables.load(s, d, n)
 
   /** Channels whose removal effect is measured (the transient touch
     * states; purchase is CONV, journey end without purchase is NULL). */

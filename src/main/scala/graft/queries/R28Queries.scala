@@ -1,10 +1,8 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.QuerySpec
-import graft.Tables
 import graft.ops.TextOps
 import graft.functions.cosineSim
 
@@ -16,8 +14,6 @@ import graft.functions.cosineSim
   * q306) that curation teams run before the Gopher gates are tuned.
   */
 object R28Queries {
-
-  private def t(s: SparkSession, d: String, n: String): DataFrame = Tables.load(s, d, n)
 
   private val emL2 = ScaleQueries.emL2
   private val dot =

@@ -1,10 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.QuerySpec
-import graft.Tables
+import graft.ops.HashOps.{md5Bucket, md5BucketSql}
 import graft.ops.TextOps
 
 /** Round-7 widening, part 2: corpus-composition governance — who
@@ -14,8 +13,6 @@ import graft.ops.TextOps
   * (q312).
   */
 object R29Queries {
-
-  private def t(s: SparkSession, d: String, n: String): DataFrame = Tables.load(s, d, n)
 
   val specs: Seq[QuerySpec] = Seq(
 
@@ -75,7 +72,7 @@ object R29Queries {
         val a = t(s, d, "documents")
           .select(col("doc_id"), col("lang"), size(toks).cast("long").as("n_tok"))
           .withColumn("batch",
-            R39Queries.md5Bucket(concat(lit("epoch1:"), col("doc_id").cast("string")), 8))
+            md5Bucket(concat(lit("epoch1:"), col("doc_id").cast("string")), 8))
         val perLang = a.groupBy("batch", "lang").agg(sum("n_tok").as("lt"))
         val dom = perLang.groupBy("batch")
           .agg(max("lt").as("dom_mass"), countDistinct("lang").as("n_langs"))
@@ -86,7 +83,7 @@ object R29Queries {
             expr("dom_mass * 10000 div tok_mass").as("dom_lang_bp"))
           .orderBy("batch")
       },
-      Some("""WITH a AS (SELECT doc_id, lang, len(string_split(lower(text), ' ')) AS n_tok, CAST(concat('0x', substr(md5('epoch1:' || CAST(doc_id AS VARCHAR)), 1, 10)) AS BIGINT) % 8 AS batch FROM documents), pl AS (SELECT batch, lang, sum(n_tok) AS lt FROM a GROUP BY 1, 2), dom AS (SELECT batch, max(lt) AS dom_mass, count(DISTINCT lang) AS n_langs FROM pl GROUP BY 1) SELECT CAST(t.batch AS BIGINT) AS batch, t.n_docs, CAST(t.tok_mass AS BIGINT) AS tok_mass, CAST(dom.n_langs AS BIGINT) AS n_langs, CAST(dom.dom_mass * 10000 // t.tok_mass AS BIGINT) AS dom_lang_bp FROM (SELECT batch, count(*) AS n_docs, sum(n_tok) AS tok_mass FROM a GROUP BY 1) t JOIN dom ON dom.batch = t.batch ORDER BY batch"""),
+      Some(s"""WITH a AS (SELECT doc_id, lang, len(string_split(lower(text), ' ')) AS n_tok, ${md5BucketSql("'epoch1:' || CAST(doc_id AS VARCHAR)", 8)} AS batch FROM documents), pl AS (SELECT batch, lang, sum(n_tok) AS lt FROM a GROUP BY 1, 2), dom AS (SELECT batch, max(lt) AS dom_mass, count(DISTINCT lang) AS n_langs FROM pl GROUP BY 1) SELECT CAST(t.batch AS BIGINT) AS batch, t.n_docs, CAST(t.tok_mass AS BIGINT) AS tok_mass, CAST(dom.n_langs AS BIGINT) AS n_langs, CAST(dom.dom_mass * 10000 // t.tok_mass AS BIGINT) AS dom_lang_bp FROM (SELECT batch, count(*) AS n_docs, sum(n_tok) AS tok_mass FROM a GROUP BY 1) t JOIN dom ON dom.batch = t.batch ORDER BY batch"""),
       "E4/R ext: deterministic seeded epoch shuffle — portable hash batches + per-batch composition audit"),
 
     // q312 — DEDUP SURVIVORSHIP AUDIT: dedup is supposed to remove

@@ -14,8 +14,6 @@ import graft.Tables
   */
 object R30Queries {
 
-  private def t(s: SparkSession, d: String, n: String): DataFrame = Tables.load(s, d, n)
-
   /** One k-core peel round: drop every node whose degree fell below k,
     * keep only edges with both endpoints surviving. Exposed for the
     * invariant spec's convergence check.

@@ -28,8 +28,6 @@ import graft.functions.cosineSim
   */
 object R33Queries {
 
-  private def t(s: SparkSession, d: String, n: String): DataFrame = Tables.load(s, d, n)
-
   private val emL2 = ScaleQueries.emL2
 
   /** Positional 5-gram shingles over (doc_id, tk) token arrays: pos is

@@ -1,11 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.QuerySpec
-import graft.Tables
 
 /** Round-8 second widening — the OPERATIONAL layer around the dedup and
   * mixture systems the registry already ships: q324 measures the MinHash
@@ -21,8 +19,6 @@ import graft.Tables
   * total final orders, BIGINT casts on both engines.
   */
 object R34Queries {
-
-  private def t(s: SparkSession, d: String, n: String): DataFrame = Tables.load(s, d, n)
 
   private[queries] val rareCteTail =
     """, dfq AS (SELECT s, count(*) AS dfreq FROM sh GROUP BY 1), rare AS (SELECT s FROM dfq WHERE dfreq BETWEEN 2 AND 4), shr AS (SELECT sh.doc_id, sh.s FROM sh JOIN rare USING (s)), ground AS (SELECT DISTINCT x.doc_id AS a, y.doc_id AS b FROM shr x JOIN shr y ON x.s = y.s AND x.doc_id < y.doc_id), sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1)"""

@@ -1,12 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import org.apache.spark.sql.expressions.Window
 
 import graft.QuerySpec
-import graft.Tables
 import graft.functions.cosineSim
 
 /** Round-8 third widening — closing the operational loops the q324–q326
@@ -19,8 +17,6 @@ import graft.functions.cosineSim
   * storage/quality tradeoff table.
   */
 object R35Queries {
-
-  private def t(s: SparkSession, d: String, n: String): DataFrame = Tables.load(s, d, n)
 
   /** DuckDB oracle for q328, assembled programmatically (the q319
     * convention): one UNION ALL leg per truncation width with k a

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -38,8 +38,6 @@ import graft.functions.cosineSim
   * `round(x, 6)` at the boundary.
   */
 object R36Queries {
-
-  private def t(s: SparkSession, d: String, n: String): DataFrame = Tables.load(s, d, n)
 
   /** Shared q332 scalar-prior expressions: ONE text, interpolated into
     * both the Spark plan and the DuckDB oracle, so the double-precision

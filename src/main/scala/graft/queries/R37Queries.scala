@@ -1,11 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.QuerySpec
 import graft.Tables
+import graft.ops.HashOps.{md5Bucket, md5BucketSql}
 
 /** Round-8 fifth widening — the experimentation-analytics completions
   * next to q294 (A/B + SRM), q333 (BH-FDR) and the robust-trend
@@ -29,8 +29,6 @@ import graft.Tables
   * portable md5 bucket hashing (the q311 convention) for the A/A arms.
   */
 object R37Queries {
-
-  private def t(s: SparkSession, d: String, n: String): DataFrame = Tables.load(s, d, n)
 
   /** q337 shared expressions (one text, both engines). Inputs are exact
     * integer sums: global (n, sx, sy, sxy, sx2, sy2), per-arm
@@ -184,7 +182,7 @@ object R37Queries {
             sum(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("npu"))
         val reps = s.range(50).select(col("id").as("rep"))
         val wide = perUser.crossJoin(broadcast(reps))
-          .withColumn("arm", R39Queries.md5Bucket(
+          .withColumn("arm", md5Bucket(
             concat(lit("aa:"), col("rep").cast("string"), lit(":"),
               col("user_id").cast("string")), 2))
           .groupBy("rep")
@@ -199,7 +197,7 @@ object R37Queries {
             when(abs(col("z")) >= 1.959964, 1L).otherwise(0L).as("is_sig"))
           .orderBy("rep")
       },
-      Some(s"""WITH pu AS (SELECT user_id, count(*) AS ne, sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS npu FROM events GROUP BY 1), reps AS (SELECT unnest(generate_series(0, 49)) AS rep), wide AS (SELECT rep, sum(CASE WHEN arm = 1 THEN ne ELSE 0 END) AS n1, sum(CASE WHEN arm = 1 THEN npu ELSE 0 END) AS c1, sum(CASE WHEN arm = 0 THEN ne ELSE 0 END) AS n0, sum(CASE WHEN arm = 0 THEN npu ELSE 0 END) AS c0 FROM (SELECT rep, CAST(concat('0x', substr(md5('aa:' || CAST(rep AS VARCHAR) || ':' || CAST(user_id AS VARCHAR)), 1, 10)) AS BIGINT) % 2 AS arm, ne, npu FROM pu CROSS JOIN reps) z GROUP BY 1), sc AS (SELECT rep, n1, c1, n0, c0, round($aaZ, 6) AS z FROM wide) SELECT CAST(rep AS BIGINT) AS rep, CAST(n1 AS BIGINT) AS n1, CAST(c1 AS BIGINT) AS c1, CAST(n0 AS BIGINT) AS n0, CAST(c0 AS BIGINT) AS c0, z, CAST(CASE WHEN abs(z) >= 1.959964 THEN 1 ELSE 0 END AS BIGINT) AS is_sig FROM sc ORDER BY rep"""),
+      Some(s"""WITH pu AS (SELECT user_id, count(*) AS ne, sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS npu FROM events GROUP BY 1), reps AS (SELECT unnest(generate_series(0, 49)) AS rep), wide AS (SELECT rep, sum(CASE WHEN arm = 1 THEN ne ELSE 0 END) AS n1, sum(CASE WHEN arm = 1 THEN npu ELSE 0 END) AS c1, sum(CASE WHEN arm = 0 THEN ne ELSE 0 END) AS n0, sum(CASE WHEN arm = 0 THEN npu ELSE 0 END) AS c0 FROM (SELECT rep, ${md5BucketSql("'aa:' || CAST(rep AS VARCHAR) || ':' || CAST(user_id AS VARCHAR)", 2)} AS arm, ne, npu FROM pu CROSS JOIN reps) z GROUP BY 1), sc AS (SELECT rep, n1, c1, n0, c0, round($aaZ, 6) AS z FROM wide) SELECT CAST(rep AS BIGINT) AS rep, CAST(n1 AS BIGINT) AS n1, CAST(c1 AS BIGINT) AS c1, CAST(n0 AS BIGINT) AS n0, CAST(c0 AS BIGINT) AS c0, z, CAST(CASE WHEN abs(z) >= 1.959964 THEN 1 ELSE 0 END AS BIGINT) AS is_sig FROM sc ORDER BY rep"""),
       "A/M5 ext: A/A calibration sweep — 50 seeded null pseudo-experiments via the portable md5 user hash; empirical false-positive rate of the shipped z-test"),
 
     // q340 — VOCAB-SIZE COVERAGE PRICING: per language, what share of

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.QuerySpec
-import graft.Tables
+import graft.ops.HashOps.{md5Bucket, md5BucketSql}
 
 /** Round-8 sixth widening — the PHYSICAL-DESIGN / STATISTICS layer: the
   * self-tuning readouts that decide how a 100-TB lakehouse is laid out,
@@ -34,8 +34,6 @@ import graft.Tables
   */
 object R38Queries {
 
-  private def t(s: SparkSession, d: String, n: String): DataFrame = Tables.load(s, d, n)
-
   /** Morton/z-value of two keys pre-scaled to [0, 1024): interleaves the
     * 10 bits of `x` into even positions and `y` into odd positions, as a
     * single arithmetic expression both engines evaluate identically
@@ -60,10 +58,10 @@ object R38Queries {
     * three independent hashes via the salt prefix).
     */
   private def bloomPos(i: Int, k: Column): Column =
-    R39Queries.md5Bucket(concat(lit(s"bf$i:"), k.cast("string")), 8192)
+    md5Bucket(concat(lit(s"bf$i:"), k.cast("string")), 8192)
 
   private def bloomPosSql(i: Int, k: String): String =
-    R39Queries.md5BucketSql(s"'bf$i:' || CAST($k AS VARCHAR)", 8192)
+    md5BucketSql(s"'bf$i:' || CAST($k AS VARCHAR)", 8192)
 
   /** One q341 battery entry: does `det` functionally determine `dep`? */
   private def fdLeg(

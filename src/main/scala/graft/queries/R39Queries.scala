@@ -1,11 +1,12 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.QuerySpec
 import graft.Tables
+import graft.ops.HashOps.{md5Bucket, md5BucketSql}
 
 /** Round-8 seventh widening — the OPERATIONS side of the physical-design
   * layer (R38 priced layouts and plans; these price the day-2 jobs a
@@ -28,18 +29,6 @@ import graft.Tables
   * internal Murmur3.
   */
 object R39Queries {
-
-  private def t(s: SparkSession, d: String, n: String): DataFrame = Tables.load(s, d, n)
-
-  /** Portable 40-bit integer hash of a string, mod `buckets` — md5 hex →
-    * conv → long (the q252 rowHash convention): replayable bit-for-bit in
-    * DuckDB through [[md5BucketSql]], unlike xxhash64.
-    */
-  private[graft] def md5Bucket(c: Column, buckets: Int): Column =
-    pmod(conv(substring(md5(c), 1, 10), 16, 10).cast("long"), lit(buckets.toLong))
-
-  private[graft] def md5BucketSql(e: String, buckets: Int): String =
-    s"CAST(concat('0x', substr(md5($e), 1, 10)) AS BIGINT) % $buckets"
 
   /** q347's fold from per-partition loads (p, c) to the one-row planner
     * readout — shared with the streaming skew monitor

@@ -17,8 +17,6 @@ import graft.ops.TextOps
   */
 object R3Queries {
 
-  private def t(s: SparkSession, d: String, n: String): DataFrame = Tables.load(s, d, n)
-
   /** One hive-partitioned copy of `documents` per (session, corpus) —
     * partitioned layout is a table-layout decision paid once at write
     * time, like the q107 bucketed tables; queries then get partition

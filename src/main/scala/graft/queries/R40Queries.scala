@@ -1,10 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.QuerySpec
-import graft.Tables
+import graft.ops.HashOps.{md5Long, md5LongSql}
 
 /** Round-8 eighth widening — closing the two loops R38 opened, the house
   * convention (q324's sweep got q327's apply; q328/q329 priced what q198
@@ -16,8 +16,6 @@ import graft.Tables
   * convention) — the sweep and the decision can never drift apart.
   */
 object R40Queries {
-
-  private def t(s: SparkSession, d: String, n: String): DataFrame = Tables.load(s, d, n)
 
   /** q351's per-(m,k) exact power (bits/m)^k as explicit multiplication —
     * m is a power of two, so bits/m is an EXACT binary double and the 1–3
@@ -55,8 +53,7 @@ object R40Queries {
         // index so each (m, k) cell filters to its first k hash families
         val salted = (1 to 4).map { i =>
           sKeys.select(lit(i).as("i"),
-            conv(substring(md5(concat(lit(s"bf$i:"), col("k").cast("string"))), 1, 10), 16, 10)
-              .cast("long").as("h"))
+            md5Long(concat(lit(s"bf$i:"), col("k").cast("string")), 10).as("h"))
         }.reduce(_ unionByName _)
         val grid = for { m <- Seq(2048, 4096, 8192, 16384); kk <- Seq(2, 3, 4) } yield (m, kk)
         val cells = grid.map { case (m, kk) =>
@@ -75,7 +72,7 @@ object R40Queries {
       },
       Some {
         def pos(i: Int) =
-          s"CAST(concat('0x', substr(md5('bf$i:' || CAST(k AS VARCHAR)), 1, 10)) AS BIGINT)"
+          md5LongSql(s"'bf$i:' || CAST(k AS VARCHAR)", 10)
         val legs = (for { m <- Seq(2048, 4096, 8192, 16384); kk <- Seq(2, 3, 4) } yield {
           val u = (1 to kk).map(i => s"SELECT ${pos(i)} % $m AS p FROM s").mkString(" UNION ALL ")
           s"SELECT $m AS m, $kk AS k, count(DISTINCT p) AS bits_set FROM ($u) h"

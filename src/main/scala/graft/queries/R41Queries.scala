@@ -1,10 +1,8 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.QuerySpec
-import graft.Tables
 
 /** Round-8 ninth widening — the remaining statistics loops, closed per
   * the house sweep-then-decide convention:
@@ -19,8 +17,6 @@ import graft.Tables
   *    table exhaustively — discovery, not confirmation.
   */
 object R41Queries {
-
-  private def t(s: SparkSession, d: String, n: String): DataFrame = Tables.load(s, d, n)
 
   val specs: Seq[QuerySpec] = Seq(
 

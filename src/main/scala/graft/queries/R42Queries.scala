@@ -1,10 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.QuerySpec
-import graft.Tables
 
 /** Round-8 tenth widening — the day-2 operation behind q349's
   * materialize verdicts: a materialized view is only worth shipping if
@@ -13,8 +12,6 @@ import graft.Tables
   * delta retracted out) against full recomputation.
   */
 object R42Queries {
-
-  private def t(s: SparkSession, d: String, n: String): DataFrame = Tables.load(s, d, n)
 
   /** The shared IVM merge algebra — q355's batch certification AND
     * EventStream.ivmStream fold through this one core (the

@@ -1,11 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.QuerySpec
-import graft.Tables
 import graft.ops.QuantileOps
 
 /** Round-9 burn-down — the four judge asks that close round 8's open
@@ -32,8 +31,6 @@ import graft.ops.QuantileOps
   *    cell validated by a DIRECT banding run at that (b, r).
   */
 object R43Queries {
-
-  private def t(s: SparkSession, d: String, n: String): DataFrame = Tables.load(s, d, n)
 
   /** q359's config grid: bands b (index entries per doc) by rows-per-band
     * r (min-hashes AND-ed inside a band). All b are powers of two so the

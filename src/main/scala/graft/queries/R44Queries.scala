@@ -1,11 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.QuerySpec
-import graft.Tables
+import graft.ops.HashOps.{md5LongSql, md5Bucket}
 import graft.ops.QuantileOps
 
 /** Round-9 first widening — the ESTIMATION layer that sits between the
@@ -27,13 +26,11 @@ import graft.ops.QuantileOps
   */
 object R44Queries {
 
-  private def t(s: SparkSession, d: String, n: String): DataFrame = Tables.load(s, d, n)
-
   /** q361's portable count-min hash — the q345 md5 convention: salt
     * `cm<i>:` then a 40-bit hex prefix; callers mod by the cell width.
     */
   private def cmCellSql(i: Int, k: String): String =
-    s"CAST(concat('0x', substr(md5('cm$i:' || CAST($k AS VARCHAR)), 1, 10)) AS BIGINT)"
+    md5LongSql(s"'cm$i:' || CAST($k AS VARCHAR)", 10)
 
   val specs: Seq[QuerySpec] = Seq(
 
@@ -127,7 +124,7 @@ object R44Queries {
         // re-aggregation.
         val fine = perKey.select(col("f"), explode(array((1 to 3).map(i =>
             struct(lit(i.toLong).as("hr"),
-              R39Queries.md5Bucket(concat(lit(s"cm$i:"), col("k").cast("string")), 524288)
+              md5Bucket(concat(lit(s"cm$i:"), col("k").cast("string")), 524288)
                 .as("cell"))): _*)).as("z"))
           .select(col("z.hr").as("hr"), col("z.cell").as("cell"), col("f"))
           .groupBy("hr", "cell").agg(sum("f").as("c"))

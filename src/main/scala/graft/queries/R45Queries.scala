@@ -1,10 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.QuerySpec
 import graft.Tables
+import graft.ops.HashOps.{md5Bucket, md5BucketSql}
 
 /** Round-9 second widening — two more decisions a 100-TB lakehouse/LLM
   * pipeline makes from priced tables:
@@ -22,8 +23,6 @@ import graft.Tables
   */
 object R45Queries {
 
-  private def t(s: SparkSession, d: String, n: String): DataFrame = Tables.load(s, d, n)
-
   /** q363's shared sketch projection (batch + EventStream.hhSketchStream):
     * each key row expands to its d=3 count-min coordinates (hr, cell) under
     * the portable salted-md5 hash, w=1024 cells — counting these rows
@@ -34,12 +33,12 @@ object R45Queries {
   private[graft] def cmCoords(keys: DataFrame): DataFrame =
     keys.select(explode(array((1 to 3).map(i =>
         struct(lit(i.toLong).as("hr"),
-          R39Queries.md5Bucket(concat(lit(s"hh$i:"), col("k").cast("string")), 1024)
+          md5Bucket(concat(lit(s"hh$i:"), col("k").cast("string")), 1024)
             .as("cell"))): _*)).as("z"))
       .select(col("z.hr").as("hr"), col("z.cell").as("cell"))
 
   private def hhCellSql(i: Int, k: String): String =
-    s"CAST(concat('0x', substr(md5('hh$i:' || CAST($k AS VARCHAR)), 1, 10)) AS BIGINT) % 1024"
+    md5BucketSql(s"'hh$i:' || CAST($k AS VARCHAR)", 1024)
 
   val specs: Seq[QuerySpec] = Seq(
 
@@ -85,7 +84,7 @@ object R45Queries {
         val dict = keys.groupBy("k").agg(count(lit(1)).as("f"))
         val probed = dict.select(col("k"), col("f"), explode(array((1 to 3).map(i =>
             struct(lit(i.toLong).as("hr"),
-              R39Queries.md5Bucket(concat(lit(s"hh$i:"), col("k").cast("string")), 1024)
+              md5Bucket(concat(lit(s"hh$i:"), col("k").cast("string")), 1024)
                 .as("cell"))): _*)).as("z"))
           .select(col("k"), col("f"), col("z.hr").as("hr"), col("z.cell").as("cell"))
           .join(cm, Seq("hr", "cell"))

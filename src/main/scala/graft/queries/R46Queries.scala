@@ -1,10 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.QuerySpec
 import graft.Tables
+import graft.ops.HashOps.{md5Long, md5LongSql}
 
 /** Round-9 third widening — three more day-2 operations, each priced or
   * certified the house way:
@@ -23,8 +24,6 @@ import graft.Tables
   */
 object R46Queries {
 
-  private def t(s: SparkSession, d: String, n: String): DataFrame = Tables.load(s, d, n)
-
   /** q366's row fingerprint — the order-independent multiset checksum of
     * a join-view row's business key, shared with
     * EventStream.joinViewStream so the online MV's certification hashes
@@ -32,8 +31,7 @@ object R46Queries {
     */
   private[graft] def jvFingerprint(orderKey: org.apache.spark.sql.Column)
       : org.apache.spark.sql.Column =
-    conv(substring(md5(concat(lit("jv:"), orderKey.cast("string"))), 1, 10), 16, 10)
-      .cast("long")
+    md5Long(concat(lit("jv:"), orderKey.cast("string")), 10)
 
   /** The shared join-view IVM merge (q366 + EventStream.joinViewStream):
     * both inputs are (seg, n, ck) partial summaries of join-view rows;
@@ -161,7 +159,7 @@ object R46Queries {
           .orderBy("scenario", "c_mktsegment")
       },
       Some(
-        """WITH b AS (SELECT o_orderkey, o_custkey, CAST(floor(epoch(o_orderdate)) AS BIGINT) // 86400 AS dk FROM orders), mx AS (SELECT max(dk) AS dmax FROM b), v AS (SELECT b.dk, c.c_mktsegment AS seg, CAST(concat('0x', substr(md5(concat('jv:', CAST(b.o_orderkey AS VARCHAR))), 1, 10)) AS BIGINT) AS ck FROM b JOIN customer c ON c.c_custkey = b.o_custkey CROSS JOIN mx), base AS (SELECT seg, count(*) AS n, sum(ck) AS ckk FROM v CROSS JOIN mx WHERE dk < dmax GROUP BY 1), delta AS (SELECT seg, count(*) AS n, sum(ck) AS ckk FROM v CROSS JOIN mx WHERE dk = dmax GROUP BY 1), fullv AS (SELECT seg, count(*) AS n, sum(ck) AS ckk FROM v GROUP BY 1), merged AS (SELECT coalesce(a.seg, d.seg) AS seg, coalesce(a.n, 0) + coalesce(d.n, 0) AS n, coalesce(a.ckk, 0) + coalesce(d.ckk, 0) AS ckk FROM base a FULL JOIN delta d ON d.seg = a.seg WHERE coalesce(a.n, 0) + coalesce(d.n, 0) > 0), retracted AS (SELECT f.seg, f.n - coalesce(d.n, 0) AS n, f.ckk - coalesce(d.ckk, 0) AS ckk FROM fullv f LEFT JOIN delta d ON d.seg = f.seg WHERE f.n - coalesce(d.n, 0) > 0), segl AS (SELECT oseg, row_number() OVER (ORDER BY oseg) AS rn, count(*) OVER () AS ns FROM (SELECT DISTINCT c_mktsegment AS oseg FROM customer) z), segmap AS (SELECT a.oseg, b2.oseg AS nseg FROM segl a JOIN segl b2 ON b2.rn = a.rn % a.ns + 1), vd AS (SELECT seg, ck FROM v CROSS JOIN mx WHERE dk = dmax), vdn AS (SELECT m.nseg AS seg, vd.ck FROM vd JOIN segmap m ON m.oseg = vd.seg), upd AS (SELECT seg, sum(sgn) AS n, sum(sgn * ck) AS ckk FROM (SELECT seg, -1 AS sgn, ck FROM vd UNION ALL SELECT seg, 1, ck FROM vdn) z GROUP BY 1), updm AS (SELECT coalesce(f.seg, u2.seg) AS seg, coalesce(f.n, 0) + coalesce(u2.n, 0) AS n, coalesce(f.ckk, 0) + coalesce(u2.ckk, 0) AS ckk FROM fullv f FULL JOIN upd u2 ON u2.seg = f.seg WHERE coalesce(f.n, 0) + coalesce(u2.n, 0) > 0), upde AS (SELECT seg, count(*) AS n, sum(ck) AS ckk FROM (SELECT seg, ck FROM v CROSS JOIN mx WHERE dk < dmax UNION ALL SELECT seg, ck FROM vdn) z GROUP BY 1), ins AS (SELECT 'insert_delta' AS scenario, coalesce(m.seg, f.seg) AS seg, coalesce(m.n, 0) AS ivm_n, coalesce(m.ckk, 0) AS ivm_ck, coalesce(f.n, 0) AS full_n, coalesce(f.ckk, 0) AS full_ck FROM merged m FULL JOIN fullv f ON f.seg = m.seg), del AS (SELECT 'delete_delta', coalesce(r.seg, bb.seg), coalesce(r.n, 0), coalesce(r.ckk, 0), coalesce(bb.n, 0), coalesce(bb.ckk, 0) FROM retracted r FULL JOIN base bb ON bb.seg = r.seg), updr AS (SELECT 'update_delta', coalesce(m.seg, e.seg), coalesce(m.n, 0), coalesce(m.ckk, 0), coalesce(e.n, 0), coalesce(e.ckk, 0) FROM updm m FULL JOIN upde e ON e.seg = m.seg), u AS (SELECT * FROM ins UNION ALL SELECT * FROM del UNION ALL SELECT * FROM updr) SELECT scenario, seg AS c_mktsegment, CAST(ivm_n AS BIGINT) AS ivm_n, CAST(ivm_ck AS BIGINT) AS ivm_ck, CAST(full_n AS BIGINT) AS full_n, CAST(full_ck AS BIGINT) AS full_ck, CAST(CASE WHEN ivm_n = full_n AND ivm_ck = full_ck THEN 1 ELSE 0 END AS BIGINT) AS matches FROM u ORDER BY scenario, c_mktsegment"""),
+        s"""WITH b AS (SELECT o_orderkey, o_custkey, CAST(floor(epoch(o_orderdate)) AS BIGINT) // 86400 AS dk FROM orders), mx AS (SELECT max(dk) AS dmax FROM b), v AS (SELECT b.dk, c.c_mktsegment AS seg, ${md5LongSql("concat('jv:', CAST(b.o_orderkey AS VARCHAR))", 10)} AS ck FROM b JOIN customer c ON c.c_custkey = b.o_custkey CROSS JOIN mx), base AS (SELECT seg, count(*) AS n, sum(ck) AS ckk FROM v CROSS JOIN mx WHERE dk < dmax GROUP BY 1), delta AS (SELECT seg, count(*) AS n, sum(ck) AS ckk FROM v CROSS JOIN mx WHERE dk = dmax GROUP BY 1), fullv AS (SELECT seg, count(*) AS n, sum(ck) AS ckk FROM v GROUP BY 1), merged AS (SELECT coalesce(a.seg, d.seg) AS seg, coalesce(a.n, 0) + coalesce(d.n, 0) AS n, coalesce(a.ckk, 0) + coalesce(d.ckk, 0) AS ckk FROM base a FULL JOIN delta d ON d.seg = a.seg WHERE coalesce(a.n, 0) + coalesce(d.n, 0) > 0), retracted AS (SELECT f.seg, f.n - coalesce(d.n, 0) AS n, f.ckk - coalesce(d.ckk, 0) AS ckk FROM fullv f LEFT JOIN delta d ON d.seg = f.seg WHERE f.n - coalesce(d.n, 0) > 0), segl AS (SELECT oseg, row_number() OVER (ORDER BY oseg) AS rn, count(*) OVER () AS ns FROM (SELECT DISTINCT c_mktsegment AS oseg FROM customer) z), segmap AS (SELECT a.oseg, b2.oseg AS nseg FROM segl a JOIN segl b2 ON b2.rn = a.rn % a.ns + 1), vd AS (SELECT seg, ck FROM v CROSS JOIN mx WHERE dk = dmax), vdn AS (SELECT m.nseg AS seg, vd.ck FROM vd JOIN segmap m ON m.oseg = vd.seg), upd AS (SELECT seg, sum(sgn) AS n, sum(sgn * ck) AS ckk FROM (SELECT seg, -1 AS sgn, ck FROM vd UNION ALL SELECT seg, 1, ck FROM vdn) z GROUP BY 1), updm AS (SELECT coalesce(f.seg, u2.seg) AS seg, coalesce(f.n, 0) + coalesce(u2.n, 0) AS n, coalesce(f.ckk, 0) + coalesce(u2.ckk, 0) AS ckk FROM fullv f FULL JOIN upd u2 ON u2.seg = f.seg WHERE coalesce(f.n, 0) + coalesce(u2.n, 0) > 0), upde AS (SELECT seg, count(*) AS n, sum(ck) AS ckk FROM (SELECT seg, ck FROM v CROSS JOIN mx WHERE dk < dmax UNION ALL SELECT seg, ck FROM vdn) z GROUP BY 1), ins AS (SELECT 'insert_delta' AS scenario, coalesce(m.seg, f.seg) AS seg, coalesce(m.n, 0) AS ivm_n, coalesce(m.ckk, 0) AS ivm_ck, coalesce(f.n, 0) AS full_n, coalesce(f.ckk, 0) AS full_ck FROM merged m FULL JOIN fullv f ON f.seg = m.seg), del AS (SELECT 'delete_delta', coalesce(r.seg, bb.seg), coalesce(r.n, 0), coalesce(r.ckk, 0), coalesce(bb.n, 0), coalesce(bb.ckk, 0) FROM retracted r FULL JOIN base bb ON bb.seg = r.seg), updr AS (SELECT 'update_delta', coalesce(m.seg, e.seg), coalesce(m.n, 0), coalesce(m.ckk, 0), coalesce(e.n, 0), coalesce(e.ckk, 0) FROM updm m FULL JOIN upde e ON e.seg = m.seg), u AS (SELECT * FROM ins UNION ALL SELECT * FROM del UNION ALL SELECT * FROM updr) SELECT scenario, seg AS c_mktsegment, CAST(ivm_n AS BIGINT) AS ivm_n, CAST(ivm_ck AS BIGINT) AS ivm_ck, CAST(full_n AS BIGINT) AS full_n, CAST(full_ck AS BIGINT) AS full_ck, CAST(CASE WHEN ivm_n = full_n AND ivm_ck = full_ck THEN 1 ELSE 0 END AS BIGINT) AS matches FROM u ORDER BY scenario, c_mktsegment"""),
       "A/J/S ext: join-view IVM — delta-join maintenance of the orders x customer view certified per segment by counts AND an order-independent md5 multiset fingerprint; insert, delete, AND update (retract+insert one batch, segment flip) paths"),
 
     // q367 — WATERMARK / ALLOWED-LATENESS CHOOSER: the knob every
@@ -193,8 +191,7 @@ object R46Queries {
         import org.apache.spark.sql.expressions.Window
         val ev = Tables.events(s, d).select(col("event_id"))
           .select(
-            conv(substring(md5(concat(lit("wm:"), col("event_id").cast("string"))), 1, 10), 16, 10)
-              .cast("long").as("h"))
+            md5Long(concat(lit("wm:"), col("event_id").cast("string")), 10).as("h"))
           .select(expr(
             "CASE WHEN h % 1000 < 900 THEN h % 60 " +
               "WHEN h % 1000 < 990 THEN 60 + h % 540 " +
@@ -237,7 +234,7 @@ object R46Queries {
           .orderBy("w_s")
       },
       Some(
-        """WITH ev AS (SELECT CASE WHEN h % 1000 < 900 THEN h % 60 WHEN h % 1000 < 990 THEN 60 + h % 540 WHEN h % 1000 < 999 THEN 600 + h % 3000 ELSE 3600 + h % 10800 END AS delay_s FROM (SELECT CAST(concat('0x', substr(md5(concat('wm:', CAST(event_id AS VARCHAR))), 1, 10)) AS BIGINT) AS h FROM events) z), grid AS (SELECT CAST(unnest([60, 300, 900, 3600, 21600, 86400]) AS BIGINT) AS w_s), tot AS (SELECT count(*) AS n_events FROM ev), f AS (SELECT g.w_s, count(e.delay_s) AS n_dropped FROM grid g LEFT JOIN ev e ON e.delay_s > g.w_s GROUP BY 1), c AS (SELECT w_s, n_events, n_dropped, n_dropped * 10000 // n_events AS loss_bp, CASE WHEN n_dropped * 10000 // n_events <= 20 THEN 1 ELSE 0 END AS meets_budget FROM f CROSS JOIN tot), best AS (SELECT min(w_s) AS best_w FROM c WHERE meets_budget = 1) SELECT CAST(w_s AS BIGINT) AS w_s, CAST(n_events AS BIGINT) AS n_events, CAST(n_dropped AS BIGINT) AS n_dropped, CAST(loss_bp AS BIGINT) AS loss_bp, CAST(meets_budget AS BIGINT) AS meets_budget, CAST(CASE WHEN w_s = best_w THEN 1 ELSE 0 END AS BIGINT) AS chosen FROM c CROSS JOIN best ORDER BY w_s"""),
+        s"""WITH ev AS (SELECT CASE WHEN h % 1000 < 900 THEN h % 60 WHEN h % 1000 < 990 THEN 60 + h % 540 WHEN h % 1000 < 999 THEN 600 + h % 3000 ELSE 3600 + h % 10800 END AS delay_s FROM (SELECT ${md5LongSql("concat('wm:', CAST(event_id AS VARCHAR))", 10)} AS h FROM events) z), grid AS (SELECT CAST(unnest([60, 300, 900, 3600, 21600, 86400]) AS BIGINT) AS w_s), tot AS (SELECT count(*) AS n_events FROM ev), f AS (SELECT g.w_s, count(e.delay_s) AS n_dropped FROM grid g LEFT JOIN ev e ON e.delay_s > g.w_s GROUP BY 1), c AS (SELECT w_s, n_events, n_dropped, n_dropped * 10000 // n_events AS loss_bp, CASE WHEN n_dropped * 10000 // n_events <= 20 THEN 1 ELSE 0 END AS meets_budget FROM f CROSS JOIN tot), best AS (SELECT min(w_s) AS best_w FROM c WHERE meets_budget = 1) SELECT CAST(w_s AS BIGINT) AS w_s, CAST(n_events AS BIGINT) AS n_events, CAST(n_dropped AS BIGINT) AS n_dropped, CAST(loss_bp AS BIGINT) AS loss_bp, CAST(meets_budget AS BIGINT) AS meets_budget, CAST(CASE WHEN w_s = best_w THEN 1 ELSE 0 END AS BIGINT) AS chosen FROM c CROSS JOIN best ORDER BY w_s"""),
       "§2.12/S ext: watermark chooser — planted heavy-tailed lateness priced across six allowed-lateness settings, smallest state horizon under the 0.2%-loss budget argmin-flagged (lands on the 1-hour watermark the streaming layer ships)"),
 
     // q368 — DELETE-STRATEGY CHOOSER (copy-on-write vs merge-on-read):

@@ -1,10 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.QuerySpec
-import graft.Tables
+import graft.ops.HashOps.{md5Bucket, md5BucketSql}
 
 /** Round-9 fourth widening:
   *
@@ -17,8 +17,6 @@ import graft.Tables
   *    small), with a planted drifted batch proving the alarm fires.
   */
 object R47Queries {
-
-  private def t(s: SparkSession, d: String, n: String): DataFrame = Tables.load(s, d, n)
 
   val specs: Seq[QuerySpec] = Seq(
 
@@ -46,10 +44,8 @@ object R47Queries {
         val base = t(s, d, "lineitem").select(
           col("l_returnflag"), col("l_linestatus"), col("l_partkey"),
           col("l_suppkey"), col("l_orderkey"),
-          pmod(conv(substring(md5(
-            concat(col("l_orderkey").cast("string"), lit("#"),
-              col("l_linenumber").cast("string"))), 1, 10), 16, 10).cast("long"),
-            lit(32L)).as("p"))
+          md5Bucket(concat(col("l_orderkey").cast("string"), lit("#"),
+            col("l_linenumber").cast("string")), 32).as("p"))
         val battery = Seq(
           ("l_returnflag", "l_returnflag"),
           ("l_returnflag+l_linestatus", "concat(l_returnflag, '|', l_linestatus)"),
@@ -82,7 +78,7 @@ object R47Queries {
         val legs = battery.map { case (nm, kexpr) =>
           s"SELECT '$nm' AS group_key, (SELECT count(*) FROM base) AS n, (SELECT count(DISTINCT $kexpr) FROM base) AS ndv, count(*) AS map_out FROM (SELECT p, $kexpr AS k FROM base GROUP BY 1, 2) g"
         }.mkString(" UNION ALL ")
-        s"""WITH base AS (SELECT l_returnflag, l_linestatus, l_partkey, l_suppkey, l_orderkey, CAST(concat('0x', substr(md5(concat(CAST(l_orderkey AS VARCHAR), '#', CAST(l_linenumber AS VARCHAR))), 1, 10)) AS BIGINT) % 32 AS p FROM lineitem), u AS ($legs) SELECT group_key, CAST(n AS BIGINT) AS n, CAST(ndv AS BIGINT) AS ndv, CAST(map_out AS BIGINT) AS map_out, CAST(map_out * 10000 // n AS BIGINT) AS reduction_bp, CAST(32 * least(ndv, (n + 31) // 32) AS BIGINT) AS bound_map_out, CASE WHEN map_out * 2 <= n THEN 'combine' ELSE 'skip_partial' END AS decision FROM u ORDER BY group_key"""
+        s"""WITH base AS (SELECT l_returnflag, l_linestatus, l_partkey, l_suppkey, l_orderkey, ${md5BucketSql("concat(CAST(l_orderkey AS VARCHAR), '#', CAST(l_linenumber AS VARCHAR))", 32)} AS p FROM lineitem), u AS ($legs) SELECT group_key, CAST(n AS BIGINT) AS n, CAST(ndv AS BIGINT) AS ndv, CAST(map_out AS BIGINT) AS map_out, CAST(map_out * 10000 // n AS BIGINT) AS reduction_bp, CAST(32 * least(ndv, (n + 31) // 32) AS BIGINT) AS bound_map_out, CASE WHEN map_out * 2 <= n THEN 'combine' ELSE 'skip_partial' END AS decision FROM u ORDER BY group_key"""
       },
       "A/P ext: partial-aggregation pricing — exact per-map-partition reduction ratios under a portable md5 partitioner for a 5-key battery, the 2x-reduction combine/skip decision computed, closed-form bound alongside"),
 

@@ -1,10 +1,8 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.QuerySpec
-import graft.Tables
 
 /** Round-9 fifth widening — two allocation/threshold decisions:
   *
@@ -17,8 +15,6 @@ import graft.Tables
   *    ids), highest junk recall under a 95% clean-retention floor.
   */
 object R48Queries {
-
-  private def t(s: SparkSession, d: String, n: String): DataFrame = Tables.load(s, d, n)
 
   val specs: Seq[QuerySpec] = Seq(
 

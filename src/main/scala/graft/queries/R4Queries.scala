@@ -20,8 +20,6 @@ import graft.functions.cosineSim
   */
 object R4Queries {
 
-  private def t(s: SparkSession, d: String, n: String): DataFrame = Tables.load(s, d, n)
-
   /** kNN-sparsified co-supply edge list, memoized and cached per
     * (session, corpus). The RAW co-supply graph (suppliers sharing any
     * part) is near-complete on this data — n=1000 nodes, all 499,500

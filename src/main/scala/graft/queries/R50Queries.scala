@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.QuerySpec
-import graft.Tables
+import graft.ops.HashOps.{md5Long, md5LongSql, md5Bucket, md5BucketSql}
 
 /** Round-10 second widening — the estimation/maintenance layer grows
   * the members a 100-TB stats pipeline still lacked:
@@ -28,8 +28,6 @@ import graft.Tables
   *    says when the cheap merge must give way to a boundary rebuild.
   */
 object R50Queries {
-
-  private def t(s: SparkSession, d: String, n: String): DataFrame = Tables.load(s, d, n)
 
   /** q380's frozen-boundary 16-bin rule (clamped equi-width on the stale
     * range) — the additive-merge core shared verbatim by the batch
@@ -57,8 +55,7 @@ object R50Queries {
   private[queries] def compactionSchedule(s: SparkSession, d: String): DataFrame = {
     val perFile = orderFiles(s, d).groupBy("f").agg(count(lit(1)).as("rows_f"),
         sum(when(col("h") < 42949672L, 1L).otherwise(0L)).as("dv_rows"))
-      .withColumn("hf", expr(
-        "CAST(conv(substring(md5(concat('rd:', CAST(f AS STRING))), 1, 10), 16, 10) AS BIGINT)"))
+      .withColumn("hf", md5Long(concat(lit("rd:"), col("f").cast("string")), 10))
       .withColumn("reads_f", expr(
         "CASE WHEN hf % 100 < 60 THEN hf % 3 " +
           "WHEN hf % 100 < 90 THEN 5 + hf % 10 ELSE 50 + hf % 50 END"))
@@ -88,7 +85,7 @@ object R50Queries {
     * q387's oracle, which extends it with the apply + re-price passes.
     */
   private[queries] val compactionSchedCte: String =
-    """keyed AS (SELECT o_orderkey, (o_custkey % 2147483648) * 2654435761 % 4294967296 AS h FROM orders), mxk AS (SELECT max(o_orderkey) AS kmax FROM keyed), files AS (SELECT h, least(31, o_orderkey * 32 // (kmax + 1)) AS f FROM keyed CROSS JOIN mxk), pf AS (SELECT f, count(*) AS rows_f, sum(CASE WHEN h < 42949672 THEN 1 ELSE 0 END) AS dv_rows FROM files GROUP BY 1), pr AS (SELECT *, CAST(concat('0x', substr(md5('rd:' || CAST(f AS VARCHAR)), 1, 10)) AS BIGINT) AS hf FROM pf), pe AS (SELECT f, rows_f, dv_rows, CASE WHEN hf % 100 < 60 THEN hf % 3 WHEN hf % 100 < 90 THEN 5 + hf % 10 ELSE 50 + hf % 50 END AS reads_f FROM pr), econ AS (SELECT f, rows_f, dv_rows, reads_f, CASE WHEN dv_rows > 0 THEN reads_f * rows_f ELSE 0 END AS tax_du, rows_f * 10 AS rewrite_du FROM pe), pb AS (SELECT *, CASE WHEN tax_du > 0 THEN (rewrite_du + tax_du - 1) // tax_du ELSE -1 END AS payback_cycles FROM econ), q AS (SELECT *, CASE WHEN dv_rows > 0 AND payback_cycles BETWEEN 1 AND 10 THEN 1 ELSE 0 END AS qual, sum(rows_f) OVER () // 4 AS budget, sum(CASE WHEN dv_rows > 0 AND payback_cycles BETWEEN 1 AND 10 THEN rows_f ELSE 0 END) OVER (ORDER BY payback_cycles, f ROWS UNBOUNDED PRECEDING) AS cum_qual_rows FROM pb), sched AS (SELECT f, rows_f, dv_rows, reads_f, tax_du, rewrite_du, payback_cycles, qual, budget, CASE WHEN qual = 1 AND cum_qual_rows <= budget THEN 1 ELSE 0 END AS compact_now FROM q)"""
+    s"""keyed AS (SELECT o_orderkey, (o_custkey % 2147483648) * 2654435761 % 4294967296 AS h FROM orders), mxk AS (SELECT max(o_orderkey) AS kmax FROM keyed), files AS (SELECT h, least(31, o_orderkey * 32 // (kmax + 1)) AS f FROM keyed CROSS JOIN mxk), pf AS (SELECT f, count(*) AS rows_f, sum(CASE WHEN h < 42949672 THEN 1 ELSE 0 END) AS dv_rows FROM files GROUP BY 1), pr AS (SELECT *, ${md5LongSql("'rd:' || CAST(f AS VARCHAR)", 10)} AS hf FROM pf), pe AS (SELECT f, rows_f, dv_rows, CASE WHEN hf % 100 < 60 THEN hf % 3 WHEN hf % 100 < 90 THEN 5 + hf % 10 ELSE 50 + hf % 50 END AS reads_f FROM pr), econ AS (SELECT f, rows_f, dv_rows, reads_f, CASE WHEN dv_rows > 0 THEN reads_f * rows_f ELSE 0 END AS tax_du, rows_f * 10 AS rewrite_du FROM pe), pb AS (SELECT *, CASE WHEN tax_du > 0 THEN (rewrite_du + tax_du - 1) // tax_du ELSE -1 END AS payback_cycles FROM econ), q AS (SELECT *, CASE WHEN dv_rows > 0 AND payback_cycles BETWEEN 1 AND 10 THEN 1 ELSE 0 END AS qual, sum(rows_f) OVER () // 4 AS budget, sum(CASE WHEN dv_rows > 0 AND payback_cycles BETWEEN 1 AND 10 THEN rows_f ELSE 0 END) OVER (ORDER BY payback_cycles, f ROWS UNBOUNDED PRECEDING) AS cum_qual_rows FROM pb), sched AS (SELECT f, rows_f, dv_rows, reads_f, tax_du, rewrite_du, payback_cycles, qual, budget, CASE WHEN qual = 1 AND cum_qual_rows <= budget THEN 1 ELSE 0 END AS compact_now FROM q)"""
 
   val specs: Seq[QuerySpec] = Seq(
 
@@ -209,7 +206,7 @@ object R50Queries {
         // count-min at w=8192, d=3 (the q361 md5 convention)
         val cm = keys.select(explode(array((1 to 3).map(i =>
             struct(lit(i.toLong).as("hr"),
-              R39Queries.md5Bucket(concat(lit(s"cm$i:"), col("k").cast("string")), 8192)
+              md5Bucket(concat(lit(s"cm$i:"), col("k").cast("string")), 8192)
                 .as("cell"))): _*)).as("z"))
           .select(col("z.hr").as("hr"), col("z.cell").as("cell"))
           .groupBy("hr", "cell").agg(count(lit(1)).as("c"))
@@ -220,9 +217,8 @@ object R50Queries {
         // Bernoulli p=1/4 row sample (40-bit md5 of the row key), with
         // the unbiased correction 16*S2 - 3n
         val sampEst = keys.where(
-            conv(substring(md5(concat(lit("js:"), col("l_orderkey").cast("string"),
-              lit(":"), col("l_linenumber").cast("string"))), 1, 10), 16, 10)
-              .cast("long") < 274877906944L)
+            md5Long(concat(lit("js:"), col("l_orderkey").cast("string"),
+              lit(":"), col("l_linenumber").cast("string")), 10) < 274877906944L)
           .groupBy("k").agg(count(lit(1)).as("fs"))
           .agg(sum(expr("fs * fs")).as("s2"), count(lit(1)).as("sample_keys"),
             sum("fs").as("sample_rows"))
@@ -242,7 +238,7 @@ object R50Queries {
           .orderBy("estimator")
       },
       Some(
-        """WITH keys AS (SELECT l_orderkey, l_linenumber, l_partkey AS k FROM lineitem), exact AS (SELECT sum(fr * fr) AS exact_f2, sum(fr) AS n_rows FROM (SELECT k, count(*) AS fr FROM keys GROUP BY 1) g), cmc AS (SELECT hr, cell, count(*) AS c FROM (SELECT i AS hr, CAST(concat('0x', substr(md5('cm' || CAST(i AS VARCHAR) || ':' || CAST(k AS VARCHAR)), 1, 10)) AS BIGINT) % 8192 AS cell FROM keys CROSS JOIN (SELECT unnest([1, 2, 3]) AS i) ii) z GROUP BY 1, 2), cm AS (SELECT '1:count_min' AS estimator, CAST(3 * 8192 AS BIGINT) AS state_units, min(row_est) AS est FROM (SELECT hr, sum(c * c) AS row_est FROM cmc GROUP BY 1) r), se AS (SELECT sum(fs * fs) AS s2, sum(fs) AS sample_rows FROM (SELECT k, count(*) AS fs FROM keys WHERE CAST(concat('0x', substr(md5('js:' || CAST(l_orderkey AS VARCHAR) || ':' || CAST(l_linenumber AS VARCHAR)), 1, 10)) AS BIGINT) < 274877906944 GROUP BY 1) g), samp AS (SELECT '2:bernoulli_sample', sample_rows, 16 * s2 - 3 * (SELECT n_rows FROM exact) FROM se), u AS (SELECT * FROM cm UNION ALL SELECT * FROM samp) SELECT estimator, CAST(state_units AS BIGINT) AS state_units, CAST(est AS BIGINT) AS est, CAST((SELECT exact_f2 FROM exact) AS BIGINT) AS exact_f2, CAST(greatest(est * 10000 // greatest((SELECT exact_f2 FROM exact), 1), (SELECT exact_f2 FROM exact) * 10000 // greatest(est, 1)) AS BIGINT) AS qerr_bp, CAST(CASE WHEN est >= (SELECT exact_f2 FROM exact) THEN 1 ELSE 0 END AS BIGINT) AS overestimates, CAST(CASE WHEN estimator = '1:count_min' THEN 1 ELSE 0 END AS BIGINT) AS one_sided_safe FROM u ORDER BY estimator"""),
+        s"""WITH keys AS (SELECT l_orderkey, l_linenumber, l_partkey AS k FROM lineitem), exact AS (SELECT sum(fr * fr) AS exact_f2, sum(fr) AS n_rows FROM (SELECT k, count(*) AS fr FROM keys GROUP BY 1) g), cmc AS (SELECT hr, cell, count(*) AS c FROM (SELECT i AS hr, ${md5BucketSql("'cm' || CAST(i AS VARCHAR) || ':' || CAST(k AS VARCHAR)", 8192)} AS cell FROM keys CROSS JOIN (SELECT unnest([1, 2, 3]) AS i) ii) z GROUP BY 1, 2), cm AS (SELECT '1:count_min' AS estimator, CAST(3 * 8192 AS BIGINT) AS state_units, min(row_est) AS est FROM (SELECT hr, sum(c * c) AS row_est FROM cmc GROUP BY 1) r), se AS (SELECT sum(fs * fs) AS s2, sum(fs) AS sample_rows FROM (SELECT k, count(*) AS fs FROM keys WHERE ${md5LongSql("'js:' || CAST(l_orderkey AS VARCHAR) || ':' || CAST(l_linenumber AS VARCHAR)", 10)} < 274877906944 GROUP BY 1) g), samp AS (SELECT '2:bernoulli_sample', sample_rows, 16 * s2 - 3 * (SELECT n_rows FROM exact) FROM se), u AS (SELECT * FROM cm UNION ALL SELECT * FROM samp) SELECT estimator, CAST(state_units AS BIGINT) AS state_units, CAST(est AS BIGINT) AS est, CAST((SELECT exact_f2 FROM exact) AS BIGINT) AS exact_f2, CAST(greatest(est * 10000 // greatest((SELECT exact_f2 FROM exact), 1), (SELECT exact_f2 FROM exact) * 10000 // greatest(est, 1)) AS BIGINT) AS qerr_bp, CAST(CASE WHEN est >= (SELECT exact_f2 FROM exact) THEN 1 ELSE 0 END AS BIGINT) AS overestimates, CAST(CASE WHEN estimator = '1:count_min' THEN 1 ELSE 0 END AS BIGINT) AS one_sided_safe FROM u ORDER BY estimator"""),
       "A/S ext: join-size estimator shootout — Bernoulli-sample F2 with the unbiased integer correction (16*S2 - 3n) vs the q361 count-min inner product vs exact, state budgets side by side and the one-sided planner-safety distinction as a column"),
 
     // q380 — INCREMENTAL HISTOGRAM MAINTENANCE: the stats-refresh

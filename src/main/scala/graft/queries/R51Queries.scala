@@ -1,11 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.QuerySpec
-import graft.Tables
+import graft.ops.HashOps.md5LongSql
 import graft.ops.QuantileOps
 
 /** Round-10 third widening — ingestion-correctness members (the CDC
@@ -25,8 +25,6 @@ import graft.ops.QuantileOps
   *    certified equal to the full recompute, conservation checked.
   */
 object R51Queries {
-
-  private def t(s: SparkSession, d: String, n: String): DataFrame = Tables.load(s, d, n)
 
   /** q381's honest grade: the TRUE rank of every estimate — the corpus
     * stays on the PROBE side of a broadcast join against the tiny
@@ -175,7 +173,7 @@ object R51Queries {
           .orderBy("c_mktsegment")
       },
       Some(
-        """WITH b AS (SELECT o_orderkey, o_custkey, CAST(floor(epoch(o_orderdate)) AS BIGINT) // 86400 AS dk FROM orders), dks AS (SELECT max(dk) AS d3k, max(dk) - 1 AS d2k, max(dk) - 2 AS d1k FROM b), v AS (SELECT b.dk, c.c_mktsegment AS seg, CAST(concat('0x', substr(md5(concat('jv:', CAST(b.o_orderkey AS VARCHAR))), 1, 10)) AS BIGINT) AS ck FROM b JOIN customer c ON c.c_custkey = b.o_custkey CROSS JOIN dks), base AS (SELECT seg, count(*) AS n, sum(ck) AS ckk FROM v CROSS JOIN dks WHERE dk < d1k GROUP BY 1), d1 AS (SELECT seg, count(*) AS n, sum(ck) AS ckk FROM v CROSS JOIN dks WHERE dk = d1k GROUP BY 1), d2 AS (SELECT seg, count(*) AS n, sum(ck) AS ckk FROM v CROSS JOIN dks WHERE dk = d2k GROUP BY 1), d3 AS (SELECT seg, count(*) AS n, sum(ck) AS ckk FROM v CROSS JOIN dks WHERE dk = d3k GROUP BY 1), fullv AS (SELECT seg, count(*) AS n, sum(ck) AS ckk FROM v GROUP BY 1), naive AS (SELECT seg, sum(n) AS n, sum(ckk) AS ckk FROM (SELECT * FROM base UNION ALL SELECT * FROM d1 UNION ALL SELECT * FROM d2 UNION ALL SELECT * FROM d2 UNION ALL SELECT * FROM d3) z GROUP BY 1), idem AS (SELECT seg, sum(n) AS n, sum(ckk) AS ckk FROM (SELECT * FROM base UNION ALL SELECT * FROM d1 UNION ALL SELECT * FROM d2 UNION ALL SELECT * FROM d3) z GROUP BY 1) SELECT i.seg AS c_mktsegment, CAST(i.n AS BIGINT) AS idem_n, CAST(nv.n AS BIGINT) AS naive_n, CAST(f.n AS BIGINT) AS full_n, CAST(CASE WHEN i.n = f.n AND i.ckk = f.ckk THEN 1 ELSE 0 END AS BIGINT) AS matches, CAST(nv.n - f.n AS BIGINT) AS overcount_n, CAST(CASE WHEN nv.n - f.n = coalesce(d2.n, 0) AND nv.ckk - f.ckk = coalesce(d2.ckk, 0) THEN 1 ELSE 0 END AS BIGINT) AS divergence_is_replay FROM idem i JOIN naive nv ON nv.seg = i.seg JOIN fullv f ON f.seg = i.seg LEFT JOIN d2 ON d2.seg = i.seg ORDER BY c_mktsegment"""),
+        s"""WITH b AS (SELECT o_orderkey, o_custkey, CAST(floor(epoch(o_orderdate)) AS BIGINT) // 86400 AS dk FROM orders), dks AS (SELECT max(dk) AS d3k, max(dk) - 1 AS d2k, max(dk) - 2 AS d1k FROM b), v AS (SELECT b.dk, c.c_mktsegment AS seg, ${md5LongSql("concat('jv:', CAST(b.o_orderkey AS VARCHAR))", 10)} AS ck FROM b JOIN customer c ON c.c_custkey = b.o_custkey CROSS JOIN dks), base AS (SELECT seg, count(*) AS n, sum(ck) AS ckk FROM v CROSS JOIN dks WHERE dk < d1k GROUP BY 1), d1 AS (SELECT seg, count(*) AS n, sum(ck) AS ckk FROM v CROSS JOIN dks WHERE dk = d1k GROUP BY 1), d2 AS (SELECT seg, count(*) AS n, sum(ck) AS ckk FROM v CROSS JOIN dks WHERE dk = d2k GROUP BY 1), d3 AS (SELECT seg, count(*) AS n, sum(ck) AS ckk FROM v CROSS JOIN dks WHERE dk = d3k GROUP BY 1), fullv AS (SELECT seg, count(*) AS n, sum(ck) AS ckk FROM v GROUP BY 1), naive AS (SELECT seg, sum(n) AS n, sum(ckk) AS ckk FROM (SELECT * FROM base UNION ALL SELECT * FROM d1 UNION ALL SELECT * FROM d2 UNION ALL SELECT * FROM d2 UNION ALL SELECT * FROM d3) z GROUP BY 1), idem AS (SELECT seg, sum(n) AS n, sum(ckk) AS ckk FROM (SELECT * FROM base UNION ALL SELECT * FROM d1 UNION ALL SELECT * FROM d2 UNION ALL SELECT * FROM d3) z GROUP BY 1) SELECT i.seg AS c_mktsegment, CAST(i.n AS BIGINT) AS idem_n, CAST(nv.n AS BIGINT) AS naive_n, CAST(f.n AS BIGINT) AS full_n, CAST(CASE WHEN i.n = f.n AND i.ckk = f.ckk THEN 1 ELSE 0 END AS BIGINT) AS matches, CAST(nv.n - f.n AS BIGINT) AS overcount_n, CAST(CASE WHEN nv.n - f.n = coalesce(d2.n, 0) AND nv.ckk - f.ckk = coalesce(d2.ckk, 0) THEN 1 ELSE 0 END AS BIGINT) AS divergence_is_replay FROM idem i JOIN naive nv ON nv.seg = i.seg JOIN fullv f ON f.seg = i.seg LEFT JOIN d2 ON d2.seg = i.seg ORDER BY c_mktsegment"""),
       "A/S ext: idempotent delta application — a replayed batch (at-least-once delivery) double-counts under the naive additive fold; the high-water-mark fold is certified equal to exactly-once recompute, and the naive divergence proven to be exactly the replayed batch (count AND fingerprint)"),
 
     // q383 — LATE-ARRIVING DIMENSION: the other CDC hazard — a fact
@@ -244,6 +242,6 @@ object R51Queries {
           .orderBy("c_mktsegment")
       },
       Some(
-        """WITH b AS (SELECT o_orderkey, o_custkey, CAST(floor(epoch(o_orderdate)) AS BIGINT) // 86400 AS dk FROM orders), mx AS (SELECT max(dk) AS dmax FROM b), facts AS (SELECT o_orderkey, o_custkey, CAST(concat('0x', substr(md5(concat('jv:', CAST(o_orderkey AS VARCHAR))), 1, 10)) AS BIGINT) AS ck FROM b CROSS JOIN mx WHERE dk > dmax - 90), ontime AS (SELECT c_custkey, c_mktsegment FROM customer WHERE c_custkey % 13 != 0), late AS (SELECT c_custkey, c_mktsegment FROM customer WHERE c_custkey % 13 = 0), matched AS (SELECT c_mktsegment AS seg, count(*) AS n, sum(ck) AS ckk FROM facts JOIN ontime ON c_custkey = o_custkey GROUP BY 1), parked AS (SELECT o_custkey, count(*) AS pn, sum(ck) AS pck FROM facts WHERE o_custkey NOT IN (SELECT c_custkey FROM ontime) GROUP BY 1), drained AS (SELECT c_mktsegment AS seg, sum(pn) AS n, sum(pck) AS ckk FROM parked JOIN late ON c_custkey = o_custkey GROUP BY 1), fin AS (SELECT coalesce(m.seg, dr.seg) AS seg, coalesce(m.n, 0) + coalesce(dr.n, 0) AS n, coalesce(m.ckk, 0) + coalesce(dr.ckk, 0) AS ckk FROM matched m FULL JOIN drained dr ON dr.seg = m.seg WHERE coalesce(m.n, 0) + coalesce(dr.n, 0) > 0), fullv AS (SELECT c_mktsegment AS seg, count(*) AS full_n, sum(ck) AS full_ck FROM facts JOIN customer ON c_custkey = o_custkey GROUP BY 1), cons AS (SELECT coalesce((SELECT sum(pn) FROM parked), 0) AS parked_n, coalesce((SELECT sum(pck) FROM parked), 0) AS parked_ck, coalesce((SELECT sum(n) FROM drained), 0) AS drained_n, coalesce((SELECT sum(ckk) FROM drained), 0) AS drained_ck) SELECT f.seg AS c_mktsegment, CAST(f.n AS BIGINT) AS final_n, CAST(fv.full_n AS BIGINT) AS full_n, CAST(CASE WHEN f.n = fv.full_n AND f.ckk = fv.full_ck THEN 1 ELSE 0 END AS BIGINT) AS matches, CAST(parked_n AS BIGINT) AS parked_n, CAST(CASE WHEN parked_n = drained_n AND parked_ck = drained_ck THEN 1 ELSE 0 END AS BIGINT) AS mass_conserved FROM fin f JOIN fullv fv ON fv.seg = f.seg CROSS JOIN cons ORDER BY c_mktsegment"""),
+        s"""WITH b AS (SELECT o_orderkey, o_custkey, CAST(floor(epoch(o_orderdate)) AS BIGINT) // 86400 AS dk FROM orders), mx AS (SELECT max(dk) AS dmax FROM b), facts AS (SELECT o_orderkey, o_custkey, ${md5LongSql("concat('jv:', CAST(o_orderkey AS VARCHAR))", 10)} AS ck FROM b CROSS JOIN mx WHERE dk > dmax - 90), ontime AS (SELECT c_custkey, c_mktsegment FROM customer WHERE c_custkey % 13 != 0), late AS (SELECT c_custkey, c_mktsegment FROM customer WHERE c_custkey % 13 = 0), matched AS (SELECT c_mktsegment AS seg, count(*) AS n, sum(ck) AS ckk FROM facts JOIN ontime ON c_custkey = o_custkey GROUP BY 1), parked AS (SELECT o_custkey, count(*) AS pn, sum(ck) AS pck FROM facts WHERE o_custkey NOT IN (SELECT c_custkey FROM ontime) GROUP BY 1), drained AS (SELECT c_mktsegment AS seg, sum(pn) AS n, sum(pck) AS ckk FROM parked JOIN late ON c_custkey = o_custkey GROUP BY 1), fin AS (SELECT coalesce(m.seg, dr.seg) AS seg, coalesce(m.n, 0) + coalesce(dr.n, 0) AS n, coalesce(m.ckk, 0) + coalesce(dr.ckk, 0) AS ckk FROM matched m FULL JOIN drained dr ON dr.seg = m.seg WHERE coalesce(m.n, 0) + coalesce(dr.n, 0) > 0), fullv AS (SELECT c_mktsegment AS seg, count(*) AS full_n, sum(ck) AS full_ck FROM facts JOIN customer ON c_custkey = o_custkey GROUP BY 1), cons AS (SELECT coalesce((SELECT sum(pn) FROM parked), 0) AS parked_n, coalesce((SELECT sum(pck) FROM parked), 0) AS parked_ck, coalesce((SELECT sum(n) FROM drained), 0) AS drained_n, coalesce((SELECT sum(ckk) FROM drained), 0) AS drained_ck) SELECT f.seg AS c_mktsegment, CAST(f.n AS BIGINT) AS final_n, CAST(fv.full_n AS BIGINT) AS full_n, CAST(CASE WHEN f.n = fv.full_n AND f.ckk = fv.full_ck THEN 1 ELSE 0 END AS BIGINT) AS matches, CAST(parked_n AS BIGINT) AS parked_n, CAST(CASE WHEN parked_n = drained_n AND parked_ck = drained_ck THEN 1 ELSE 0 END AS BIGINT) AS mass_conserved FROM fin f JOIN fullv fv ON fv.seg = f.seg CROSS JOIN cons ORDER BY c_mktsegment"""),
       "A/J/S ext: late-arriving dimension — facts park with fingerprint mass when their dim row is missing, drain by equi-join when the late slice lands; final merge certified equal to full recompute, parked==drained conservation checked"))
 }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.QuerySpec
 import graft.Tables
+import graft.ops.HashOps.{md5Long, md5LongSql, md5Bucket, md5BucketSql}
 
 /** Round-10 fourth widening — the remaining loop-closures the round's
   * own additions opened:
@@ -26,12 +27,6 @@ import graft.Tables
   *    sitting exactly under the unique key at every rate.
   */
 object R52Queries {
-
-  private def t(s: SparkSession, d: String, n: String): DataFrame = Tables.load(s, d, n)
-
-  /** 40-bit md5 integer under a tag — the house replayable hash. */
-  private def h40(tag: String, c: Column): Column =
-    conv(substring(md5(concat(lit(tag), c.cast("string"))), 1, 10), 16, 10).cast("long")
 
   /** q385's ONE keyed pass per join side over (k, hh) rows: the exact
     * per-key frequency f_tag plus the 25%-sample per-key count sc_tag
@@ -58,8 +53,8 @@ object R52Queries {
       expr("unix_timestamp(ts)").as("es"))
     val rep = ev
       .select(col("event_id"), col("es"),
-        h40("dr:", col("event_id")).as("h"),
-        h40("drl:", col("event_id")).as("h2"))
+        md5Long(concat(lit("dr:"), col("event_id").cast("string")), 10).as("h"),
+        md5Long(concat(lit("drl:"), col("event_id").cast("string")), 10).as("h2"))
       .where("h % 5 = 0")
       .withColumn("lag_s", expr(
         "CASE WHEN h2 % 100 < 70 THEN 30 + h2 % 570 " +
@@ -148,7 +143,7 @@ object R52Queries {
           .orderBy("r_s")
       },
       Some(
-        """WITH ev AS (SELECT event_id, epoch(CAST(ts AS TIMESTAMP)) AS es FROM events), base AS (SELECT count(*) AS n_keys, CAST(max(es) - min(es) + 1 AS BIGINT) AS span_s FROM ev), rep AS (SELECT CASE WHEN h2 % 100 < 70 THEN 30 + h2 % 570 WHEN h2 % 100 < 90 THEN 600 + h2 % 3000 WHEN h2 % 100 < 99 THEN 3600 + h2 % 18000 ELSE 21600 + h2 % 238000 END AS lag_s FROM (SELECT CAST(concat('0x', substr(md5(concat('dr:', CAST(event_id AS VARCHAR))), 1, 10)) AS BIGINT) AS h, CAST(concat('0x', substr(md5(concat('drl:', CAST(event_id AS VARCHAR))), 1, 10)) AS BIGINT) AS h2 FROM ev) z WHERE h % 5 = 0), grid AS (SELECT CAST(unnest([300, 1800, 3600, 21600, 86400, 259200]) AS BIGINT) AS r_s), tot AS (SELECT count(*) AS n_rep FROM rep), f AS (SELECT g.r_s, count(e.lag_s) AS leaked FROM grid g LEFT JOIN rep e ON e.lag_s > g.r_s GROUP BY 1), c AS (SELECT r_s, n_keys * r_s // span_s AS state_rows, n_keys + n_rep AS n_deliveries, leaked, leaked * 10000 // (n_keys + n_rep) AS leak_bp, CASE WHEN leaked * 10000 // (n_keys + n_rep) <= 60 THEN 1 ELSE 0 END AS meets_budget FROM f CROSS JOIN tot CROSS JOIN base), best AS (SELECT min(r_s) AS best_r FROM c WHERE meets_budget = 1) SELECT CAST(r_s AS BIGINT) AS r_s, CAST(state_rows AS BIGINT) AS state_rows, CAST(n_deliveries AS BIGINT) AS n_deliveries, CAST(leaked AS BIGINT) AS leaked, CAST(leak_bp AS BIGINT) AS leak_bp, CAST(meets_budget AS BIGINT) AS meets_budget, CAST(CASE WHEN r_s = best_r THEN 1 ELSE 0 END AS BIGINT) AS chosen FROM c CROSS JOIN best ORDER BY r_s"""),
+        s"""WITH ev AS (SELECT event_id, epoch(CAST(ts AS TIMESTAMP)) AS es FROM events), base AS (SELECT count(*) AS n_keys, CAST(max(es) - min(es) + 1 AS BIGINT) AS span_s FROM ev), rep AS (SELECT CASE WHEN h2 % 100 < 70 THEN 30 + h2 % 570 WHEN h2 % 100 < 90 THEN 600 + h2 % 3000 WHEN h2 % 100 < 99 THEN 3600 + h2 % 18000 ELSE 21600 + h2 % 238000 END AS lag_s FROM (SELECT ${md5LongSql("concat('dr:', CAST(event_id AS VARCHAR))", 10)} AS h, ${md5LongSql("concat('drl:', CAST(event_id AS VARCHAR))", 10)} AS h2 FROM ev) z WHERE h % 5 = 0), grid AS (SELECT CAST(unnest([300, 1800, 3600, 21600, 86400, 259200]) AS BIGINT) AS r_s), tot AS (SELECT count(*) AS n_rep FROM rep), f AS (SELECT g.r_s, count(e.lag_s) AS leaked FROM grid g LEFT JOIN rep e ON e.lag_s > g.r_s GROUP BY 1), c AS (SELECT r_s, n_keys * r_s // span_s AS state_rows, n_keys + n_rep AS n_deliveries, leaked, leaked * 10000 // (n_keys + n_rep) AS leak_bp, CASE WHEN leaked * 10000 // (n_keys + n_rep) <= 60 THEN 1 ELSE 0 END AS meets_budget FROM f CROSS JOIN tot CROSS JOIN base), best AS (SELECT min(r_s) AS best_r FROM c WHERE meets_budget = 1) SELECT CAST(r_s AS BIGINT) AS r_s, CAST(state_rows AS BIGINT) AS state_rows, CAST(n_deliveries AS BIGINT) AS n_deliveries, CAST(leaked AS BIGINT) AS leaked, CAST(leak_bp AS BIGINT) AS leak_bp, CAST(meets_budget AS BIGINT) AS meets_budget, CAST(CASE WHEN r_s = best_r THEN 1 ELSE 0 END AS BIGINT) AS chosen FROM c CROSS JOIN best ORDER BY r_s"""),
       "§2.12/E1 ext: dedup-state retention chooser — planted heavy-tailed replay lags priced across six TTLs as steady-state keyed rows vs leaked duplicates, smallest horizon under the 60bp leak budget (lands on 6h at every SF); the q367 map-side sweep shape on the exactly-once axis"),
 
     // q385 — CROSS-TABLE JOIN-SIZE SHOOTOUT: q379 priced the SELF-join
@@ -205,7 +200,7 @@ object R52Queries {
               sum(s"sc_$tag").as(s"srows_$tag"))
             val cm = fr.select(col(s"f_$tag").as("f"), explode(array((1 to 3).map(i =>
                 struct(lit(i.toLong).as("hr"),
-                  pmod(h40(s"cm$i:", col("k")), lit(8192L)).as("cell"))): _*)).as("z"))
+                  md5Bucket(concat(lit(s"cm$i:"), col("k").cast("string")), 8192).as("cell"))): _*)).as("z"))
               .groupBy(col("z.hr").as("hr"), col("z.cell").as("cell"))
               .agg(sum("f").as(s"c_$tag"))
             (fr.drop(s"sc_$tag"), gee, cm)
@@ -270,8 +265,8 @@ object R52Queries {
             ger AS (SELECT count(*) + sum(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS gee_r, sum(c) AS srows_r FROM (SELECT k, count(*) AS c FROM r WHERE hh < 1073741824 GROUP BY 1) g),
             ges AS (SELECT count(*) + sum(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS gee_s, sum(c) AS srows_s FROM (SELECT k, count(*) AS c FROM sdf WHERE hh < 1073741824 GROUP BY 1) g),
             tru AS (SELECT sum(fr.f * fs.f) AS true_rows FROM fr JOIN fs ON fs.k = fr.k),
-            cmr AS (SELECT i AS hr, CAST(concat('0x', substr(md5('cm' || CAST(i AS VARCHAR) || ':' || k), 1, 10)) AS BIGINT) % 8192 AS cell, count(*) AS c FROM r CROSS JOIN (SELECT unnest([1, 2, 3]) AS i) ii GROUP BY 1, 2),
-            cms AS (SELECT i AS hr, CAST(concat('0x', substr(md5('cm' || CAST(i AS VARCHAR) || ':' || k), 1, 10)) AS BIGINT) % 8192 AS cell, count(*) AS c FROM sdf CROSS JOIN (SELECT unnest([1, 2, 3]) AS i) ii GROUP BY 1, 2),
+            cmr AS (SELECT i AS hr, ${md5BucketSql("'cm' || CAST(i AS VARCHAR) || ':' || k", 8192)} AS cell, count(*) AS c FROM r CROSS JOIN (SELECT unnest([1, 2, 3]) AS i) ii GROUP BY 1, 2),
+            cms AS (SELECT i AS hr, ${md5BucketSql("'cm' || CAST(i AS VARCHAR) || ':' || k", 8192)} AS cell, count(*) AS c FROM sdf CROSS JOIN (SELECT unnest([1, 2, 3]) AS i) ii GROUP BY 1, 2),
             cme AS (SELECT min(dp) AS cm_est FROM (SELECT cmr.hr, sum(cmr.c * cms.c) AS dp FROM cmr JOIN cms ON cms.hr = cmr.hr AND cms.cell = cmr.cell GROUP BY 1) dd)
             SELECT $pid AS pair_id, '$pname' AS pair, e.estimator, e.est, e.state_units, true_rows
             FROM fra CROSS JOIN fsa CROSS JOIN ger CROSS JOIN ges CROSS JOIN tru CROSS JOIN cme,

@@ -1,10 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.QuerySpec
-import graft.Tables
+import graft.ops.HashOps.{md5Long, md5LongSql}
 
 /** Round-11 first widening — the execution halves the round-10 choosers
   * stopped short of (VERDICT r10 asks #2/#3), per the house convention
@@ -25,8 +25,6 @@ import graft.Tables
   *    argmin certified against exact-stat pricing.
   */
 object R53Queries {
-
-  private def t(s: SparkSession, d: String, n: String): DataFrame = Tables.load(s, d, n)
 
   val specs: Seq[QuerySpec] = Seq(
 
@@ -130,8 +128,7 @@ object R53Queries {
       (s, d) => {
         val vAll = t(s, d, "orders").select(
           expr("CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)").as("v"),
-          expr("CAST(conv(substring(md5(concat('dr388:', CAST(o_orderkey AS STRING))), 1, 10), 16, 10) AS BIGINT)")
-            .as("h"))
+          md5Long(concat(lit("dr388:"), col("o_orderkey").cast("string")), 10).as("h"))
         val stale = vAll.select("v")
         val mxS = stale.agg(min("v").as("vmin"), max("v").as("vmax"),
           expr("max(v) - min(v) + 1").as("w"))
@@ -201,7 +198,7 @@ object R53Queries {
           .orderBy("pred_id")
       },
       Some(
-        """WITH va AS (SELECT CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT) AS v, CAST(concat('0x', substr(md5('dr388:' || CAST(o_orderkey AS VARCHAR)), 1, 10)) AS BIGINT) AS h FROM orders), stale AS (SELECT v FROM va), mxs AS (SELECT min(v) AS vmin, max(v) AS vmax, max(v) - min(v) + 1 AS w FROM stale), drift AS (SELECT v + w AS v FROM va CROSS JOIN mxs WHERE h % 10 = 0), fullt AS (SELECT v FROM stale UNION ALL SELECT v FROM drift), mxf AS (SELECT min(v) AS vmin2, max(v) - min(v) + 1 AS w2 FROM fullt), mxd AS (SELECT min(v) AS dvmin, max(v) - min(v) + 1 AS wd FROM drift), hbm AS (SELECT cnt, vmin + b * w // 16 AS blo, vmin + (b + 1) * w // 16 - 1 AS bhi FROM (SELECT least(15, greatest(0, (v - vmin) * 16 // w)) AS b, count(*) AS cnt FROM fullt CROSS JOIN mxs GROUP BY 1) h CROSS JOIN mxs), hbr AS (SELECT cnt, vmin2 + b * w2 // 16 AS blo, vmin2 + (b + 1) * w2 // 16 - 1 AS bhi FROM (SELECT least(15, greatest(0, (v - vmin2) * 16 // w2)) AS b, count(*) AS cnt FROM fullt CROSS JOIN mxf GROUP BY 1) h CROSS JOIN mxf), preds AS (SELECT j + 1 AS pred_id, vmin + j * w // 4 AS lo, vmin + (j + 1) * w // 4 - 1 AS hi FROM (SELECT unnest(generate_series(0, 3)) AS j) g CROSS JOIN mxs UNION ALL SELECT j + 5, dvmin + j * wd // 4, dvmin + (j + 1) * wd // 4 - 1 FROM (SELECT unnest(generate_series(0, 3)) AS j) g CROSS JOIN mxd), estm AS (SELECT p.pred_id, p.lo, p.hi, coalesce(sum((hb.cnt * greatest(0, least(p.hi, hb.bhi) - greatest(p.lo, hb.blo) + 1) * 1000000) // (hb.bhi - hb.blo + 1)), 0) AS em_m FROM preds p LEFT JOIN hbm hb ON hb.bhi >= p.lo AND hb.blo <= p.hi GROUP BY 1, 2, 3), estr AS (SELECT p.pred_id, p.lo, p.hi, coalesce(sum((hb.cnt * greatest(0, least(p.hi, hb.bhi) - greatest(p.lo, hb.blo) + 1) * 1000000) // (hb.bhi - hb.blo + 1)), 0) AS em_r FROM preds p LEFT JOIN hbr hb ON hb.bhi >= p.lo AND hb.blo <= p.hi GROUP BY 1, 2, 3), act AS (SELECT p.pred_id, count(*) AS act_rows FROM preds p JOIN fullt f ON f.v BETWEEN p.lo AND p.hi GROUP BY 1), fired AS (SELECT CASE WHEN sum(CASE WHEN v < vmin OR v > vmax THEN 1 ELSE 0 END) * 10000 // greatest(count(*), 1) > 100 THEN 1 ELSE 0 END AS refresh_fired FROM drift CROSS JOIN mxs), j AS (SELECT m.pred_id, m.lo, m.hi, a.act_rows, m.em_m // 1000000 AS est_stale, r.em_r // 1000000 AS est_refresh FROM estm m JOIN estr r ON r.pred_id = m.pred_id AND r.lo = m.lo AND r.hi = m.hi JOIN act a ON a.pred_id = m.pred_id), k AS (SELECT *, greatest(est_stale * 10000 // greatest(act_rows, 1), act_rows * 10000 // greatest(est_stale, 1)) AS qerr_stale_bp, greatest(est_refresh * 10000 // greatest(act_rows, 1), act_rows * 10000 // greatest(est_refresh, 1)) AS qerr_refresh_bp FROM j) SELECT CAST(pred_id AS BIGINT) AS pred_id, CAST(lo AS BIGINT) AS lo, CAST(hi AS BIGINT) AS hi, CAST(act_rows AS BIGINT) AS act_rows, CAST(est_stale AS BIGINT) AS est_stale, CAST(est_refresh AS BIGINT) AS est_refresh, CAST(qerr_stale_bp AS BIGINT) AS qerr_stale_bp, CAST(qerr_refresh_bp AS BIGINT) AS qerr_refresh_bp, CAST((SELECT refresh_fired FROM fired) AS BIGINT) AS refresh_fired, CAST(CASE WHEN qerr_stale_bp > 20000 THEN 1 ELSE 0 END AS BIGINT) AS stale_blown, CAST(CASE WHEN qerr_refresh_bp <= 20000 THEN 1 ELSE 0 END AS BIGINT) AS recovered FROM k ORDER BY pred_id"""),
+        s"""WITH va AS (SELECT CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT) AS v, ${md5LongSql("'dr388:' || CAST(o_orderkey AS VARCHAR)", 10)} AS h FROM orders), stale AS (SELECT v FROM va), mxs AS (SELECT min(v) AS vmin, max(v) AS vmax, max(v) - min(v) + 1 AS w FROM stale), drift AS (SELECT v + w AS v FROM va CROSS JOIN mxs WHERE h % 10 = 0), fullt AS (SELECT v FROM stale UNION ALL SELECT v FROM drift), mxf AS (SELECT min(v) AS vmin2, max(v) - min(v) + 1 AS w2 FROM fullt), mxd AS (SELECT min(v) AS dvmin, max(v) - min(v) + 1 AS wd FROM drift), hbm AS (SELECT cnt, vmin + b * w // 16 AS blo, vmin + (b + 1) * w // 16 - 1 AS bhi FROM (SELECT least(15, greatest(0, (v - vmin) * 16 // w)) AS b, count(*) AS cnt FROM fullt CROSS JOIN mxs GROUP BY 1) h CROSS JOIN mxs), hbr AS (SELECT cnt, vmin2 + b * w2 // 16 AS blo, vmin2 + (b + 1) * w2 // 16 - 1 AS bhi FROM (SELECT least(15, greatest(0, (v - vmin2) * 16 // w2)) AS b, count(*) AS cnt FROM fullt CROSS JOIN mxf GROUP BY 1) h CROSS JOIN mxf), preds AS (SELECT j + 1 AS pred_id, vmin + j * w // 4 AS lo, vmin + (j + 1) * w // 4 - 1 AS hi FROM (SELECT unnest(generate_series(0, 3)) AS j) g CROSS JOIN mxs UNION ALL SELECT j + 5, dvmin + j * wd // 4, dvmin + (j + 1) * wd // 4 - 1 FROM (SELECT unnest(generate_series(0, 3)) AS j) g CROSS JOIN mxd), estm AS (SELECT p.pred_id, p.lo, p.hi, coalesce(sum((hb.cnt * greatest(0, least(p.hi, hb.bhi) - greatest(p.lo, hb.blo) + 1) * 1000000) // (hb.bhi - hb.blo + 1)), 0) AS em_m FROM preds p LEFT JOIN hbm hb ON hb.bhi >= p.lo AND hb.blo <= p.hi GROUP BY 1, 2, 3), estr AS (SELECT p.pred_id, p.lo, p.hi, coalesce(sum((hb.cnt * greatest(0, least(p.hi, hb.bhi) - greatest(p.lo, hb.blo) + 1) * 1000000) // (hb.bhi - hb.blo + 1)), 0) AS em_r FROM preds p LEFT JOIN hbr hb ON hb.bhi >= p.lo AND hb.blo <= p.hi GROUP BY 1, 2, 3), act AS (SELECT p.pred_id, count(*) AS act_rows FROM preds p JOIN fullt f ON f.v BETWEEN p.lo AND p.hi GROUP BY 1), fired AS (SELECT CASE WHEN sum(CASE WHEN v < vmin OR v > vmax THEN 1 ELSE 0 END) * 10000 // greatest(count(*), 1) > 100 THEN 1 ELSE 0 END AS refresh_fired FROM drift CROSS JOIN mxs), j AS (SELECT m.pred_id, m.lo, m.hi, a.act_rows, m.em_m // 1000000 AS est_stale, r.em_r // 1000000 AS est_refresh FROM estm m JOIN estr r ON r.pred_id = m.pred_id AND r.lo = m.lo AND r.hi = m.hi JOIN act a ON a.pred_id = m.pred_id), k AS (SELECT *, greatest(est_stale * 10000 // greatest(act_rows, 1), act_rows * 10000 // greatest(est_stale, 1)) AS qerr_stale_bp, greatest(est_refresh * 10000 // greatest(act_rows, 1), act_rows * 10000 // greatest(est_refresh, 1)) AS qerr_refresh_bp FROM j) SELECT CAST(pred_id AS BIGINT) AS pred_id, CAST(lo AS BIGINT) AS lo, CAST(hi AS BIGINT) AS hi, CAST(act_rows AS BIGINT) AS act_rows, CAST(est_stale AS BIGINT) AS est_stale, CAST(est_refresh AS BIGINT) AS est_refresh, CAST(qerr_stale_bp AS BIGINT) AS qerr_stale_bp, CAST(qerr_refresh_bp AS BIGINT) AS qerr_refresh_bp, CAST((SELECT refresh_fired FROM fired) AS BIGINT) AS refresh_fired, CAST(CASE WHEN qerr_stale_bp > 20000 THEN 1 ELSE 0 END AS BIGINT) AS stale_blown, CAST(CASE WHEN qerr_refresh_bp <= 20000 THEN 1 ELSE 0 END AS BIGINT) AS recovered FROM k ORDER BY pred_id"""),
       "A/S ext: histogram refresh EXECUTED — q380's boundary-drift gate answered with the rebuild it mandates: boundaries re-frozen over the true post-drift range, per-predicate q-error certified back inside the q343/q374 band (recovered) while every drifted-region predicate shows the stale boundaries catastrophically blown"),
 
     // q389 — THE FULL CHEAP-ANALYZE STACK, END TO END: q376 proved the

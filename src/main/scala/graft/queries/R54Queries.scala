@@ -1,11 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.QuerySpec
-import graft.Tables
+import graft.ops.HashOps.{md5Long, md5Bucket, md5BucketSql}
 
 /** Round-11 second widening — the SKEW STACK, executed end to end.
   * q148/q347 diagnosed shuffle skew and priced one salt factor; this
@@ -40,8 +40,6 @@ import graft.Tables
   */
 object R54Queries {
 
-  private def t(s: SparkSession, d: String, n: String): DataFrame = Tables.load(s, d, n)
-
   // ---- shared planted-zipf fixture (q391/q392/q393 + heavyHitterStream)
 
   /** (k, sh, pu) rows over events: planted zipf key, 8-way row shard
@@ -50,8 +48,7 @@ object R54Queries {
     */
   private[graft] def hhKeyed(events: DataFrame): DataFrame =
     events.select(
-        expr("CAST(conv(substring(md5(concat('hh:', CAST(event_id AS STRING))), 1, 10), 16, 10) AS BIGINT) % 128")
-          .as("pu"),
+        (md5Long(concat(lit("hh:"), col("event_id").cast("string")), 10) % 128).as("pu"),
         (col("event_id") % 8).as("sh"),
         col("event_id").as("eid"))
       .select(expr(
@@ -72,7 +69,7 @@ object R54Queries {
   private val hhKeyedSql: String =
     "SELECT CASE WHEN pu < 63 THEN 'g' || CAST(CAST(floor(log2(pu + 1)) AS BIGINT) AS VARCHAR) " +
       "ELSE 'u' || CAST(pu AS VARCHAR) END AS k, sh, pu FROM " +
-      "(SELECT CAST(concat('0x', substr(md5('hh:' || CAST(event_id AS VARCHAR)), 1, 10)) AS BIGINT) % 128 AS pu, " +
+      s"(SELECT ${md5BucketSql("'hh:' || CAST(event_id AS VARCHAR)", 128)} AS pu, " +
       "event_id % 8 AS sh FROM events) z"
 
   private val hhRankedSql: String =
@@ -105,7 +102,7 @@ object R54Queries {
     QuerySpec(
       "q390_salt_chooser",
       (s, d) => {
-        import R39Queries.{md5Bucket, skewSummary}
+        import R39Queries.skewSummary
         val rows = t(s, d, "lineitem").select(col("l_returnflag").as("fl"),
           md5Bucket(concat(lit("salt:"), col("l_orderkey").cast("string")), 64).as("b64"))
         val grid = rows.groupBy("fl", "b64").agg(count(lit(1)).as("cnt"))
@@ -153,7 +150,6 @@ object R54Queries {
           .orderBy("salt_s")
       },
       Some {
-        import R39Queries.md5BucketSql
         val pExpr = md5BucketSql("fl || ':' || CAST(b64 % s AS VARCHAR)", 32)
         val aExpr = md5BucketSql(
           "fl || ':' || CAST(b64 % (SELECT chosen_s FROM ch) AS VARCHAR)", 32)

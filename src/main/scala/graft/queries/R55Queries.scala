@@ -1,11 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.QuerySpec
-import graft.Tables
+import graft.ops.HashOps.{md5Long, md5LongSql}
 
 /** Round-11 third widening — distinct-set sketches and the correlation
   * blind spot:
@@ -29,8 +29,6 @@ import graft.Tables
   *    truly smaller side, certified against exact.
   */
 object R55Queries {
-
-  private def t(s: SparkSession, d: String, n: String): DataFrame = Tables.load(s, d, n)
 
   val specs: Seq[QuerySpec] = Seq(
 
@@ -65,8 +63,7 @@ object R55Queries {
             col("o_custkey").as("c"))
           .distinct().localCheckpoint(true) // eager: consumed by concurrent legs below
         val hv = mc.select(col("m"), col("c"),
-          expr("CAST(conv(substring(md5(concat('kmv:', CAST(c AS STRING))), 1, 10), 16, 10) AS BIGINT)")
-            .as("hv"))
+          md5Long(concat(lit("kmv:"), col("c").cast("string")), 10).as("hv"))
         // rk/nd build concurrently (independent below the STORED mc) and
         // are eager: the three pair legs consume them from parallel
         // threads, and a lazy checkpoint's final stage would be
@@ -89,8 +86,7 @@ object R55Queries {
           val merged = skA.unionByName(skB).distinct()
             .orderBy("hv").limit(32).localCheckpoint(false)
           val rebuilt = mc.where(col("m").isin(a, b)).select("c").distinct()
-            .select(expr("CAST(conv(substring(md5(concat('kmv:', CAST(c AS STRING))), 1, 10), 16, 10) AS BIGINT)")
-              .as("hv")).distinct()
+            .select(md5Long(concat(lit("kmv:"), col("c").cast("string")), 10).as("hv")).distinct()
             .orderBy("hv").limit(32)
           val mergeOk = merged.join(rebuilt, Seq("hv"), "full_outer")
             .agg(sum(when(col("hv").isNull, 1L).otherwise(0L)).as("miss"),
@@ -135,7 +131,7 @@ object R55Queries {
             WITH ska AS (SELECT hv FROM rk WHERE m = $a AND r <= 32),
             skb AS (SELECT hv FROM rk WHERE m = $b AND r <= 32),
             mg AS (SELECT hv FROM (SELECT DISTINCT hv FROM (SELECT hv FROM ska UNION ALL SELECT hv FROM skb) u) du ORDER BY hv LIMIT 32),
-            rb AS (SELECT hv FROM (SELECT DISTINCT CAST(concat('0x', substr(md5('kmv:' || CAST(c AS VARCHAR)), 1, 10)) AS BIGINT) AS hv FROM mc WHERE m IN ($a, $b)) du ORDER BY hv LIMIT 32),
+            rb AS (SELECT hv FROM (SELECT DISTINCT ${md5LongSql("'kmv:' || CAST(c AS VARCHAR)", 10)} AS hv FROM mc WHERE m IN ($a, $b)) du ORDER BY hv LIMIT 32),
             mok AS (SELECT CASE WHEN sum(CASE WHEN mg.hv IS NULL OR rb.hv IS NULL THEN 1 ELSE 0 END) = 0 AND count(*) = 32 THEN 1 ELSE 0 END AS merge_ok FROM mg FULL OUTER JOIN rb ON rb.hv = mg.hv),
             ea AS (SELECT 31 * 1099511627776 // max(hv) AS est_a FROM ska),
             eb AS (SELECT 31 * 1099511627776 // max(hv) AS est_b FROM skb),
@@ -144,7 +140,7 @@ object R55Queries {
             ex AS (SELECT count(*) AS exact_union, sum(CASE WHEN nm = 2 THEN 1 ELSE 0 END) AS exact_inter FROM (SELECT c, count(DISTINCT m) AS nm FROM mc WHERE m IN ($a, $b) GROUP BY 1) g)
             SELECT $pid AS pair_id, 'm${"%02d".format(a)}_m${"%02d".format(b)}' AS pair, est_a, (SELECT nd FROM nd WHERE m = $a) AS nd_a, est_b, (SELECT nd FROM nd WHERE m = $b) AS nd_b, est_union, exact_union, matches, exact_inter, merge_ok
             FROM ea CROSS JOIN eb CROSS JOIN eu CROSS JOIN mt CROSS JOIN ex CROSS JOIN mok)"""
-        s"""WITH mc AS (SELECT DISTINCT CAST(month(o_orderdate) AS BIGINT) AS m, o_custkey AS c FROM orders), rk AS (SELECT m, hv, row_number() OVER (PARTITION BY m ORDER BY hv) AS r FROM (SELECT m, CAST(concat('0x', substr(md5('kmv:' || CAST(c AS VARCHAR)), 1, 10)) AS BIGINT) AS hv FROM mc) h), nd AS (SELECT m, count(*) AS nd FROM mc GROUP BY 1), ${legSql(1, 1, 2)}, ${legSql(2, 6, 7)}, ${legSql(3, 11, 12)}, u AS (SELECT * FROM l1 UNION ALL SELECT * FROM l2 UNION ALL SELECT * FROM l3) SELECT CAST(pair_id AS BIGINT) AS pair_id, pair, CAST(est_a AS BIGINT) AS est_a, CAST(nd_a AS BIGINT) AS nd_a, CAST(est_b AS BIGINT) AS est_b, CAST(nd_b AS BIGINT) AS nd_b, CAST(est_union AS BIGINT) AS est_union, CAST(exact_union AS BIGINT) AS exact_union, CAST(greatest(est_union * 10000 // greatest(exact_union, 1), exact_union * 10000 // greatest(est_union, 1)) AS BIGINT) AS qerr_union_bp, CAST(matches AS BIGINT) AS matches, CAST(greatest(0, est_a + est_b - est_union) AS BIGINT) AS est_inter_ie, CAST(matches * est_union // 32 AS BIGINT) AS est_inter_rho, CAST(exact_inter AS BIGINT) AS exact_inter, CAST(greatest(greatest(0, est_a + est_b - est_union) * 10000 // greatest(exact_inter, 1), exact_inter * 10000 // greatest(greatest(0, est_a + est_b - est_union), 1)) AS BIGINT) AS qerr_ie_bp, CAST(greatest((matches * est_union // 32) * 10000 // greatest(exact_inter, 1), exact_inter * 10000 // greatest(matches * est_union // 32, 1)) AS BIGINT) AS qerr_rho_bp, CAST(merge_ok AS BIGINT) AS merge_ok, CAST(64 AS BIGINT) AS state_units FROM u ORDER BY pair_id"""
+        s"""WITH mc AS (SELECT DISTINCT CAST(month(o_orderdate) AS BIGINT) AS m, o_custkey AS c FROM orders), rk AS (SELECT m, hv, row_number() OVER (PARTITION BY m ORDER BY hv) AS r FROM (SELECT m, ${md5LongSql("'kmv:' || CAST(c AS VARCHAR)", 10)} AS hv FROM mc) h), nd AS (SELECT m, count(*) AS nd FROM mc GROUP BY 1), ${legSql(1, 1, 2)}, ${legSql(2, 6, 7)}, ${legSql(3, 11, 12)}, u AS (SELECT * FROM l1 UNION ALL SELECT * FROM l2 UNION ALL SELECT * FROM l3) SELECT CAST(pair_id AS BIGINT) AS pair_id, pair, CAST(est_a AS BIGINT) AS est_a, CAST(nd_a AS BIGINT) AS nd_a, CAST(est_b AS BIGINT) AS est_b, CAST(nd_b AS BIGINT) AS nd_b, CAST(est_union AS BIGINT) AS est_union, CAST(exact_union AS BIGINT) AS exact_union, CAST(greatest(est_union * 10000 // greatest(exact_union, 1), exact_union * 10000 // greatest(est_union, 1)) AS BIGINT) AS qerr_union_bp, CAST(matches AS BIGINT) AS matches, CAST(greatest(0, est_a + est_b - est_union) AS BIGINT) AS est_inter_ie, CAST(matches * est_union // 32 AS BIGINT) AS est_inter_rho, CAST(exact_inter AS BIGINT) AS exact_inter, CAST(greatest(greatest(0, est_a + est_b - est_union) * 10000 // greatest(exact_inter, 1), exact_inter * 10000 // greatest(greatest(0, est_a + est_b - est_union), 1)) AS BIGINT) AS qerr_ie_bp, CAST(greatest((matches * est_union // 32) * 10000 // greatest(exact_inter, 1), exact_inter * 10000 // greatest(matches * est_union // 32, 1)) AS BIGINT) AS qerr_rho_bp, CAST(merge_ok AS BIGINT) AS merge_ok, CAST(64 AS BIGINT) AS state_units FROM u ORDER BY pair_id"""
       },
       "A/S ext: KMV set-operation sketches — 32-minima distinct-customer sketches per month, union/intersection cardinalities answered from sketches alone; merge == rebuild certified EXACTLY (the mergeable-ANALYZE property), inclusion-exclusion vs rho intersection estimators graded against exact"),
 
@@ -333,8 +329,7 @@ object R55Queries {
             col("o_custkey").as("c"))
           .distinct()
         val hv = mc.select(col("m"),
-            expr("CAST(conv(substring(md5(concat('kmv:', CAST(c AS STRING))), 1, 10), 16, 10) AS BIGINT)")
-              .as("hv"))
+            md5Long(concat(lit("kmv:"), col("c").cast("string")), 10).as("hv"))
           .distinct()
         // grader fusion (the r11 bench pass): all 12 exact prefix NDVs
         // come from ONE first-seen pass (a customer counts at its min
@@ -431,7 +426,7 @@ object R55Queries {
         }
         val legs = (1 to 12).map(legSql).mkString(", ")
         val union = (1 to 12).map(j => s"SELECT * FROM l$j").mkString(" UNION ALL ")
-        s"""WITH mc AS (SELECT DISTINCT CAST(month(o_orderdate) AS BIGINT) AS m, o_custkey AS c FROM orders), hvt AS (SELECT DISTINCT m, CAST(concat('0x', substr(md5('kmv:' || CAST(c AS VARCHAR)), 1, 10)) AS BIGINT) AS hv FROM mc), $legs, u AS ($union) SELECT CAST(step AS BIGINT) AS step, CAST(month_rows AS BIGINT) AS month_rows, CAST(est_ndv AS BIGINT) AS est_ndv, CAST(exact_ndv AS BIGINT) AS exact_ndv, CAST(greatest(est_ndv * 10000 // greatest(exact_ndv, 1), exact_ndv * 10000 // greatest(est_ndv, 1)) AS BIGINT) AS qerr_bp, CAST(merge_ok AS BIGINT) AS merge_ok, CAST(prefix_rows AS BIGINT) AS rescan_rows_saved, CAST(32 AS BIGINT) AS state_units FROM u ORDER BY step"""
+        s"""WITH mc AS (SELECT DISTINCT CAST(month(o_orderdate) AS BIGINT) AS m, o_custkey AS c FROM orders), hvt AS (SELECT DISTINCT m, ${md5LongSql("'kmv:' || CAST(c AS VARCHAR)", 10)} AS hv FROM mc), $legs, u AS ($union) SELECT CAST(step AS BIGINT) AS step, CAST(month_rows AS BIGINT) AS month_rows, CAST(est_ndv AS BIGINT) AS est_ndv, CAST(exact_ndv AS BIGINT) AS exact_ndv, CAST(greatest(est_ndv * 10000 // greatest(exact_ndv, 1), exact_ndv * 10000 // greatest(est_ndv, 1)) AS BIGINT) AS qerr_bp, CAST(merge_ok AS BIGINT) AS merge_ok, CAST(prefix_rows AS BIGINT) AS rescan_rows_saved, CAST(32 AS BIGINT) AS state_units FROM u ORDER BY step"""
       },
       "A/S ext: incremental ANALYZE via KMV merge EXECUTED — 12 ingest steps, each updating the global distinct-customer NDV by an O(k) sketch merge; merge == rebuild certified inductively along the whole chain, estimates graded against exact prefix NDV through saturation, rescan_rows_saved = the scan the merge avoids"))
 }

@@ -1,10 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.QuerySpec
-import graft.Tables
+import graft.ops.HashOps.{md5Long, md5LongSql, md5Bucket, md5BucketSql}
 
 /** Round-11 fourth widening — stats-maintenance POLICY, decided the
   * house way (the q377 schedule pattern applied to ANALYZE itself):
@@ -32,8 +32,6 @@ import graft.Tables
   *    apply decision splitting the selective vs broad scenarios.
   */
 object R56Queries {
-
-  private def t(s: SparkSession, d: String, n: String): DataFrame = Tables.load(s, d, n)
 
   /** q399's adaptive rule as a shared table builder: each key's salt is
     * the smallest power of two with f_k / salt ≤ n / target, capped at
@@ -272,7 +270,7 @@ object R56Queries {
     QuerySpec(
       "q399_adaptive_salt",
       (s, d) => {
-        import R39Queries.{md5Bucket, skewSummary}
+        import R39Queries.skewSummary
         // ONE corpus pass (guide §2.3 aggregate-before-you-shuffle):
         // every strategy leg's 32-way bucket hash depends only on
         // (k, rh % 64) — k has ≤71 distinct values by hhKeyed's
@@ -284,8 +282,7 @@ object R56Queries {
         // load is identical by Σ-additivity of the counts.
         val c64 = R54Queries.hhKeyed(t(s, d, "events"))
           .select(col("k"),
-            expr("CAST(conv(substring(md5(concat('sl:', CAST(eid AS STRING))), 1, 10), 16, 10) AS BIGINT) % 64")
-              .as("r64"))
+            (md5Long(concat(lit("sl:"), col("eid").cast("string")), 10) % 64).as("r64"))
           .groupBy("k", "r64").agg(count(lit(1)).as("c"))
           .localCheckpoint(false)
         val kc = c64.groupBy("k").agg(sum("c").as("f")).localCheckpoint(false)
@@ -324,7 +321,6 @@ object R56Queries {
           .orderBy("strategy")
       },
       Some {
-        import R39Queries.md5BucketSql
         val keySql = "CASE WHEN pu < 63 THEN 'g' || CAST(CAST(floor(log2(pu + 1)) AS BIGINT) AS VARCHAR) ELSE 'u' || CAST(pu AS VARCHAR) END"
         def adaptLeg(idx: Int, tg: Int): String =
           s"""SELECT '$idx:adaptive_t$tg' AS strategy,
@@ -337,7 +333,7 @@ object R56Queries {
           s"""SELECT '2:uniform64', (SELECT n_keys * 64 FROM nk), count(*), max(c), max(c) * 32 * 10000 // sum(c) FROM (SELECT ${md5BucketSql("k || ':' || CAST(rh % 64 AS VARCHAR)", 32)} AS p, count(*) AS c FROM keyed GROUP BY 1) g""",
           adaptLeg(3, 32), adaptLeg(4, 64), adaptLeg(5, 128), adaptLeg(6, 256))
           .mkString(" UNION ALL ")
-        s"""WITH keyed AS (SELECT $keySql AS k, CAST(concat('0x', substr(md5('sl:' || CAST(event_id AS VARCHAR)), 1, 10)) AS BIGINT) AS rh FROM (SELECT event_id, CAST(concat('0x', substr(md5('hh:' || CAST(event_id AS VARCHAR)), 1, 10)) AS BIGINT) % 128 AS pu FROM events) z), kc AS (SELECT k, count(*) AS f FROM keyed GROUP BY 1), nk AS (SELECT count(*) AS n_keys, sum(f) AS n FROM kc), legs AS ($legs), bands AS (SELECT *, CASE WHEN skew_bp <= 20000 THEN 1 ELSE 0 END AS meets_bal FROM legs), mn AS (SELECT min(CASE WHEN meets_bal = 1 THEN repl_rows END) AS mn FROM bands) SELECT strategy, CAST(repl_rows AS BIGINT) AS repl_rows, CAST(parts_used AS BIGINT) AS parts_used, CAST(max_load AS BIGINT) AS max_load, CAST(skew_bp AS BIGINT) AS skew_bp, CAST(meets_bal AS BIGINT) AS meets_bal, CAST(CASE WHEN meets_bal = 1 AND repl_rows = (SELECT mn FROM mn) THEN 1 ELSE 0 END AS BIGINT) AS chosen FROM bands CROSS JOIN mn ORDER BY strategy"""
+        s"""WITH keyed AS (SELECT $keySql AS k, ${md5LongSql("'sl:' || CAST(event_id AS VARCHAR)", 10)} AS rh FROM (SELECT event_id, ${md5BucketSql("'hh:' || CAST(event_id AS VARCHAR)", 128)} AS pu FROM events) z), kc AS (SELECT k, count(*) AS f FROM keyed GROUP BY 1), nk AS (SELECT count(*) AS n_keys, sum(f) AS n FROM kc), legs AS ($legs), bands AS (SELECT *, CASE WHEN skew_bp <= 20000 THEN 1 ELSE 0 END AS meets_bal FROM legs), mn AS (SELECT min(CASE WHEN meets_bal = 1 THEN repl_rows END) AS mn FROM bands) SELECT strategy, CAST(repl_rows AS BIGINT) AS repl_rows, CAST(parts_used AS BIGINT) AS parts_used, CAST(max_load AS BIGINT) AS max_load, CAST(skew_bp AS BIGINT) AS skew_bp, CAST(meets_bal AS BIGINT) AS meets_bal, CAST(CASE WHEN meets_bal = 1 AND repl_rows = (SELECT mn FROM mn) THEN 1 ELSE 0 END AS BIGINT) AS chosen FROM bands CROSS JOIN mn ORDER BY strategy"""
       },
       "S/J ext: adaptive per-key salt frontier — each key salted by its own mass (smallest power of two meeting the per-sub-key target), four nested targets from ONE frequency pass next to no-salt and q390's uniform 64-way; target n/256 is the first gate member and ships 12x less dim replication than uniform for the same 2x balance"),
 
@@ -366,7 +362,7 @@ object R56Queries {
     QuerySpec(
       "q400_range_boundaries",
       (s, d) => {
-        import R39Queries.{md5Bucket, skewSummary}
+        import R39Queries.skewSummary
         import org.apache.spark.sql.expressions.Window
         // eager: rows/mx are consumed by the four concurrent strategy
         // legs below; lazy final stages would be recomputed/raced
@@ -426,7 +422,6 @@ object R56Queries {
           .orderBy("strategy")
       },
       Some {
-        import R39Queries.md5BucketSql
         val exQ = graft.ops.QuantileOps.oracleSql(
           "(SELECT CAST(floor(value * 100.0 + 0.5) AS BIGINT) AS v FROM events) t",
           "v", Seq.empty, (1 to 31).map(_ / 32.0))
@@ -470,7 +465,6 @@ object R56Queries {
     QuerySpec(
       "q401_zonemap_pruning",
       (s, d) => {
-        import R39Queries.md5Bucket
         val rows = t(s, d, "events").select(col("event_id").as("eid"),
           expr("CAST(floor(value * 100.0 + 0.5) AS BIGINT)").as("v"))
           .localCheckpoint(false)
@@ -519,7 +513,6 @@ object R56Queries {
           .orderBy("probe_id", "layout")
       },
       Some {
-        import R39Queries.md5BucketSql
         def legSql(name: String, zCte: String, pCol: String): String =
           s"""SELECT pr.probe_id, '$name' AS layout, pr.lo, pr.hi,
             (SELECT count(*) FROM rows_s WHERE v BETWEEN pr.lo AND pr.hi) AS act_rows,
@@ -580,7 +573,7 @@ object R56Queries {
         // the (k, f) aggregation, and the shared eager pins serialize
         // construction the single final action previously overlapped.
         def cellArr(kCol: String): Column = array((1 to 4).map(i =>
-          expr(s"CAST(conv(substring(md5(concat('bf$i:', CAST($kCol AS STRING))), 1, 10), 16, 10) AS BIGINT) % 65536")): _*)
+          md5Long(concat(lit(s"bf$i:"), col(kCol).cast("string")), 10) % 65536): _*)
         def leg(name: String, cond: String): DataFrame = {
           val fo = o.crossJoin(broadcast(pred)).where(expr(cond))
             .select("k").localCheckpoint(false)
@@ -629,7 +622,7 @@ object R56Queries {
       },
       Some {
         def cellSql(i: Int, k: String): String =
-          s"CAST(concat('0x', substr(md5('bf$i:' || CAST($k AS VARCHAR)), 1, 10)) AS BIGINT) % 65536"
+          md5BucketSql(s"'bf$i:' || CAST($k AS VARCHAR)", 65536)
         def legSql(name: String, tag: String, cond: String): String = {
           val cells = (1 to 4).map(i => s"SELECT ${cellSql(i, "k")} AS cell FROM fo_$tag")
             .mkString(" UNION ALL ")

@@ -1,10 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.QuerySpec
-import graft.Tables
+import graft.ops.HashOps.{md5Long, md5LongSql, md5Bucket, md5BucketSql}
 
 /** Round-12 first widening — the three EXECUTE closures VERDICT r11
   * called out (the priced-but-unapplied residue of the round-11 arcs):
@@ -28,8 +28,6 @@ import graft.Tables
   *    is NONE (every file carries every value; state buys nothing).
   */
 object R57Queries {
-
-  private def t(s: SparkSession, d: String, n: String): DataFrame = Tables.load(s, d, n)
 
   val specs: Seq[QuerySpec] = Seq(
 
@@ -57,11 +55,10 @@ object R57Queries {
     QuerySpec(
       "q403_adaptive_salt_join",
       (s, d) => {
-        import R39Queries.{md5Bucket, skewSummary}
+        import R39Queries.skewSummary
         val keyed = R54Queries.hhKeyed(t(s, d, "events"))
           .select(col("k"), col("pu"),
-            expr("CAST(conv(substring(md5(concat('sl:', CAST(eid AS STRING))), 1, 10), 16, 10) AS BIGINT)")
-              .as("rh"))
+            md5Long(concat(lit("sl:"), col("eid").cast("string")), 10).as("rh"))
           .localCheckpoint(false)
         val kc = keyed.groupBy("k").agg(count(lit(1)).as("f")).localCheckpoint(false)
         val nk = kc.agg(count(lit(1)).as("n_keys"), sum("f").as("n"))
@@ -118,9 +115,8 @@ object R57Queries {
           .orderBy("leg")
       },
       Some {
-        import R39Queries.md5BucketSql
         val keySql = "CASE WHEN pu < 63 THEN 'g' || CAST(CAST(floor(log2(pu + 1)) AS BIGINT) AS VARCHAR) ELSE 'u' || CAST(pu AS VARCHAR) END"
-        s"""WITH keyed AS (SELECT $keySql AS k, pu, CAST(concat('0x', substr(md5('sl:' || CAST(event_id AS VARCHAR)), 1, 10)) AS BIGINT) AS rh FROM (SELECT event_id, CAST(concat('0x', substr(md5('hh:' || CAST(event_id AS VARCHAR)), 1, 10)) AS BIGINT) % 128 AS pu FROM events) z), kc AS (SELECT k, count(*) AS f FROM keyed GROUP BY 1), nk AS (SELECT count(*) AS n_keys, sum(f) AS n FROM kc), sa AS (SELECT k, ${R56Queries.saltLadderSql(256)} AS sa FROM kc CROSS JOIN nk), dim AS (SELECT k, min(pu) AS attr FROM keyed GROUP BY 1), dimrep AS (SELECT d.k, d.attr, g.r FROM dim d JOIN sa ON sa.k = d.k CROSS JOIN (SELECT unnest(generate_series(0, 63)) AS r) g WHERE g.r < sa.sa), facts AS (SELECT ky.k, ky.pu, ky.rh % sa.sa AS r FROM keyed ky JOIN sa ON sa.k = ky.k), salted AS (SELECT count(*) AS rows, sum(dr.attr * (f.pu + 1)) AS ck FROM facts f JOIN dimrep dr ON dr.k = f.k AND dr.r = f.r), plain AS (SELECT count(*) AS rows, sum(d.attr * (ky.pu + 1)) AS ck FROM keyed ky JOIN dim d ON d.k = ky.k), repl AS (SELECT count(*) AS repl_rows FROM dimrep), ssalt AS (SELECT count(*) AS parts_used, max(c) AS max_load, max(c) * 32 * 10000 // sum(c) AS skew_bp FROM (SELECT ${md5BucketSql("k || ':' || CAST(r AS VARCHAR)", 32)} AS p, count(*) AS c FROM facts GROUP BY 1) g), splain AS (SELECT count(*) AS parts_used, max(c) AS max_load, max(c) * 32 * 10000 // sum(c) AS skew_bp FROM (SELECT ${md5BucketSql("k", 32)} AS p, count(*) AS c FROM keyed GROUP BY 1) g), eq AS (SELECT CASE WHEN (SELECT rows FROM salted) = (SELECT rows FROM plain) AND (SELECT ck FROM salted) = (SELECT ck FROM plain) THEN 1 ELSE 0 END AS equal_plain), legs AS (SELECT '1:salted_adaptive' AS leg, (SELECT rows FROM salted) AS rows, (SELECT ck FROM salted) AS checksum, (SELECT repl_rows FROM repl) AS repl_rows, parts_used, max_load, skew_bp FROM ssalt UNION ALL SELECT '2:plain_recompute', (SELECT rows FROM plain), (SELECT ck FROM plain), (SELECT n_keys FROM nk), parts_used, max_load, skew_bp FROM splain) SELECT leg, CAST(rows AS BIGINT) AS rows, CAST(checksum AS BIGINT) AS checksum, CAST(repl_rows AS BIGINT) AS repl_rows, CAST(parts_used AS BIGINT) AS parts_used, CAST(max_load AS BIGINT) AS max_load, CAST(skew_bp AS BIGINT) AS skew_bp, CAST(CASE WHEN skew_bp <= 20000 THEN 1 ELSE 0 END AS BIGINT) AS meets_bal, CAST((SELECT equal_plain FROM eq) AS BIGINT) AS equal_plain FROM legs ORDER BY leg"""
+        s"""WITH keyed AS (SELECT $keySql AS k, pu, ${md5LongSql("'sl:' || CAST(event_id AS VARCHAR)", 10)} AS rh FROM (SELECT event_id, ${md5BucketSql("'hh:' || CAST(event_id AS VARCHAR)", 128)} AS pu FROM events) z), kc AS (SELECT k, count(*) AS f FROM keyed GROUP BY 1), nk AS (SELECT count(*) AS n_keys, sum(f) AS n FROM kc), sa AS (SELECT k, ${R56Queries.saltLadderSql(256)} AS sa FROM kc CROSS JOIN nk), dim AS (SELECT k, min(pu) AS attr FROM keyed GROUP BY 1), dimrep AS (SELECT d.k, d.attr, g.r FROM dim d JOIN sa ON sa.k = d.k CROSS JOIN (SELECT unnest(generate_series(0, 63)) AS r) g WHERE g.r < sa.sa), facts AS (SELECT ky.k, ky.pu, ky.rh % sa.sa AS r FROM keyed ky JOIN sa ON sa.k = ky.k), salted AS (SELECT count(*) AS rows, sum(dr.attr * (f.pu + 1)) AS ck FROM facts f JOIN dimrep dr ON dr.k = f.k AND dr.r = f.r), plain AS (SELECT count(*) AS rows, sum(d.attr * (ky.pu + 1)) AS ck FROM keyed ky JOIN dim d ON d.k = ky.k), repl AS (SELECT count(*) AS repl_rows FROM dimrep), ssalt AS (SELECT count(*) AS parts_used, max(c) AS max_load, max(c) * 32 * 10000 // sum(c) AS skew_bp FROM (SELECT ${md5BucketSql("k || ':' || CAST(r AS VARCHAR)", 32)} AS p, count(*) AS c FROM facts GROUP BY 1) g), splain AS (SELECT count(*) AS parts_used, max(c) AS max_load, max(c) * 32 * 10000 // sum(c) AS skew_bp FROM (SELECT ${md5BucketSql("k", 32)} AS p, count(*) AS c FROM keyed GROUP BY 1) g), eq AS (SELECT CASE WHEN (SELECT rows FROM salted) = (SELECT rows FROM plain) AND (SELECT ck FROM salted) = (SELECT ck FROM plain) THEN 1 ELSE 0 END AS equal_plain), legs AS (SELECT '1:salted_adaptive' AS leg, (SELECT rows FROM salted) AS rows, (SELECT ck FROM salted) AS checksum, (SELECT repl_rows FROM repl) AS repl_rows, parts_used, max_load, skew_bp FROM ssalt UNION ALL SELECT '2:plain_recompute', (SELECT rows FROM plain), (SELECT ck FROM plain), (SELECT n_keys FROM nk), parts_used, max_load, skew_bp FROM splain) SELECT leg, CAST(rows AS BIGINT) AS rows, CAST(checksum AS BIGINT) AS checksum, CAST(repl_rows AS BIGINT) AS repl_rows, CAST(parts_used AS BIGINT) AS parts_used, CAST(max_load AS BIGINT) AS max_load, CAST(skew_bp AS BIGINT) AS skew_bp, CAST(CASE WHEN skew_bp <= 20000 THEN 1 ELSE 0 END AS BIGINT) AS meets_bal, CAST((SELECT equal_plain FROM eq) AS BIGINT) AS equal_plain FROM legs ORDER BY leg"""
       },
       "S/J ext: adaptive-salt join EXECUTED — the dim replicated by each key's OWN salt from q399's shared rule at the chosen target n/256, the fact side salted rh % salt_k, joined on (k, replica) and certified equal to the plain join exactly (q393 convention); the executed placement lands inside the 2x gate the frontier promised while the plain pass shows the ~8x hot partition"),
 
@@ -173,7 +169,7 @@ object R57Queries {
         // this |customers|-of-orders-sized frame, not |orders| rows
         val ocKey = om.groupBy(col("c").as("k")).agg(min("m").as("m"))
         def hv(tag: String, kCol: String): org.apache.spark.sql.Column =
-          expr(s"CAST(conv(substring(md5(concat('$tag:', CAST($kCol AS STRING))), 1, 10), 16, 10) AS BIGINT)")
+          md5Long(concat(lit(s"$tag:"), col(kCol).cast("string")), 10)
         // the incremental KMV state at step j (q397's certified merge):
         // per-hash first month, prefix top-32 via one step-partitioned
         // window — over the per-month top-32s only, because a hash can
@@ -271,7 +267,7 @@ object R57Queries {
           s"""SELECT step, sum(CASE WHEN m <= step THEN mc ELSE 0 END) AS $out
             FROM steps CROSS JOIN (SELECT m, count(*) AS mc FROM $srcCte GROUP BY 1) f GROUP BY 1"""
         def hvmSql(srcCte: String, tag: String): String =
-          s"SELECT CAST(concat('0x', substr(md5('$tag:' || CAST(k AS VARCHAR)), 1, 10)) AS BIGINT) AS hvv, min(m) AS fm FROM $srcCte GROUP BY 1"
+          s"SELECT ${md5LongSql(s"'$tag:' || CAST(k AS VARCHAR)", 10)} AS hvv, min(m) AS fm FROM $srcCte GROUP BY 1"
         def costsSql(lok: String, ook: String, oc: String, ck: String)
             : (String, String, String) = {
           val i1 = s"(n_li * n_ord // greatest($lok, $ook))"
@@ -284,7 +280,7 @@ object R57Queries {
         val (c1, c2, c3) = costsSql("est_lok", "est_ook", "est_oc", "est_ck")
         def qerrSql(a: String, b: String): String =
           s"greatest(($a) * 10000 // greatest($b, 1), ($b) * 10000 // greatest($a, 1))"
-        s"""WITH steps AS (SELECT unnest(generate_series(1, 12)) AS step), om AS (SELECT o_orderkey AS k, CAST(month(o_orderdate) AS BIGINT) AS m, o_custkey AS c FROM orders), lim AS (SELECT l.l_orderkey AS k, om.m FROM lineitem l JOIN om ON om.k = l.l_orderkey), oc_src AS (SELECT c AS k, m FROM om), hvm_lok AS (${hvmSql("lim", "k4l")}), hvm_ook AS (${hvmSql("om", "k4o")}), hvm_oc AS (${hvmSql("oc_src", "k4u")}), e_lok AS (${estSql("hvm_lok", "est_lok")}), e_ook AS (${estSql("hvm_ook", "est_ook")}), e_oc AS (${estSql("hvm_oc", "est_oc")}), x_lok AS (${ndvSql("lim", "ndv_lok")}), x_ook AS (${ndvSql("om", "ndv_ook")}), x_oc AS (${ndvSql("oc_src", "ndv_oc")}), r_li AS (${rowsSql("lim", "n_li")}), r_or AS (${rowsSql("om", "n_ord")}), stat AS (SELECT (SELECT count(*) FROM customer) AS n_cust, (SELECT count(DISTINCT c_custkey) FROM customer) AS ndv_ck, (SELECT CASE WHEN count(*) < 32 THEN count(*) ELSE 31 * 1099511627776 // max(hvv) END FROM (SELECT DISTINCT CAST(concat('0x', substr(md5('k4c:' || CAST(c_custkey AS VARCHAR)), 1, 10)) AS BIGINT) AS hvv FROM customer ORDER BY 1 LIMIT 32) s) AS est_ck), stats AS (SELECT st.step, n_li, n_ord, est_lok, ndv_lok, est_ook, ndv_ook, est_oc, ndv_oc, n_cust, ndv_ck, est_ck FROM steps st JOIN e_lok USING (step) JOIN e_ook USING (step) JOIN e_oc USING (step) JOIN x_lok USING (step) JOIN x_ook USING (step) JOIN x_oc USING (step) JOIN r_li USING (step) JOIN r_or USING (step) CROSS JOIN stat) SELECT CAST(step AS BIGINT) AS step, CAST(n_li AS BIGINT) AS n_li, CAST(n_ord AS BIGINT) AS n_ord, CAST(est_lok AS BIGINT) AS est_lok, CAST(ndv_lok AS BIGINT) AS ndv_lok, CAST(${qerrSql("est_lok", "ndv_lok")} AS BIGINT) AS qerr_lok_bp, CAST(est_oc AS BIGINT) AS est_oc, CAST(ndv_oc AS BIGINT) AS ndv_oc, CAST(${qerrSql("est_oc", "ndv_oc")} AS BIGINT) AS qerr_oc_bp, CAST(CASE WHEN ($x1) <= ($x2) AND ($x1) <= ($x3) THEN 1 WHEN ($x2) <= ($x3) THEN 2 ELSE 3 END AS BIGINT) AS chosen_exact, CAST(CASE WHEN ($c1) <= ($c2) AND ($c1) <= ($c3) THEN 1 WHEN ($c2) <= ($c3) THEN 2 ELSE 3 END AS BIGINT) AS chosen_cheap, CAST(greatest(${qerrSql(s"($c1)", s"($x1)")}, ${qerrSql(s"($c2)", s"($x2)")}, ${qerrSql(s"($c3)", s"($x3)")}) AS BIGINT) AS worst_drift_bp, CAST(CASE WHEN (CASE WHEN ($x1) <= ($x2) AND ($x1) <= ($x3) THEN 1 WHEN ($x2) <= ($x3) THEN 2 ELSE 3 END) = (CASE WHEN ($c1) <= ($c2) AND ($c1) <= ($c3) THEN 1 WHEN ($c2) <= ($c3) THEN 2 ELSE 3 END) THEN 1 ELSE 0 END AS BIGINT) AS argmin_stable FROM stats ORDER BY step"""
+        s"""WITH steps AS (SELECT unnest(generate_series(1, 12)) AS step), om AS (SELECT o_orderkey AS k, CAST(month(o_orderdate) AS BIGINT) AS m, o_custkey AS c FROM orders), lim AS (SELECT l.l_orderkey AS k, om.m FROM lineitem l JOIN om ON om.k = l.l_orderkey), oc_src AS (SELECT c AS k, m FROM om), hvm_lok AS (${hvmSql("lim", "k4l")}), hvm_ook AS (${hvmSql("om", "k4o")}), hvm_oc AS (${hvmSql("oc_src", "k4u")}), e_lok AS (${estSql("hvm_lok", "est_lok")}), e_ook AS (${estSql("hvm_ook", "est_ook")}), e_oc AS (${estSql("hvm_oc", "est_oc")}), x_lok AS (${ndvSql("lim", "ndv_lok")}), x_ook AS (${ndvSql("om", "ndv_ook")}), x_oc AS (${ndvSql("oc_src", "ndv_oc")}), r_li AS (${rowsSql("lim", "n_li")}), r_or AS (${rowsSql("om", "n_ord")}), stat AS (SELECT (SELECT count(*) FROM customer) AS n_cust, (SELECT count(DISTINCT c_custkey) FROM customer) AS ndv_ck, (SELECT CASE WHEN count(*) < 32 THEN count(*) ELSE 31 * 1099511627776 // max(hvv) END FROM (SELECT DISTINCT ${md5LongSql("'k4c:' || CAST(c_custkey AS VARCHAR)", 10)} AS hvv FROM customer ORDER BY 1 LIMIT 32) s) AS est_ck), stats AS (SELECT st.step, n_li, n_ord, est_lok, ndv_lok, est_ook, ndv_ook, est_oc, ndv_oc, n_cust, ndv_ck, est_ck FROM steps st JOIN e_lok USING (step) JOIN e_ook USING (step) JOIN e_oc USING (step) JOIN x_lok USING (step) JOIN x_ook USING (step) JOIN x_oc USING (step) JOIN r_li USING (step) JOIN r_or USING (step) CROSS JOIN stat) SELECT CAST(step AS BIGINT) AS step, CAST(n_li AS BIGINT) AS n_li, CAST(n_ord AS BIGINT) AS n_ord, CAST(est_lok AS BIGINT) AS est_lok, CAST(ndv_lok AS BIGINT) AS ndv_lok, CAST(${qerrSql("est_lok", "ndv_lok")} AS BIGINT) AS qerr_lok_bp, CAST(est_oc AS BIGINT) AS est_oc, CAST(ndv_oc AS BIGINT) AS ndv_oc, CAST(${qerrSql("est_oc", "ndv_oc")} AS BIGINT) AS qerr_oc_bp, CAST(CASE WHEN ($x1) <= ($x2) AND ($x1) <= ($x3) THEN 1 WHEN ($x2) <= ($x3) THEN 2 ELSE 3 END AS BIGINT) AS chosen_exact, CAST(CASE WHEN ($c1) <= ($c2) AND ($c1) <= ($c3) THEN 1 WHEN ($c2) <= ($c3) THEN 2 ELSE 3 END AS BIGINT) AS chosen_cheap, CAST(greatest(${qerrSql(s"($c1)", s"($x1)")}, ${qerrSql(s"($c2)", s"($x2)")}, ${qerrSql(s"($c3)", s"($x3)")}) AS BIGINT) AS worst_drift_bp, CAST(CASE WHEN (CASE WHEN ($x1) <= ($x2) AND ($x1) <= ($x3) THEN 1 WHEN ($x2) <= ($x3) THEN 2 ELSE 3 END) = (CASE WHEN ($c1) <= ($c2) AND ($c1) <= ($c3) THEN 1 WHEN ($c2) <= ($c3) THEN 2 ELSE 3 END) THEN 1 ELSE 0 END AS BIGINT) AS argmin_stable FROM stats ORDER BY step"""
       },
       "A/J/S ext: incremental stats -> stable plans — q358's Selinger enumeration re-priced at every step of a 12-month ingest from the KMV state q397 maintains by O(k) merge (exact-fallback below k), row counts exact in both regimes; per-step sketch NDVs certified inside the k=32 band and the cheap argmin certified to track the exact argmin along the whole trajectory"),
 
@@ -323,7 +319,6 @@ object R57Queries {
       "q405_skipping_chooser",
       (s, d) => {
         import org.apache.spark.sql.Column
-        import R39Queries.md5Bucket
         // 4 bloom cells sliced from ONE md5 (20 bits each → % 1024):
         // a quarter of the hash work of four tagged digests in the
         // hottest pass, same independence for the FP arithmetic
@@ -451,7 +446,6 @@ object R57Queries {
           .orderBy("cls", "structure")
       },
       Some {
-        import R39Queries.md5BucketSql
         def cellSql(i: Int, v: String): String =
           s"CAST(concat('0x', substr(md5('fb:' || CAST($v AS VARCHAR)), ${1 + i * 5}, 5)) AS BIGINT) % 1024"
         def classSql(cls: String, tag: String, point: Boolean): String = {

@@ -1,10 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.QuerySpec
-import graft.Tables
 
 /** Round-12 second widening — the LOGICAL-REWRITE arc: the plan
   * transformations a 100 TB optimizer must make, each one priced the
@@ -29,8 +28,6 @@ import graft.Tables
   *    pair proves the rewrite is a cost decision, not a syntax rule.
   */
 object R58Queries {
-
-  private def t(s: SparkSession, d: String, n: String): DataFrame = Tables.load(s, d, n)
 
   /** q409's mid-band key predicate over a single-column frame `k` —
     * shared with q416, whose whole point is composing THIS predicate

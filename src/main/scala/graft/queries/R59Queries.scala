@@ -1,10 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.QuerySpec
-import graft.Tables
+import graft.ops.HashOps.{md5Bucket, md5BucketSql}
 
 /** Round-12 third widening — the rewrite arc's CATALOG and two more
   * members:
@@ -28,8 +28,6 @@ import graft.Tables
   *    move (the 2x2's single pruned cell).
   */
 object R59Queries {
-
-  private def t(s: SparkSession, d: String, n: String): DataFrame = Tables.load(s, d, n)
 
   val specs: Seq[QuerySpec] = Seq(
 
@@ -335,7 +333,6 @@ object R59Queries {
         val pred = R58Queries.keyMidband(o).localCheckpoint(false)
         val fo = o.crossJoin(broadcast(pred)).where(expr("k BETWEEN lo AND hi"))
           .select("k")
-        import R39Queries.md5Bucket
         // BOTH layouts assigned in one pass (the md5 bucket and the range
         // bucket ride the same scan) — the old shape materialized two
         // separate corpus-sized assignments and ran the probe join five
@@ -399,7 +396,6 @@ object R59Queries {
           .orderBy("cell")
       },
       Some {
-        import R39Queries.md5BucketSql
         def legSql(id: String, asgCte: String, inferred: Boolean): String = {
           val touched =
             if (inferred) s"SELECT p, c FROM zn_$asgCte CROSS JOIN pred WHERE zmax >= lo AND zmin <= hi"

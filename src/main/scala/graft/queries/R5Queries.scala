@@ -1,11 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.QuerySpec
-import graft.Tables
 import graft.functions.cosineSim
 
 /** Round-4 widening — the quality/serving closers a retrieval or dedup
@@ -20,8 +19,6 @@ import graft.functions.cosineSim
   * the WHOLE index+search+metric pipeline replayable in SQL.
   */
 object R5Queries {
-
-  private def t(s: SparkSession, d: String, n: String): DataFrame = Tables.load(s, d, n)
 
   private val emL2 = ScaleQueries.emL2
   private val dot =

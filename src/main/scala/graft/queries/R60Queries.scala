@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.QuerySpec
-import graft.Tables
 
 /** Round-12 fourth widening — the MATERIALIZED-VIEW arc: selection,
   * consumption, and the cache's semantic cousin. The optimizer half
@@ -34,8 +33,6 @@ import graft.Tables
   * iff (q.mask & v.mask) = q.mask.
   */
 object R60Queries {
-
-  private def t(s: SparkSession, d: String, n: String): DataFrame = Tables.load(s, d, n)
 
   /** One-pass CUBE grader over a (f, s, y, m, cents) frame: all 16
     * lattice nodes' (group count, Σcnt², Σ(value checksum)²) graded from

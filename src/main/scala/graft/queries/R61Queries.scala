@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.QuerySpec
-import graft.Tables
 
 /** Round-12 fifth widening — the SNAPSHOT arc: the multi-version
   * manifest algebra (Iceberg/Delta-style time travel) the storage
@@ -49,8 +48,6 @@ import graft.Tables
   * passes, and AS-OF serving reads only live-file rows.
   */
 object R61Queries {
-
-  private def t(s: SparkSession, d: String, n: String): DataFrame = Tables.load(s, d, n)
 
   /** Keyed orders with the arc's derived columns: key, cents value,
     * Knuth hash, the 80% key cut, and per-row file assignment —

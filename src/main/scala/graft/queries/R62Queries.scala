@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.QuerySpec
-import graft.Tables
 
 /** Round-12 sixth widening — the MV arc CLOSED ECONOMICALLY and
   * COMPOSED with the snapshot arc:
@@ -31,8 +30,6 @@ import graft.Tables
   * are the certifying corpus passes.
   */
 object R62Queries {
-
-  private def t(s: SparkSession, d: String, n: String): DataFrame = Tables.load(s, d, n)
 
   /** The MV-arc lineitem frame (same dims/measure as R60Queries). */
   private def liFrame(s: SparkSession, d: String): DataFrame =

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.QuerySpec
-import graft.Tables
 
 /** Round-12 seventh widening — the PRIVACY arc: k-anonymity as a
   * lattice chooser, the anonymization APPLIED, and l-diversity as the
@@ -41,8 +40,6 @@ import graft.Tables
   * re-aggregations of grain rows (the q419 serving pattern).
   */
 object R63Queries {
-
-  private def t(s: SparkSession, d: String, n: String): DataFrame = Tables.load(s, d, n)
 
   private val K = 10L
   private val L = 4L

@@ -1,10 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.QuerySpec
 import graft.Tables
+import graft.ops.HashOps.{md5Bucket, md5BucketSql}
 
 /** Round-12 eighth widening — ESTIMATION ROBUSTNESS: what a planted
   * stats error actually COSTS, and which sampling design keeps it
@@ -30,8 +30,6 @@ import graft.Tables
   * truths are exact corpus aggregates.
   */
 object R64Queries {
-
-  private def t(s: SparkSession, d: String, n: String): DataFrame = Tables.load(s, d, n)
 
   val specs: Seq[QuerySpec] = Seq(
 
@@ -149,9 +147,9 @@ object R64Queries {
         // what the old left-join + coalesce produced for them.
         val rows = dense.unionByName(sparse)
         val keyed = rows.select(col("class"), col("c"),
-          R39Queries.md5Bucket(concat(lit("ia:"), col("rid").cast("string")), 16)
+          md5Bucket(concat(lit("ia:"), col("rid").cast("string")), 16)
             .as("ba"),
-          R39Queries.md5Bucket(concat(lit("ib:"), col("rid").cast("string")), 16)
+          md5Bucket(concat(lit("ib:"), col("rid").cast("string")), 16)
             .as("bb"))
         val pivots = count(lit(1)).as("cnt") +:
           ((0 until 16).map(k =>
@@ -163,7 +161,7 @@ object R64Queries {
         val truth = perKey.groupBy("class").agg(sum(expr("cnt * cnt")).as("truth"),
           count(lit(1)).as("keys"))
         val corr = perKey.select(col("class"),
-            R39Queries.md5Bucket(concat(lit("cs:"), col("c").cast("string")), 16)
+            md5Bucket(concat(lit("cs:"), col("c").cast("string")), 16)
               .as("band"), expr("cnt * cnt").as("m"))
           .groupBy("class", "band").agg((sum("m") * 16L).as("est_corr"))
         val indep = perKey.select(col("class"), explode(array((0 until 16).map(k =>
@@ -200,7 +198,7 @@ object R64Queries {
       },
       Some {
         def bkt(e: String, salt: String): String =
-          R39Queries.md5BucketSql(s"concat('$salt', CAST($e AS VARCHAR))", 16)
+          md5BucketSql(s"concat('$salt', CAST($e AS VARCHAR))", 16)
         def duelSql(cls: String, rowsSel: String): String =
           s"""SELECT '$cls' AS class, bands.band, tr.keys, tr.truth, coalesce(corr.est_corr, 0) AS est_corr, coalesce(indep.est_indep, 0) AS est_indep FROM (SELECT range AS band FROM range(16)) bands LEFT JOIN (SELECT ${bkt("c", "cs:")} AS band, sum(cnt * cnt) * 16 AS est_corr FROM (SELECT c, count(*) AS cnt FROM ($rowsSel) r GROUP BY c) cn GROUP BY 1) corr ON corr.band = bands.band LEFT JOIN (SELECT a.band, sum(a.ca * b.cb) * 256 AS est_indep FROM (SELECT c, ${bkt("rid", "ia:")} AS band, count(*) AS ca FROM ($rowsSel) r GROUP BY 1, 2) a JOIN (SELECT c, ${bkt("rid", "ib:")} AS band, count(*) AS cb FROM ($rowsSel) r GROUP BY 1, 2) b ON a.c = b.c AND a.band = b.band GROUP BY 1) indep ON indep.band = bands.band CROSS JOIN (SELECT sum(cnt * cnt) AS truth, count(*) AS keys FROM (SELECT c, count(*) AS cnt FROM ($rowsSel) r GROUP BY c) cn) tr"""
         val dense = "SELECT o_orderkey AS rid, o_custkey AS c FROM orders"

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.QuerySpec
-import graft.Tables
 
 /** Round-13 first widening — the MV rule APPLIED and the snapshot arc's
   * SCHEMA dimension:
@@ -31,8 +30,6 @@ import graft.Tables
   * schema commits themselves touch zero data rows, which is the point.
   */
 object R65Queries {
-
-  private def t(s: SparkSession, d: String, n: String): DataFrame = Tables.load(s, d, n)
 
   private def liFrame(s: SparkSession, d: String): DataFrame =
     t(s, d, "lineitem").select(

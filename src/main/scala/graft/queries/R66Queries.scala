@@ -1,10 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.QuerySpec
-import graft.Tables
+import graft.ops.HashOps.{md5Bucket, md5BucketSql}
 
 /** Round-13 second widening — the MV arc's MAINTENANCE half and the
   * snapshot arc's remaining physical-metadata dimensions:
@@ -39,8 +39,6 @@ import graft.Tables
   * the graders read the corpus.
   */
 object R66Queries {
-
-  private def t(s: SparkSession, d: String, n: String): DataFrame = Tables.load(s, d, n)
 
   val specs: Seq[QuerySpec] = Seq(
 
@@ -191,7 +189,6 @@ object R66Queries {
     QuerySpec(
       "q436_partition_spec_evolution",
       (s, d) => {
-        import R39Queries.md5Bucket
         val keyed0 = t(s, d, "orders").select(col("o_orderkey").as("k"),
           (year(col("o_orderdate")) * 100 + month(col("o_orderdate")))
             .cast("long").as("ym"),
@@ -274,7 +271,6 @@ object R66Queries {
         l1.unionByName(l2).unionByName(l3).orderBy("probe")
       },
       Some {
-        import R39Queries.md5BucketSql
         val bsql = md5BucketSql("CAST(probe_k AS VARCHAR)", 16)
         s"""WITH keyed0 AS (SELECT o_orderkey AS k, CAST(year(o_orderdate) * 100 + month(o_orderdate) AS BIGINT) AS ym, CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT) AS v FROM orders), mxk AS (SELECT (max(k) + 1) * 4 // 5 AS kcut FROM keyed0), rows0 AS (SELECT k, ym, v, CASE WHEN k <= kcut THEN ym ELSE 1000 + ${md5BucketSql("CAST(k AS VARCHAR)", 16)} END AS part, CASE WHEN k <= kcut THEN 'A' ELSE 'B' END AS spec FROM keyed0 CROSS JOIN mxk), manifest AS (SELECT spec, part, count(*) AS c FROM rows0 GROUP BY 1, 2), nf AS (SELECT count(*) AS files_total FROM manifest), pm AS (SELECT part AS probe_ym FROM manifest WHERE spec = 'A' ORDER BY c DESC, part LIMIT 1), pk AS (SELECT k AS probe_k, ym AS probe_k_ym FROM rows0 WHERE k = (SELECT max(k) FROM rows0)), am AS (SELECT count(*) AS n FROM (SELECT ym FROM keyed0 GROUP BY ym) z), l1 AS (SELECT '1:month' AS probe, (SELECT count(*) FROM rows0 CROSS JOIN pm WHERE ym = probe_ym) AS direct_rows, (SELECT count(*) FROM rows0 r CROSS JOIN pm WHERE ((r.spec = 'A' AND r.part = probe_ym) OR r.spec = 'B') AND r.ym = probe_ym) AS pruned_rows, (SELECT count(*) FROM manifest CROSS JOIN pm WHERE (spec = 'A' AND part = probe_ym) OR spec = 'B') AS files_read, (SELECT files_total FROM nf) AS files_total, 1 AS bill_monthspec, (SELECT n FROM am) AS bill_hashspec), l2 AS (SELECT '2:key_point', (SELECT count(*) FROM rows0 CROSS JOIN pk WHERE k = probe_k), (SELECT count(*) FROM rows0 r CROSS JOIN pk WHERE (r.spec = 'A' OR (r.spec = 'B' AND r.part = 1000 + $bsql)) AND r.k = probe_k), (SELECT count(*) FROM manifest CROSS JOIN pk WHERE spec = 'A' OR (spec = 'B' AND part = 1000 + $bsql)), (SELECT files_total FROM nf), (SELECT n FROM am), 1), l3 AS (SELECT '3:key_and_month', (SELECT count(*) FROM rows0 CROSS JOIN pk WHERE k = probe_k AND ym = probe_k_ym), (SELECT count(*) FROM rows0 r CROSS JOIN pk WHERE ((r.spec = 'A' AND r.part = probe_k_ym) OR (r.spec = 'B' AND r.part = 1000 + $bsql)) AND r.k = probe_k AND r.ym = probe_k_ym), (SELECT count(*) FROM manifest CROSS JOIN pk WHERE (spec = 'A' AND part = probe_k_ym) OR (spec = 'B' AND part = 1000 + $bsql)), (SELECT files_total FROM nf), 1, 1) SELECT probe, CAST(direct_rows AS BIGINT) AS direct_rows, CAST(pruned_rows AS BIGINT) AS pruned_rows, CAST(direct_rows - pruned_rows AS BIGINT) AS missed, CAST(files_read AS BIGINT) AS files_read, CAST(files_total AS BIGINT) AS files_total, CAST(bill_monthspec AS BIGINT) AS bill_monthspec, CAST(bill_hashspec AS BIGINT) AS bill_hashspec FROM (SELECT * FROM l1 UNION ALL SELECT * FROM l2 UNION ALL SELECT * FROM l3) z ORDER BY probe"""
       },
@@ -702,7 +698,6 @@ object R66Queries {
     QuerySpec(
       "q441_spec_unify_compaction",
       (s, d) => {
-        import R39Queries.md5Bucket
         val keyed0 = t(s, d, "orders").select(col("o_orderkey").as("k"),
           (year(col("o_orderdate")) * 100 + month(col("o_orderdate")))
             .cast("long").as("ym"),
@@ -777,7 +772,6 @@ object R66Queries {
           .unionByName(postPoint).orderBy("phase", "probe")
       },
       Some {
-        import R39Queries.md5BucketSql
         val bq = md5BucketSql("CAST(k AS VARCHAR)", 16)
         val bp = md5BucketSql("CAST(probe_k AS VARCHAR)", 16)
         // the SQL mirrors the Spark legs directly, built explicitly

@@ -5,7 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.QuerySpec
-import graft.Tables
 import graft.functions.{cosineSim, jaroWinkler}
 
 /** Round-4 continuation — the curation/analytics operators a pipeline
@@ -17,8 +16,6 @@ import graft.functions.{cosineSim, jaroWinkler}
   * batches that follow. All fully DuckDB-oracled.
   */
 object R6Queries {
-
-  private def t(s: SparkSession, d: String, n: String): DataFrame = Tables.load(s, d, n)
 
   private val emL2 = ScaleQueries.emL2
   private val dot =

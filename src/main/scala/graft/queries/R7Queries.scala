@@ -5,7 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.QuerySpec
-import graft.Tables
 import graft.functions.cosineSim
 
 /** Round-5 additions — the two index-family members the round-4 review
@@ -15,8 +14,6 @@ import graft.functions.cosineSim
   * decoded media but never deduped it). Both fully DuckDB-oracled.
   */
 object R7Queries {
-
-  private def t(s: SparkSession, d: String, n: String): DataFrame = Tables.load(s, d, n)
 
   /** Element rows of the embedding corpus split into 4-dim subvectors:
     * (vec_id, pos, sub, x) — the training/serving substrate of the PQ

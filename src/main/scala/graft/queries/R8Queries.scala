@@ -1,11 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.QuerySpec
-import graft.Tables
+import graft.ops.HashOps.{md5Long, md5LongSql}
 import graft.ops.QuantileOps
 
 /** Round-5 widening beyond the review burn-down: the re-aggregatable
@@ -16,24 +16,12 @@ import graft.ops.QuantileOps
   */
 object R8Queries {
 
-  private def t(s: SparkSession, d: String, n: String): DataFrame = Tables.load(s, d, n)
-
-  /** Portable 60-bit hash: top 15 hex chars of md5, parsed to BIGINT —
-    * the house cross-engine hash (md5 is the one hash both engines
-    * share; conv(hex,16,10) == DuckDB CAST('0x…' AS BIGINT)).
-    */
-  private[queries] def h60(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    conv(substring(md5(c), 1, 15), 16, 10).cast("long")
-
   /** j-salted bucket hash shared by the sketch family (q212 count-min
-    * rows, q216 Bloom bits): pmod(h60(concat(j, key)), m). MUST mirror
-    * the oracle string `CAST(concat('0x', substr(md5(concat(CAST(j AS
-    * VARCHAR), key)), 1, 15)) AS BIGINT) % m` — single-sourced here so a
-    * portability fix can't reach one sketch and miss the other.
+    * rows, q216 Bloom bits): the 15-digit md5Long of concat(j, key), mod m.
     */
   private[queries] def saltedBucket(j: org.apache.spark.sql.Column,
       key: org.apache.spark.sql.Column, m: Long): org.apache.spark.sql.Column =
-    pmod(h60(concat(j.cast("string"), key)), lit(m))
+    pmod(md5Long(concat(j.cast("string"), key), 15), lit(m))
 
   val specs: Seq[QuerySpec] = Seq(
 
@@ -59,7 +47,7 @@ object R8Queries {
             date_trunc("week", col("ts")).as("wk"),
             col("user_id"))
         val hx = ev.select(col("day"), col("wk"),
-          h60(col("user_id").cast("string")).as("h")).distinct()
+          md5Long(col("user_id").cast("string"), 15).as("h")).distinct()
         val daySk = hx.withColumn("rn",
             row_number().over(Window.partitionBy("day").orderBy("h")))
           .where(col("rn") <= 32)
@@ -79,7 +67,7 @@ object R8Queries {
               .as("rel_err"))
           .orderBy("ws")
       },
-      Some("""WITH ev AS (SELECT CAST(ts AS TIMESTAMP) AS ts, user_id FROM events), hx AS (SELECT DISTINCT CAST(ts AS DATE) AS day, date_trunc('week', ts) AS wk, CAST(concat('0x', substr(md5(CAST(user_id AS VARCHAR)), 1, 15)) AS BIGINT) AS h FROM ev), sk AS (SELECT day, wk, h FROM (SELECT day, wk, h, row_number() OVER (PARTITION BY day ORDER BY h) AS rn FROM hx) z WHERE rn <= 32), mg AS (SELECT wk, h, row_number() OVER (PARTITION BY wk ORDER BY h) AS rn FROM (SELECT DISTINCT wk, h FROM sk) z), st AS (SELECT wk, count(*) AS m, max(CASE WHEN rn = 32 THEN h END) AS kth FROM mg GROUP BY 1), ex AS (SELECT date_trunc('week', ts) AS wk, count(DISTINCT user_id) AS n_exact FROM ev GROUP BY 1) SELECT CAST(epoch(st.wk) AS BIGINT) AS ws, CAST(n_exact AS BIGINT) AS n_exact, CAST(CASE WHEN m < 32 THEN m ELSE floor(31.0 * 1152921504606846976 / kth) END AS BIGINT) AS n_est, round((CAST(CASE WHEN m < 32 THEN m ELSE floor(31.0 * 1152921504606846976 / kth) END AS BIGINT) - n_exact) * 1.0 / n_exact, 4) AS rel_err FROM st JOIN ex USING (wk) ORDER BY ws"""),
+      Some(s"""WITH ev AS (SELECT CAST(ts AS TIMESTAMP) AS ts, user_id FROM events), hx AS (SELECT DISTINCT CAST(ts AS DATE) AS day, date_trunc('week', ts) AS wk, ${md5LongSql("CAST(user_id AS VARCHAR)", 15)} AS h FROM ev), sk AS (SELECT day, wk, h FROM (SELECT day, wk, h, row_number() OVER (PARTITION BY day ORDER BY h) AS rn FROM hx) z WHERE rn <= 32), mg AS (SELECT wk, h, row_number() OVER (PARTITION BY wk ORDER BY h) AS rn FROM (SELECT DISTINCT wk, h FROM sk) z), st AS (SELECT wk, count(*) AS m, max(CASE WHEN rn = 32 THEN h END) AS kth FROM mg GROUP BY 1), ex AS (SELECT date_trunc('week', ts) AS wk, count(DISTINCT user_id) AS n_exact FROM ev GROUP BY 1) SELECT CAST(epoch(st.wk) AS BIGINT) AS ws, CAST(n_exact AS BIGINT) AS n_exact, CAST(CASE WHEN m < 32 THEN m ELSE floor(31.0 * 1152921504606846976 / kth) END AS BIGINT) AS n_est, round((CAST(CASE WHEN m < 32 THEN m ELSE floor(31.0 * 1152921504606846976 / kth) END AS BIGINT) - n_exact) * 1.0 / n_exact, 4) AS rel_err FROM st JOIN ex USING (wk) ORDER BY ws"""),
       "§2.4 ext: KMV distinct sketches as mergeable tables (daily → weekly rollup)"),
 
     // q212 — count-min sketch with its overestimate audit: a 3×512
@@ -113,7 +101,7 @@ object R8Queries {
             (col("n_est") - col("cg")).as("overest"))
           .orderBy(col("n_exact").desc, col("term").asc)
       },
-      Some("""WITH tok AS (SELECT doc_id, unnest(string_split(lower(text), ' ')) AS term FROM documents), tf AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY 1, 2), g AS (SELECT term, sum(tf) AS cg FROM tf GROUP BY 1), hb AS (SELECT term, cg, j, CAST(concat('0x', substr(md5(concat(CAST(j AS VARCHAR), term)), 1, 15)) AS BIGINT) % 512 AS b FROM g CROSS JOIN (SELECT unnest([0, 1, 2]) AS j) js), sk AS (SELECT j, b, sum(cg) AS cell FROM hb GROUP BY 1, 2), top AS (SELECT term, cg FROM g ORDER BY cg DESC, term LIMIT 20) SELECT t.term, CAST(t.cg AS BIGINT) AS n_exact, CAST(min(sk.cell) AS BIGINT) AS n_est, CAST(min(sk.cell) - t.cg AS BIGINT) AS overest FROM top t JOIN hb ON hb.term = t.term JOIN sk ON sk.j = hb.j AND sk.b = hb.b GROUP BY t.term, t.cg ORDER BY n_exact DESC, t.term"""),
+      Some(s"""WITH tok AS (SELECT doc_id, unnest(string_split(lower(text), ' ')) AS term FROM documents), tf AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY 1, 2), g AS (SELECT term, sum(tf) AS cg FROM tf GROUP BY 1), hb AS (SELECT term, cg, j, ${md5LongSql("concat(CAST(j AS VARCHAR), term)", 15)} % 512 AS b FROM g CROSS JOIN (SELECT unnest([0, 1, 2]) AS j) js), sk AS (SELECT j, b, sum(cg) AS cell FROM hb GROUP BY 1, 2), top AS (SELECT term, cg FROM g ORDER BY cg DESC, term LIMIT 20) SELECT t.term, CAST(t.cg AS BIGINT) AS n_exact, CAST(min(sk.cell) AS BIGINT) AS n_est, CAST(min(sk.cell) - t.cg AS BIGINT) AS overest FROM top t JOIN hb ON hb.term = t.term JOIN sk ON sk.j = hb.j AND sk.b = hb.b GROUP BY t.term, t.cg ORDER BY n_exact DESC, t.term"""),
       "§2.4 ext: count-min sketch term counts + one-sided overestimate audit"),
 
     // q213 — quantile normalization across event types (cross-domain

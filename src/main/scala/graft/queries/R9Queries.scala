@@ -1,12 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.QuerySpec
-import graft.Tables
 import graft.functions.cosineSim
+import graft.ops.HashOps.md5LongSql
 
 /** Round-5 widening, second batch: Bloom-filter membership (completing
   * the KMV/CMS/Bloom mergeable-sketch trio), an SCD type-2 dimension
@@ -16,8 +15,6 @@ import graft.functions.cosineSim
   * DuckDB-oracled.
   */
 object R9Queries {
-
-  private def t(s: SparkSession, d: String, n: String): DataFrame = Tables.load(s, d, n)
 
   val specs: Seq[QuerySpec] = Seq(
 
@@ -62,7 +59,7 @@ object R9Queries {
           .withColumn("n_fp", col("n_bloom") - col("n_exact"))
           .orderBy("doc_id")
       },
-      Some(s"""${ScaleQueries.shingleCte}, ev AS (SELECT DISTINCT s FROM sh WHERE doc_id < 10), js AS (SELECT unnest([0, 1, 2]) AS j), bloom AS (SELECT DISTINCT CAST(concat('0x', substr(md5(concat(CAST(j AS VARCHAR), s)), 1, 15)) AS BIGINT) % 4096 AS bit FROM ev CROSS JOIN js), tr AS (SELECT doc_id, s FROM sh WHERE doc_id >= 10), pr AS (SELECT s, count(*) AS nb FROM (SELECT z.s, CAST(concat('0x', substr(md5(concat(CAST(j AS VARCHAR), z.s)), 1, 15)) AS BIGINT) % 4096 AS bit FROM (SELECT DISTINCT s FROM tr) z CROSS JOIN js) p JOIN bloom USING (bit) GROUP BY s), mem AS (SELECT s FROM pr WHERE nb = 3) SELECT tr.doc_id, count(*) AS n_sh, CAST(sum(CASE WHEN mem.s IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_bloom, CAST(sum(CASE WHEN ev.s IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_exact, CAST(sum(CASE WHEN mem.s IS NOT NULL THEN 1 ELSE 0 END) - sum(CASE WHEN ev.s IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_fp FROM tr LEFT JOIN mem ON tr.s = mem.s LEFT JOIN ev ON tr.s = ev.s GROUP BY tr.doc_id ORDER BY tr.doc_id"""),
+      Some(s"""${ScaleQueries.shingleCte}, ev AS (SELECT DISTINCT s FROM sh WHERE doc_id < 10), js AS (SELECT unnest([0, 1, 2]) AS j), bloom AS (SELECT DISTINCT ${md5LongSql("concat(CAST(j AS VARCHAR), s)", 15)} % 4096 AS bit FROM ev CROSS JOIN js), tr AS (SELECT doc_id, s FROM sh WHERE doc_id >= 10), pr AS (SELECT s, count(*) AS nb FROM (SELECT z.s, ${md5LongSql("concat(CAST(j AS VARCHAR), z.s)", 15)} % 4096 AS bit FROM (SELECT DISTINCT s FROM tr) z CROSS JOIN js) p JOIN bloom USING (bit) GROUP BY s), mem AS (SELECT s FROM pr WHERE nb = 3) SELECT tr.doc_id, count(*) AS n_sh, CAST(sum(CASE WHEN mem.s IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_bloom, CAST(sum(CASE WHEN ev.s IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_exact, CAST(sum(CASE WHEN mem.s IS NOT NULL THEN 1 ELSE 0 END) - sum(CASE WHEN ev.s IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_fp FROM tr LEFT JOIN mem ON tr.s = mem.s LEFT JOIN ev ON tr.s = ev.s GROUP BY tr.doc_id ORDER BY tr.doc_id"""),
       "§2.4 ext: Bloom-filter membership as a bit table + false-positive audit"),
 
     // q217 — SCD type-2 dimension build (change capture): each customer's

@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.{QuerySpec, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -15,8 +14,6 @@ import org.apache.spark.sql.functions._
   * query collects to the driver.
   */
 object RelationalQueries {
-
-  private def t(s: SparkSession, d: String, n: String): DataFrame = Tables.load(s, d, n)
 
   val specs: Seq[QuerySpec] = Seq(
 

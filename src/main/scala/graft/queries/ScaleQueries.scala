@@ -18,8 +18,6 @@ import graft.functions.cosineSim
   */
 object ScaleQueries {
 
-  private def t(s: SparkSession, d: String, n: String): DataFrame = Tables.load(s, d, n)
-
   /** Shared cached bases, memoized per (session, sfDir) so `.cache()` runs
     * exactly once per base — repeated construction would re-register the
     * same plan with the CacheManager ("already cached" warnings) and make

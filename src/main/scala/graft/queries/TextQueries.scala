@@ -12,8 +12,6 @@ import org.apache.spark.sql.functions._
   */
 object TextQueries {
 
-  private def t(s: SparkSession, d: String, n: String): DataFrame = Tables.load(s, d, n)
-
   /** T5b — StringIndexer as a window: index by count desc, ties broken by
     * label asc (reference semantics, SURVEY.md §2.4 A8). The unpartitioned
     * window is safe: it runs over the label dictionary (small by

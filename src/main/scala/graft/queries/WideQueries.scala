@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.{QuerySpec, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.bitmapDistinct
@@ -14,8 +14,6 @@ import graft.functions.bitmapDistinct
   * aggregation.
   */
 object WideQueries {
-
-  private def t(s: SparkSession, d: String, n: String): DataFrame = Tables.load(s, d, n)
 
   /** q107's bucketed tables, laid out once per (session, corpus):
     * bucketing is a one-time table-layout decision — every query against

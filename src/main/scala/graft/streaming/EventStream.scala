@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 
 import java.sql.Timestamp
 import graft.functions.cosineSim
+import graft.ops.HashOps.{md5Long, md5Bucket}
 
 /** Structured-Streaming layer (SURVEY.md §2.12): the event-time operators
   * from q22-q24 expressed over streaming DataFrames, plus a custom
@@ -172,7 +173,7 @@ object EventStream {
       (sink: (Long, DataFrame) => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery =
     events
-      .groupBy(graft.queries.R39Queries.md5Bucket(col("user_id").cast("string"), 32).as("p"))
+      .groupBy(md5Bucket(col("user_id").cast("string"), 32).as("p"))
       .agg(count(lit(1)).as("c"))
       .writeStream
       .outputMode("complete")
@@ -1103,8 +1104,7 @@ object EventStream {
         // top-k as TakeOrdered (orderBy + limit), never a global window —
         // the batch side scans ndv-sized sets (PlanShapeSpec hygiene)
         val bsk = batch.toDF().select(
-            expr("CAST(conv(substring(md5(concat('kmv:', CAST(c AS STRING))), 1, 10), 16, 10) AS BIGINT)")
-              .as("hv"))
+            md5Long(concat(lit("kmv:"), col("c").cast("string")), 10).as("hv"))
           .distinct()
           .orderBy("hv").limit(k)
         val merged =

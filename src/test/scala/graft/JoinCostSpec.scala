@@ -33,16 +33,6 @@ class JoinCostSpec extends SparkSpecBase {
     ("orders x customer", "customer", "orders", "c_custkey", "o_custkey"),
     ("customer x nation", "nation", "customer", "n_nationkey", "c_nationkey"))
 
-  private def withConf[T](pairs: (String, String)*)(f: => T): T = {
-    val prev = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f
-    finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
-
   /** The engine's own size estimate for a full-table parquet relation —
     * the number JoinSelection actually compares against the threshold.
     */

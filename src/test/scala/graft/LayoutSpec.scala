@@ -136,7 +136,7 @@ class LayoutSpec extends SparkSpecBase {
     // (PartitionFilters — the engine-side read path a 100 TB scan
     // takes). The q364/PartitionGrainSpec move applied to this round's
     // range-layout arc.
-    import graft.queries.R39Queries.md5Bucket
+    import graft.ops.HashOps.md5Bucket
     val model = SparkEntry.queries("q401_zonemap_pruning")(spark, sf001)
       .select("probe_id", "layout", "lo", "hi", "act_rows", "parts_touched", "rows_scanned")
       .as[(Long, String, Long, Long, Long, Long, Long)].collect()

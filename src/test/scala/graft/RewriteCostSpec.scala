@@ -13,16 +13,6 @@ import org.apache.spark.sql.functions._
 class RewriteCostSpec extends SparkSpecBase {
   import spark.implicits._
 
-  private def withConf[T](pairs: (String, String)*)(f: => T): T = {
-    val prev = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f
-    finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
-
   /** Execute THIS dataframe's plan and return each shuffle exchange's
     * written record count, largest first.
     */

@@ -17,16 +17,6 @@ import org.apache.spark.sql.functions._
 class RuntimeFilterSpec extends SparkSpecBase {
   import spark.implicits._
 
-  private def withConf[T](pairs: (String, String)*)(f: => T): T = {
-    val prev = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f
-    finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
-
   private def ordersKeyed = Tables.load(spark, sf001, "orders")
     .select(col("o_orderkey").as("k"),
       expr("CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)").as("v"))

@@ -5,9 +5,9 @@ import scala.jdk.CollectionConverters._
 
 /** Guards the session contract: `graft.Session` is the only code that
   * builds a session, and the code queries run (queries, ops, streaming,
-  * ml) writes no session-wide state. Native expressions are Column
-  * constructors, not registry entries; optimizer rules are applied to a
-  * plan, not installed. The one allowed write is the idempotent add in
+  * ml, and the table reads in QuerySpec.scala) writes no session-wide
+  * state. Native expressions are Column constructors, not registry
+  * entries; optimizer rules are applied to a plan, not installed. The one allowed write is the idempotent add in
   * `TopKOps.ensureStrategy`: a planner strategy cannot be applied locally.
   */
 class SessionHygieneSpec extends SparkSpecBase {
@@ -41,10 +41,12 @@ class SessionHygieneSpec extends SparkSpecBase {
       val end = text.indexOf("\n  def ", start)
       text.take(start) + (if (end < 0) "" else text.drop(end))
     }
-    val files = Seq("queries", "ops", "streaming", "ml").flatMap(d => sources(s"src/main/scala/graft/$d"))
+    val files = (Seq("queries", "ops", "streaming", "ml").map(d => s"src/main/scala/graft/$d") :+
+        "src/main/scala/graft/QuerySpec.scala").flatMap(sources)
       .map { case (p, t) => p -> (if (p.endsWith("TopKOps.scala")) exempt(t) else t) }
     val violations = Seq(
       "experimental write" -> "experimental\\s*\\.\\s*\\w+\\s*(\\+\\+|:\\+)?=(?!=)",
+      "conf write" -> "\\bconf\\s*\\.\\s*(set|unset)\\b",
       "function registry write" -> "functionRegistry\\s*\\.\\s*(register|createOrReplace|drop|clear)",
       "native expression registration" ->
         "(CosineSimilarity|JaroWinkler|JaroWinklerSimilarity|BitmapDistinct)\\s*\\.\\s*register\\b",

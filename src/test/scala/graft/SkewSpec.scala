@@ -32,14 +32,11 @@ class SkewSpec extends SparkSpecBase {
     // partition as multiple splits — the runtime answer to skew that
     // salting solves statically (the two are complementary: AQE for
     // joins, salting for aggregations AQE can't split).
-    val confs = Seq(
+    withConf(
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "64KB",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16KB",
       "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val left = spark.range(200000)
         .select(when(col("id") % 10 < 9, 0L).otherwise(col("id")).as("k"),
           concat(lit("payload_"), col("id")).as("pad"))
@@ -52,9 +49,6 @@ class SkewSpec extends SparkSpecBase {
       val p = joined.queryExecution.executedPlan.toString
       assert(p.contains("skew=true"),
         s"AQE did not split the skewed partition\n$p")
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 
@@ -70,7 +64,7 @@ class SkewSpec extends SparkSpecBase {
     // partition and lands within the 2x-uniform band the chooser gated
     // on, with max load an order of magnitude below the unsalted run —
     // the decision, confirmed under the hash the model never saw.
-    import graft.queries.R39Queries.md5Bucket
+    import graft.ops.HashOps.md5Bucket
     import spark.implicits._
     val li = Tables.load(spark, sf001, "lineitem")
       .select(col("l_returnflag").as("fl"),

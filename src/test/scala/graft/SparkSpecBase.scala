@@ -19,6 +19,19 @@ trait SparkSpecBase extends AnyFunSuite {
     finally spark.experimental.extraOptimizations =
       spark.experimental.extraOptimizations.filterNot(_ == rule)
   }
+
+  /** Run `f` with the session confs `pairs` set in order, then restore
+    * each key's previous value, or unset it if it had none.
+    */
+  def withConf[T](pairs: (String, String)*)(f: => T): T = {
+    val prev = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
+  }
 }
 
 object SparkSpecBase {

@@ -17,6 +17,9 @@ class StreamingSpec extends SparkSpecBase {
   private def ts(minute: Int): Timestamp =
     Timestamp.valueOf(f"2024-01-01 ${minute / 60}%02d:${minute % 60}%02d:00")
 
+  private val rocksDbStateStore = "spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
   private val eventsFixture = Seq(
     Event(1, ts(0), 1, 1.0), Event(2, ts(10), 1, 2.0), Event(3, ts(70), 1, 3.0),
     Event(4, ts(5), 2, 4.0), Event(5, ts(50), 2, 5.0))
@@ -266,62 +269,50 @@ class StreamingSpec extends SparkSpecBase {
 
   test("transformWithState EMA folds across micro-batches with one value of state") {
     // transformWithState requires the RocksDB state store
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val mem = MemoryStream[Event](spark)
-    val q = EventStream.emaStream(mem.toDS(), alpha = 0.5)
-      .writeStream.format("memory").queryName("ema").outputMode("append").start()
-    try {
-      mem.addData(Event(1, ts(0), 1, 1.0), Event(2, ts(10), 1, 3.0))
-      q.processAllAvailable()
-      mem.addData(Event(3, ts(20), 1, 4.0)) // second batch: state must carry
-      q.processAllAvailable()
-      val got = spark.table("ema").select("event_id", "ema")
-        .as[(Long, Double)].collect().toMap
-      // seed 1.0; then 0.5·3+0.5·1 = 2.0; next batch 0.5·4+0.5·2 = 3.0
-      assert(got == Map(1L -> 1.0, 2L -> 2.0, 3L -> 3.0), s"got $got")
-    } finally {
-      q.stop()
-      prev match { case Some(v) => spark.conf.set(key, v)
-                   case None => spark.conf.unset(key) }
+    withConf(rocksDbStateStore) {
+      val mem = MemoryStream[Event](spark)
+      val q = EventStream.emaStream(mem.toDS(), alpha = 0.5)
+        .writeStream.format("memory").queryName("ema").outputMode("append").start()
+      try {
+        mem.addData(Event(1, ts(0), 1, 1.0), Event(2, ts(10), 1, 3.0))
+        q.processAllAvailable()
+        mem.addData(Event(3, ts(20), 1, 4.0)) // second batch: state must carry
+        q.processAllAvailable()
+        val got = spark.table("ema").select("event_id", "ema")
+          .as[(Long, Double)].collect().toMap
+        // seed 1.0; then 0.5·3+0.5·1 = 2.0; next batch 0.5·4+0.5·2 = 3.0
+        assert(got == Map(1L -> 1.0, 2L -> 2.0, 3L -> 3.0), s"got $got")
+      } finally q.stop()
     }
   }
 
   test("transformWithState conversion lag seals per user and matches the q240 rule") {
     import EventStream.{ConvOut, TypedEvent}
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val mem = MemoryStream[TypedEvent](spark)
-    val q = EventStream.conversionLagStream(mem.toDS())
-      .writeStream.format("memory").queryName("convlag").outputMode("append").start()
-    try {
-      // user 1: view @0, purchase @10min (cross-batch) → lag 600
-      // user 2: purchase @5 BEFORE view @50 → sealed, never emits
-      // user 3: view only → never emits
-      // user 4: view @0 and purchase @0 same instant → lag 0
-      mem.addData(
-        TypedEvent(1, ts(0), 1, "view"), TypedEvent(2, ts(5), 2, "purchase"),
-        TypedEvent(3, ts(20), 3, "view"),
-        TypedEvent(4, ts(0), 4, "view"), TypedEvent(5, ts(0), 4, "purchase"))
-      q.processAllAvailable()
-      mem.addData(
-        TypedEvent(6, ts(10), 1, "purchase"), TypedEvent(7, ts(50), 2, "view"),
-        TypedEvent(8, ts(60), 1, "purchase"), // second purchase: user already sealed
-        TypedEvent(9, ts(90), 4, "purchase"))
-      q.processAllAvailable()
-      val got = spark.table("convlag").as[ConvOut].collect()
-        .map(c => c.user_id -> c.lag_s).toMap
-      assert(got == Map(1L -> 600L, 4L -> 0L), s"got $got")
-      // exactly one emission per converted user — the seal guarantee
-      assert(spark.table("convlag").count() == 2)
-    } finally {
-      q.stop()
-      prev match { case Some(v) => spark.conf.set(key, v)
-                   case None => spark.conf.unset(key) }
+    withConf(rocksDbStateStore) {
+      val mem = MemoryStream[TypedEvent](spark)
+      val q = EventStream.conversionLagStream(mem.toDS())
+        .writeStream.format("memory").queryName("convlag").outputMode("append").start()
+      try {
+        // user 1: view @0, purchase @10min (cross-batch) → lag 600
+        // user 2: purchase @5 BEFORE view @50 → sealed, never emits
+        // user 3: view only → never emits
+        // user 4: view @0 and purchase @0 same instant → lag 0
+        mem.addData(
+          TypedEvent(1, ts(0), 1, "view"), TypedEvent(2, ts(5), 2, "purchase"),
+          TypedEvent(3, ts(20), 3, "view"),
+          TypedEvent(4, ts(0), 4, "view"), TypedEvent(5, ts(0), 4, "purchase"))
+        q.processAllAvailable()
+        mem.addData(
+          TypedEvent(6, ts(10), 1, "purchase"), TypedEvent(7, ts(50), 2, "view"),
+          TypedEvent(8, ts(60), 1, "purchase"), // second purchase: user already sealed
+          TypedEvent(9, ts(90), 4, "purchase"))
+        q.processAllAvailable()
+        val got = spark.table("convlag").as[ConvOut].collect()
+          .map(c => c.user_id -> c.lag_s).toMap
+        assert(got == Map(1L -> 600L, 4L -> 0L), s"got $got")
+        // exactly one emission per converted user — the seal guarantee
+        assert(spark.table("convlag").count() == 2)
+      } finally q.stop()
     }
   }
 
