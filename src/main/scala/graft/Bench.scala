@@ -1,53 +1,10 @@
 package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
-  // RDD.isLocallyCheckpointed is private[spark] at the Scala level but
-  // public in bytecode (Scala package-private erasure) — one cached
-  // reflective Method keeps the probe cheap and dependency-free.
-  private val isLocalCkpt = classOf[org.apache.spark.rdd.RDD[_]]
-    .getMethod("isLocallyCheckpointed")
-
-  /** Drop per-query locally-checkpointed RDDs, PROTECTING any checkpoint
-    * that a registered cache entry still depends on (ADVICE r7 medium):
-    * the shared neardupClusters base is a cache()'d DataFrame whose
-    * lineage terminates at connectedComponents' final localCheckpoint
-    * (DedupOps.scala:251) — unpersisting that checkpoint would leave the
-    * cached base with no recompute source, so a later cache-partition
-    * recompute (eviction under pressure, partial materialization) throws
-    * "checkpoint block not found". Protection is computed by reachability,
-    * not a name list: walk `dependencies` transitively from every
-    * persistent NON-checkpointed RDD (the cache entries) and keep any
-    * checkpointed RDD whose id the walk reaches; everything checkpointed
-    * and unreachable is per-query transient state and is dropped.
-    *
-    * STANDING INVARIANT (ADVICE r8): the walk sees a cached DataFrame
-    * only once its columnar RDD has MATERIALIZED (getPersistentRDDs
-    * lists RDDs, not CacheManager plans), so every checkpoint-rooted
-    * cached base must be materialized before the first cleanup runs or
-    * its recompute source would be dropped as unreachable. The bench
-    * upholds this by construction: warmCaches (called before any timed
-    * query) counts every registered base, including neardupClusters —
-    * the one whose lineage ends at a localCheckpoint. Any NEW
-    * checkpoint-rooted base must join warmCaches, not rely on lazy
-    * first-use; BenchCleanupSpec pins the reachability contract.
+  /** `Bases.release`, kept under this name because the benchmark harness
+    * under `perfbench/` binds it.
     */
-  private[graft] def cleanupTransients(spark: SparkSession): Unit = {
-    try {
-      val persistent = spark.sparkContext.getPersistentRDDs.values.toSeq
-      val (ckpt, cached) =
-        persistent.partition(r => isLocalCkpt.invoke(r).asInstanceOf[Boolean])
-      if (ckpt.nonEmpty) {
-        val seen = scala.collection.mutable.HashSet.empty[Int]
-        val stack = scala.collection.mutable.Stack.empty[org.apache.spark.rdd.RDD[_]]
-        cached.foreach(stack.push)
-        while (stack.nonEmpty) {
-          val r = stack.pop()
-          if (seen.add(r.id)) r.dependencies.foreach(dep => stack.push(dep.rdd))
-        }
-        ckpt.filterNot(r => seen.contains(r.id)).foreach(_.unpersist(false))
-      }
-    } catch { case _: Throwable => () }
-  }
+  private[graft] def cleanupTransients(spark: SparkSession): Unit = Bases.release(spark)
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -69,7 +26,8 @@ object Bench {
         if (!warnings.contains(w)) warnings += w
       }
     }
-    val suppressed = new java.util.concurrent.atomic.AtomicLong
+    // counted, not captured: it was filling the 3-slot warnings budget
+    val suppressed = Session.dropAccumulatorRaces()
     try {
       import org.apache.logging.log4j.{Level, LogManager}
       import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
@@ -81,23 +39,8 @@ object Bench {
       val capture = new AbstractAppender(
         "graftWarnings", null, null, true, Property.EMPTY_ARRAY) {
         override def append(ev: LogEvent): Unit =
-          if (ev.getLevel.isMoreSpecificThan(Level.ERROR)) {
-            val msg = ev.getMessage.getFormattedMessage
-            // VERDICT r13 #5: "Failed to update accumulator … (Unknown
-            // class)" is the known-benign DAGScheduler race — a late
-            // straggler/zombie task result arriving after its query's
-            // per-query cleanup (cleanupTransients + ContextCleaner GC)
-            // already unregistered the accumulator. It carries no signal
-            // (the per-query -1 value and [bench] stderr line surface
-            // real failures) and was consuming the 3-slot warnings
-            // budget in the driver artifact, so this one class is
-            // counted instead of captured (one summary entry after the
-            // last pass); everything else at ERROR still lands in
-            // "warnings".
-            if (msg.contains("Failed to update accumulator") &&
-                msg.contains("(Unknown class)")) suppressed.incrementAndGet()
-            else warn(ev.getLoggerName.split('.').last, msg)
-          }
+          if (ev.getLevel.isMoreSpecificThan(Level.ERROR))
+            warn(ev.getLoggerName.split('.').last, ev.getMessage.getFormattedMessage)
       }
       capture.start()
       root.getAppenders.keySet().toArray.foreach(k =>
@@ -192,16 +135,11 @@ object Bench {
     // per-query delta a signal instead of noise (VERDICT r5 #1). A query
     // that throws in any pass is recorded as -1.
     val names = SparkEntry.queries.keys.toSeq.sorted
-    // Per-query isolation (VERDICT r6 #1: the +11% cross-suite drift):
-    // localCheckpoint blocks pin executor memory until the ContextCleaner
-    // happens to GC the RDD refs, so late-suite queries ran against a
-    // fuller block manager as the registry grew. After EVERY timed query
-    // (outside the timer — cleanup cost is harness, not query), drop the
-    // per-query locally-checkpointed RDDs via Bench.cleanupTransients,
-    // which protects checkpoints still reachable from registered cache
-    // entries (the neardupClusters base's recompute source — ADVICE r7).
-    // A periodic System.gc() then lets the ContextCleaner reap dropped
-    // broadcast/accumulator refs so they can't accumulate either.
+    // Per-query isolation (VERDICT r6 #1: the +11% cross-suite drift from
+    // a block manager filling with checkpoints): after EVERY timed query,
+    // outside the timer, Bases.release drops the per-query checkpoints,
+    // and a periodic System.gc() lets the ContextCleaner reap dropped
+    // broadcast/accumulator refs.
     var sinceGc = 0
     def timeOne(name: String): Double = {
       val t0 = System.nanoTime()
@@ -211,7 +149,7 @@ object Bench {
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
           warn(s"$name ${e.getClass.getSimpleName}", e.getMessage)
           -1.0 }
-      cleanupTransients(spark)
+      Bases.release(spark)
       sinceGc += 1
       if (sinceGc >= 50) { sinceGc = 0; System.gc() }
       sec

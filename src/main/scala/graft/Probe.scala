@@ -33,7 +33,7 @@ object Probe {
     queries.foreach { q =>
       try SparkEntry.queries(q)(spark, sfDir).count()
       catch { case e: Throwable => println(s"PROBE warm $q FAILED ${e.getMessage}") }
-      Bench.cleanupTransients(spark)
+      Bases.release(spark)
     }
     // ADVICE r13: the timed loop guards each query like the warm loop
     // does, and the variant's confs are unset in a finally — one failing
@@ -54,7 +54,7 @@ object Probe {
                 Some((System.nanoTime() - t0) / 1e9)
               } catch { case e: Throwable =>
                 println(s"PROBE conf=$vn $q FAILED ${e.getMessage}"); None
-              } finally Bench.cleanupTransients(spark)
+              } finally Bases.release(spark)
             }
             if (secs.size < 2) failed = true
             if (secs.nonEmpty) {
@@ -139,7 +139,7 @@ object Probe {
           println(f"PROBE plan_only_$q run$i cons=$tCons%8.1f plan=$tPlan%8.1f ms [$phases]")
         }
       } catch { case e: Throwable => println(s"PROBE plan_only_$q FAILED ${e.getMessage}") }
-      Bench.cleanupTransients(spark)
+      Bases.release(spark)
     }
     // 9b. single-task job latency (vs 32-task range)
     time("job_1task_range1slice", 20) { spark.range(0, 1, 1, 1).count() }

@@ -2,7 +2,8 @@ package graft
 
 /** Dev profiler: times one named query N times in a fresh session
   * (`runMain graft.QTime <name> [sfDir] [n]`), printing per-run wall
-  * seconds so cache/JIT effects are visible.
+  * seconds so cache/JIT effects are visible. Each run's checkpoints are
+  * released after it, outside the timer, as in Bench.
   */
 object QTime {
   def main(args: Array[String]): Unit = {
@@ -14,6 +15,7 @@ object QTime {
       val t0 = System.nanoTime()
       val c = SparkEntry.queries(name)(spark, sfDir).count()
       println(f"QTIME $name run$i ${(System.nanoTime() - t0) / 1e9}%.3f s rows=$c")
+      Bases.release(spark)
     }
     spark.stop()
   }

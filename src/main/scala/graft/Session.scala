@@ -27,4 +27,26 @@ object Session {
   /** `$SPARK_GRAFT_CPUS`, or `default` when unset. */
   def envCores(default: Int): Int =
     sys.env.get("SPARK_GRAFT_CPUS").fold(default)(_.trim.toInt)
+
+  /** Drops and counts, at the root logger, the benign DAGScheduler race
+    * "Failed to update accumulator … (Unknown class)" (a task result late
+    * after its query's release): its traces buried real failures.
+    */
+  def dropAccumulatorRaces(): java.util.concurrent.atomic.AtomicLong = {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{Filter, LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.filter.AbstractFilter
+    val n = new java.util.concurrent.atomic.AtomicLong
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    ctx.getConfiguration.getRootLogger.addFilter(new AbstractFilter {
+      override def filter(ev: LogEvent): Filter.Result = {
+        val msg = ev.getMessage.getFormattedMessage
+        if (msg.contains("Failed to update accumulator") && msg.contains("(Unknown class)")) {
+          n.incrementAndGet(); Filter.Result.DENY
+        } else Filter.Result.NEUTRAL
+      }
+    })
+    ctx.updateLoggers()
+    n
+  }
 }

@@ -10,9 +10,7 @@ import org.apache.spark.sql.functions.{conv, lit, md5, pmod, substring}
   * xxhash64. Each Column function here renders the same value as its
   * `…Sql` twin in the oracle. With at most 15 digits (60 bits) the hash
   * is never negative, so `%` and `pmod` agree on it. A null input gives
-  * null in Spark, but the SQL twin fails on it (DuckDB's concat skips the
-  * null and `CAST('0x' AS BIGINT)` is an error), so oracles hash non-null
-  * keys only.
+  * null in both twins (`||`, unlike DuckDB's `concat`, propagates it).
   */
 object HashOps {
 
@@ -20,7 +18,7 @@ object HashOps {
     conv(substring(md5(c), 1, hexDigits), 16, 10).cast("long")
 
   def md5LongSql(e: String, hexDigits: Int): String =
-    s"CAST(concat('0x', substr(md5($e), 1, $hexDigits)) AS BIGINT)"
+    s"CAST(('0x' || substr(md5($e), 1, $hexDigits)) AS BIGINT)"
 
   /** The 10-digit (40-bit) hash mod `buckets`. */
   def md5Bucket(c: Column, buckets: Int): Column =

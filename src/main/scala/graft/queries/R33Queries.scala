@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.QuerySpec
+import graft.{Bases, QuerySpec}
 import graft.Tables
 import graft.ops.TextOps
 import graft.functions.cosineSim
@@ -48,12 +48,11 @@ object R33Queries {
     * merges in learned order to the full distinct vocabulary — joined
     * back to per-(lang, word) counts: (lang, w, cnt, n_tok). Memoized
     * like the dedup pair bases so the fertility audit and the estimator
-    * calibration read the SAME encoding; materialized in warmCaches
-    * because its lineage terminates at the 6 merge localCheckpoints
-    * (the Bench.cleanupTransients materialize-before-cleanup invariant).
+    * calibration read the SAME encoding; its lineage ends at the 6 merge
+    * localCheckpoints, which the memo owns.
     */
   private[queries] def bpeEncoded(s: SparkSession, d: String): DataFrame =
-    ScaleQueries.memo(s, d, "bpeEncoded") {
+    Bases.memo(s, d, "bpeEncoded") {
       val docs = t(s, d, "documents")
       val spaced = (c: org.apache.spark.sql.Column) =>
         concat(lit(" "), trim(regexp_replace(c, "(.)", "$1 ")), lit(" "))

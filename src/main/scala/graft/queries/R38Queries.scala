@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.QuerySpec
+import graft.{Bases, QuerySpec}
 import graft.ops.HashOps.{md5Bucket, md5BucketSql}
 
 /** Round-8 sixth widening — the PHYSICAL-DESIGN / STATISTICS layer: the
@@ -132,7 +132,7 @@ object R38Queries {
     * SAME materialized table, so the fold costs nothing beyond the core.
     */
   private[queries] def zorderPricing(s: SparkSession, d: String): DataFrame =
-    ScaleQueries.memo(s, d, "zorderPricing")(zorderPricingBuild(s, d))
+    Bases.memo(s, d, "zorderPricing")(zorderPricingBuild(s, d))
 
   private def zorderPricingBuild(s: SparkSession, d: String): DataFrame = {
     val raw = t(s, d, "lineitem").select(col("l_partkey").as("pk"), col("l_suppkey").as("sk"))

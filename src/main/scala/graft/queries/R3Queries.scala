@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.QuerySpec
+import graft.{Bases, QuerySpec}
 import graft.Tables
 import graft.ops.TextOps
 
@@ -45,7 +45,7 @@ object R3Queries {
     * bases — while q137's three PageRank iterations stay live per query.
     */
   private[queries] def tradeEdges(s: SparkSession, d: String): DataFrame =
-    ScaleQueries.memo(s, d, "tradeEdges") {
+    Bases.memo(s, d, "tradeEdges") {
       val pairs = t(s, d, "orders")
         .join(t(s, d, "lineitem"), col("o_orderkey") === col("l_orderkey"))
         .select((col("o_custkey") * 2).as("c"), (col("l_suppkey") * 2 + 1).as("p"))
@@ -60,11 +60,11 @@ object R3Queries {
     * not per q137 invocation (which was 8% of the round-3 bench).
     */
   private def tradeDeg(s: SparkSession, d: String): DataFrame =
-    ScaleQueries.memo(s, d, "tradeDeg")(
+    Bases.memo(s, d, "tradeDeg")(
       graft.ops.GraphOps.degreeEdges(tradeEdges(s, d)))
 
   private def tradeNodes(s: SparkSession, d: String): DataFrame =
-    ScaleQueries.memo(s, d, "tradeNodes")(
+    Bases.memo(s, d, "tradeNodes")(
       graft.ops.GraphOps.nodeList(tradeEdges(s, d)))
 
   /** The CONVERGED 3-iteration rank table itself, memoized like the graph
@@ -75,7 +75,7 @@ object R3Queries {
     * (3.06 s — the single most expensive query in BENCH_r04).
     */
   private def tradeRank(s: SparkSession, d: String): DataFrame =
-    ScaleQueries.memo(s, d, "tradeRank")(
+    Bases.memo(s, d, "tradeRank")(
       graft.ops.GraphOps.pageRankPrepared(tradeDeg(s, d), tradeNodes(s, d), iters = 3))
 
   /** Materialize the trade-graph memo (ScaleQueries.warmCaches hook). */

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.QuerySpec
+import graft.{Bases, QuerySpec}
 import graft.Tables
 import graft.ops.DedupOps
 import graft.functions.cosineSim
@@ -52,7 +52,7 @@ object R4Queries {
       .drop("hr")
 
   private def coSupplyKnnEdges(s: SparkSession, d: String): DataFrame =
-    ScaleQueries.memo(s, d, "coSupplyKnnEdges") {
+    Bases.memo(s, d, "coSupplyKnnEdges") {
       val ps = cappedPartSuppliers(
         t(s, d, "lineitem")
           .select(col("l_partkey").as("p"), col("l_suppkey").as("s")).distinct(),
@@ -77,7 +77,7 @@ object R4Queries {
     * exact verification join stays live per query.
     */
   private[queries] def prefixCand(s: SparkSession, d: String): DataFrame =
-    ScaleQueries.memo(s, d, "prefixCand")(
+    Bases.memo(s, d, "prefixCand")(
       // candidates generated at t slightly BELOW the 0.5 verification
       // threshold: the final filter (and the oracle) keep pairs by
       // ROUNDED jaccard >= 0.5, which admits true J down to 0.4999995 —

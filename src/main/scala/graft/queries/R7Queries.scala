@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.QuerySpec
+import graft.{Bases, QuerySpec}
 import graft.functions.cosineSim
 
 /** Round-5 additions — the two index-family members the round-4 review
@@ -49,7 +49,7 @@ object R7Queries {
     * bench (5.8 s); after, serving is the measured cost.
     */
   private def pqCodebook(s: SparkSession, d: String): DataFrame =
-    ScaleQueries.memo(s, d, "pqCodebook") {
+    Bases.memo(s, d, "pqCodebook") {
       val ex = pqElems(s, d)
       val c0 = ex.where(col("vec_id") < 32)
         .select(col("sub"), col("vec_id").as("code"), col("pos"),
@@ -62,7 +62,7 @@ object R7Queries {
     * serving table ADC scans instead of the floats.
     */
   private def pqCodes(s: SparkSession, d: String): DataFrame =
-    ScaleQueries.memo(s, d, "pqCodes")(
+    Bases.memo(s, d, "pqCodes")(
       pqAssign(pqElems(s, d), pqCodebook(s, d)))
 
   /** The persisted phash band index (doc_id, phash, band, bits): 4×16-bit
@@ -72,7 +72,7 @@ object R7Queries {
     * consumer re-ran the full-corpus decode+hash on every invocation.
     */
   private def phashBands(s: SparkSession, d: String): DataFrame =
-    ScaleQueries.memo(s, d, "phashBands") {
+    Bases.memo(s, d, "phashBands") {
       graft.ops.MultimodalOps.perceptualHash64(
           graft.ops.MultimodalOps.mediaFromDocuments(t(s, d, "documents")))
         .select(col("doc_id"), col("phash"),

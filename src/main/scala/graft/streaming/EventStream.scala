@@ -1263,6 +1263,16 @@ object EventStream {
       .start()
   }
 
+  /** Unpersist (non-blocking) the checkpoint a stream-state frame reads,
+    * once a newer version superseded it; null (no state yet) is a no-op.
+    */
+  private def release(df: DataFrame): Unit =
+    if (df != null) df.queryExecution.analyzed match {
+      case lr: org.apache.spark.sql.execution.LogicalRDD =>
+        lr.rdd.unpersist(blocking = false)
+      case _ => ()
+    }
+
   /** q421's online half: the versioned table maintained from a CHANGELOG
     * stream — the manifest ops of the snapshot arc as they'd arrive from
     * a commit log. Each micro-batch is one commit carrying rows tagged
@@ -1300,12 +1310,7 @@ object EventStream {
         // previous state's checkpoint (and this batch's, folded into
         // merged) can go; the sink contract is that each delivered frame
         // is consumed within its callback.
-        def release(df: DataFrame): Unit = df.queryExecution.analyzed match {
-          case lr: org.apache.spark.sql.execution.LogicalRDD =>
-            lr.rdd.unpersist(blocking = false)
-          case _ => ()
-        }
-        if (state != null) release(state)
+        release(state)
         state = merged
         sink(id, merged)
         release(b)
@@ -1334,12 +1339,6 @@ object EventStream {
       : org.apache.spark.sql.streaming.StreamingQuery = {
     var table: DataFrame = null // (k, y, m, v)
     var view: DataFrame = null // (y, m, cnt, sv, mn, mx)
-    def release(df: DataFrame): Unit =
-      if (df != null) df.queryExecution.analyzed match {
-        case lr: org.apache.spark.sql.execution.LogicalRDD =>
-          lr.rdd.unpersist(blocking = false)
-        case _ => ()
-      }
     ops.writeStream
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
         val b = batch.toDF().localCheckpoint(true)

@@ -13,7 +13,7 @@ import org.apache.spark.sql.classic.ExpressionUtils
   * runtime objects (a Broadcast[BloomFilter] has no SQL literal form).
   * The sanctioned community workaround is this one-file package shim, the
   * same shape Spark-native libraries (ML feature libs, spatial engines)
-  * ship. Keep it minimal: two forwarding calls, no state.
+  * ship. Keep it minimal: forwarding calls, no state.
   */
 object ColumnBridge {
   /** Wrap a Catalyst expression as a user-facing Column. */
@@ -39,4 +39,8 @@ object ColumnBridge {
       ext: SparkSessionExtensions,
       spark: SparkSession): Seq[org.apache.spark.sql.execution.SparkStrategy] =
     ext.buildPlannerStrategies(spark)
+
+  /** RDD's `private[rdd]` isLocallyCheckpointed, on its checkpoint data. */
+  def isLocalCheckpoint(rdd: org.apache.spark.rdd.RDD[_]): Boolean =
+    rdd.checkpointData.exists(_.isInstanceOf[org.apache.spark.rdd.LocalRDDCheckpointData[_]])
 }

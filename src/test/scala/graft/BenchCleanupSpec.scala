@@ -1,57 +1,84 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 
-/** Pins Bench.cleanupTransients' protection contract (ADVICE r7 medium):
-  * a locally-checkpointed RDD that a registered cache entry still depends
-  * on — the shared neardupClusters base's lineage terminates at
-  * connectedComponents' final localCheckpoint — must SURVIVE cleanup (it
-  * is the cached base's only recompute source), while a free-standing
-  * per-query checkpoint must be dropped. Without the reachability walk,
-  * a post-cleanup cache-partition recompute throws "checkpoint block not
-  * found" and the bench records spurious -1 failures for healthy queries.
+/** Pins `Bases.release`'s ownership contract: per-query checkpoints are
+  * dropped, while the checkpoints a memoised base was built on are owned
+  * and survive every release, whether or not the base has been
+  * materialised — the base keeps its recompute source even after a full
+  * eviction of its cache.
   */
 class BenchCleanupSpec extends SparkSpecBase {
+  private val dir = "bench-cleanup-spec"
 
-  private def ckptIds(): Set[Int] = {
-    val probe = classOf[org.apache.spark.rdd.RDD[_]].getMethod("isLocallyCheckpointed")
+  private def ckptIds(): Set[Int] =
     spark.sparkContext.getPersistentRDDs.values
-      .filter(r => probe.invoke(r).asInstanceOf[Boolean]).map(_.id).toSet
-  }
+      .filter(ColumnBridge.isLocalCheckpoint).map(_.id).toSet
 
-  test("cleanup drops free checkpoints but keeps ones a cache entry depends on") {
+  test("release drops eager and lazy checkpoints made outside any memo build") {
     val sp = spark
     import sp.implicits._
     val ids0 = ckptIds()
-    // Transient: an eagerly checkpointed RDD nothing cached depends on
-    // (the per-query state cleanup exists to reap).
-    val transient = (1 to 100).toDF("x").localCheckpoint()
+    val eager = (1 to 100).toDF("x").localCheckpoint()
+    val eagerIds = ckptIds() -- ids0
+    val lazyCk = (1 to 100).toDF("x").where(col("x") > 50).localCheckpoint(false)
+    val lazyIds = ckptIds() -- ids0 -- eagerIds
+    assert(eagerIds.nonEmpty && lazyIds.nonEmpty, "a fixture produced no checkpointed RDD")
+
+    Bases.release(sp)
+
+    val left = ckptIds() & (eagerIds ++ lazyIds)
+    assert(left.isEmpty, s"per-query checkpointed RDDs $left survived release")
+    // live until here: a collected frame's RDD leaves getPersistentRDDs anyway
+    Seq(eager, lazyCk).foreach(java.lang.ref.Reference.reachabilityFence)
+  }
+
+  test("a memoised base keeps its eager and lazy checkpoints across releases and eviction") {
+    val sp = spark
+    import sp.implicits._
+    val ids0 = ckptIds()
+    val base = Bases.memo(sp, dir, "eager+lazy") {
+      val eager = (1 to 100).toDF("x").localCheckpoint()
+      val lazyCk = (1 to 100).toDF("x").where(col("x") % 2 === 0).localCheckpoint(false)
+      eager.join(lazyCk, "x").groupBy((col("x") % 10).as("g")).agg(count(lit(1)).as("n"))
+    }
+    val baseIds = ckptIds() -- ids0
+    assert(baseIds.size >= 2, s"the base build made checkpoints $baseIds, expected 2")
+
+    // not materialised before the first release
+    Bases.release(sp)
+    assert(baseIds.subsetOf(ckptIds()), s"owned checkpoints ${baseIds -- ckptIds()} were dropped")
+    assert(base.count() == 5L)
+    assert(base.agg(sum("n")).as[Long].head() == 50L)
+
+    // a second release, then a full eviction: the cache recomputes from
+    // the owned checkpoint blocks
+    Bases.release(sp)
+    base.unpersist(true)
+    base.cache()
+    assert(base.count() == 5L, "the memoised base failed to recompute after release")
+    assert(base.agg(sum("n")).as[Long].head() == 50L)
+  }
+
+  test("a memo hit records nothing") {
+    val sp = spark
+    import sp.implicits._
+    val first = Bases.memo(sp, dir, "hit")((1 to 10).toDF("x").localCheckpoint())
+    val ids0 = ckptIds()
+    val transient = (1 to 10).toDF("y").localCheckpoint()
     val transientIds = ckptIds() -- ids0
     assert(transientIds.nonEmpty, "transient fixture produced no checkpointed RDD")
-    // Protected: a cached DataFrame built ON TOP of a checkpointed one —
-    // the exact shape connectedComponents hands to memo().cache().
-    val base = (1 to 100).toDF("y").localCheckpoint()
-    val baseIds = ckptIds() -- ids0 -- transientIds
-    assert(baseIds.nonEmpty, "base fixture produced no checkpointed RDD")
-    val cachedOnTop = base.groupBy((col("y") % 10).as("g")).agg(count(lit(1)).as("n")).cache()
-    cachedOnTop.count() // materialize so the cache entry is registered
+    var built = false
+    val again = Bases.memo(sp, dir, "hit") { built = true; (1 to 10).toDF("x").localCheckpoint() }
+    assert(again eq first, "a hit returned a different frame")
+    assert(!built, "a hit ran the build")
 
-    Bench.cleanupTransients(sp)
+    Bases.release(sp)
 
-    val after = ckptIds()
-    assert((transientIds & after).isEmpty,
-      s"free-standing checkpointed RDDs $transientIds survived cleanup")
-    assert(baseIds.subsetOf(after),
-      s"cache-reachable checkpointed RDDs ${baseIds -- after} were dropped — " +
-        "the cached base lost its recompute source")
-    // The semantic consequence: after a full eviction the cached result
-    // must still RECOMPUTE, which walks through base's checkpoint blocks.
-    cachedOnTop.unpersist(true)
-    cachedOnTop.cache()
-    assert(cachedOnTop.count() == 10L,
-      "cached-on-checkpoint base failed to recompute after cleanup")
-    cachedOnTop.unpersist(true)
-    base.unpersist(true)
-    transient.unpersist(true)
+    assert((ckptIds() & transientIds).isEmpty,
+      "a checkpoint made before a memo hit became owned by it")
+    assert(first.count() == 10L)
+    java.lang.ref.Reference.reachabilityFence(transient)
   }
 }
