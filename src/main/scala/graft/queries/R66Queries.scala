@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.QuerySpec
@@ -472,95 +472,65 @@ object R66Queries {
     QuerySpec(
       "q439_result_cache",
       (s, d) => {
-        val base0 = t(s, d, "orders").select(col("o_orderkey").as("k"),
+        val base = t(s, d, "orders").select(col("o_orderkey").as("k"),
           year(col("o_orderdate")).cast("long").as("yr"),
           (year(col("o_orderdate")) * 100 + month(col("o_orderdate")))
             .cast("long").as("ym"),
           expr("CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)").as("v"))
-          .localCheckpoint(true) // eager: eight concurrent legs consume it
-        val v0 = base0.where(col("yr") <= 1997L)
-        val d1 = base0.where(col("yr") === 1998L)
-        // v2's delta: fresh keys landing back inside 1995
-        val d2 = base0.where(col("yr") === 1995L)
-          .select((col("k") + 1000000000L).as("k"), col("yr"), col("ym"), col("v"))
-        val v1 = v0.unionByName(d1)
-        val v2 = v1.unionByName(d2)
-        def parts(df: DataFrame): DataFrame = df.select("ym").distinct()
-        def q1Val(df: DataFrame): DataFrame =
-          df.where(col("yr") === 1995L)
-            .agg(count(lit(1)).as("cnt"), coalesce(sum("v"), lit(0L)).as("sv"))
-        def q2Val(df: DataFrame): DataFrame =
-          df.agg(count(lit(1)).as("cnt"), coalesce(sum("v"), lit(0L)).as("sv"))
-        // all eight per-version artifacts (two cached results, two read
-        // partition sets, the fused grader pass, three touched sets)
-        // depend only on the stored base0 — materialize them
-        // concurrently (graft.Par, guide §2.6)
-        val legsP = graft.Par(
-          () => q1Val(v0).localCheckpoint(false),
-          () => q2Val(v0).localCheckpoint(false),
-          () => parts(v0.where(col("yr") === 1995L)).localCheckpoint(false),
-          () => parts(v0).localCheckpoint(false),
-          // ONE grader pass over the FINAL state's rows: every (query,
-          // version) direct value via membership flags (d2's synthetic
-          // keys sit above 10⁹, 1998 rows identify v1) — six recomputes
-          // fused into a single aggregation, q385 grader convention
-          () => v2.agg(
-          coalesce(sum(when(col("yr") === 1995L && col("k") < 1000000000L, 1L)
-            .otherwise(0L)), lit(0L)).as("q1v0_n"),
-          coalesce(sum(when(col("yr") === 1995L && col("k") < 1000000000L, col("v"))
-            .otherwise(0L)), lit(0L)).as("q1v0_s"),
-          coalesce(sum(when(col("yr") === 1995L, 1L).otherwise(0L)), lit(0L))
-            .as("q1v2_n"),
-          coalesce(sum(when(col("yr") === 1995L, col("v")).otherwise(0L)), lit(0L))
-            .as("q1v2_s"),
-          coalesce(sum(when(col("yr") <= 1997L && col("k") < 1000000000L, 1L)
-            .otherwise(0L)), lit(0L)).as("q2v0_n"),
-          coalesce(sum(when(col("yr") <= 1997L && col("k") < 1000000000L, col("v"))
-            .otherwise(0L)), lit(0L)).as("q2v0_s"),
-          coalesce(sum(when(col("k") < 1000000000L, 1L).otherwise(0L)), lit(0L))
-            .as("q2v1_n"),
-          coalesce(sum(when(col("k") < 1000000000L, col("v")).otherwise(0L)), lit(0L))
-            .as("q2v1_s"),
-          count(lit(1)).as("q2v2_n"),
-          coalesce(sum("v"), lit(0L)).as("q2v2_s"))
-          .localCheckpoint(false),
-          // per-commit touched partition sets, computed once
-          () => parts(v0.limit(0)).localCheckpoint(false),
-          () => parts(d1).localCheckpoint(false),
-          () => parts(d2).localCheckpoint(false))
-        val Seq(cache1, cache2, q1Parts, allParts, g, touched0, touched1, touched2) = legsP
+        // the final state v2 = v0 ∪ d1 ∪ d2, each row tagged with the
+        // commit that wrote it (c); d2 = fresh keys landing back in 1995
+        val v2 = base.where(col("yr") <= 1997L).withColumn("c", lit(0))
+          .unionByName(base.where(col("yr") === 1998L).withColumn("c", lit(1)))
+          .unionByName(base.where(col("yr") === 1995L)
+            .select((col("k") + 1000000000L).as("k"), col("yr"), col("ym"),
+              col("v"), lit(2).as("c")))
+        // ONE aggregate pass computes every artifact, because each (two
+        // cached results, read and touched partition sets, six direct
+        // recomputes) is a function of v2's tagged rows, and each set
+        // holds at most one entry per month partition. Cached values read
+        // the commit tag, the graders key/year membership flags (d2's keys
+        // sit above 10⁹; q385 convention): two derivations, so
+        // audit_correct certifies one against the other.
+        def pair(name: String, p: Column): Seq[Column] = Seq(lit(1L) -> "_n", col("v") -> "_s")
+          .map { case (x, sfx) => coalesce(sum(when(p, x).otherwise(0L)), lit(0L)).as(name + sfx) }
+        def months(p: Column): Column = collect_set(when(p, col("ym")))
+        val atV0 = col("c") === 0
+        val in1995 = col("yr") === 1995L
+        val preV2 = col("k") < 1000000000L
+        val aggs = pair("c1", atV0 && in1995) ++ pair("c2", atV0) ++
+          Seq(months(atV0 && in1995).as("q1p"), months(atV0).as("allp"),
+            months(col("c") === 1).as("t1"), months(col("c") === 2).as("t2")) ++
+          pair("q1v0", in1995 && preV2) ++ pair("q1v2", in1995) ++
+          pair("q2v0", col("yr") <= 1997L && preV2) ++ pair("q2v1", preV2) ++
+          pair("q2v2", lit(true))
+        val g = v2.agg(aggs.head, aggs.tail: _*)
 
-        def leg(qid: String, ver: String, cached: DataFrame,
-            readParts: DataFrame, readsAll: Boolean, touched: DataFrame,
-            dN: String, dS: String): DataFrame = {
-          val ov = readParts.join(touched, "ym")
-            .agg(count(lit(1)).as("overlap_parts"))
-          val tn = touched.agg(count(lit(1)).as("touched_parts"))
-          val direct = g.select(col(dN).as("d_cnt"), col(dS).as("d_sv"))
-          val ra = if (readsAll) "touched_parts = 0" else "overlap_parts = 0"
-          broadcast(cached.select(col("cnt").as("c_cnt"), col("sv").as("c_sv")))
-            .crossJoin(broadcast(direct)).crossJoin(broadcast(ov))
-            .crossJoin(broadcast(tn))
-            .select(lit(qid).as("query"), lit(ver).as("ver"),
-              col("touched_parts"), col("overlap_parts"),
-              lit(if (readsAll) 1L else 0L).as("reads_all"),
-              expr(s"CAST(CASE WHEN $ra THEN 1 ELSE 0 END AS BIGINT)")
-                .as("valid"),
-              expr("CAST(CASE WHEN overlap_parts = 0 THEN 1 ELSE 0 END AS BIGINT)")
-                .as("naive_valid"),
-              col("c_cnt").as("cached_cnt"), col("c_sv").as("cached_sv"),
-              col("d_cnt").as("direct_cnt"), col("d_sv").as("direct_sv"),
-              expr(s"CAST(CASE WHEN (CASE WHEN $ra THEN 1 ELSE 0 END) = (CASE WHEN c_cnt = d_cnt AND c_sv = d_sv THEN 1 ELSE 0 END) THEN 1 ELSE 0 END AS BIGINT)")
-                .as("audit_correct"),
-              expr("CAST(CASE WHEN (CASE WHEN overlap_parts = 0 THEN 1 ELSE 0 END) = (CASE WHEN c_cnt = d_cnt AND c_sv = d_sv THEN 1 ELSE 0 END) THEN 1 ELSE 0 END AS BIGINT)")
-                .as("naive_correct"))
+        val noParts = typedLit(Seq.empty[Long])
+        def flag(p: Column): Column = when(p, 1L).otherwise(0L)
+        def row(qid: String, ver: String, cached: String, readParts: String,
+            readsAll: Boolean, touched: Column, direct: String): Column = {
+          val tp = size(touched).cast("long")
+          val op = size(array_intersect(col(readParts), touched)).cast("long")
+          val valid = flag((if (readsAll) tp else op) === 0L)
+          val naive = flag(op === 0L)
+          val Seq(cn, cs, dn, ds) = Seq(s"${cached}_n", s"${cached}_s",
+            s"${direct}_n", s"${direct}_s").map(col)
+          val hit = flag(cn === dn && cs === ds)
+          struct(lit(qid).as("query"), lit(ver).as("ver"), tp.as("touched_parts"),
+            op.as("overlap_parts"), lit(if (readsAll) 1L else 0L).as("reads_all"),
+            valid.as("valid"), naive.as("naive_valid"), cn.as("cached_cnt"),
+            cs.as("cached_sv"), dn.as("direct_cnt"), ds.as("direct_sv"),
+            flag(valid === hit).as("audit_correct"), flag(naive === hit).as("naive_correct"))
         }
-        leg("Q1:rev1995", "v0", cache1, q1Parts, readsAll = false, touched0, "q1v0_n", "q1v0_s")
-          .unionByName(leg("Q2:global", "v0", cache2, allParts, readsAll = true, touched0, "q2v0_n", "q2v0_s"))
-          .unionByName(leg("Q1:rev1995", "v1", cache1, q1Parts, readsAll = false, touched1, "q1v0_n", "q1v0_s"))
-          .unionByName(leg("Q2:global", "v1", cache2, allParts, readsAll = true, touched1, "q2v1_n", "q2v1_s"))
-          .unionByName(leg("Q1:rev1995", "v2", cache1, q1Parts, readsAll = false, touched2, "q1v2_n", "q1v2_s"))
-          .unionByName(leg("Q2:global", "v2", cache2, allParts, readsAll = true, touched2, "q2v2_n", "q2v2_s"))
+        g.select(explode(array(
+            row("Q1:rev1995", "v0", "c1", "q1p", readsAll = false, noParts, "q1v0"),
+            row("Q2:global", "v0", "c2", "allp", readsAll = true, noParts, "q2v0"),
+            row("Q1:rev1995", "v1", "c1", "q1p", readsAll = false, col("t1"), "q1v0"),
+            row("Q2:global", "v1", "c2", "allp", readsAll = true, col("t1"), "q2v1"),
+            row("Q1:rev1995", "v2", "c1", "q1p", readsAll = false, col("t2"), "q1v2"),
+            row("Q2:global", "v2", "c2", "allp", readsAll = true, col("t2"), "q2v2")))
+            .as("r"))
+          .select("r.*")
           .orderBy("query", "ver")
       },
       Some {

@@ -1,11 +1,16 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
+import scala.concurrent.{Await, Promise}
+import scala.concurrent.duration._
+import scala.util.{Failure, Try}
+
+import org.apache.spark.{SparkException, TaskContext}
 
 /** `graft.Par` throws a leg's failure as soon as it happens, naming the
-  * leg, and keeps results in leg order however the legs finish.
+  * leg, cancels its siblings' Spark jobs, and keeps results in leg order
+  * however the legs finish.
   */
-class ParSpec extends AnyFunSuite {
+class ParSpec extends SparkSpecBase {
 
   private def slowLeg(): Int = { Thread.sleep(20000); 1 }
   private def failingLeg(): Int = throw new IllegalStateException("boom")
@@ -30,5 +35,38 @@ class ParSpec extends AnyFunSuite {
     assert(Par(() => slow(400, 1), () => slow(200, 2), () => 3) == Seq(1, 2, 3))
     assert(Par.par2(slow(300, "a"), 2L) == (("a", 2L)))
     assert(Par.par3(slow(300, 1), slow(150, "b"), 3.0) == ((1, "b", 3.0)))
+  }
+
+  test("a failing leg cancels a sibling leg's running Spark job") {
+    val sc = spark.sparkContext
+    val sibling = Promise[Long]()
+    def busy(): Long = {
+      sibling.complete(Try(sc.parallelize(1 to 4, 4).map(ParSpec.runUntilKilled).count()))
+      0L
+    }
+    def failOnceBusy(): Long = {
+      val t0 = System.nanoTime()
+      while (sc.statusTracker.getActiveJobIds().isEmpty && System.nanoTime() - t0 < 20e9)
+        Thread.sleep(20)
+      throw new IllegalStateException("boom")
+    }
+    try {
+      intercept[RuntimeException](Par(() => busy(), () => failOnceBusy()))
+      Try(Await.result(sibling.future, 15.seconds)) match {
+        case Failure(e: SparkException) =>
+          assert(e.getMessage.contains("Par leg 2/2 failed"), e.getMessage)
+        case other => fail(s"the sibling job was not cancelled by Par: $other")
+      }
+    } finally sc.cancelAllJobs()
+  }
+}
+
+object ParSpec {
+  /** A task that runs for 30 s unless its job is cancelled. */
+  def runUntilKilled(x: Int): Int = {
+    val tc = TaskContext.get()
+    val t0 = System.nanoTime()
+    while (!tc.isInterrupted() && System.nanoTime() - t0 < 30e9) Thread.sleep(20)
+    x
   }
 }
