@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.functions.GraftExtensions
+
 /** The one session shape every entry point (Bench, Verify, QTime, Probe,
   * Explain, Smoke) and the test suites run on: `local[cores]` with as
   * many shuffle partitions as cores, no UI, UTC session time, nanosecond
@@ -9,20 +11,22 @@ import org.apache.spark.sql.SparkSession
   * in graft.Tables.events), and log level ERROR: stray WARN lines once
   * pushed Bench's one-line JSON result out of a short captured output tail.
   *
-  * Queries need nothing installed on the session: native expressions are
-  * built as Columns (graft.functions), and SQL names for them exist only
-  * in sessions built with `builder(n).withExtensions(new GraftExtensions)`.
+  * Every session carries [[GraftExtensions]], installed once when the
+  * session is built: the SQL names of the native expressions and the
+  * planner strategy of the TopKPerGroup node. Queries write no session
+  * state; they build native expressions as Columns (graft.functions) and
+  * apply optimizer rules to their own plans (q433).
   */
 object Session {
-  def builder(cores: Int): SparkSession.Builder = SparkSession.builder()
+  def apply(cores: Int): SparkSession = SparkSession.builder()
     .master(s"local[$cores]")
     .config("spark.sql.shuffle.partitions", cores.toLong)
     .config("spark.ui.enabled", false)
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.legacy.parquet.nanosAsLong", true)
     .config("spark.log.level", "ERROR")
-
-  def apply(cores: Int): SparkSession = builder(cores).getOrCreate()
+    .withExtensions(new GraftExtensions)
+    .getOrCreate()
 
   /** `$SPARK_GRAFT_CPUS`, or `default` when unset. */
   def envCores(default: Int): Int =

@@ -7,38 +7,14 @@ import org.apache.spark.sql.SparkSession
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = Session.builder(4)
-      .withExtensions(new graft.functions.GraftExtensions).getOrCreate()
-    // the native function's SQL name comes from the extension alone
+    val spark = Session(4)
+    // the native function's SQL name comes from GraftExtensions, which
+    // graft.Session installs
     val cos = spark.sql(
       """SELECT cosine_sim(CAST(array(1.0, 0.0) AS array<float>),
                            CAST(array(1.0, 0.0) AS array<float>)) AS c""")
       .head().getDouble(0)
     println(s"EXT_COSINE_OK=${math.abs(cos - 1.0) < 1e-12}")
-    // the injected optimizer rule canonicalizes symmetric cosine_sim
-    // argument order: both spellings optimize to the same plan
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    def planOf(sql: String) = {
-      emb.createOrReplaceTempView("emb_smoke")
-      spark.sql(sql).queryExecution.optimizedPlan.canonicalized
-    }
-    val pa = planOf("SELECT cosine_sim(embedding, reverse(embedding)) AS c FROM emb_smoke")
-    val pb = planOf("SELECT cosine_sim(reverse(embedding), embedding) AS c FROM emb_smoke")
-    println(s"EXT_RULE_CANONICAL=${pa == pb}")
-    // the injected RI-elimination rule consumes a constraint validated
-    // from data: once RiConstraints registers the audit, the PK-FK
-    // inner join against the bare dim-key subtree leaves the plan
-    val ordS = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
-    val cuS = spark.read.parquet("/root/testdata/sf0.001/customer.parquet")
-    graft.plans.RiConstraints.validate(ordS, cuS, "o_custkey", "c_custkey")
-    val elim = ordS.join(cuS.select("c_custkey").distinct(),
-        ordS("o_custkey") === org.apache.spark.sql.functions.col("c_custkey"))
-      .select(ordS("o_orderkey"))
-      .queryExecution.optimizedPlan
-      .collect { case j: org.apache.spark.sql.catalyst.plans.logical.Join => j }
-      .isEmpty
-    println(s"EXT_RIELIM_OK=$elim")
-    graft.plans.RiConstraints.clear()
     val df = SparkEntry.entry(spark)
     println(s"ENTRY_ROWS=${df.count()}")
     df.show(false)

@@ -6,8 +6,8 @@ import org.apache.spark.sql.graft.ColumnBridge.{column, expression}
 /** Column constructors for the native expressions. Queries build them
   * directly, so they run on any session without touching its function
   * registry; the SQL names (`cosine_sim`, `jaro_winkler`,
-  * `bitmap_distinct`) exist only in sessions built with
-  * [[GraftExtensions]].
+  * `bitmap_distinct`) come from [[GraftExtensions]], which `graft.Session`
+  * installs on every session it builds.
   */
 package object functions {
   /** Fused cosine similarity of two `array<float>` columns ([[CosineSimilarity]]). */

@@ -1,28 +1,18 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, Descending, SortOrder}
 import org.apache.spark.sql.graft.ColumnBridge
 
-import graft.plans.{TopKPerGroup, TopKPerGroupStrategy}
+import graft.plans.TopKPerGroup
 
 /** User-facing entry for the native per-group top-k plan node
   * ([[graft.plans.TopKPerGroup]]). See the node's Scaladoc for why this
-  * beats the `Window(row_number) + Filter` idiom at corpus scale.
+  * beats the `Window(row_number) + Filter` idiom at corpus scale. The
+  * node is planned by TopKPerGroupStrategy, which `graft.Session` installs
+  * on every session it builds.
   */
 object TopKOps {
-
-  /** Install the planner strategy on a session: idempotent and add-only,
-    * the one session-wide write a query may make. Native expressions and
-    * optimizer rules apply to a single Column or plan, but a planner
-    * strategy can only be installed on the session. Sessions built
-    * `withExtensions(new GraftExtensions)` already carry it.
-    */
-  def ensureStrategy(spark: SparkSession): Unit = synchronized {
-    if (!spark.experimental.extraStrategies.contains(TopKPerGroupStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKPerGroupStrategy
-  }
 
   /** The first `k` rows of each group under `orderBy` — columns named with
     * `(name, descending)` pairs. `orderBy` must be a total order within
@@ -38,7 +28,6 @@ object TopKOps {
       "topKPerGroup needs at least one group column — for a GLOBAL top-k use " +
         "df.orderBy(...).limit(k), which Spark plans as TakeOrderedAndProject")
     val spark = df.sparkSession
-    ensureStrategy(spark)
     val plan = ColumnBridge.analyzed(df)
     def attr(n: String): Attribute = plan.output.find(_.name == n).getOrElse(
       throw new IllegalArgumentException(

@@ -9,19 +9,20 @@ import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LeafNode,
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.functions.{col, count, expr, lit, sum}
 
-/** Materialized-view catalog: a registered view is a grain aggregate
-  * (GROUP BY `dims` with COUNT(*) and per-measure SUM partials) over a
-  * single base relation, VALIDATED FROM DATA at registration — the
+/** Materialized-view validation: a view is a grain aggregate (GROUP BY
+  * `dims` with COUNT(*) and per-measure SUM partials) over a single base
+  * relation, VALIDATED FROM DATA before any rule may use it — the
   * recomputed grain and the offered view must match exactly in both
   * set-difference directions, the ANALYZE-grade price paid once. Spark
   * has no MV catalog; warehouses answer coarser aggregates from a
   * finer view only because a catalog vouches that the view IS the
-  * grain — this object is that catalog, the q417/q418/q419 arc's
-  * optimizer half (the RiConstraints pattern one floor up: there a
-  * data proof deletes a join, here it re-roots an Aggregate).
+  * grain. Here a catalog is a value: the [[Mv]]s that [[validate]]
+  * returns, handed to [[MvRewriteRule]] (the q417/q418/q419 arc's
+  * optimizer half). Nothing is kept between calls, so concurrent
+  * callers cannot see each other's views.
   *
   * Both the base and the view must be single-leaf plans (caller
-  * checkpoints them): the base leaf, canonicalized, keys the catalog —
+  * checkpoints them): the base leaf, canonicalized, keys the view —
   * the rule only fires on the exact relation the validation saw — and
   * the view leaf must be a [[MultiInstanceRelation]] so every rewrite
   * splices a fresh-exprId instance (two rewrites in one query must not
@@ -34,7 +35,7 @@ object MvCatalog {
       dims: Seq[String],
       cntCol: String,
       sumCols: Map[String, String],
-      /** Measures proven null-free at registration (COUNT(m) == COUNT(*)
+      /** Measures proven null-free at validation (COUNT(m) == COUNT(*)
         * over the view's input) — the data proof that makes the
         * AVG(m) → SUM(sum_m)/SUM(cnt) rewrite sound: with any NULL in
         * the measure, AVG's denominator is COUNT(m), not COUNT(*).
@@ -47,16 +48,11 @@ object MvCatalog {
         * carries them), residual conjuncts dim-only and re-applied.
         */
       viewPreds: Seq[Expression],
-      /** |view| rows, measured at registration — the cost key: when
-        * several registered views can answer a query, the smallest
+      /** |view| rows, measured at validation — the cost key: when
+        * several views in a catalog can answer a query, the smallest
         * wins (fewest rows scanned).
         */
       viewRows: Long)
-
-  // a relation may carry SEVERAL views (the full grain, a coarser
-  // rollup, a filtered partial) — lookup returns them cheapest-first
-  private val registered =
-    new java.util.concurrent.ConcurrentHashMap[LogicalPlan, List[Mv]]()
 
   private[plans] def splitAnd(e: Expression): Seq[Expression] = e match {
     case org.apache.spark.sql.catalyst.expressions.And(l, r) =>
@@ -79,17 +75,17 @@ object MvCatalog {
   /** Validate `view` as the exact (dims, COUNT(*), SUM(measures)) grain
     * of `base` — or, when `where` is given, of `base.where(and(where))`
     * (a PARTIAL view; queries must subsume the predicate to use it) —
-    * and register it. `sumCols` maps each base measure column to the
-    * view column holding its per-group SUM partial. Refuses (returns
-    * false) when either side is not a single-leaf plan, a named column
-    * is missing, a `where` predicate is non-deterministic, or the
+    * and return it as an [[Mv]]. `sumCols` maps each base measure column
+    * to the view column holding its per-group SUM partial. Refuses
+    * (returns None) when either side is not a single-leaf plan, a named
+    * column is missing, a `where` predicate is non-deterministic, or the
     * recomputed grain differs from the offered view in either
     * direction. Also records, per measure, whether the view's input had
     * zero NULLs in it — the proof that arms the AVG rewrite.
     */
-  def register(base: DataFrame, view: DataFrame, dims: Seq[String],
+  def validate(base: DataFrame, view: DataFrame, dims: Seq[String],
       cntCol: String, sumCols: Map[String, String],
-      where: Seq[org.apache.spark.sql.Column] = Nil): Boolean = {
+      where: Seq[org.apache.spark.sql.Column] = Nil): Option[Mv] = {
     val baseLeaves = base.queryExecution.analyzed.collect { case l: LeafNode => l }
     val viewLeaves = view.queryExecution.analyzed.collect { case l: LeafNode => l }
     val shapesOk = baseLeaves.size == 1 && viewLeaves.size == 1 &&
@@ -98,17 +94,17 @@ object MvCatalog {
       dims.forall(d => base.columns.contains(d)) &&
       sumCols.forall { case (m, v) => base.columns.contains(m) && view.columns.contains(v) } &&
       view.columns.contains(cntCol) && dims.forall(view.columns.contains)
-    if (!shapesOk) return false
+    if (!shapesOk) return None
     val filtered = where.foldLeft(base)((df, c) => df.where(c))
     // resolved conjuncts, pulled from the analyzed Filter nodes
     val resolvedPreds = filtered.queryExecution.analyzed
       .collect { case Filter(cond, _) => splitAnd(cond) }.flatten
-    if (!resolvedPreds.forall(_.deterministic)) return false
+    if (!resolvedPreds.forall(_.deterministic)) return None
     // ONE corpus pass: the recomputed grain carries the per-measure NULL
     // census alongside the COUNT/SUM partials, and the validation is a
     // single full-outer dim-join against the offered view (both
     // directions of the old double-exceptAll in one aggregation) —
-    // registration's ANALYZE-grade price, but paid once, not four times
+    // validation's ANALYZE-grade price, but paid once, not four times
     val ms = sumCols.toSeq.sortBy(_._1)
     val aggs = count(lit(1)).cast("long").as(cntCol) +:
       (ms.map { case (m, v) => sum(col(m)).as(v) } ++
@@ -123,7 +119,7 @@ object MvCatalog {
     // dim-join compare) are caught by the row-count guard; the measured
     // |view| becomes the cost key for cheapest-view selection
     val viewRows = view.count()
-    if (viewRows != grain.count()) return false
+    if (viewRows != grain.count()) return None
     val valCols = cntCol +: ms.map(_._2)
     val gSide = grain.select(dims.map(col) ++ valCols.map(c => col(c).as(s"g_$c")): _*)
     val oSide = view.select(dims.map(col) ++ valCols.map(c => col(c).as(s"o_$c")): _*)
@@ -134,7 +130,7 @@ object MvCatalog {
         sum(org.apache.spark.sql.functions.when(expr(badPred), 1L)
           .otherwise(0L)), lit(0L)).as("bad"))
       .head()
-    if (checkRow.getLong(0) != 0L) return false
+    if (checkRow.getLong(0) != 0L) return None
     // per-measure NULL census, reduced from the grain — zero nulls makes
     // AVG(m) = SUM(sum_m)/SUM(cnt) exact (COUNT(m) == COUNT(*))
     val avgSafe: Set[String] =
@@ -146,32 +142,20 @@ object MvCatalog {
         ms.map(_._1).filter(m => census.getAs[Long](m) == 0L)
           .map(_.toLowerCase).toSet
       }
-    val mv = Mv(baseLeaves.head.canonicalized,
+    Some(Mv(baseLeaves.head.canonicalized,
       viewLeaves.head.asInstanceOf[LeafNode],
       dims.map(_.toLowerCase), cntCol.toLowerCase,
       sumCols.map { case (m, v) => m.toLowerCase -> v.toLowerCase },
-      avgSafe, resolvedPreds.map(normByName), viewRows)
-    registered.merge(baseLeaves.head.canonicalized, List(mv),
-      (olds, news) => news ::: olds.filterNot(
-        _.viewLeaf.canonicalized == mv.viewLeaf.canonicalized))
-    true
+      avgSafe, resolvedPreds.map(normByName), viewRows))
   }
-
-  /** All registered views of the relation, CHEAPEST first — when
-    * several can answer a query, the rule takes the first that
-    * rewrites (fewest rows scanned wins).
-    */
-  def lookup(leaf: LogicalPlan): Seq[Mv] =
-    Option(registered.get(leaf.canonicalized)).getOrElse(Nil)
-      .sortBy(_.viewRows)
-
-  def clear(): Unit = registered.clear()
 }
 
-/** Aggregate re-rooting onto a registered materialized view — the
-  * classic MV-subsumption rewrite Spark itself cannot perform for the
-  * same reason as the inner PK-FK elimination: it needs a DATA proof
-  * (the view IS the grain) that no plan shape carries. An
+/** Aggregate re-rooting onto a validated materialized view from `views`
+  * — the classic MV-subsumption rewrite Spark itself cannot perform: it
+  * needs a DATA proof (the view IS the grain) that no plan shape
+  * carries. A relation may carry SEVERAL views (the full grain, a coarser
+  * rollup, a filtered partial); when several can answer a query, the
+  * cheapest that rewrites wins (fewest rows scanned). An
   * `Aggregate(g, a, base)` whose groupings are dim columns, whose
   * aggregates are decomposable over the grain (COUNT(*) → SUM(cnt),
   * SUM(m) → SUM(sum_m), MIN/MAX over a dim column → themselves), and
@@ -180,12 +164,12 @@ object MvCatalog {
   * difference between a footer-sized scan and the corpus.
   *
   * Soundness guards, each a certified refusal in MvRewriteSpec:
-  *  - the subtree below the Aggregate must be the REGISTERED leaf
+  *  - the subtree below the Aggregate must be a view's VALIDATED leaf
   *    (canonicalized match), optionally under pruning Projects of bare
   *    attributes and Filters whose references are all dim columns — a
   *    filter on a non-dim column (the grain already folded it away),
-  *    a grouping on a non-dim column, or a same-shaped but unregistered
-  *    relation all refuse;
+  *    a grouping on a non-dim column, or a same-shaped relation that no
+  *    view in `views` was validated on all refuse;
   *  - only decomposable aggregates rewrite: DISTINCT aggregates,
   *    FILTER-clause aggregates, AVG, and MIN/MAX over a measure refuse;
   *  - every rewritten output keeps the original name, exprId, AND
@@ -194,20 +178,25 @@ object MvCatalog {
   *  - the spliced view is a fresh [[MultiInstanceRelation]] instance
   *    per rewrite, so repeated matches in one plan cannot alias.
   */
-object MvRewriteRule extends Rule[LogicalPlan] {
+final case class MvRewriteRule(views: Seq[MvCatalog.Mv]) extends Rule[LogicalPlan] {
 
-  /** Unwrap pruning Projects / Filters down to a registered leaf,
-    * collecting the raw filter conjuncts on the way.
+  private val cheapestFirst = views.sortBy(_.viewRows)
+
+  /** Unwrap pruning Projects / Filters down to a leaf some view covers,
+    * collecting the raw filter conjuncts on the way; returns the leaf's
+    * views, cheapest first, and the conjuncts.
     */
   private def unwrap(plan: LogicalPlan, preds: Seq[Expression]):
-      Option[(LeafNode, Seq[Expression])] =
+      Option[(Seq[MvCatalog.Mv], Seq[Expression])] =
     plan match {
       case Project(ps, child) if ps.forall(_.isInstanceOf[AttributeReference]) =>
         unwrap(child, preds)
       case Filter(cond, child) =>
         unwrap(child, preds :+ cond)
-      case leaf: LeafNode if MvCatalog.lookup(leaf).nonEmpty =>
-        Some((leaf, preds))
+      case leaf: LeafNode =>
+        val key = leaf.canonicalized
+        val covering = cheapestFirst.filter(_.source == key)
+        if (covering.isEmpty) None else Some((covering, preds))
       case _ => None
     }
 
@@ -229,7 +218,7 @@ object MvRewriteRule extends Rule[LogicalPlan] {
       val residual = normed.collect {
         case (p, n) if !mv.viewPreds.contains(n) => p
       }.filterNot {
-        // IsNotNull over a measure PROVEN null-free at registration
+        // IsNotNull over a measure PROVEN null-free at validation
         // (over the view's own filtered input) is vacuously true —
         // the optimizer infers these from the very conjuncts we
         // just matched, and they must not block the rewrite.
@@ -248,12 +237,12 @@ object MvRewriteRule extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
     case agg @ Aggregate(groupings, aggExprs, child, _) =>
       unwrap(child, Nil) match {
-        case Some((leaf, preds)) =>
+        case Some((candidates, preds)) =>
           // candidates come back cheapest-first; the first view that
           // admits the filters, covers the groupings AND rewrites every
           // output wins — coarser/filtered views refuse individually
           // and the next candidate gets its turn
-          MvCatalog.lookup(leaf).view.flatMap { mv =>
+          candidates.view.flatMap { mv =>
             val coveredGroupings = groupings.forall {
               case a: AttributeReference => mv.dims.contains(a.name.toLowerCase)
               case _ => false
@@ -298,7 +287,7 @@ object MvRewriteRule extends Rule[LogicalPlan] {
         case AggregateExpression(Max(a: AttributeReference), _, false, None, _) =>
           dimAttr(a.name).map(v => Max(v).toAggregateExpression())
         // AVG(m) = SUM(sum_m) / SUM(cnt) — sound ONLY under the
-        // registration-time data proof that m is null-free (avgSafe):
+        // validation-time data proof that m is null-free (avgSafe):
         // with a NULL the true denominator is COUNT(m), not COUNT(*).
         // The caller's dataType check refuses decimal AVG (Spark gives
         // it a widened decimal type, Divide-of-doubles does not).

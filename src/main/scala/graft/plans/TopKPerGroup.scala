@@ -39,8 +39,8 @@ case class TopKPerGroup(
 }
 
 /** Plans [[TopKPerGroup]] as partial→final [[TopKPerGroupExec]]. Injected
-  * via `SparkSessionExtensions.injectPlannerStrategy` (GraftExtensions)
-  * or per-session through `spark.experimental.extraStrategies`.
+  * via `SparkSessionExtensions.injectPlannerStrategy` (GraftExtensions),
+  * which `graft.Session` installs on every session it builds.
   */
 object TopKPerGroupStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {

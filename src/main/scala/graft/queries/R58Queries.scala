@@ -13,9 +13,8 @@ import graft.QuerySpec
   *  - q406 eager aggregation (Yan–Larson): partial groupBy pushed below
   *    the join cuts the fact rows entering the shuffle 4x;
   *  - q407 PK-FK join elimination under referential integrity — the
-  *    DATA gate whose optimizer half ships as FkJoinEliminationRule /
-  *    RiConstraints (plans/FkJoinEliminationRule.scala), with the
-  *    broken-RI scenario showing results actually diverge;
+  *    DATA gate an optimizer must pass before it may drop the join, with
+  *    the broken-RI scenario showing results actually diverge;
   *  - q408 EXISTS → semi-join: the naive join+distinct pays the
   *    duplicate blowup twice, the semi-join never materializes it;
   *  - q409 transitive-predicate closure through an equi-join (the
@@ -109,11 +108,11 @@ object R58Queries {
     // rollup that joins orders to customer but references no customer
     // column pays the dim scan + shuffle for nothing — IF every fk
     // matches exactly one pk. That is a DATA property, so it is audited
-    // from data (fk nulls, orphans, duplicate pks — the exact
-    // RiConstraints.validate gate that arms the optimizer rule in
-    // plans/FkJoinEliminationRule.scala), and BOTH shapes execute under
-    // two scenarios: the full dim (RI holds — results certified
-    // IDENTICAL, join eliminated, dim_rows_saved = the dim scan) and a
+    // from data (fk nulls, orphans, duplicate pks — the gate a RELY
+    // constraint must pass before an optimizer may drop the join), and
+    // BOTH shapes execute under two scenarios: the full dim (RI holds —
+    // results certified IDENTICAL, join eliminated, dim_rows_saved = the
+    // dim scan) and a
     // segment-filtered dim (RI broken — orphans surface, the executed
     // results actually DIVERGE, and the audit's refusal is what stood
     // between the rewrite and silent row loss). eliminate = the audit
@@ -176,7 +175,7 @@ object R58Queries {
         val filt = "SELECT c_custkey AS pk FROM customer WHERE c_mktsegment = 'BUILDING'"
         s"""WITH o AS (SELECT o_custkey AS fk, CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT) AS cents FROM orders), legs AS (${legSql("1:full_dim", full)} UNION ALL ${legSql("2:filtered_dim", filt)}), k AS (SELECT *, CASE WHEN fk_nulls = 0 AND orphans = 0 AND dup_keys = 0 THEN 1 ELSE 0 END AS eliminate, CASE WHEN rows_join = rows_elim AND cents_join = cents_elim THEN 1 ELSE 0 END AS equal_results FROM legs) SELECT scenario, CAST(fk_nulls AS BIGINT) AS fk_nulls, CAST(orphans AS BIGINT) AS orphans, CAST(dup_keys AS BIGINT) AS dup_keys, CAST(eliminate AS BIGINT) AS eliminate, CAST(rows_join AS BIGINT) AS rows_join, CAST(rows_elim AS BIGINT) AS rows_elim, CAST(cents_join AS BIGINT) AS cents_join, CAST(cents_elim AS BIGINT) AS cents_elim, CAST(equal_results AS BIGINT) AS equal_results, CAST(dim_rows_saved AS BIGINT) AS dim_rows_saved, CAST(CASE WHEN eliminate = equal_results THEN 1 ELSE 0 END AS BIGINT) AS audit_correct FROM k ORDER BY scenario"""
       },
-      "J ext: PK-FK join elimination under referential integrity — the RiConstraints audit (fk nulls, orphans, duplicate pks) gates the rewrite, both shapes executed under a full dim (RI holds, results identical, join droppable) and a filtered dim (orphans, results DIVERGE — the audit's refusal prevents silent row loss); audit_correct certifies the gate predicts the measured truth in both scenarios"),
+      "J ext: PK-FK join elimination under referential integrity — the RI audit (fk nulls, orphans, duplicate pks) gates the rewrite, both shapes executed under a full dim (RI holds, results identical, join droppable) and a filtered dim (orphans, results DIVERGE — the audit's refusal prevents silent row loss); audit_correct certifies the gate predicts the measured truth in both scenarios"),
 
     // q408 — EXISTS → SEMI-JOIN: "orders with any ≥48-quantity item"
     // written naively joins orders to the matching items — duplicating

@@ -9,8 +9,8 @@ import graft.ops.HashOps.{md5Bucket, md5BucketSql}
 /** Round-12 third widening — the rewrite arc's CATALOG and two more
   * members:
   *
-  *  - q412 mines the RELY-constraint catalog q407/FkJoinEliminationRule
-  *    consume: every name-matched PK-FK candidate edge in the schema
+  *  - q412 mines the RELY-constraint catalog q407's join elimination
+  *    consumes: every name-matched PK-FK candidate edge in the schema
   *    audited from data in one sweep (nulls / orphans / duplicate pks),
   *    with the reverse edge as the built-in negative control;
   *  - q413 prices outer→inner join conversion: the null-rejecting test
@@ -37,12 +37,11 @@ object R59Queries {
     // THEM — one ANALYZE-grade sweep arming join elimination (and
     // orphan-safe outer→inner conversion, q413) for every dimension
     // join in the workload. Per edge: fk nulls, orphans (fact keys with
-    // no pk), duplicate pks, and the valid verdict — exactly what
-    // plans/RiConstraints.validate checks before registering, run here
-    // as the registry's bulk loader. The eighth edge is the REVERSE of
-    // the customer edge (customer "fact" → orders "pk"): it fails the
-    // uniqueness leg outright — every customer's key repeats once per
-    // order — the built-in control showing the audit discriminates
+    // no pk), duplicate pks, and the valid verdict — exactly q407's
+    // audit, run here as the catalog's bulk loader. The eighth edge is
+    // the REVERSE of the customer edge (customer "fact" → orders "pk"):
+    // it fails the uniqueness leg outright — every customer's key repeats
+    // once per order — the built-in control showing the audit discriminates
     // DIRECTION, not just table pairs. Measured: all seven forward
     // edges valid at every SF (TPC-H referential integrity), the
     // reverse edge never. Scale: each edge is one anti-join + one keyed dup count
@@ -110,7 +109,7 @@ object R59Queries {
         // grouped count — identical because grouping counts keys
         s"""WITH legs AS ($edges) SELECT edge, CAST(fact_rows AS BIGINT) AS fact_rows, CAST(pk_keys AS BIGINT) AS pk_keys, CAST(fk_nulls AS BIGINT) AS fk_nulls, CAST(orphans AS BIGINT) AS orphans, CAST(dup_pks AS BIGINT) AS dup_pks, CAST(CASE WHEN fk_nulls = 0 AND orphans = 0 AND dup_pks = 0 THEN 1 ELSE 0 END AS BIGINT) AS valid FROM legs ORDER BY edge"""
       },
-      "J ext: the RELY-constraint catalog mined — all seven name-matched PK-FK edges of the schema audited from data in one sweep (nulls/orphans/duplicate pks, the exact RiConstraints.validate gate), plus the reverse customer edge as the control failing both ways; 8 rows of state that let the optimizer delete whole join subtrees"),
+      "J ext: the RELY-constraint catalog mined — all seven name-matched PK-FK edges of the schema audited from data in one sweep (nulls/orphans/duplicate pks, the exact q407 audit), plus the reverse customer edge as the control failing both ways; 8 rows of state that let the optimizer delete whole join subtrees"),
 
     // q413 — OUTER→INNER CONVERSION, THE LEGALITY CERTIFIED AS DATA: a
     // left join kept "to be safe" blocks reorder, broadcast choice and

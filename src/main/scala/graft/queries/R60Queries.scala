@@ -7,8 +7,9 @@ import graft.QuerySpec
 
 /** Round-12 fourth widening — the MATERIALIZED-VIEW arc: selection,
   * consumption, and the cache's semantic cousin. The optimizer half
-  * ships as plans/MvRewriteRule.scala (MvCatalog data-validated grain
-  * registry + the Aggregate re-rooting rule, MvRewriteSpec-certified);
+  * ships as plans/MvRewriteRule.scala (MvCatalog's data validation of a
+  * grain view + the Aggregate re-rooting rule over a catalog of such
+  * views, MvRewriteSpec-certified);
   * these four queries are the data half:
   *
   *  - q417 SELECTS: the Harinarayan–Rajaraman–Ullman greedy over the
@@ -185,7 +186,7 @@ object R60Queries {
     // q418 — VIEW-SUBSUMPTION ANSWERABILITY, CERTIFIED AS DATA: the
     // optimizer half (MvRewriteRule) refuses or fires on plan shape +
     // the MvCatalog data proof; this is the q413-style data half — the
-    // GATE (can the registered grain view answer this query?) evaluated
+    // GATE (can the validated grain view answer this query?) evaluated
     // next to both legs EXECUTED. Scenario 1 filters on a dim (status)
     // — the view's own column carries the predicate, certified equal.
     // Scenario 2 filters on the MEASURE (cents > $30k): the grain

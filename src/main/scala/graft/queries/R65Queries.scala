@@ -41,14 +41,14 @@ object R65Queries {
   val specs: Seq[QuerySpec] = Seq(
 
     // q433 — THE MV REWRITE, SERVED: MvRewriteSpec pins the rule's laws
-    // on fixtures; this runs the registered-catalog → rule →
+    // on fixtures; this runs the validated-views → rule →
     // re-rooted-Aggregate pipeline as a QUERY, with the DuckDB oracle
-    // certifying the answers AND the serving decision. Three catalogs
-    // register (full grain, cents>$1k partial grain, and a grain over a
-    // null-carrying measure), the rule is applied to each scenario's
-    // optimized plan, and four scenarios execute:
+    // certifying the answers AND the serving decision. Three views are
+    // validated (full grain, cents>$1k partial grain, and a grain over a
+    // null-carrying measure), the rule over them is applied to each
+    // scenario's optimized plan, and four scenarios execute:
     //   1:grain_group      — per-flag COUNT/SUM/AVG; AVG is only legal
-    //                        because registration PROVED cents null-free
+    //                        because validation PROVED cents null-free
     //                        (SUM(sum)/SUM(cnt) needs COUNT(m)=COUNT(*));
     //   2:empty_global     — global COUNT under a dim filter matching
     //                        zero view rows; the rewrite must coalesce
@@ -70,14 +70,14 @@ object R65Queries {
     // a rule that silently stopped firing — or fired where it must not —
     // hash-mismatches even though the VALUES still agree. Scale: once
     // view_only=1, serving reads |grain| rows; the corpus is touched
-    // only by registration's one-time validation pass.
+    // only by the one-time validation pass.
     QuerySpec(
       "q433_mv_rule_applied",
       (s, d) => {
         import graft.plans.{MvCatalog, MvRewriteRule}
         import org.apache.spark.sql.catalyst.plans.logical.LeafNode
         import org.apache.spark.sql.graft.ColumnBridge
-        // the two bases, and then the three registered grains, are
+        // the two bases, and then the three grains, are
         // independent checkpointed legs — overlap their materializations
         // (graft.Par, guide §2.6)
         // eager: both bases are consumed from concurrent threads below
@@ -93,9 +93,9 @@ object R65Queries {
           b.groupBy("f", "s", "y", "m")
             .agg(count(lit(1)).as("cnt"), sum("cents").as("sum_cents"))
             .localCheckpoint(false)
-        // the partial grain registers on the SAME relation — the
-        // multi-view catalog serves each query from the cheapest view
-        // whose predicate it subsumes
+        // the partial grain is a view of the SAME relation — the rule
+        // serves each query from the cheapest view whose predicate it
+        // subsumes
         val (view, pview, nview) = graft.Par.par3(
           grainOf(base),
           base.where(col("cents") > 100000L)
@@ -105,72 +105,71 @@ object R65Queries {
           grainOf(nbase))
         val dims = Seq("f", "s", "y", "m")
         val sums = Map("cents" -> "sum_cents")
-        // each registration pays its own validation pass (grain rebuild +
-        // row counts + full-outer compare + null census — ~5 blocking
-        // actions); the catalog is a concurrent map whose lookup sorts
-        // by measured cost, so registration order is immaterial and the
-        // three validations can overlap (graft.Par, guide §2.6)
-        val regs = graft.Par(
-          () => MvCatalog.register(base, view, dims, "cnt", sums),
-          () => MvCatalog.register(base, pview, dims, "cnt", sums,
+        // each view pays its own validation pass (grain rebuild + row
+        // counts + full-outer compare + null census — ~5 blocking
+        // actions); the rule sorts its views by measured cost, so their
+        // order is immaterial and the three validations can overlap
+        // (graft.Par, guide §2.6)
+        val mvs = graft.Par(
+          () => MvCatalog.validate(base, view, dims, "cnt", sums),
+          () => MvCatalog.validate(base, pview, dims, "cnt", sums,
             Seq(col("cents") > 100000L)),
-          () => MvCatalog.register(nbase, nview, dims, "cnt", sums))
-        require(regs(0), "full-grain registration failed")
-        require(regs(1), "partial-grain registration failed")
-        require(regs(2), "null-measure registration failed")
-        try {
-          def viewOnly(q: DataFrame, vdf: DataFrame): Long = {
-            val ls = q.queryExecution.optimizedPlan.collect { case l: LeafNode => l }
-            val vl = vdf.queryExecution.analyzed.asInstanceOf[LeafNode]
-            if (ls.size == 1 && ls.head.getClass == vl.getClass &&
-              ls.head.schema.fieldNames.sameElements(vl.schema.fieldNames)) 1L
-            else 0L
-          }
-          // the rule rewrites this scenario's optimized plan (no session
-          // state), materialized while the catalog still holds the views
-          def scen(id: String, q0: DataFrame, vdf: DataFrame): DataFrame = {
-            val q = ColumnBridge.ofRows(s, MvRewriteRule(q0.queryExecution.optimizedPlan))
-            val vo = viewOnly(q, vdf)
-            q.withColumn("scenario", lit(id)).withColumn("view_only", lit(vo))
-              .localCheckpoint(true)
-          }
-          // the four scenarios each eager-checkpoint and share no
-          // lineage — materialize them concurrently
-          val scens = graft.Par(
-            () => scen("1:grain_group",
-              base.groupBy("f")
-                .agg(count(lit(1)).as("n"), sum("cents").as("tc"),
-                  avg("cents").as("av"))
-                .select(col("f").as("g"), col("n"), col("tc"),
-                  round(col("av"), 6).as("avg_r")),
-              view),
-            () => scen("2:empty_global",
-              base.where(col("y") === 1871L).agg(count(lit(1)).as("n"))
-                .select(lit("*").as("g"), col("n"), lit(0L).as("tc"),
-                  lit(0.0).as("avg_r")),
-              view),
-            () => scen("3:partial_subsume",
-              base.where(col("cents") > 100000L && col("s") === "F")
-                .groupBy("f")
-                .agg(count(lit(1)).as("n"), sum("cents").as("tc"))
-                .select(col("f").as("g"), col("n"), col("tc"),
-                  lit(0.0).as("avg_r")),
-              pview),
-            () => scen("4:null_avg_refusal",
-              nbase.groupBy("f")
-                .agg(count(lit(1)).as("n"), sum("cents").as("tc"),
-                  avg("cents").as("av"))
-                .select(col("f").as("g"), col("n"), col("tc"),
-                  round(col("av"), 6).as("avg_r")),
-              nview))
-          scens.reduce(_ unionByName _)
-            .select(col("scenario"), col("g"), col("n"), col("tc"),
-              col("avg_r"), col("view_only"))
-            .orderBy("scenario", "g")
-        } finally MvCatalog.clear()
+          () => MvCatalog.validate(nbase, nview, dims, "cnt", sums))
+        require(mvs(0).isDefined, "full-grain validation failed")
+        require(mvs(1).isDefined, "partial-grain validation failed")
+        require(mvs(2).isDefined, "null-measure validation failed")
+        // the catalog is this value: a concurrent q433 holds its own
+        val rule = MvRewriteRule(mvs.flatten)
+        def viewOnly(q: DataFrame, vdf: DataFrame): Long = {
+          val ls = q.queryExecution.optimizedPlan.collect { case l: LeafNode => l }
+          val vl = vdf.queryExecution.analyzed.asInstanceOf[LeafNode]
+          if (ls.size == 1 && ls.head.getClass == vl.getClass &&
+            ls.head.schema.fieldNames.sameElements(vl.schema.fieldNames)) 1L
+          else 0L
+        }
+        // the rule rewrites this scenario's optimized plan (no session state)
+        def scen(id: String, q0: DataFrame, vdf: DataFrame): DataFrame = {
+          val q = ColumnBridge.ofRows(s, rule(q0.queryExecution.optimizedPlan))
+          val vo = viewOnly(q, vdf)
+          q.withColumn("scenario", lit(id)).withColumn("view_only", lit(vo))
+            .localCheckpoint(true)
+        }
+        // the four scenarios each eager-checkpoint and share no
+        // lineage — materialize them concurrently
+        val scens = graft.Par(
+          () => scen("1:grain_group",
+            base.groupBy("f")
+              .agg(count(lit(1)).as("n"), sum("cents").as("tc"),
+                avg("cents").as("av"))
+              .select(col("f").as("g"), col("n"), col("tc"),
+                round(col("av"), 6).as("avg_r")),
+            view),
+          () => scen("2:empty_global",
+            base.where(col("y") === 1871L).agg(count(lit(1)).as("n"))
+              .select(lit("*").as("g"), col("n"), lit(0L).as("tc"),
+                lit(0.0).as("avg_r")),
+            view),
+          () => scen("3:partial_subsume",
+            base.where(col("cents") > 100000L && col("s") === "F")
+              .groupBy("f")
+              .agg(count(lit(1)).as("n"), sum("cents").as("tc"))
+              .select(col("f").as("g"), col("n"), col("tc"),
+                lit(0.0).as("avg_r")),
+            pview),
+          () => scen("4:null_avg_refusal",
+            nbase.groupBy("f")
+              .agg(count(lit(1)).as("n"), sum("cents").as("tc"),
+                avg("cents").as("av"))
+              .select(col("f").as("g"), col("n"), col("tc"),
+                round(col("av"), 6).as("avg_r")),
+            nview))
+        scens.reduce(_ unionByName _)
+          .select(col("scenario"), col("g"), col("n"), col("tc"),
+            col("avg_r"), col("view_only"))
+          .orderBy("scenario", "g")
       },
       Some("""WITH li AS (SELECT l_returnflag AS f, l_linestatus AS s, CAST(year(l_shipdate) AS BIGINT) AS y, CAST(month(l_shipdate) AS BIGINT) AS m, CAST(floor(l_extendedprice * 100.0 + 0.5) AS BIGINT) AS cents FROM lineitem), nli AS (SELECT f, s, y, m, CASE WHEN cents % 7 = 0 THEN NULL ELSE cents END AS cents FROM li), s1 AS (SELECT '1:grain_group' AS scenario, f AS g, count(*) AS n, sum(cents) AS tc, round(avg(cents), 6) AS avg_r, 1 AS view_only FROM li GROUP BY f), s2 AS (SELECT '2:empty_global' AS scenario, '*' AS g, count(*) AS n, 0 AS tc, 0.0 AS avg_r, 1 AS view_only FROM li WHERE y = 1871), s3 AS (SELECT '3:partial_subsume' AS scenario, f AS g, count(*) AS n, sum(cents) AS tc, 0.0 AS avg_r, 1 AS view_only FROM li WHERE cents > 100000 AND s = 'F' GROUP BY f), s4 AS (SELECT '4:null_avg_refusal' AS scenario, f AS g, count(*) AS n, sum(cents) AS tc, round(avg(cents), 6) AS avg_r, 0 AS view_only FROM nli GROUP BY f) SELECT scenario, g, CAST(n AS BIGINT) AS n, CAST(tc AS BIGINT) AS tc, CAST(avg_r AS DOUBLE) AS avg_r, CAST(view_only AS BIGINT) AS view_only FROM (SELECT * FROM s1 UNION ALL SELECT * FROM s2 UNION ALL SELECT * FROM s3 UNION ALL SELECT * FROM s4) z ORDER BY scenario, g"""),
-      "A/S ext: the MV rewrite SERVED — registered grains + the optimizer rule applied to each scenario plan answer a four-scenario workload (AVG from partials under the null-free proof, the coalesced empty-match global COUNT, filter subsumption through a partial view, the null-AVG refusal), with the optimized plan's view-only verdict emitted and oracle-pinned as data"),
+      "A/S ext: the MV rewrite SERVED — validated grains + the optimizer rule applied to each scenario plan answer a four-scenario workload (AVG from partials under the null-free proof, the coalesced empty-match global COUNT, filter subsumption through a partial view, the null-AVG refusal), with the optimized plan's view-only verdict emitted and oracle-pinned as data"),
 
     // q434 — SCHEMA EVOLUTION ACROSS SNAPSHOTS: the q421–q424 arc held
     // the schema fixed; here it MOVES while the data files do not.

@@ -1,6 +1,6 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.{classic, Column, DataFrame, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{classic, Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.ExpressionUtils
@@ -31,14 +31,6 @@ object ColumnBridge {
   /** The analyzed logical plan backing a DataFrame. */
   def analyzed(df: DataFrame): LogicalPlan =
     df.asInstanceOf[classic.Dataset[_]].queryExecution.analyzed
-
-  /** The planner strategies an extensions instance would inject (the
-    * builder is private[sql]; tests assert wiring through this).
-    */
-  def plannerStrategies(
-      ext: SparkSessionExtensions,
-      spark: SparkSession): Seq[org.apache.spark.sql.execution.SparkStrategy] =
-    ext.buildPlannerStrategies(spark)
 
   /** RDD's `private[rdd]` isLocallyCheckpointed, on its checkpoint data. */
   def isLocalCheckpoint(rdd: org.apache.spark.rdd.RDD[_]): Boolean =

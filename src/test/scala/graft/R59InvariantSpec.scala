@@ -1,8 +1,7 @@
 package graft
 
 /** Semantic invariants of the round-12 third widening (q412 RI catalog,
-  * q413 outer→inner legality, q414 aggregate through union) — plus the
-  * closure tying q412's mined catalog to the live RiConstraints gate.
+  * q413 outer→inner legality, q414 aggregate through union).
   */
 class R59InvariantSpec extends SparkSpecBase {
   import spark.implicits._
@@ -19,20 +18,6 @@ class R59InvariantSpec extends SparkSpecBase {
     }
     assert(rev.head._4 > 0L && rev.head._5 == 0L,
       s"the reverse edge must fail uniqueness: ${rev.head}")
-  }
-
-  test("q412's catalog and the live RiConstraints gate agree edge-for-edge") {
-    import graft.plans.RiConstraints
-    RiConstraints.clear()
-    val o = Tables.load(spark, sf001, "orders")
-    val cu = Tables.load(spark, sf001, "customer")
-    // the mined valid edge validates and registers...
-    assert(RiConstraints.validate(o, cu, "o_custkey", "c_custkey"))
-    assert(RiConstraints.isValidated("o_custkey", "c_custkey"))
-    // ...and the mined-invalid reverse direction refuses to register
-    assert(!RiConstraints.validate(cu, o, "c_custkey", "o_custkey"))
-    assert(!RiConstraints.isValidated("c_custkey", "o_custkey"))
-    RiConstraints.clear()
   }
 
   test("q413 outer->inner: the NULL probe predicts the measured equality in both scenarios") {

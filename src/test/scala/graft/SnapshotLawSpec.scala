@@ -21,12 +21,12 @@ import graft.queries.R61Queries
   *    and the rename counterexample shows name-at-commit binding
   *    diverging between serial orders — losing exactly the appended
   *    rows' renamed column;
-  *  - the MV catalog is keyed by RELATION, not content: a
+  *  - a validated MV is keyed by RELATION, not content: a
   *    content-identical state materialized as a DIFFERENT relation
-  *    (the post-compaction checkpoint) must refuse the rewrite until
-  *    re-registered — silently accepting a same-content twin would
-  *    make the catalog unsound under exactly the storage churn the
-  *    snapshot arc models.
+  *    (the post-compaction checkpoint) must refuse the rewrite until a
+  *    catalog holds a view validated on it — silently accepting a
+  *    same-content twin would make the catalog unsound under exactly
+  *    the storage churn the snapshot arc models.
   */
 class SnapshotLawSpec extends SparkSpecBase {
   import spark.implicits._
@@ -144,8 +144,7 @@ class SnapshotLawSpec extends SparkSpecBase {
       "every appended row (and only those) must lose its amount under rename-first name binding")
   }
 
-  test("MvCatalog keys on the relation: a content-identical post-compaction twin refuses until re-registered") {
-    MvCatalog.clear()
+  test("MvCatalog keys on the relation: a content-identical post-compaction twin refuses until a catalog holds the new twin's view") {
     val keyed = R61Queries.keyedFrame(spark, sf001)
     // v2 state and v3 state have IDENTICAL content, different relations
     val v2 = keyed.where(expr("(NOT (f < 20 AND h < 171798691)) OR k > kcut"))
@@ -154,23 +153,29 @@ class SnapshotLawSpec extends SparkSpecBase {
       .select(col("f"), col("v")).localCheckpoint(false)
     val view = v2.groupBy("f").agg(count(lit(1)).cast("long").as("cnt"),
       sum("v").as("sum_v")).localCheckpoint(false)
-    assert(MvCatalog.register(v2, view, Seq("f"), "cnt", Map("v" -> "sum_v")))
+    def mvOn(base: DataFrame) =
+      MvCatalog.validate(base, view, Seq("f"), "cnt", Map("v" -> "sum_v")).toSeq
+    val onV2 = mvOn(v2)
+    assert(onV2.nonEmpty)
     def leaves(df: DataFrame) =
       df.queryExecution.optimizedPlan.collect {
         case l: org.apache.spark.sql.catalyst.plans.logical.LeafNode => l
       }
-    try withRule(MvRewriteRule) {
+    withRule(MvRewriteRule(onV2)) {
       val q2 = v2.groupBy("f").agg(sum("v").as("tv"))
       assert(leaves(q2).exists(_.schema.fieldNames.contains("sum_v")),
-        "the registered relation must rewrite onto the view")
+        "the validated relation must rewrite onto the view")
       val q3 = v3.groupBy("f").agg(sum("v").as("tv"))
       assert(!leaves(q3).exists(_.schema.fieldNames.contains("sum_v")),
         "a content-identical but DIFFERENT relation must refuse the rewrite")
-      // re-registration against the new relation arms it again
-      assert(MvCatalog.register(v3, view, Seq("f"), "cnt", Map("v" -> "sum_v")))
+    }
+    // validating the view against the new relation arms a catalog for it
+    val onV3 = mvOn(v3)
+    assert(onV3.nonEmpty)
+    withRule(MvRewriteRule(onV3)) {
       val q3b = v3.groupBy("f").agg(sum("v").as("tv"))
       assert(leaves(q3b).exists(_.schema.fieldNames.contains("sum_v")),
-        "re-registration must arm the rewrite for the new relation")
-    } finally MvCatalog.clear()
+        "a catalog holding the new relation's view must rewrite it")
+    }
   }
 }

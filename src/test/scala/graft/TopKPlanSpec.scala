@@ -70,12 +70,9 @@ class TopKPlanSpec extends SparkSpecBase {
   }
 
   test("strategy injection via GraftExtensions plans the node too") {
-    // a session cloned with extensions would be heavyweight here; instead
-    // verify the extension object wires the strategy (the ad-hoc path is
-    // exercised by every other test through ensureStrategy)
-    val ext = new org.apache.spark.sql.SparkSessionExtensions
-    new graft.functions.GraftExtensions().apply(ext)
-    val planned = org.apache.spark.sql.graft.ColumnBridge.plannerStrategies(ext, spark)
-    assert(planned.contains(graft.plans.TopKPerGroupStrategy))
+    // graft.Session installs GraftExtensions on the shared session, so
+    // its planner carries the strategy every test above plans through
+    assert(spark.sessionState.planner.strategies.contains(graft.plans.TopKPerGroupStrategy))
+    assert(!spark.experimental.extraStrategies.contains(graft.plans.TopKPerGroupStrategy))
   }
 }
