@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{QuerySpec, Tables}
+import graft.QuerySpec
 import graft.ops.{JoinOps, SkewOps}
 import org.apache.spark.sql.functions._
 import graft.functions.cosineSim
@@ -289,7 +289,7 @@ object ExtraQueries {
       (s, d) => {
         import graft.sources.CsvSource
         val dir = java.nio.file.Files.createTempDirectory("csvscan").toString
-        Tables.load(s, d, "region")
+        t(s, d, "region")
           .coalesce(1).write.mode("overwrite").option("header", true)
           .csv(s"$dir/region_csv")
         val inferred = CsvSource.inferred(s, s"$dir/region_csv")

@@ -5,7 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.{Bases, QuerySpec}
-import graft.Tables
 import graft.ops.TextOps
 
 /** Round-3 additions: the DataSource V2 connector surface (q123), the
@@ -34,7 +33,7 @@ object R3Queries {
           java.nio.file.Files.walk(dir).iterator().asScala.toSeq.reverse
             .foreach(java.nio.file.Files.deleteIfExists(_))
       }
-      Tables.load(s, d, "documents")
+      t(s, d, "documents")
         .write.partitionBy("lang").mode("overwrite").parquet(dir.toString)
       dir.toString
     })

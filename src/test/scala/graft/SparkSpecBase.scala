@@ -35,5 +35,11 @@ trait SparkSpecBase extends AnyFunSuite {
 }
 
 object SparkSpecBase {
-  lazy val session: SparkSession = Session(4)
+  /** Drops the benign accumulator-race traces, as Bench and Verify do:
+    * hundreds of them buried real test output. */
+  lazy val session: SparkSession = {
+    val s = Session(4)
+    Session.dropAccumulatorRaces()
+    s
+  }
 }
