@@ -17,6 +17,12 @@ temporary directory) and runs perfbench/ab.py on those two.
 Each run's one-line verdict (correct, failed, the workload's total_s) is
 printed as it finishes. The exit status is non-zero if any run failed or
 was incorrect.
+
+A side whose .bench_build/classpath.txt names a .bench_build path outside
+that checkout is refused: a file copy of a working tree carries the
+original's classpath.txt, and run.py's source stamp hashes relative paths
+and contents only, so an unchanged copy would silently run the original's
+classes. Delete the copy's .bench_build/ (or use `git clone`).
 """
 import argparse
 import json
@@ -48,6 +54,19 @@ def run(checkout, workload, seed, seconds, trace, dest):
     return json.loads(p.stdout.strip().splitlines()[-1])
 
 
+def foreign_classes(checkout):
+    """The .bench_build entries of `checkout`'s cached classpath that lie
+    outside the checkout's own .bench_build/."""
+    own = os.path.realpath(os.path.join(checkout, ".bench_build"))
+    cp_file = os.path.join(own, "classpath.txt")
+    if not os.path.exists(cp_file):
+        return []
+    with open(cp_file) as f:
+        entries = f.read().strip().split(os.pathsep)
+    return [e for e in entries if ".bench_build" in e.split(os.sep)
+            and os.path.commonpath([own, os.path.realpath(e)]) != own]
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("parent")
@@ -59,6 +78,11 @@ def main():
     ap.add_argument("--out")
     a = ap.parse_args()
     sides = {"parent": os.path.abspath(a.parent), "change": os.path.abspath(a.change)}
+    for side, checkout in sides.items():
+        foreign = foreign_classes(checkout)
+        if foreign:
+            sys.exit(f"[ab] {side} {checkout}: .bench_build/classpath.txt names another "
+                     f"checkout's build ({foreign[0]}); delete {checkout}/.bench_build/")
     if a.out:
         if os.path.exists(a.out) and os.listdir(a.out):
             sys.exit(f"[ab] {a.out} is not empty")

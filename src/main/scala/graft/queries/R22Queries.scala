@@ -4,12 +4,12 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.QuerySpec
+import graft.ops.BpeOps
 
 /** Round-6 widening, ninth batch: two tokenizer/dedup-infra operators
   * the LLM-pipeline surface still lacked — a BPE MERGE-LEARNING step
   * (the inner loop of tokenizer training: count adjacent symbol
-  * pairs, pick the argmax, apply the merge, repeat — unrolled twice
-  * here, the q161-Lloyd/q284-HITS fixed-iteration convention) and
+  * pairs, pick the argmax, apply the merge, repeat — twice here) and
   * SHINGLE CONTAINMENT detection (asymmetric Jaccard — the
   * quote/subset duplicates that symmetric Jaccard scores low and
   * MinHash banding therefore misses; candidates come from a
@@ -41,60 +41,16 @@ object R22Queries {
 
   val specs: Seq[QuerySpec] = Seq(
 
-    // q292 — BPE MERGE LEARNING (two unrolled iterations): start from
-    // character symbols over the top-100 corpus words (count-weighted —
-    // the bounded working set tokenizer trainers actually iterate on;
-    // the full corpus contributes only through the one word-count
-    // aggregation), pick the highest-weight adjacent symbol pair, merge
-    // it everywhere, and repeat. Words are spaced symbol strings; a
-    // merge is a padded-string replace (' a b '→' ab '), whose
-    // left-to-right non-overlapping scan is identical in Spark and
-    // DuckDB — including the boundary-sharing-repeat quirk, which is
-    // the DECLARED semantics (standard BPE has the same behavior for
-    // overlapping pairs). Ties break lexicographically. Output: the two
-    // learned merges (step 1, 2) + the top-5 surviving pairs (step 3) —
-    // the trainer's state after two steps, fully integer-weighted.
+    // q292 — BPE MERGE LEARNING (BpeOps.learn) over the top-100 corpus
+    // words: the bounded working set tokenizer trainers iterate on; the
+    // full corpus contributes only through the one word-count
+    // aggregation. Output: the two learned merges (step 1, 2) + the
+    // top-5 surviving pairs (step 3), fully integer-weighted.
     QuerySpec(
       "q292_bpe_merge",
-      (s, d) => {
-        val words = t(s, d, "documents")
-          .select(explode(graft.ops.TextOps.tokens(col("text"))).as("w"))
-          .groupBy("w").agg(count(lit(1)).as("cnt"))
-          .orderBy(col("cnt").desc, col("w")).limit(100)
-          .select(concat(lit(" "),
-            trim(regexp_replace(col("w"), "(.)", "$1 ")), lit(" ")).as("sym"),
-            col("cnt"))
-        def pairs(df: DataFrame): DataFrame = df
-          .select(col("cnt"), split(trim(col("sym")), " ").as("arr"))
-          .where(size(col("arr")) >= 2)
-          .select(col("cnt"), explode(expr(
-            "transform(sequence(1, size(arr) - 1), i -> concat_ws(' ', arr[i - 1], arr[i]))"))
-            .as("pair"))
-          .groupBy("pair").agg(sum("cnt").as("weight"))
-        def top1(df: DataFrame): DataFrame = df
-          .orderBy(col("weight").desc, col("pair")).limit(1)
-        // replace() is the LITERAL (non-regex) replace in both engines —
-        // no escaping concerns however exotic the merged pair is
-        def applyMergeLit(df: DataFrame, m: DataFrame): DataFrame = df
-          .crossJoin(broadcast(m.select(col("pair").as("mp"))))
-          .select(expr("replace(sym, concat(' ', mp, ' '), concat(' ', replace(mp, ' ', ''), ' '))")
-            .as("sym"), col("cnt"))
-        val m1 = top1(pairs(words)).localCheckpoint(false)
-        val w2 = applyMergeLit(words, m1)
-        val m2 = top1(pairs(w2)).localCheckpoint(false)
-        val w3 = applyMergeLit(w2, m2)
-        val rest = pairs(w3).orderBy(col("weight").desc, col("pair")).limit(5)
-        def rk(df: DataFrame, step: Long) = df
-          .select(lit(step).as("step"), col("pair"), col("weight"))
-        val w5 = org.apache.spark.sql.expressions.Window
-          .partitionBy("step").orderBy(col("weight").desc, col("pair"))
-        rk(m1, 1L).unionByName(rk(m2, 2L)).unionByName(rk(rest, 3L))
-          .withColumn("rank", row_number().over(w5).cast("long"))
-          .select("step", "rank", "pair", "weight")
-          .orderBy("step", "rank")
-      },
+      (s, d) => BpeOps.learn(BpeOps.topWords(t(s, d, "documents")), 2, 5),
       Some("""WITH words AS (SELECT ' ' || trim(regexp_replace(w, '(.)', '\1 ', 'g')) || ' ' AS sym, cnt FROM (SELECT w, count(*) AS cnt FROM (SELECT unnest(string_split(lower(text), ' ')) AS w FROM documents) GROUP BY 1 ORDER BY cnt DESC, w LIMIT 100)), p1 AS (SELECT pair, CAST(sum(cnt) AS BIGINT) AS weight FROM (SELECT cnt, unnest([arr[i] || ' ' || arr[i + 1] for i in generate_series(1, len(arr) - 1)]) AS pair FROM (SELECT cnt, string_split(trim(sym), ' ') AS arr FROM words) WHERE len(arr) >= 2) GROUP BY 1), m1 AS (SELECT pair, weight FROM p1 ORDER BY weight DESC, pair LIMIT 1), w2 AS (SELECT replace(sym, ' ' || (SELECT pair FROM m1) || ' ', ' ' || replace((SELECT pair FROM m1), ' ', '') || ' ') AS sym, cnt FROM words), p2 AS (SELECT pair, CAST(sum(cnt) AS BIGINT) AS weight FROM (SELECT cnt, unnest([arr[i] || ' ' || arr[i + 1] for i in generate_series(1, len(arr) - 1)]) AS pair FROM (SELECT cnt, string_split(trim(sym), ' ') AS arr FROM w2) WHERE len(arr) >= 2) GROUP BY 1), m2 AS (SELECT pair, weight FROM p2 ORDER BY weight DESC, pair LIMIT 1), w3 AS (SELECT replace(sym, ' ' || (SELECT pair FROM m2) || ' ', ' ' || replace((SELECT pair FROM m2), ' ', '') || ' ') AS sym, cnt FROM w2), p3 AS (SELECT pair, CAST(sum(cnt) AS BIGINT) AS weight FROM (SELECT cnt, unnest([arr[i] || ' ' || arr[i + 1] for i in generate_series(1, len(arr) - 1)]) AS pair FROM (SELECT cnt, string_split(trim(sym), ' ') AS arr FROM w3) WHERE len(arr) >= 2) GROUP BY 1), rest AS (SELECT pair, weight FROM p3 ORDER BY weight DESC, pair LIMIT 5), u AS (SELECT 1 AS step, pair, weight FROM m1 UNION ALL SELECT 2, pair, weight FROM m2 UNION ALL SELECT 3, pair, weight FROM rest) SELECT CAST(step AS BIGINT) AS step, CAST(row_number() OVER (PARTITION BY step ORDER BY weight DESC, pair) AS BIGINT) AS rank, pair, weight FROM u ORDER BY step, rank"""),
-      "E4/T ext: BPE merge learning, two unrolled iterations — bounded top-100 word table, integer weights"),
+      "E4/T ext: BPE merge learning, two merges plus the top-5 surviving pairs — bounded top-100 word table, integer weights"),
 
     // q293 — SHINGLE CONTAINMENT (asymmetric near-dup): containment
     // c = |Sa∩Sb| / min(|Sa|,|Sb|) catches quote/subset duplicates —

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.{Bases, QuerySpec}
 import graft.Tables
-import graft.ops.TextOps
+import graft.ops.{BpeOps, TextOps}
 import graft.functions.cosineSim
 
 /** Round-8 widening — the four depth gaps VERDICT r7 ranked: the BPE
@@ -43,55 +43,34 @@ object R33Queries {
       .as("u"))
     .select(col("doc_id"), col("u.pos").as("pos"), col("u.s").as("s"))
 
-  /** Shared BPE-encoded word table (q319 + q365): the 6-merge BPE chain —
-    * learn on the bounded top-100 count-weighted word table, apply the
-    * merges in learned order to the full distinct vocabulary — joined
-    * back to per-(lang, word) counts: (lang, w, cnt, n_tok). Memoized
-    * like the dedup pair bases so the fertility audit and the estimator
-    * calibration read the SAME encoding; its lineage ends at the 6 merge
-    * localCheckpoints, which the memo owns.
+  /** Shared BPE-encoded word table (q319 + q365), (lang, w, cnt, n_tok):
+    * the 6 merges BpeOps.learn takes from the top-100 word table, applied
+    * in learned order to the distinct vocabulary by one fold over the
+    * broadcast merge array; fewer than 6 learned merges encode nothing.
+    * Memoized so the fertility audit and the estimator calibration read
+    * the SAME encoding.
     */
-  private[queries] def bpeEncoded(s: SparkSession, d: String): DataFrame =
+  private[graft] def bpeEncoded(s: SparkSession, d: String): DataFrame =
     Bases.memo(s, d, "bpeEncoded") {
       val docs = t(s, d, "documents")
-      val spaced = (c: org.apache.spark.sql.Column) =>
-        concat(lit(" "), trim(regexp_replace(c, "(.)", "$1 ")), lit(" "))
-      val top = docs.select(explode(TextOps.tokens(col("text"))).as("w"))
-        .groupBy("w").agg(count(lit(1)).as("cnt"))
-        .orderBy(col("cnt").desc, col("w")).limit(100)
-        .select(spaced(col("w")).as("sym"), col("cnt"))
-      def pairs(df: DataFrame): DataFrame = df
-        .select(col("cnt"), split(trim(col("sym")), " ").as("arr"))
-        .where(size(col("arr")) >= 2)
-        .select(col("cnt"), explode(expr(
-          "transform(sequence(1, size(arr) - 1), i -> concat_ws(' ', arr[i - 1], arr[i]))"))
-          .as("pair"))
-        .groupBy("pair").agg(sum("cnt").as("weight"))
-      def top1(df: DataFrame): DataFrame = df
-        .orderBy(col("weight").desc, col("pair")).limit(1).select("pair")
-      def applyMerge(df: DataFrame, m: DataFrame): DataFrame = df
-        .crossJoin(broadcast(m.select(col("pair").as("mp"))))
-        .withColumn("sym",
-          expr("replace(sym, concat(' ', mp, ' '), concat(' ', replace(mp, ' ', ''), ' '))"))
-        .drop("mp")
-      // Learn 6 merges sequentially (bounded unroll, the q90/q161
-      // convention); each argmax is checkpointed so its single row is
-      // computed once however many downstream plans reference it.
-      var wt = top
-      val merges = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-      for (_ <- 1 to 6) {
-        val m = top1(pairs(wt)).localCheckpoint(false)
-        merges += m
-        wt = applyMerge(wt, m)
-      }
+      val ms = BpeOps.learn(BpeOps.topWords(docs), 6, 0)
+        .agg(sort_array(collect_list(struct(col("step"), col("pair")))).as("ms"))
+        .where(size(col("ms")) === 6)
       val lw = docs.select(col("lang"), explode(TextOps.tokens(col("text"))).as("w"))
         .groupBy("lang", "w").agg(count(lit(1)).as("cnt"))
-      var vocab = lw.select("w").distinct().select(col("w"), spaced(col("w")).as("sym"))
-      for (m <- merges) vocab = applyMerge(vocab, m)
-      val enc = vocab.select(col("w"),
-        size(split(trim(col("sym")), " ")).cast("long").as("n_tok"))
+      val enc = lw.select("w").distinct().crossJoin(broadcast(ms))
+        .select(col("w"), aggregate(col("ms"), BpeOps.spaced(col("w")), (sym, m) =>
+          replace(sym, concat(lit(" "), m("pair"), lit(" ")),
+            concat(lit(" "), replace(m("pair"), lit(" "), lit("")), lit(" ")))).as("sym"))
+        .select(col("w"), size(split(trim(col("sym")), " ")).cast("long").as("n_tok"))
       lw.join(enc, "w")
     }
+
+  /** Per-language word, token and character counts of [[bpeEncoded]]. */
+  private[queries] def bpePerLang(s: SparkSession, d: String): DataFrame =
+    bpeEncoded(s, d).groupBy("lang").agg(sum("cnt").as("n_words"),
+      sum(col("cnt") * col("n_tok")).as("n_tokens"),
+      sum(col("cnt") * length(col("w"))).as("n_chars"))
 
   /** DuckDB CTE chain replaying [[bpeEncoded]] — ends in `lw` (lang, w,
     * cnt) and `enc` (w, n_tok); shared by the q319 and q365 oracles.
@@ -159,19 +138,15 @@ object R33Queries {
     // report per-language FERTILITY (tokens per word — the number a
     // multilingual data team watches to spot under-served languages)
     // and COMPRESSION (chars per token). Scale shape: learning is
-    // bounded (100 rows × 6 unrolled steps, each merge a 1-row
-    // broadcast); encoding touches each DISTINCT word once (|V| rows,
-    // map-side replace chain — never the token stream); the only
+    // bounded (100 rows × 6 steps in one task); encoding touches each
+    // DISTINCT word once (|V| rows, a map-side fold over the broadcast
+    // merge array — never the token stream); the only
     // corpus-scale work is the two word-count aggregations. All-integer
     // outputs on the micro grid.
     QuerySpec(
       "q319_bpe_fertility",
       (s, d) =>
-        bpeEncoded(s, d)
-          .groupBy("lang")
-          .agg(sum("cnt").as("n_words"),
-            sum(col("cnt") * col("n_tok")).as("n_tokens"),
-            sum(col("cnt") * length(col("w"))).as("n_chars"))
+        bpePerLang(s, d)
           .select(col("lang"), col("n_words"), col("n_tokens"), col("n_chars"),
             expr("n_tokens * 1000000 div n_words").as("fertility_micro"),
             expr("n_chars * 1000000 div n_tokens").as("chars_per_token_micro"))

@@ -205,11 +205,7 @@ object R45Queries {
     QuerySpec(
       "q365_token_estimator_calibration",
       (s, d) => {
-        val per = R33Queries.bpeEncoded(s, d)
-          .groupBy("lang")
-          .agg(sum("cnt").as("n_words"),
-            sum(col("cnt") * col("n_tok")).as("n_tokens"),
-            sum(col("cnt") * length(col("w"))).as("n_chars"))
+        val per = R33Queries.bpePerLang(s, d)
         val glob = per.agg(
           expr("sum(n_tokens) * 1000000 div sum(n_words)").as("g_fert_micro"),
           expr("sum(n_chars) * 1000000 div sum(n_tokens)").as("g_cpt_micro"))
