@@ -9,33 +9,12 @@ import org.apache.spark.sql.functions._
   * build brief §multimodal), while the Spark side — binary schema,
   * partition-wise batch processing, no driver collects — is real.
   *
-  * All three transforms are Dataset.mapPartitions over
-  * (id, payload) so a real decoder drops in by replacing `decodeStub`
-  * only.
+  * Each transform is a partition-wise Dataset map over (id, payload),
+  * so a real decoder drops in inside the transform that needs it.
   */
 object MultimodalOps {
 
   case class Media(doc_id: Long, payload: Array[Byte])
-  case class Features(doc_id: Long, n_bytes: Long, byte_sum: Long, head: Array[Byte])
-
-  /** STUB decoder: a real implementation would hand `payload` to an
-    * image/audio codec. Deterministic byte statistics stand in so the
-    * pipeline shape (schema, batching, partition-wise execution) is
-    * testable.
-    */
-  def decodeStub(payload: Array[Byte]): (Long, Long) =
-    (payload.length.toLong,
-      payload.foldLeft(0L)((acc, b) => acc + java.lang.Byte.toUnsignedInt(b)))
-
-  /** binary → fixed-shape features, one pass per partition. */
-  def extractFeatures(media: Dataset[Media]): Dataset[Features] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.mapPartitions(_.map { m =>
-      val (n, sum) = decodeStub(m.payload)
-      Features(m.doc_id, n, sum, m.payload.take(8))
-    })
-  }
 
   /** "Resize": truncate/zero-pad every payload to `bytes` — the byte-level
     * stand-in for image resize (fixed output shape per row).

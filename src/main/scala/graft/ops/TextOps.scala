@@ -79,12 +79,4 @@ object TextOps {
         least(lit(window), col("n") - col("p") + 1).cast("long").as("n_tok") :+
         md5(array_join(slice(col("tk"), col("p"), lit(window)), " ")).as("chunk_md5"): _*)
   }
-
-  /** Polynomial rolling hash (Rabin-Karp shape) of a string:
-    * h = Σ h·31 + code(c) (mod 2³¹−1) — the streaming-friendly document
-    * fingerprint (vs md5 content hashes in q42). Stays a pure column
-    * expression; codes fold left-to-right like the scan would.
-    */
-  def rollingHash(text: Column, mod: Long = (1L << 31) - 1): Column =
-    aggregate(split(text, ""), lit(0L), (h, c) => (h * 31 + ascii(c)) % mod)
 }

@@ -28,13 +28,6 @@ import graft.ops.TextOps
   */
 object R11Queries {
 
-  /** floor-to-cents quantizer: identical per-row double math in both
-    * engines, and BIGINT cent sums are exact under any aggregation order
-    * — the house answer to float-sum nondeterminism on money columns.
-    */
-  private def cents(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    floor(c * 100.0 + 0.5).cast("long")
-
   val specs: Seq[QuerySpec] = Seq(
 
     // q226 — TPC-H Q17 shape (small-quantity revenue): lineitems whose

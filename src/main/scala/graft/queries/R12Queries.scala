@@ -20,9 +20,6 @@ import graft.ops.QuantileOps
   */
 object R12Queries {
 
-  private def cents(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    floor(c * 100.0 + 0.5).cast("long")
-
   val specs: Seq[QuerySpec] = Seq(
 
     // q238 — cross-source COPY MATRIX: for every source pair, how many

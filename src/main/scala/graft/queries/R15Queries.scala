@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -29,9 +29,6 @@ import graft.ops.TextOps
   * JVM and DuckDB sits ~10 orders of magnitude below the grid spacing.
   */
 object R15Queries {
-
-  /** floor-to-cents quantizer (R11Queries convention). */
-  private def cents(c: Column): Column = floor(c * 100.0 + 0.5).cast("long")
 
   /** q255's operator core, shared with ScaleSlopeSpec so the measured
     * scale exponent is measured on EXACTLY the registered plan: degree-

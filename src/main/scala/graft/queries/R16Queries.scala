@@ -24,9 +24,6 @@ import graft.QuerySpec
   */
 object R16Queries {
 
-  /** floor-to-cents quantizer (R11Queries convention). */
-  private def cents(c: Column): Column = floor(c * 100.0 + 0.5).cast("long")
-
   /** revenue cents for a lineitem row: extendedprice*(1-discount). */
   private def revCents: Column =
     floor(col("l_extendedprice") * (lit(1.0) - col("l_discount")) * 100.0 + 0.5)

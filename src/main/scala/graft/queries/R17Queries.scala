@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -29,9 +28,6 @@ import graft.functions.cosineSim
   * engines), ordered/selected — never accumulated.
   */
 object R17Queries {
-
-  /** floor-to-cents quantizer (R11Queries convention). */
-  private def cents(c: Column): Column = floor(c * 100.0 + 0.5).cast("long")
 
   /** DuckDB L2 norm over the embedding list (ScaleQueries.emL2 twin). */
   private val emL2 = ScaleQueries.emL2

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -27,9 +27,6 @@ import graft.ops.HashOps.{md5Long, md5LongSql}
   * aggregated.
   */
 object R18Queries {
-
-  /** floor-to-cents quantizer (R11Queries convention). */
-  private def cents(c: Column): Column = floor(c * 100.0 + 0.5).cast("long")
 
   /** Session gap (s) and the base/delta split instant for q277/q280:
     * 2 days and 2024-01-28T00:00Z over the 30-day event window — at

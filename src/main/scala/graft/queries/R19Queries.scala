@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -22,9 +22,6 @@ import graft.QuerySpec
   * ever exceeds |nations|, 9 digits, or |parts| rows.
   */
 object R19Queries {
-
-  /** floor-to-cents quantizer (R11Queries convention). */
-  private def cents(c: Column): Column = floor(c * 100.0 + 0.5).cast("long")
 
   /** q284's operator core, shared with ScaleSlopeSpec so the measured
     * scale exponent is measured on EXACTLY the registered plan: 2.5
@@ -50,17 +47,13 @@ object R19Queries {
     * final authority level a³.
     */
   private[graft] def hitsAuthority(edgeTable: DataFrame): DataFrame = {
-    // eager: the two layout legs below consume `edges` concurrently — a
-    // lazy final stage would be recomputed and raced by both
-    val edges = edgeTable.localCheckpoint(true)
-    // the two pinned layouts share no lineage below `edges` — overlap
-    // their checkpoint materializations (graft.Par, guide §2.6). A
+    // the first layout materializes `edges`, the second reads it. A
     // per-layout repartition+distinct (skipping this shared pin) was
     // measured AND REJECTED: the doubled distinct costs what the saved
     // shuffle buys back.
-    val (edgesByP, edgesByC) = graft.Par.par2(
-      edges.repartition(col("p")).localCheckpoint(false),
-      edges.repartition(col("c")).localCheckpoint(false))
+    val edges = edgeTable.localCheckpoint(false)
+    val edgesByP = edges.repartition(col("p")).localCheckpoint(false)
+    val edgesByC = edges.repartition(col("c")).localCheckpoint(false)
     // the raw aggregate is referenced TWICE inside a normalize (the
     // max and the scaling join) — checkpoint the INPUT, not the
     // output (each level has exactly one downstream consumer, so an

@@ -222,6 +222,7 @@ object R33Queries {
             round(cosineSim(col("qe"), col("embedding")), 6).as("cos_r"))
           .withColumn("rn", row_number().over(wT)).where(col("rn") <= 3)
           .select("qid", "cid")
+        // Par pays: q320 runs 0.81 s, 1.18 s with legs in order (sf0.1, local[4], median)
         val (incr, reb, truth) = graft.Par.par3(incrLeg(), rebLeg(), truth0.localCheckpoint(false))
         val nqDf = q.agg(count(lit(1)).as("n_q"))
         def hitsOf(index: DataFrame): DataFrame = {

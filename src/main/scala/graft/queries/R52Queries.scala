@@ -205,8 +205,8 @@ object R52Queries {
               .agg(sum("f").as(s"c_$tag"))
             (fr.drop(s"sc_$tag"), gee, cm)
           }
-          val ((fr, geeR, cmR), (fs, geeS, cmS)) =
-            graft.Par.par2(stats(r, "r"), stats(sd, "s"))
+          // Par pays: q385 runs 1.64 s, 1.99 s with both Par sites in order (sf0.1, local[4], median)
+          val ((fr, geeR, cmR), (fs, geeS, cmS)) = graft.Par.par2(stats(r, "r"), stats(sd, "s"))
           val frA = fr.agg(count(lit(1)).as("ndv_r"), sum("f_r").as("n_r"))
           val fsA = fs.agg(count(lit(1)).as("ndv_s"), sum("f_s").as("n_s"))
           val truth = fr.join(fs, "k").agg(sum(expr("f_r * f_s")).as("true_rows"))
@@ -235,6 +235,7 @@ object R52Queries {
         // passes, each localCheckpointed): construct them concurrently so
         // the checkpoint materializations overlap instead of running
         // back-to-back (graft.Par — guide §2.6)
+        // Par pays: q385 runs 1.64 s, 1.99 s with both Par sites in order (sf0.1, local[4], median)
         val (p1, p2, p3) = graft.Par.par3(
           leg(1L, "lineitem_orders_fk",
             side(li, col("l_orderkey"), liH), side(or, col("o_orderkey"), orH)),

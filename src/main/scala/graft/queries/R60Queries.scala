@@ -203,15 +203,13 @@ object R60Queries {
     QuerySpec(
       "q418_mv_subsumption_gate",
       (s, d) => {
-        // li is eager (v and nn consume it from concurrent legs); the
-        // grain build and the row census then overlap (graft.Par §2.6)
-        val li = liFrame(s, d).localCheckpoint(true)
-        val (v, nn) = graft.Par.par2(
-          li.groupBy("f", "s", "y", "m")
-            .agg(count(lit(1)).as("cnt"), sum("cents").as("sv"))
-            .localCheckpoint(false),
-          li.agg(count(lit(1)).as("n")).localCheckpoint(false))
-        val vr = v.agg(count(lit(1)).as("vrows")).localCheckpoint(false)
+        val li = liFrame(s, d).localCheckpoint(false)
+        val v = li.groupBy("f", "s", "y", "m")
+          .agg(count(lit(1)).as("cnt"), sum("cents").as("sv"))
+          .localCheckpoint(false)
+        // the row census is the grain's count sum: no pass over li
+        val vr = v.agg(count(lit(1)).as("vrows"), sum("cnt").as("n"))
+          .localCheckpoint(false)
         def certify(id: String, answerable: Long, viewLeg: DataFrame,
             baseLeg: DataFrame): DataFrame = {
           val eq = viewLeg.select(col("f"), col("v1").as("a1"), col("v2").as("a2"))
@@ -224,7 +222,7 @@ object R60Queries {
               .as("equal_results"))
           val tot = baseLeg.agg(count(lit(1)).as("groups"), sum("v1").as("total_val"))
           broadcast(eq).crossJoin(broadcast(tot))
-            .crossJoin(broadcast(vr)).crossJoin(broadcast(nn))
+            .crossJoin(broadcast(vr))
             .select(lit(id).as("scenario"), lit(answerable).as("answerable"),
               col("groups").cast("long").as("groups"), col("total_val"),
               col("equal_results"),

@@ -62,10 +62,7 @@ object R61Queries {
       .select(col("k"), col("v"), col("h"), col("kcut"),
         expr("CASE WHEN k <= kcut THEN least(31, k * 32 div (kcut + 1)) " +
           "ELSE 32 + least(7, (k - kcut - 1) * 8 div (kcut div 4 + 1)) END").as("f"))
-      // eager: q423 consumes this frame from concurrent legs (ofl/afl,
-      // then the logical signatures); a lazy final stage would be
-      // recomputed and raced by each first concurrent consumer
-      .localCheckpoint(true)
+      .localCheckpoint(false)
   }
 
   /** The arc's fixed victim predicate (identical text in both engines):
@@ -284,25 +281,17 @@ object R61Queries {
       (s, d) => {
         val keyed = keyedFrame(s, d)
         val (orig, app, rw, _, _) = states(keyed)
-        // the per-file censuses of the two slices are independent —
-        // overlap their checkpoints (graft.Par, guide §2.6)
-        val (ofl, afl) = graft.Par.par2(
-          orig.groupBy("f").agg(count(lit(1)).as("nr"),
+        // the per-file censuses of both slices from ONE aggregate pass
+        // (the slices' file ids are disjoint)
+        val fl = keyed.groupBy(expr("k <= kcut").as("o"), col("f"))
+          .agg(count(lit(1)).as("nr"),
             sum(when(expr(victimPred), 1L).otherwise(0L)).as("nv"))
-            .localCheckpoint(true), // eager: consumed by the concurrent legs below
-          app.groupBy("f").agg(count(lit(1)).as("nr")).localCheckpoint(true))
+          .localCheckpoint(false)
+        val ofl = fl.where("o").select("f", "nr", "nv")
+        val afl = fl.where("NOT o").select("f", "nr")
         val nullV = lit(null).cast("long")
-        // objects (needs ofl+afl), the row-tag frame rt (needs orig+ofl+
-        // rw) and the logical signatures (need keyed only) are mutually
-        // independent checkpointed legs — build them concurrently
         val vicCol = expr(s"CAST(CASE WHEN $victimPred THEN 1 ELSE 0 END AS BIGINT)")
-        val l1 = keyed.where(expr(s"k <= kcut AND NOT ($victimPred)"))
-        val l2 = keyed.where(expr(s"NOT ($victimPred) OR k > kcut"))
-        def lsig(df: DataFrame, hor: Long): DataFrame =
-          df.agg(count(lit(1)).as("l_rows"), sum("v").as("l_val"),
-            expr(chkExpr).as("l_chk")).withColumn("hor", lit(hor))
-        val (objects, rt, logical) = graft.Par.par3(
-          ofl.where("nv = 0").select(
+        val objects = ofl.where("nv = 0").select(
             lit("1:orig_untouched").as("class"), col("f"), lit(0L).as("va"),
             nullV.as("vr"), col("nr").as("phys"), lit(0L).as("dv"))
           .unionByName(ofl.where("nv > 0").select(
@@ -318,19 +307,28 @@ object R61Queries {
             lit("5:replacement").as("class"), (col("f") + 100L).as("f"),
             lit(3L).as("va"), nullV.as("vr"),
             (col("nr") - col("nv")).as("phys"), lit(0L).as("dv")))
-          .localCheckpoint(false),
-          orig.join(broadcast(ofl.select(col("f"), col("nv"))), Seq("f"))
-            .select(expr("CASE WHEN nv = 0 THEN '1:orig_untouched' ELSE '2:orig_rewritten' END")
-              .as("class"), col("f").as("fo"), col("k"), col("v"), vicCol.as("vic"))
-            .unionByName(app.select(lit("4:append").as("class"), col("f").as("fo"),
-              col("k"), col("v"), vicCol.as("vic")))
-            .unionByName(orig.join(broadcast(rw), Seq("f"), "left_semi")
-              .where(expr(s"NOT ($victimPred)"))
-              .select(lit("5:replacement").as("class"), (col("f") + 100L).as("fo"),
-                col("k"), col("v"), lit(0L).as("vic")))
-            .localCheckpoint(false),
-          lsig(l1, 1L).unionByName(lsig(l2, 2L)).unionByName(lsig(l2, 3L))
-            .localCheckpoint(false))
+          .localCheckpoint(false)
+        val rt = orig.join(broadcast(ofl.select(col("f"), col("nv"))), Seq("f"))
+          .select(expr("CASE WHEN nv = 0 THEN '1:orig_untouched' ELSE '2:orig_rewritten' END")
+            .as("class"), col("f").as("fo"), col("k"), col("v"), vicCol.as("vic"))
+          .unionByName(app.select(lit("4:append").as("class"), col("f").as("fo"),
+            col("k"), col("v"), vicCol.as("vic")))
+          .unionByName(orig.join(broadcast(rw), Seq("f"), "left_semi")
+            .where(expr(s"NOT ($victimPred)"))
+            .select(lit("5:replacement").as("class"), (col("f") + 100L).as("fo"),
+              col("k"), col("v"), lit(0L).as("vic")))
+          .localCheckpoint(false)
+        // the logical signature of each horizon's earliest surviving
+        // version, all three from ONE aggregate pass: v1 is the orig slice
+        // minus victims, v2 and v3 are every non-victim plus the append
+        val l1 = expr(s"k <= kcut AND NOT ($victimPred)")
+        val l2 = expr(s"NOT ($victimPred) OR k > kcut")
+        val logical = keyed.select(col("k"), col("v"), explode(array(
+            when(l1, 1L), when(l2, 2L), when(l2, 3L))).as("hor"))
+          .where(col("hor").isNotNull)
+          .groupBy("hor").agg(count(lit(1)).as("l_rows"), sum("v").as("l_val"),
+            expr(chkExpr).as("l_chk"))
+          .localCheckpoint(false)
         val hz = s.range(1, 4).select(col("id").as("hor"))
         val vs = s.range(0, 4).select(col("id").as("ver"))
         val ruleStd = "vr IS NOT NULL AND vr <= hor"

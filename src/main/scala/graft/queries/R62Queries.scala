@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.QuerySpec
@@ -222,38 +222,35 @@ object R62Queries {
         val keyed = R61Queries.keyedFrame(s, d)
         val vp = R61Queries.victimPred
         val bandOf = "least(15, v * 16 div (vmx + 1))"
-        val mxv = keyed.agg(max("v").as("vmx")).localCheckpoint(false)
-        // eager: the signed-partials pass and the rebuild grader below
-        // consume `banded` from concurrent threads
+        val mxv = keyed.agg(max("v").as("vmx"))
         val banded = keyed.crossJoin(broadcast(mxv))
           .select(col("k"), col("v"), col("h"), col("f"), col("kcut"),
-            expr(bandOf).as("b")).localCheckpoint(true)
-        // ONE pass for all signed CDC partials: each row contributes to
-        // its load/append delta (+1,+v) and, if a victim, to the delete
-        // delta (-1,-v); v3's REPLACE delta is empty by construction
-        val cIns = struct(lit(0L).as("dver"), lit(1L).as("sc"), col("v").as("sv"))
-        val cDel = struct(lit(1L).as("dver"), lit(-1L).as("sc"), (-col("v")).as("sv"))
-        val cApp = struct(lit(2L).as("dver"), lit(1L).as("sc"), col("v").as("sv"))
+            expr(bandOf).as("b"))
+        // ONE pass for both fold inputs. kind 0 is the signed CDC
+        // partials: each row contributes to its load/append delta (+1,+v)
+        // and, if a victim, to the delete delta (-1,-v); v3's REPLACE
+        // delta is empty by construction. kind 1 is the rebuild grader:
+        // each row counts once toward every version whose logical
+        // content holds it (victims leave at v1, the append lands at v2).
+        def part(kind: Long, ver: Long, sign: Long): Column =
+          struct(lit(kind).as("kind"), lit(ver).as("ver"), lit(sign).as("sc"),
+            (col("v") * sign).as("sv"))
+        val parts = banded.select(col("b"), explode(
+            when(expr(s"k <= kcut AND ($vp)"),
+              array(part(0, 0, 1), part(0, 1, -1), part(1, 0, 1)))
+            .when(expr("k <= kcut"), array(part(0, 0, 1),
+              part(1, 0, 1), part(1, 1, 1), part(1, 2, 1), part(1, 3, 1)))
+            .otherwise(array(part(0, 2, 1), part(1, 2, 1), part(1, 3, 1)))).as("z"))
+          .groupBy(col("z.kind").as("kind"), col("z.ver").as("ver"), col("b"))
+          .agg(sum(col("z.sc")).as("c"), sum(col("z.sv")).as("s"))
+          .localCheckpoint(false) // <= 112 rows
+        val dd = parts.where(col("kind") === 0L).select(col("ver").as("dver"),
+          col("b"), col("c").as("dc"), col("s").as("dvv"))
+        val rc = parts.where(col("kind") === 1L).select(col("ver"), col("b"),
+          col("c").as("cnt"), col("s").as("sv"))
         // one slice, not the 32-slice default (a 4-row frame never needs
-        // 32 tasks); eager because both passes below consume it
-        val vers = s.range(0, 4, 1, 1).select(col("id").as("ver")).localCheckpoint(true)
-        // the signed-partials pass (dd) and the rebuild grader (rc) are
-        // independent passes over the stored banded frame — overlap
-        // their checkpoints (graft.Par, guide §2.6); both eager (dd
-        // feeds the states fold's construction, rc the final action)
-        val (dd, rc) = graft.Par.par2(
-          banded.select(col("b"), explode(
-              when(expr(s"k <= kcut AND ($vp)"), array(cIns, cDel))
-                .when(expr("k <= kcut"), array(cIns)).otherwise(array(cApp))).as("z"))
-            .select(col("b"), col("z.dver").as("dver"), col("z.sc").as("sc"),
-              col("z.sv").as("sv"))
-            .groupBy("dver", "b").agg(sum("sc").as("dc"), sum("sv").as("dvv"))
-            .localCheckpoint(true), // <= 48 rows
-          banded.crossJoin(broadcast(vers)).where(expr(
-              s"(ver = 0 AND k <= kcut) OR (ver = 1 AND k <= kcut AND NOT ($vp)) " +
-                s"OR (ver >= 2 AND (NOT ($vp) OR k > kcut))"))
-            .groupBy("ver", "b").agg(count(lit(1)).as("cnt"), sum("v").as("sv"))
-            .localCheckpoint(true))
+        // 32 tasks)
+        val vers = s.range(0, 4, 1, 1).select(col("id").as("ver"))
         // every version's maintained state from ONE cumulative fold
         val states = dd.join(broadcast(vers), expr("dver <= ver"))
           .groupBy("ver", "b").agg(sum("dc").as("cnt"), sum("dvv").as("sv"))

@@ -71,39 +71,37 @@ object R66Queries {
           expr("CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)").as("v"),
           expr("(o_custkey % 2147483648) * 2654435761 % 4294967296").as("h"))
         val mxk = keyed0.agg(expr("(max(k) + 1) * 4 div 5").as("kcut"))
-        // eager: the maintained-view chain and both rebuild graders
-        // consume kk from concurrent threads below
-        val kk = keyed0.crossJoin(broadcast(mxk)).localCheckpoint(true)
         val delT = 429496729L // 10% of the 2^32 hash space
-        def grain(df: DataFrame): DataFrame =
-          df.groupBy("y", "m").agg(count(lit(1)).as("cnt"), sum("v").as("sv"),
+        // every grain the query reads, from ONE aggregate pass: each row
+        // lands in its commit slice (0: load, 1: insert), in the delete
+        // band (2) or the state after the delete (4), and in the full
+        // rebuild (3)
+        val grains = keyed0.crossJoin(broadcast(mxk)).select(col("y"), col("m"), col("v"), explode(array(
+            when(col("k") <= col("kcut"), 0L).otherwise(1L),
+            when(col("h") < delT, 2L).otherwise(4L), lit(3L))).as("g"))
+          .groupBy("g", "y", "m").agg(count(lit(1)).as("cnt"), sum("v").as("sv"),
             min("v").as("mn"), max("v").as("mx"))
-        // the maintained-view chain (v0 → v1 → v2n, internally
-        // sequential) and the two rebuild graders are independent legs —
-        // overlap their checkpoint materializations (graft.Par §2.6)
-        val ((v0, v1, v2n), reb1, reb2) = graft.Par.par3({
-          val v0 = grain(kk.where(col("k") <= col("kcut"))).localCheckpoint(false)
-          // commit 1: INSERT — v1 = v0 ⊕ Δgrain(b1), all four self-maintain
-          val v1 = v0.unionByName(grain(kk.where(col("k") > col("kcut"))))
-            .groupBy("y", "m").agg(sum("cnt").as("cnt"), sum("sv").as("sv"),
-              min("mn").as("mn"), max("mx").as("mx"))
-            .localCheckpoint(false)
-          // commit 2: DELETE the hash band — COUNT/SUM subtract, MIN/MAX
-          // carry forward naively (divergence is the finding)
-          val d2 = kk.where(col("h") < delT)
-            .groupBy("y", "m").agg(count(lit(1)).as("dcnt"), sum("v").as("dsv"),
-              min("v").as("dmn"), max("v").as("dmx"))
-          val v2n = v1.join(d2, Seq("y", "m"), "left")
-            .select(col("y"), col("m"),
-              (col("cnt") - coalesce(col("dcnt"), lit(0L))).as("cnt"),
-              (col("sv") - coalesce(col("dsv"), lit(0L))).as("sv"),
-              col("mn"), col("mx"), col("dmn"), col("dmx"))
-            .where(col("cnt") > 0L)
-            .localCheckpoint(false)
-          (v0, v1, v2n)
-        },
-          grain(kk).localCheckpoint(false),
-          grain(kk.where(col("h") >= delT)).localCheckpoint(false))
+          .localCheckpoint(false)
+        def grain(g: Long): DataFrame = grains.where(col("g") === g).drop("g")
+        val v0 = grain(0)
+        // commit 1: INSERT — v1 = v0 ⊕ Δgrain(b1), all four self-maintain
+        val v1 = v0.unionByName(grain(1))
+          .groupBy("y", "m").agg(sum("cnt").as("cnt"), sum("sv").as("sv"),
+            min("mn").as("mn"), max("mx").as("mx"))
+          .localCheckpoint(false)
+        // commit 2: DELETE the hash band — COUNT/SUM subtract, MIN/MAX
+        // carry forward naively (divergence is the finding)
+        val d2 = grain(2).select(col("y"), col("m"), col("cnt").as("dcnt"),
+          col("sv").as("dsv"), col("mn").as("dmn"), col("mx").as("dmx"))
+        val v2n = v1.join(d2, Seq("y", "m"), "left")
+          .select(col("y"), col("m"),
+            (col("cnt") - coalesce(col("dcnt"), lit(0L))).as("cnt"),
+            (col("sv") - coalesce(col("dsv"), lit(0L))).as("sv"),
+            col("mn"), col("mx"), col("dmn"), col("dmx"))
+          .where(col("cnt") > 0L)
+          .localCheckpoint(false)
+        val reb1 = grain(3)
+        val reb2 = grain(4)
         // certificates: ONE full-outer join per state emits both the
         // COUNT/SUM and the MIN/MAX verdicts (was two joins per state)
         def eqBoth(a: DataFrame, b: DataFrame): DataFrame = {
@@ -202,73 +200,58 @@ object R66Queries {
               .otherwise(lit(1000L) + md5Bucket(col("k").cast("string"), 16))
               .as("part"),
             when(col("k") <= col("kcut"), "A").otherwise("B").as("spec"))
-          .localCheckpoint(true) // eager: consumed by concurrent legs below
+          .localCheckpoint(false)
+        // the file census; each file also carries its max key (with that
+        // row's month) and its month set, so ONE aggregate over the
+        // manifest yields the census, both deterministic probes (the
+        // most-populated A month; the max key, a B row, with its month)
+        // and the single-spec month-manifest counterfactual
         val manifest = rows.groupBy("spec", "part")
-          .agg(count(lit(1)).as("c")).localCheckpoint(true)
-        // the file census, both deterministic probes and the
-        // counterfactual month manifest are independent below
-        // rows/manifest — materialize them concurrently (graft.Par §2.6)
-        val legsP = graft.Par(
-          () => manifest.agg(count(lit(1)).as("files_total"),
-            sum(when(col("spec") === "A", 1L).otherwise(0L)).as("a_files"),
-            sum(when(col("spec") === "B", 1L).otherwise(0L)).as("b_files"))
-            .localCheckpoint(false),
-          // deterministic probes: the most-populated A month; the max key
-          // (a B row) with its month
-          () => manifest.where(col("spec") === "A")
-            .orderBy(col("c").desc, col("part")).limit(1)
-            .select(col("part").as("probe_ym")).localCheckpoint(false),
-          () => rows.agg(max("k").as("probe_k"))
-            .join(rows.select(col("k").as("probe_k"), col("ym").as("probe_k_ym")),
-              "probe_k")
-            .localCheckpoint(false),
-          // single-spec counterfactual manifests over the same rows
-          () => keyed0.groupBy("ym").agg(count(lit(1)).as("c"))
-            .agg(count(lit(1)).as("n")).localCheckpoint(false))
-        val Seq(nFiles, pm, pk, allMonth) = legsP
-        def probeLeg(id: String, prunedFiles: DataFrame, direct: DataFrame,
-            billMonth: org.apache.spark.sql.Column,
-            billHash: org.apache.spark.sql.Column): DataFrame = {
-          val pruned = rows.join(broadcast(prunedFiles), Seq("spec", "part"))
-          val prunedMatch = pruned.join(broadcast(direct.select(col("k").as("mk"))),
-              col("k") === col("mk"))
-            .agg(count(lit(1)).as("pruned_rows"))
-          val dTot = direct.agg(count(lit(1)).as("direct_rows"))
-          broadcast(dTot).crossJoin(broadcast(prunedMatch))
-            .crossJoin(broadcast(prunedFiles.agg(count(lit(1)).as("files_read"))))
-            .crossJoin(broadcast(nFiles)).crossJoin(broadcast(allMonth))
-            .select(lit(id).as("probe"), col("direct_rows"), col("pruned_rows"),
-              (col("direct_rows") - col("pruned_rows")).as("missed"),
-              col("files_read"), col("files_total"),
-              billMonth.as("bill_monthspec"), billHash.as("bill_hashspec"))
-        }
-        // probe context joined per leg from broadcast singletons — no
-        // second corpus-sized materialization
-        val rp = rows.crossJoin(broadcast(pm)).crossJoin(broadcast(pk))
-        val mfp = manifest.crossJoin(broadcast(pm)).crossJoin(broadcast(pk))
-        // probe 1: month — A prunes to the month file, B reads fully
-        val l1 = probeLeg("1:month",
-          mfp.where(expr("(spec = 'A' AND part = probe_ym) OR spec = 'B'"))
-            .select("spec", "part"),
-          rp.where(col("ym") === col("probe_ym")).select("k"),
-          lit(1L), allMonth("n"))
-        // probe 2: key point — B prunes to the bucket, A reads fully
-        val l2 = probeLeg("2:key_point",
-          mfp.where(col("spec") === "A" || (col("spec") === "B" &&
-              col("part") === lit(1000L) + md5Bucket(col("probe_k").cast("string"), 16)))
-            .select("spec", "part"),
-          rp.where(col("k") === col("probe_k")).select("k"),
-          allMonth("n"), lit(1L))
-        // probe 3: key AND its month — both specs prune
-        val l3 = probeLeg("3:key_and_month",
-          mfp.where((col("spec") === "A" && col("part") === col("probe_k_ym")) ||
-              (col("spec") === "B" &&
-                col("part") === lit(1000L) + md5Bucket(col("probe_k").cast("string"), 16)))
-            .select("spec", "part"),
-          rp.where(col("k") === col("probe_k") && col("ym") === col("probe_k_ym"))
-            .select("k"),
-          lit(1L), lit(1L))
-        l1.unionByName(l2).unionByName(l3).orderBy("probe")
+          .agg(count(lit(1)).as("c"), max("k").as("mk"),
+            max_by(col("ym"), col("k")).as("mk_ym"), collect_set("ym").as("yms"))
+          .localCheckpoint(false)
+        val census = manifest.agg(count(lit(1)).as("files_total"),
+            max_by(col("part"), when(col("spec") === "A",
+              struct(col("c"), (-col("part")).as("np")))).as("probe_ym"),
+            max("mk").as("probe_k"), max_by(col("mk_ym"), col("mk")).as("probe_k_ym"),
+            size(array_distinct(flatten(collect_list("yms")))).cast("long").as("n"))
+          .localCheckpoint(false)
+        // per probe: which files it prunes to, through each file's own
+        // spec, and which rows the direct scan answers
+        val keyBucket = lit(1000L) + md5Bucket(col("probe_k").cast("string"), 16)
+        val keyHit = col("k") === col("probe_k")
+        val probes = Seq(
+          // month: A prunes to the month file, B reads fully
+          ("1:month", expr("(spec = 'A' AND part = probe_ym) OR spec = 'B'"),
+            col("ym") === col("probe_ym"), lit(1L), col("n")),
+          // key point: B prunes to the bucket, A reads fully
+          ("2:key_point", col("spec") === "A" ||
+            (col("spec") === "B" && col("part") === keyBucket),
+            keyHit, col("n"), lit(1L)),
+          // key AND its month: both specs prune
+          ("3:key_and_month", (col("spec") === "A" && col("part") === col("probe_k_ym")) ||
+            (col("spec") === "B" && col("part") === keyBucket),
+            keyHit && col("ym") === col("probe_k_ym"), lit(1L), lit(1L)))
+        def n(c: Column): Column = sum(when(c, 1L).otherwise(0L))
+        // ONE pass over the rows counts, per probe, the direct answer and
+        // the answer read from ONLY the pruned files (a row's spec and part
+        // name its file); ONE pass over the manifest counts the files read
+        val ctx = census.select("probe_ym", "probe_k", "probe_k_ym")
+        val readCols = probes.zipWithIndex.flatMap { case ((_, prune, hit, _, _), i) =>
+          Seq(n(hit).as(s"d$i"), n(hit && prune).as(s"p$i")) }
+        val fileCols = probes.zipWithIndex.map { case ((_, prune, _, _, _), i) =>
+          n(prune).as(s"f$i") }
+        val reads = rows.crossJoin(broadcast(ctx)).agg(readCols.head, readCols.tail: _*)
+        val files = manifest.crossJoin(broadcast(ctx)).agg(fileCols.head, fileCols.tail: _*)
+        broadcast(reads).crossJoin(broadcast(files))
+          .crossJoin(broadcast(census.select("files_total", "n")))
+          .select(explode(array(probes.zipWithIndex.map { case ((id, _, _, bm, bh), i) =>
+            struct(lit(id).as("probe"), col(s"d$i").as("direct_rows"),
+              col(s"p$i").as("pruned_rows"), (col(s"d$i") - col(s"p$i")).as("missed"),
+              col(s"f$i").as("files_read"), col("files_total"),
+              bm.as("bill_monthspec"), bh.as("bill_hashspec"))
+          }: _*)).as("r"))
+          .select("r.*").orderBy("probe")
       },
       Some {
         val bsql = md5BucketSql("CAST(probe_k AS VARCHAR)", 16)

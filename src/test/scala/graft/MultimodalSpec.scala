@@ -12,12 +12,6 @@ class MultimodalSpec extends SparkSpecBase {
   private def media(rows: (Long, String)*) =
     rows.map { case (id, s) => Media(id, s.getBytes("UTF-8")) }.toDS()
 
-  test("extractFeatures computes deterministic byte stats per payload") {
-    val got = MultimodalOps.extractFeatures(media((1L, "abc"))).head()
-    assert(got.n_bytes == 3 && got.byte_sum == 'a' + 'b' + 'c')
-    assert(got.head.toSeq == "abc".getBytes("UTF-8").toSeq)
-  }
-
   test("resize pads short and truncates long payloads to the exact shape") {
     val out = MultimodalOps.resize(media((1L, "ab"), (2L, "abcdefgh")), 4)
       .collect().sortBy(_.doc_id)

@@ -111,15 +111,6 @@ class OpsSpec extends SparkSpecBase {
     assert(nearD <= 16)
   }
 
-  test("rollingHash matches the reference fold and is shift-sensitive") {
-    def ref(s: String): Long =
-      s.foldLeft(0L)((h, c) => (h * 31 + c.toInt) % ((1L << 31) - 1))
-    val got = Seq("abc", "acb", "").toDF("t")
-      .select(TextOps.rollingHash(col("t")).as("h")).as[Long].collect().toSeq
-    assert(got == Seq(ref("abc"), ref("acb"), 0L))
-    assert(got(0) != got(1)) // order-sensitive, unlike a bag fingerprint
-  }
-
   test("cosine_sim codegen expression matches the composed fold bit-for-bit") {
     val emb = spark.read.parquet(s"$sf001/embeddings.parquet").limit(50)
     val pairs = emb.select(col("vec_id"), col("embedding"))

@@ -1,14 +1,18 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
+
 import scala.concurrent.{Await, Promise}
 import scala.concurrent.duration._
+import scala.jdk.CollectionConverters._
 import scala.util.{Failure, Try}
 
 import org.apache.spark.{SparkException, TaskContext}
 
 /** `graft.Par` throws a leg's failure as soon as it happens, naming the
   * leg, cancels its siblings' Spark jobs, and keeps results in leg order
-  * however the legs finish.
+  * however the legs finish. Every call under src/main states what it
+  * measurably saves.
   */
 class ParSpec extends SparkSpecBase {
 
@@ -58,6 +62,23 @@ class ParSpec extends SparkSpecBase {
         case other => fail(s"the sibling job was not cancelled by Par: $other")
       }
     } finally sc.cancelAllJobs()
+  }
+
+  test("every graft.Par call under src/main has a `Par pays:` line above it") {
+    val call = """(?:\bgraft\.|(?<![\w.]))Par(?:\.par[23])?\(""".r
+    val s = Files.walk(Paths.get("src/main"))
+    val files: Seq[Path] = try s.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+      finally s.close()
+    val sites = for {
+      p <- files
+      lines = Files.readAllLines(p).asScala.toIndexedSeq
+      (line, i) <- lines.zipWithIndex
+      code = line.trim if !code.startsWith("//") && !code.startsWith("*")
+      if call.findFirstIn(code).isDefined
+    } yield (s"$p:${i + 1}", i > 0 && lines(i - 1).contains("Par pays:"))
+    val bare = sites.collect { case (at, false) => at }
+    assert(sites.nonEmpty, "no graft.Par call found: is the scan rooted at the repo?")
+    assert(bare.isEmpty, s"graft.Par calls without a `// Par pays:` reason:\n${bare.mkString("\n")}")
   }
 }
 
