@@ -15,8 +15,11 @@ per-side directories (DIR/parent and DIR/change; DIR defaults to a new
 temporary directory) and runs perfbench/ab.py on those two.
 
 Each run's one-line verdict (correct, failed, the workload's total_s) is
-printed as it finishes. The exit status is non-zero if any run failed or
-was incorrect.
+printed as it finishes. After perfbench/ab.py's report it prints, per query,
+each side's median warm wall (the median over runs of each run's median,
+from the result files' per_query), so a change to one query can be told
+apart from the rest of its workload. The exit status is non-zero if any run
+failed or was incorrect.
 
 A side whose .bench_build/classpath.txt names a .bench_build path outside
 that checkout is refused: a file copy of a working tree carries the
@@ -25,9 +28,11 @@ and contents only, so an unchanged copy would silently run the original's
 classes. Delete the copy's .bench_build/ (or use `git clone`).
 """
 import argparse
+import glob
 import json
 import os
 import shutil
+import statistics
 import subprocess
 import sys
 import tempfile
@@ -65,6 +70,19 @@ def foreign_classes(checkout):
         entries = f.read().strip().split(os.pathsep)
     return [e for e in entries if ".bench_build" in e.split(os.sep)
             and os.path.commonpath([own, os.path.realpath(e)]) != own]
+
+
+def query_medians(side_dir):
+    """Query -> the median over `side_dir`'s result files of each file's
+    median warm wall (s)."""
+    by = {}
+    for f in sorted(glob.glob(os.path.join(side_dir, "*.json"))):
+        with open(f) as fh:
+            r = json.load(fh)
+        for q, v in r["per_query"].items():
+            if v["warm_s"]:
+                by.setdefault(q, []).append(statistics.median(v["warm_s"]))
+    return {q: statistics.median(v) for q, v in by.items()}
 
 
 def main():
@@ -105,6 +123,13 @@ def main():
     print(f"[ab] results in {out}", flush=True)
     subprocess.run([sys.executable, os.path.join(REPO, "perfbench", "ab.py"),
                     os.path.join(out, "parent"), os.path.join(out, "change")], check=True)
+    pm, cm = (query_medians(os.path.join(out, side)) for side in sides)
+    fmt = lambda x: "-" if x is None else f"{x:.4f}"
+    print("   per query (median warm wall, s):")
+    for q in sorted(set(pm) | set(cm)):
+        p, c = pm.get(q), cm.get(q)
+        ratio = f"x{c / p:.3f}" if p and c is not None else ""
+        print(f"   {q:28s} parent {fmt(p):>8}  change {fmt(c):>8}  {ratio}", flush=True)
     sys.exit(1 if bad else 0)
 
 

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -21,6 +21,8 @@ import org.apache.spark.unsafe.types.UTF8String
 object BpeOps {
 
   private val Space = UTF8String.fromString(" ")
+  private val WordEnc = Encoders.product[(String, Long)]
+  private val StepEnc = Encoders.product[(Long, Long, String, Long)]
 
   /** The symbols of word `w`, spaced and padded: `"low"` → `" l o w "`. */
   def spaced(w: Column): Column = concat(lit(" "), trim(regexp_replace(w, "(.)", "$1 ")), lit(" "))
@@ -36,16 +38,13 @@ object BpeOps {
     * 1, steps `1..merges`), then the `rest` best pairs left (step
     * `merges + 1`). Nothing follows a step with no pair, a null `sym` has
     * no pair, and the order of `words` does not matter. */
-  def learn(words: DataFrame, merges: Int, rest: Int): DataFrame = {
-    val spark = words.sparkSession
-    import spark.implicits._
-    words.select(col("sym"), col("cnt")).as[(String, Long)].coalesce(1)
+  def learn(words: DataFrame, merges: Int, rest: Int): DataFrame =
+    words.select(col("sym"), col("cnt")).as(WordEnc).coalesce(1)
       .mapPartitions { rows =>
         val table = rows.collect { case (sym, cnt) if sym != null => (UTF8String.fromString(sym), cnt) }
         steps(table.toVector, 1, merges, rest).iterator
-      }
+      }(StepEnc)
       .toDF("step", "rank", "pair", "weight")
-  }
 
   private def steps(table: Vector[(UTF8String, Long)], step: Int, merges: Int,
       rest: Int): List[(Long, Long, String, Long)] = {
